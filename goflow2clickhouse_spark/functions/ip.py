@@ -9,16 +9,20 @@ replicated here (property-tested in tests/test_ip.py):
 - other 16-byte → RFC 5952 compressed lowercase IPv6;
 - anything else → NULL (Go returns "?hex"; we prefer NULL for SQL).
 
-`ip_to_string` is an Arrow-vectorized pandas UDF — the only Python in
-the ingest hot path; everything around it is JVM whole-stage codegen.
-The pure-column IPv4 variants (`ipv4_num_to_string` /
-`ipv4_string_to_num`, ClickHouse's IPv4NumToString/IPv4StringToNum)
-stay entirely JVM-side.
+`_format_ip` is the one formatter. The UDP listener calls it directly
+as it hands rows to Spark (sources/udp.py), so the `udp://` ingest plan
+carries string addresses and no Python UDF. `ip_to_string` is the
+Arrow-vectorized pandas UDF over the same function, for inputs that
+still carry packed bytes (parquet drop-dirs, the JSON transports, the
+rate generator, batch ETL). The pure-column IPv4 variants
+(`ipv4_num_to_string` / `ipv4_string_to_num`, ClickHouse's
+IPv4NumToString/IPv4StringToNum) stay entirely JVM-side.
 """
 
 from __future__ import annotations
 
 import ipaddress
+import socket
 
 import pandas as pd
 from pyspark.sql import Column
@@ -33,17 +37,29 @@ from pyspark.sql.types import (
 )
 
 
+_V4_MAPPED_PREFIX = bytes(10) + b"\xff\xff"
+_ZERO_PREFIX = bytes(12)
+
+
 def _format_ip(b: bytes | None) -> str | None:
+    """Packed address → Go net.IP.String() text, via the C formatters.
+
+    glibc's inet_ntop already follows RFC 5952 (longest zero run,
+    first on a tie, no single-hextet `::`), the same output as
+    `str(IPv6Address)`, except that it prints addresses whose first 12
+    bytes are zero as `::a.b.c.d`; that range, rare on the wire, keeps
+    the `ipaddress` path."""
     if b is None:
         return None
     if len(b) == 4:
-        return str(ipaddress.IPv4Address(b))
+        return socket.inet_ntoa(b)
     if len(b) == 16:
-        v6 = ipaddress.IPv6Address(b)
-        mapped = v6.ipv4_mapped
-        if mapped is not None:  # Go To4() succeeds → dotted quad (main.go:133)
-            return str(mapped)
-        return str(v6)  # Python str() is RFC 5952, same as Go
+        head = b[:12]
+        if head == _V4_MAPPED_PREFIX:  # Go To4() succeeds (main.go:133)
+            return socket.inet_ntoa(b[12:])
+        if head == _ZERO_PREFIX:
+            return str(ipaddress.IPv6Address(b))
+        return socket.inet_ntop(socket.AF_INET6, b)
     return None
 
 

@@ -5,7 +5,9 @@
   snake_case per the `ch:` tags at main.go:45-77, cast `type` to int32
   (main.go:128), format 3 address columns (main.go:133,138,139)).
   Here it is one narrow Catalyst projection — no shuffle, whole-stage
-  codegen except the vectorized ip UDF.
+  codegen. Address columns that arrive already formatted as strings
+  (the `udp://` listener formats them as it decodes) pass through
+  untouched; packed binary ones go through the vectorized ip UDF.
 
 - `fan_in` ≡ the shared channel merging every listener's output
   (main.go:43,101-105): unionByName over same-schema DataFrames
@@ -18,6 +20,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from ..functions.ip import ip_to_string
 
@@ -49,14 +52,18 @@ _PROJECTION: list[tuple[str, str, str]] = [
 
 
 def flow_transform(raw: DataFrame) -> DataFrame:
-    """Project a raw decoded-flow DataFrame (RAW_FLOW_SCHEMA) into the
-    22-column flows layout. Works identically on batch and streaming
-    DataFrames (the ETL path of BASELINE.json:7 is this same function
-    applied in batch mode)."""
+    """Project a raw decoded-flow DataFrame (RAW_FLOW_SCHEMA, or the UDP
+    source's variant with string addresses) into the 22-column flows
+    layout. Works identically on batch and streaming DataFrames (the
+    ETL path of BASELINE.json:7 is this same function applied in batch
+    mode)."""
+    types = {f.name: f.dataType for f in raw.schema.fields}
     cols = []
     for target, source, kind in _PROJECTION:
         if kind == "int_cast":
             cols.append(F.col(source).cast("int").alias(target))
+        elif kind == "ip" and isinstance(types[source], StringType):
+            cols.append(F.col(source).alias(target))
         elif kind == "ip":
             cols.append(ip_to_string(F.col(source)).alias(target))
         else:

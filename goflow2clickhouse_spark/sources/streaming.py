@@ -24,8 +24,11 @@ built-in UDP source, so the engine defines a pluggable seam:
   sflow://  (port 6343)               same listener, reference spelling
   netflow:// nfl:// (port 2055)       same listener, reference spelling
 
-Every source yields a streaming DataFrame in RAW_FLOW_SCHEMA, so
-`fan_in` + `flow_transform` apply uniformly downstream.
+Every source yields a streaming DataFrame in RAW_FLOW_SCHEMA, except
+that `udp://` (and its spellings) yields the three address fields as
+formatted strings (sources/udp.UDP_FLOW_SCHEMA), so its plan holds no
+Python UDF. `flow_transform` accepts either and produces the same 22
+columns, so each source is transformed and the results fanned in.
 """
 
 from __future__ import annotations
@@ -190,7 +193,7 @@ def open_stream(
     spark: SparkSession, spec: SourceSpec, batch_size: int | None = None
 ) -> DataFrame:
     """Materialize one source spec as a streaming DataFrame of raw
-    flow records (RAW_FLOW_SCHEMA).
+    flow records (RAW_FLOW_SCHEMA; string addresses for udp://).
 
     `batch_size` is the per-trigger row cap (-batchsize, main.go:36):
     mapped to each source's native cap (maxRowsPerTrigger for udp,

@@ -39,17 +39,27 @@ import ipaddress
 import json
 import socket
 import struct
-import threading
 import time
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
+from ..functions.ip import _format_ip
 from ..schema import RAW_FLOW_SCHEMA
 
 _MAX_DGRAM = 65535
 _BINARY_FIELDS = {"SamplerAddress", "SrcAddr", "DstAddr"}
+
+#: What the udp_flows source hands to Spark: RAW_FLOW_SCHEMA with the
+#: three address fields already formatted (main.go:133,138,139 formats
+#: them in the decoding goroutine too), so the ingest plan needs no
+#: Python UDF. The decoders below still return packed bytes.
+UDP_FLOW_SCHEMA = StructType([
+    StructField(f.name, StringType(), True) if f.name in _BINARY_FIELDS
+    else f
+    for f in RAW_FLOW_SCHEMA.fields
+])
 
 # FlowMessage.FlowType enum values (goflow2 wire contract; the reference
 # consumes these via the JSON transport).
@@ -62,28 +72,6 @@ _V5_HEADER = struct.Struct(">HHIIIIBBH")  # 24 bytes
 _V5_RECORD = struct.Struct(">4s4s4sHHIIIIHHBBBBHHBBH")  # 48 bytes
 
 _U32 = struct.Struct(">I")
-
-# Process-wide drop counters for the native listener (the counted half
-# of log-and-drop). NOTE the scope honestly: when the udp:// source
-# runs as a Spark streaming query, the reader executes in the Python
-# data-source WORKER process, so these counters are visible there, not
-# in the session process — IngestMetrics folds them on a best-effort
-# basis (complete for in-process/direct-reader embeddings and tests;
-# the JSON transport's observation-based counter is the
-# session-visible path).
-_DROP_LOCK = threading.Lock()
-_DROP_COUNTS: dict[str, int] = {}
-
-
-def record_drop(kind: str, n: int = 1) -> None:
-    with _DROP_LOCK:
-        _DROP_COUNTS[kind] = _DROP_COUNTS.get(kind, 0) + n
-
-
-def drop_counts() -> dict[str, int]:
-    with _DROP_LOCK:
-        return dict(_DROP_COUNTS)
-
 
 def parse_datagram(payload: bytes) -> tuple | None:
     """One JSON datagram → one RAW_FLOW_SCHEMA tuple (None = undecodable,
@@ -409,7 +397,6 @@ class NetflowV9Decoder:
         if self._ttl is not None and now - at > self._ttl:
             del cache[key]
             self.expired_templates += 1
-            record_drop("expired_templates")
             return None
         return fields
 
@@ -445,7 +432,6 @@ class NetflowV9Decoder:
                     tmpl = self._live(self._templates, key, unix_secs)
                     if tmpl is None:
                         self.dropped_no_template += 1
-                        record_drop("no_template")
                         continue
                     rows.extend(self._parse_data(
                         payload, body, body_end, tmpl, sampler, source_id,
@@ -634,7 +620,6 @@ class IpfixDecoder:
                     tmpl = self._live(self._templates, key, export_secs)
                     if tmpl is None or any(ln == 0xFFFF for _, ln in tmpl):
                         self.dropped_no_template += 1
-                        record_drop("no_template")
                         continue
                     rows.extend(self._parse_data(
                         payload, body, body_end, tmpl, sampler, domain,
@@ -784,11 +769,31 @@ class UdpFlowStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"count": 0}
 
+    def drop_totals(self) -> dict[str, int]:
+        """Datagrams and data sets this listener dropped, by kind (the
+        counted half of log-and-drop)."""
+        return {
+            "undecodable": self._dropped,
+            "no_template": (self._v9.dropped_no_template
+                            + self._ipfix.dropped_no_template),
+            "expired_templates": (self._v9.expired_templates
+                                  + self._ipfix.expired_templates),
+        }
+
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         """Drain whatever is in the kernel buffer right now (bounded by
         maxRowsPerTrigger — the size half of the reference's
-        size-OR-time batcher, main.go:121-152)."""
+        size-OR-time batcher, main.go:121-152).
+
+        The end offset carries the running drop totals as
+        {"count": rows, "dropped": {kind: total}} ("dropped" only once
+        something was dropped). The reader runs in the data-source
+        worker process, and its offsets are what reaches the session:
+        FlowMetricsListener reads them from each progress report's
+        sources[].endOffset, and the checkpoint keeps the totals across
+        a restart."""
         sock = self._socket()
+        before = self.drop_totals()
         rows: list[tuple] = []
         peer_cache: dict[str, bytes] = {}
         while len(rows) < self.max_per_batch:
@@ -807,10 +812,18 @@ class UdpFlowStreamReader(SimpleDataSourceStreamReader):
                                       ipfix=self._ipfix)
             if decoded is None:
                 self._dropped += 1
-                record_drop("undecodable")
                 continue
-            rows.extend(decoded)
-        return iter(rows), {"count": start["count"] + len(rows)}
+            for r in decoded:  # SamplerAddress, SrcAddr, DstAddr: 5, 10, 11
+                rows.append((*r[:5], _format_ip(r[5]), *r[6:10],
+                             _format_ip(r[10]), _format_ip(r[11]), *r[12:]))
+        end: dict = {"count": start["count"] + len(rows)}
+        dropped = dict(start.get("dropped", {}))
+        for kind, n in self.drop_totals().items():
+            if n > before[kind]:
+                dropped[kind] = dropped.get(kind, 0) + n - before[kind]
+        if dropped:
+            end["dropped"] = dropped
+        return iter(rows), end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
         # UDP cannot replay: at-most-once on crash-recovery, the
@@ -830,7 +843,7 @@ class UdpFlowDataSource(DataSource):
         return "udp_flows"
 
     def schema(self) -> StructType:
-        return RAW_FLOW_SCHEMA
+        return UDP_FLOW_SCHEMA
 
     def simpleStreamReader(self, schema: StructType) -> UdpFlowStreamReader:
         return UdpFlowStreamReader(self.options)

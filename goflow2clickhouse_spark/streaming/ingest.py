@@ -51,7 +51,7 @@ class IngestConfig:
 
 
 class IngestPipeline:
-    """source(s) → fan-in → transform → micro-batched sink."""
+    """source(s) → transform → fan-in → micro-batched sink."""
 
     def __init__(self, spark: SparkSession, config: IngestConfig, sink: SinkFn):
         self.spark = spark
@@ -89,7 +89,10 @@ class IngestPipeline:
                     open_stream(self.spark, s,
                                 batch_size=self.config.batch_size)
                 )
-        return flow_transform(fan_in(*raws))
+        # transform each source before the union: udp:// sources carry
+        # string addresses, the others packed bytes, and the 22-column
+        # outputs all agree
+        return fan_in(*map(flow_transform, raws))
 
     def start(
         self, query_name: str = "flows_ingest", available_now: bool = False

@@ -8,6 +8,7 @@ Prometheus servlet covers executor-level metrics.
 
 from __future__ import annotations
 
+import json
 import threading
 from dataclasses import dataclass, field
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -23,6 +24,12 @@ class IngestMetrics:
     last_input_rows_per_sec: float = 0.0
     last_processed_rows_per_sec: float = 0.0
     last_batch_duration_ms: float = 0.0
+    # latest running drop totals of each udp:// source, keyed by
+    # (query id, source position) — the totals are cumulative, so the
+    # newest report replaces the previous one
+    udp_dropped: dict[tuple[str, int], dict[str, int]] = field(
+        default_factory=dict
+    )
     _lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
 
     def snapshot(self) -> dict[str, float]:
@@ -35,18 +42,10 @@ class IngestMetrics:
                 "flows_processed_rows_per_sec": self.last_processed_rows_per_sec,
                 "flows_batch_duration_ms": self.last_batch_duration_ms,
             }
-        # native-listener drop counters (best-effort: complete when the
-        # UDP reader runs in this process — direct embedding, tests; a
-        # Spark streaming query runs the reader in the data-source
-        # worker process, whose counters are not reachable here — see
-        # sources/udp.py registry note)
-        try:
-            from ..sources.udp import drop_counts
-
-            for kind, n in drop_counts().items():
-                snap[f"flows_udp_{kind}_total"] = float(n)
-        except Exception:
-            pass
+            for totals in self.udp_dropped.values():
+                for kind, n in totals.items():
+                    name = f"flows_udp_{kind}_total"
+                    snap[name] = snap.get(name, 0.0) + n
         return snap
 
 
@@ -86,12 +85,32 @@ class FlowMetricsListener(StreamingQueryListener):
                         )
             except Exception:
                 pass  # observation shape is advisory, never fatal
+            for i, src in enumerate(p.sources):
+                totals = _udp_drop_totals(src.endOffset)
+                if totals:
+                    self.metrics.udp_dropped[(str(p.id), i)] = totals
 
     def onQueryIdle(self, event) -> None:  # noqa: N802
         pass
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         pass
+
+
+def _udp_drop_totals(offset: str | None) -> dict[str, int]:
+    """The running drop totals a udp:// source carries in its offset
+    ({"count": rows, "dropped": {kind: total}}, sources/udp.py); empty
+    for any other source's offset."""
+    try:
+        off = json.loads(offset or "")
+    except ValueError:
+        return {}
+    if not isinstance(off, dict) or "count" not in off:
+        return {}
+    dropped = off.get("dropped")
+    if not isinstance(dropped, dict):
+        return {}
+    return {str(k): v for k, v in dropped.items() if isinstance(v, int)}
 
 
 def prometheus_text(snapshot: dict[str, float]) -> str:

@@ -56,6 +56,47 @@ def test_ipv6_matches_go_semantics(b):
     assert _format_ip(b) == expected
 
 
+def _reference_format_ip(b: bytes | None) -> str | None:
+    """The stdlib formatter with Go's To4() rule — the reference the
+    C-level `_format_ip` must match byte for byte."""
+    if b is None:
+        return None
+    if len(b) == 4:
+        return str(ipaddress.IPv4Address(b))
+    if len(b) == 16:
+        v6 = ipaddress.IPv6Address(b)
+        mapped = v6.ipv4_mapped
+        return str(mapped) if mapped is not None else str(v6)
+    return None
+
+
+# hextets drawn mostly from {0} and {1..15}, so that zero runs of every
+# length, ties between runs, and runs at either end come up often
+_HEXTET = st.one_of(
+    st.just(0), st.integers(1, 15), st.integers(0, 0xFFFF)
+)
+_V6_HEXTETS = st.lists(_HEXTET, min_size=8, max_size=8).map(
+    lambda hs: b"".join(h.to_bytes(2, "big") for h in hs)
+)
+_QUAD = st.binary(min_size=4, max_size=4)
+_ADDRESSES = st.one_of(
+    _V6_HEXTETS,
+    _QUAD.map(lambda q: bytes(10) + b"\xff\xff" + q),  # ::ffff:a.b.c.d
+    _QUAD.map(lambda q: bytes(12) + q),                 # ::a.b.c.d
+    st.sampled_from([bytes(16), bytes(15) + b"\x01"]),  # ::, ::1
+    _QUAD,
+    st.sampled_from([0, 1, 5, 17]).flatmap(
+        lambda n: st.binary(min_size=n, max_size=n)
+    ),
+)
+
+
+@given(_ADDRESSES)
+@settings(max_examples=2000, deadline=None)
+def test_format_ip_matches_reference_on_hostile_addresses(b):
+    assert _format_ip(b) == _reference_format_ip(b)
+
+
 # ---- column-expression variants (JVM-side) ---------------------------------
 
 

@@ -172,3 +172,65 @@ def test_decode_drop_counter_from_observation(spark, tmp_path):
         assert snap["flows_decode_dropped_total"] == len(junk)
     finally:
         spark.streams.removeListener(listener)
+
+
+def test_udp_drop_counts_reach_metrics_scrape(spark, tmp_path):
+    """Datagrams the udp:// listener drops are counted in its data-source
+    worker process; the counts travel in the source's offsets to the
+    session, where FlowMetricsListener exports them on /metrics."""
+    import re
+    import socket
+    import struct
+    import urllib.request
+
+    from goflow2clickhouse_spark.streaming.metrics import MetricsHttpServer
+    from tests.test_streaming_ingest import _free_udp_port
+    from tests.test_udp_source import _msg
+
+    port = _free_udp_port()
+    # NetFlow v9 data set for a template this listener never saw
+    no_template = struct.pack(">HHIIII", 9, 1, 0, 1700000000, 1, 0) + \
+        struct.pack(">HH", 300, 8) + bytes(4)
+
+    listener = FlowMetricsListener()
+    spark.streams.addListener(listener)
+    server = MetricsHttpServer(listener.metrics, "127.0.0.1:0")
+    cfg = IngestConfig(
+        listen=f"udp://127.0.0.1:{port}",
+        batch_max_time="1 second",
+        checkpoint=str(tmp_path / "ck_udp"),
+    )
+    q = IngestPipeline(
+        spark, cfg, parquet_sink(str(tmp_path / "out_udp"))
+    ).start(query_name="udp_drop_run")
+    url = f"http://127.0.0.1:{server.port}/metrics"
+    sender = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
+
+    def scraped(body: str, name: str) -> float:
+        m = re.search(rf"^{name} (\S+)$", body, re.M)
+        return float(m.group(1)) if m else 0.0
+
+    try:
+        deadline = time.time() + 90
+        body = ""
+        while time.time() < deadline:
+            # re-sent until the listener has bound its socket and a
+            # batch holding the drops has reported progress
+            for p in (b"junk", b"[1, 2]", no_template, _msg()):
+                sender.sendto(p, ("127.0.0.1", port))
+            time.sleep(1.0)
+            with urllib.request.urlopen(url, timeout=10) as resp:
+                body = resp.read().decode()
+            if (scraped(body, "flows_udp_undecodable_total") > 0
+                    and scraped(body, "flows_udp_no_template_total") > 0):
+                break
+        assert scraped(body, "flows_udp_undecodable_total") > 0, body
+        assert scraped(body, "flows_udp_no_template_total") > 0, body
+        assert scraped(body, "flows_rows_total") > 0, body
+        assert "# TYPE flows_udp_undecodable_total counter" in body
+    finally:
+        sender.close()
+        q.stop()
+        server.close()
+        spark.streams.removeListener(listener)
+

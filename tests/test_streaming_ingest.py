@@ -127,6 +127,71 @@ def test_udp_workers_fan_in(spark):
         assert "Union" in plan
 
 
+def _free_udp_port() -> int:
+    import socket as _socket
+
+    probe = _socket.socket(_socket.AF_INET, _socket.SOCK_DGRAM)
+    probe.bind(("127.0.0.1", 0))
+    port = probe.getsockname()[1]
+    probe.close()
+    return port
+
+
+def test_udp_ingest_plan_has_no_python_udf(spark, tmp_path):
+    """The udp:// listener formats addresses itself, so the ingest plan
+    runs no Python UDF (no Arrow round trip to a second Python worker
+    on every micro-batch). Read from a micro-batch that really ran: a
+    streaming plan is only optimized once a batch executes."""
+    import socket as _socket
+    import time
+
+    from tests.test_udp_source import _msg
+
+    port = _free_udp_port()
+    cfg = IngestConfig(
+        listen=f"udp://127.0.0.1:{port}",
+        batch_max_time="500 milliseconds",
+        checkpoint=str(tmp_path / "ck-plan"),
+    )
+    seen: list[int] = []
+    q = IngestPipeline(
+        spark, cfg, lambda df, bid: seen.append(df.count())
+    ).start(query_name="udp_plan_run")
+    sender = _socket.socket(_socket.AF_INET, _socket.SOCK_DGRAM)
+    try:
+        deadline = time.time() + 60
+        while time.time() < deadline and not any(seen):
+            sender.sendto(_msg(), ("127.0.0.1", port))
+            time.sleep(0.5)
+        assert any(seen), "no datagram reached the sink"
+        plan = q._jsq.explainInternal(True)
+    finally:
+        sender.close()
+        q.stop()
+    assert "udp_flows" in plan and "Optimized Logical Plan" in plan, plan
+    assert "ArrowEvalPython" not in plan, plan
+    assert "BatchEvalPython" not in plan, plan
+
+
+def test_mixed_udp_and_file_listen(spark, raw_dir):
+    """udp:// yields string addresses and file:// packed bytes; each is
+    transformed before the fan-in, so a mixed listen builds and carries
+    the same 22 columns as flow_transform over a binary batch."""
+    from goflow2clickhouse_spark.operators.flows import flow_transform
+
+    cfg = IngestConfig(
+        listen=f"udp://127.0.0.1:{_free_udp_port()},file://{raw_dir}"
+    )
+    df = IngestPipeline(spark, cfg, lambda df, bid: None).stream()
+    want = flow_transform(spark.createDataFrame([_raw_row()], RAW_FLOW_SCHEMA))
+    assert [(f.name, f.dataType) for f in df.schema.fields] == [
+        (f.name, f.dataType) for f in want.schema.fields
+    ]
+    assert len(df.schema.fields) == 22
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert "udp_flows" in plan and "Union" in plan
+
+
 def test_batch_etl_throughput_floor(spark, tmp_path):
     """Batch transform throughput (README 'UDP ingest throughput'):
     raw -> 22-column transform -> parquet must clear the reference's

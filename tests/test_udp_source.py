@@ -12,6 +12,7 @@ import pytest
 
 from goflow2clickhouse_spark.schema import RAW_FLOW_SCHEMA
 from goflow2clickhouse_spark.sources.udp import (
+    UDP_FLOW_SCHEMA,
     UdpFlowStreamReader,
     parse_datagram,
 )
@@ -171,10 +172,12 @@ def test_reader_drain_and_offsets(reader):
     time.sleep(0.2)
     rows, off = r.read({"count": 0})
     rows = list(rows)
-    assert len(rows) == 5 and off == {"count": 5}
+    # the offset carries the running drop totals to the session
+    assert len(rows) == 5
+    assert off == {"count": 5, "dropped": {"undecodable": 1}}
     # drained: next read returns nothing, offset advances by 0
     rows2, off2 = r.read(off)
-    assert list(rows2) == [] and off2 == {"count": 5}
+    assert list(rows2) == [] and off2 == off
     # UDP replay is empty by contract (at-most-once, reference parity)
     assert list(r.readBetweenOffsets({"count": 0}, {"count": 5})) == []
 
@@ -182,7 +185,8 @@ def test_reader_drain_and_offsets(reader):
 def test_reader_mixed_binary_and_json(reader):
     """One drain handles interleaved v5 binary and JSON datagrams; the
     v5 rows carry the sender's address as SamplerAddress; sFlow rows
-    carry the in-datagram agent address."""
+    carry the in-datagram agent address. The reader hands Spark the
+    addresses already formatted (UDP_FLOW_SCHEMA)."""
     r, port = reader
     sflow = _sflow_datagram(
         [(1, _flow_sample([(1, _raw_header_record(_eth_frame()))]))])
@@ -191,15 +195,17 @@ def test_reader_mixed_binary_and_json(reader):
     time.sleep(0.2)
     rows, off = r.read({"count": 0})
     rows = list(rows)
-    assert len(rows) == 4 and off == {"count": 4}
-    names = [f.name for f in RAW_FLOW_SCHEMA.fields]
+    assert len(rows) == 4
+    assert off == {"count": 4, "dropped": {"undecodable": 1}}
+    names = [f.name for f in UDP_FLOW_SCHEMA.fields]
     v5_rows = [dict(zip(names, t)) for t in rows if t[0] == 2]
     assert len(v5_rows) == 2
-    assert v5_rows[0]["SamplerAddress"] == bytes([127, 0, 0, 1])
+    assert v5_rows[0]["SamplerAddress"] == "127.0.0.1"
     sflow_rows = [dict(zip(names, t)) for t in rows if t[0] == 1]
     assert len(sflow_rows) == 1
     # sFlow rows carry the datagram's agent address, not the UDP peer
-    assert sflow_rows[0]["SamplerAddress"] == bytes([192, 0, 2, 1])
+    assert sflow_rows[0]["SamplerAddress"] == "192.0.2.1"
+    assert sflow_rows[0]["SrcAddr"] == "1.2.3.4"
     assert r._dropped == 1  # the [1,2] datagram
 
 
