@@ -291,8 +291,6 @@ def write_filtered_ivf_index(
 
     from ..operators.dedup import _ckpt_rdd_ids, _release_rdds
     from ..operators.similarity import ivf_centroids, ivf_centroids_trained
-    from ..versioned import commit_version, version_dir
-
     spark = documents.sparkSession
     eligible = eligible_embeddings(documents, embeddings, min_chars, lang)
     ver = _ivf_current_version(spark, path) + 1
@@ -347,86 +345,29 @@ def append_to_ivf_index(
     path: str,
     extra: dict | None = None,
 ) -> None:
-    """Incremental index maintenance — the daily-embedding-batch shape:
-    assign a NEW batch of vectors against the STORED centroids and
-    commit it as an append delta under the current version, without
-    rebuilding (or even reading) the existing cells. At 100 TB a full
-    rebuild per batch is the same anti-pattern full-corpus re-dedup is;
-    this is the ivf analog of the persisted band index's incremental
-    contract.
-
-    Layout: batch j lands at a NONCE-UNIQUE delta dir
-    `v{N}/appends/a{j}.{8-hex}/cells/cell=*/` (same partitioning as
-    the base), and `_CURRENT` is atomically re-committed with the
-    exact directory names (`delta_dirs`, r13 — see _alloc_delta) plus
-    the `appends: j` counter — readers scan base + the RECORDED dirs,
-    so a torn append (delta written, commit lost) is simply invisible,
-    the retry lands in a fresh dir, and a zombie holder resumed
-    mid-data-write can never overwrite a committed or in-flight delta
-    (orphans die with the version directory at the next rebuild
-    prune). The eligibility gate and assignment use the
-    parameters RECORDED in `_CURRENT` (min_chars/lang/n_cells), not
-    caller arguments — an append can never silently apply a different
-    gate than the build. Approximation caveat: appended vectors join
-    cells seeded from the ORIGINAL build's centroid sample; after heavy
-    drift, rebuild (write_filtered_ivf_index bumps the version and
-    resets appends). Compaction story: each append adds one file set
-    per touched cell; the rebuild IS the compaction.
-
-    Dedup across batches is the caller's contract (same as any index
-    append); ids already present are served twice.
-
-    An EMPTY eligible batch writes NO delta: Spark writes only
-    `_SUCCESS` for an empty partitioned parquet write (no schema to
-    infer on read-back), so committing such a delta would poison every
-    subsequent `_read_index_cells` union until a rebuild (r7 advice).
-    `extra` entries merge into `_CURRENT` alongside the append counter
-    (the band/SQ/PQ append rule, adopted r11 when the generic
-    maintenance fold gained an `ivf` dispatch row) — the streaming
-    loop records its (run_id, epoch) replay gate there, atomically
-    with the delta it guards; an empty batch still commits `extra`,
-    so the gate advances deltalessly."""
+    """Fold a new embedding batch into the filtered-IVF index: gate it
+    with the RECORDED min_chars/lang, assign it against the STORED
+    centroids, and commit one cell-partitioned delta
+    (`appends/a{j}.{8-hex}/cells/cell=*/`). Appended vectors join
+    cells seeded from the original build's centroids; after heavy
+    drift, rebuild (write_filtered_ivf_index). An eligible-empty batch
+    counts as empty. Shared append contract: _append_delta."""
     import posixpath
 
     from ..operators.similarity import ivf_assign
-    from ..versioned import current_meta, recommit_meta, version_dir
 
     spark = documents.sparkSession
-    meta = current_meta(spark, path)
-    ver = int(meta.get("version", 0))
-    if ver == 0:
-        raise FileNotFoundError(f"no committed IVF index under {path}")
-    _require_kind(meta, "ivf", path)
-    base = version_dir(path, ver)
-    # persisted: the emptiness probe and the delta write would
-    # otherwise evaluate the eligibility semi-join twice per batch —
-    # the per-micro-batch hot path of the streaming maintenance loop
-    # (r9 review; the same cost write_filtered_ivf_index engineered
-    # around at build time)
-    eligible = eligible_embeddings(
-        documents, embeddings,
-        int(meta["min_chars"]), str(meta["lang"]),
-    ).persist()
-    try:
-        if eligible.isEmpty():
-            # an eligible-empty batch writes no delta, but the caller's
-            # `extra` (the streaming fold's (run_id, epoch) replay gate)
-            # must still commit — same rule as every other layout's
-            # append: the gate advances deltalessly (r11: the generic
-            # maintenance fold dispatches `ivf` too)
-            if extra:
-                recommit_meta(spark, path, meta, extra=extra)
-            return
+
+    def write(eligible, meta, base, delta):
         cents = spark.read.parquet(posixpath.join(base, "centroids"))
-        delta, j, dx = _alloc_delta(base, meta)
         ivf_assign(eligible, cents).write.mode("overwrite").partitionBy(
             "cell"
         ).parquet(posixpath.join(delta, "cells"))
-        recommit_meta(
-            spark, path, meta, extra={**(extra or {}), **dx}, appends=j
-        )
-    finally:
-        eligible.unpersist()
+
+    _append_delta(
+        spark, path, "ivf", None, extra,
+        _recorded_eligible(documents, embeddings), write,
+    )
 
 
 def _stage_version(spark: SparkSession, path: str) -> tuple[str, str]:
@@ -607,6 +548,108 @@ def _delta_dirs(base: str, meta: dict) -> list[str]:
     return [base] + [posixpath.join(base, "appends", n) for n in names]
 
 
+_KIND_LABELS = {"band": "band", "phash": "pHash band", "ivf": "IVF",
+                "pq": "PQ", "sq": "SQ",
+                "ivfsq": "IVF-SQ", "ivfpq": "IVF-PQ"}
+
+
+def _committed_index(
+    spark: SparkSession,
+    path: str,
+    kind: str | None = None,
+    geometry: dict | None = None,
+    expect: dict | None = None,
+):
+    """The one metadata gate of every index operation: committed
+    version (loud when none), layout kind, the layout's UNCONDITIONAL
+    geometry pin (encode and scoring run with the CURRENT module
+    constants, so a recorded mismatch would garble codes silently),
+    then the caller's `expect`. `kind=None` serves the layout-generic
+    verbs (delete, compact), which infer the layout themselves.
+    Returns (meta, version dir)."""
+    from ..versioned import check_meta, current_meta, version_dir
+
+    meta = current_meta(spark, path)
+    ver = int(meta.get("version", 0))
+    if ver == 0:
+        label = f"{_KIND_LABELS[kind]} " if kind else ""
+        raise FileNotFoundError(f"no committed {label}index under {path}")
+    if kind is not None:
+        _require_kind(meta, kind, path)
+    if geometry:
+        check_meta(meta, geometry, path)
+    if expect:
+        check_meta(meta, expect, path)
+    return meta, version_dir(path, ver)
+
+
+def _append_delta(
+    spark: SparkSession,
+    path: str,
+    kind: str,
+    geometry: dict | None,
+    extra: dict | None,
+    rows,
+    write,
+) -> None:
+    """The one append path of the seven layouts: fold a batch into the
+    committed version as a delta, never reading or rewriting the
+    existing legs. Steps: the metadata gate; `rows(meta)` builds the
+    batch's rows from the RECORDED metadata (eligibility gate, id
+    column, shingle width — never caller arguments) and is persisted,
+    so the batch source is evaluated once; `write(rows, meta, base,
+    delta_dir)` writes the layout's legs; `_CURRENT` re-commits with
+    the delta's directory name, the `appends` counter and `extra`.
+
+    Contract:
+      * the delta lands at a NONCE-UNIQUE `v{N}/appends/a{j}.{8-hex}/`
+        (_alloc_delta), and readers scan base + the RECORDED dirs
+        (_delta_dirs), so a torn append (delta written, commit lost)
+        is invisible and its retry lands in a fresh directory;
+      * `extra` merges into `_CURRENT` atomically with the counter —
+        the streaming folds record their (run_id, epoch) replay gate
+        there, so the gate commits with the delta it guards;
+      * an EMPTY batch writes no delta (an empty partitioned parquet
+        write holds only `_SUCCESS` and would poison every union read)
+        but still commits `extra`, so the replay gate advances;
+      * quantizers/centroids are read from the committed version,
+        never re-derived; a rebuild bumps the version and resets the
+        counter, and compact_index folds the deltas into a new base.
+    Dedup across batches is the caller's contract."""
+    from ..versioned import recommit_meta
+
+    meta, base = _committed_index(spark, path, kind, geometry)
+    batch = rows(meta).persist()
+    try:
+        if batch.isEmpty():
+            if extra:
+                recommit_meta(spark, path, meta, extra=extra)
+            return
+        delta, j, dx = _alloc_delta(base, meta)
+        write(batch, meta, base, delta)
+        recommit_meta(
+            spark, path, meta, extra={**(extra or {}), **dx}, appends=j
+        )
+    finally:
+        batch.unpersist()
+
+
+def _recorded_eligible(documents: DataFrame, embeddings: DataFrame):
+    """rows() of the gated layouts (IVF, IVF-PQ): the eligibility gate
+    with the min_chars/lang RECORDED at build time."""
+    return lambda meta: eligible_embeddings(
+        documents, embeddings, int(meta["min_chars"]), str(meta["lang"])
+    )
+
+
+def _id_vectors(batch: DataFrame, vec_col: str):
+    """rows() of the ungated vector layouts (PQ, SQ, IVF-SQ): the
+    batch's recorded id column and its vectors."""
+    return lambda meta: batch.select(
+        F.col(str(meta.get("id_col", "vec_id"))), F.col(vec_col)
+    )
+
+
 def _read_tombstones(
     spark: SparkSession, base: str, meta: dict, id_col: str
 ) -> DataFrame | None:
@@ -709,19 +752,10 @@ def ivf_index_probe(
     LITERAL, so the query subtree is evaluated exactly once per probe
     and pruning + scoring provably use the same vector."""
     from ..operators.similarity import as_double, cosine
-    from ..versioned import check_meta, current_meta, version_dir
 
-    meta = current_meta(spark, path)
-    ver = int(meta.get("version", 0))
-    if ver == 0:
-        raise FileNotFoundError(f"no committed IVF index under {path}")
-    _require_kind(meta, "ivf", path)
-    if expect:
-        # refuse a mismatched build (r7 review): pass e.g.
-        # {"n_cells": 8, "lang": "en"} to pin the geometry/eligibility
-        # this probe's caller (and its oracle) assume
-        check_meta(meta, expect, path)
-    base = version_dir(path, ver)
+    # `expect`, e.g. {"n_cells": 8, "lang": "en"}, refuses a build with
+    # a different geometry/eligibility than the caller's oracle assumes
+    meta, base = _committed_index(spark, path, "ivf", expect=expect)
     cents = _version_artifacts(spark, path, meta, ("centroids",))[
         "centroids"
     ]
@@ -877,7 +911,7 @@ def write_band_index(
         band_key_rows,
         shingle_arrays,
     )
-    from ..versioned import commit_version, current_version, version_dir
+    from ..versioned import current_version
 
     spark = corpus.sparkSession
     ver = current_version(spark, path) + 1
@@ -927,28 +961,14 @@ def append_to_band_index(
     the daily-crawl loop: each increment first dedups against the index
     (`incremental_neardup_pairs_indexed` + `band_index_sha_set`), then
     the kept docs are appended here so TOMORROW'S batch dedups against
-    them too — without ever rebuilding (or reading) the existing
-    shingles/bands/shas. Same append contract as `append_to_ivf_index`:
-    batch j lands at the nonce-unique
-    `v{N}/appends/a{j}.{8-hex}/{shingles,bands,shas}` (_alloc_delta,
-    r13), `_CURRENT` atomically records the directory names, a torn
-    append is invisible and the retry lands fresh, and a rebuild
-    (write_band_index) bumps the version and resets the counter —
-    rebuild IS the compaction. Shingle width and LSH geometry come from
-    the RECORDED metadata, never caller arguments. `extra` entries are
-    merged into `_CURRENT` alongside the append counter — the streaming
-    crawl loop records its (run_id, epoch) replay gate there, so the
-    gate commits ATOMICALLY with the append it guards.
-
-    An EMPTY batch (a crawl micro-batch where every doc was an
-    exact/near dup — routine in steady state) writes NO delta but
-    still commits `extra`, so the replay gate advances: Spark writes
-    only `_SUCCESS` for an empty partitioned parquet write and the
-    read-back throws UNABLE_TO_INFER_SCHEMA, so committing an empty
-    `bands` delta would poison every subsequent probe until a rebuild
-    (r7 advice). The batch-may-still-band-empty edge (all docs shorter
-    than the shingle width) is handled on the READ side —
-    `_union_parquet` reads delta legs with the base leg's schema."""
+    them too, as one `appends/a{j}.{8-hex}/{shingles,bands,shas}`
+    delta. Shingle width, id column and LSH geometry come from the
+    RECORDED metadata; the num_perm/bands gate is unconditional, since
+    banding runs with the CURRENT module constants and a mismatched
+    delta would never match a probe again. A batch whose docs are all
+    shorter than the shingle width commits an empty `bands` leg, which
+    `_union_parquet` reads with the base leg's schema. Shared append
+    contract: _append_delta."""
     import posixpath
 
     from ..operators.dedup import (
@@ -958,66 +978,41 @@ def append_to_band_index(
         band_key_rows,
         shingle_arrays,
     )
-    from ..versioned import check_meta, current_meta, recommit_meta, version_dir
 
     spark = batch.sparkSession
-    meta = current_meta(spark, path)
-    if not meta:
-        raise FileNotFoundError(f"no committed band index under {path}")
-    _require_kind(meta, "band", path)
-    # unconditional LSH-geometry gate (r8 review, the PQ append's
-    # twin): banding below runs with the CURRENT module constants —
-    # folding a delta keyed with a different num_perm/bands than the
-    # index records would commit band keys that never again match any
-    # probe (silent recall loss for every doc in the delta)
-    check_meta(meta, {"num_perm": NUM_PERM, "bands": BANDS}, path)
-    base = version_dir(path, int(meta["version"]))
-    idx_id = str(meta.get("id_col", "doc_id"))
-    delta, j, dx = _alloc_delta(base, meta)
-    # persisted: the emptiness probe and the shas write would
-    # otherwise re-scan the batch source (the shingles leg reads the
-    # written parquet back, so it costs one scan either way) — this
-    # fold is the streaming crawl loop's per-micro-batch hot path
-    # (r9 review)
-    norm_batch = batch.select(
-        F.col(id_col).alias(idx_id), F.col(text_col).alias("text")
-    ).persist()
-    try:
-        if norm_batch.isEmpty():
-            if extra:
-                recommit_meta(spark, path, meta, extra=extra)
-            return
+
+    def rows(meta):
+        return batch.select(
+            F.col(id_col).alias(str(meta.get("id_col", "doc_id"))),
+            F.col(text_col).alias("text"),
+        )
+
+    def write(norm, meta, base, delta):
+        idx_id = str(meta.get("id_col", "doc_id"))
         sh_path = posixpath.join(delta, "shingles")
-        shingle_arrays(norm_batch, "text", idx_id, int(meta["n"])).write.mode(
+        shingle_arrays(norm, "text", idx_id, int(meta["n"])).write.mode(
             "overwrite"
         ).parquet(sh_path)
         sh = spark.read.parquet(sh_path)
         band_key_rows(array_minhash_sigs(sh, idx_id), idx_id).write.mode(
             "overwrite"
         ).partitionBy("band_no").parquet(posixpath.join(delta, "bands"))
-        norm_batch.select(
+        norm.select(
             F.col(idx_id), F.sha2(F.col("text"), 256).alias("_sha")
         ).distinct().write.mode("overwrite").parquet(
             posixpath.join(delta, "shas")
         )
-        recommit_meta(
-            spark, path, meta, extra={**(extra or {}), **dx}, appends=j
-        )
-    finally:
-        norm_batch.unpersist()
+
+    _append_delta(
+        spark, path, "band", {"num_perm": NUM_PERM, "bands": BANDS},
+        extra, rows, write,
+    )
 
 
 def _band_index_parts(spark: SparkSession, index_path: str):
     """(meta, [artifact dirs]) of the committed band index: the base
-    version directory plus every COMMITTED append delta (directories
-    beyond `meta['appends']` are torn/uncommitted and ignored)."""
-    from ..versioned import current_meta, version_dir
-
-    meta = current_meta(spark, index_path)
-    if not meta:
-        raise FileNotFoundError(f"no committed band index under {index_path}")
-    _require_kind(meta, "band", index_path)
-    base = version_dir(index_path, int(meta["version"]))
+    version directory plus every COMMITTED append delta."""
+    meta, base = _committed_index(spark, index_path, "band")
     return meta, _delta_dirs(base, meta)
 
 
@@ -1372,63 +1367,37 @@ def append_to_phash_index(
     hash_col: str = "phash",
     extra: dict | None = None,
 ) -> None:
-    """Fold an ingested image batch's hashes INTO the pHash index —
-    the crawl loop's second half, the append_to_band_index contract
-    verbatim: the batch lands at the nonce-unique
-    `v{N}/appends/a{j}.{8-hex}/{hashes,bands}` (_alloc_delta),
-    `_CURRENT` atomically records the directory names, a torn append
-    is invisible and the retry lands fresh; a rebuild bumps the
-    version and resets the counter. An EMPTY batch writes no delta
-    but still commits `extra`, so a streaming fold's (run_id, epoch)
-    replay gate advances deltalessly."""
+    """Fold an ingested image batch's hashes INTO the pHash index — the
+    crawl loop's second half: one `appends/a{j}.{8-hex}/{hashes,bands}`
+    delta, bands derived from the written hashes. The band geometry
+    gate is unconditional. Shared append contract: _append_delta."""
     import posixpath
 
-    from ..versioned import check_meta, current_meta, recommit_meta, version_dir
-
     spark = batch.sparkSession
-    meta = current_meta(spark, path)
-    if not meta:
-        raise FileNotFoundError(f"no committed phash index under {path}")
-    _require_kind(meta, "phash", path)
-    check_meta(meta, {"phash_bands": PHASH_BANDS}, path)
-    base = version_dir(path, int(meta["version"]))
-    idx_id = str(meta.get("id_col", "doc_id"))
-    delta, j, dx = _alloc_delta(base, meta)
-    norm = batch.select(
-        F.col(id_col).alias(idx_id),
-        F.col(hash_col).cast("long").alias("phash"),
-    ).persist()
-    try:
-        if norm.isEmpty():
-            if extra:
-                recommit_meta(spark, path, meta, extra=extra)
-            return
+
+    def rows(meta):
+        return batch.select(
+            F.col(id_col).alias(str(meta.get("id_col", "doc_id"))),
+            F.col(hash_col).cast("long").alias("phash"),
+        )
+
+    def write(norm, meta, base, delta):
         h_path = posixpath.join(delta, "hashes")
         norm.write.mode("overwrite").parquet(h_path)
         hs = spark.read.parquet(h_path)
-        _phash_band_rows(hs, idx_id).write.mode("overwrite").partitionBy(
-            "band_no"
-        ).parquet(posixpath.join(delta, "bands"))
-        recommit_meta(
-            spark, path, meta, extra={**(extra or {}), **dx}, appends=j
-        )
-    finally:
-        norm.unpersist()
+        _phash_band_rows(hs, str(meta.get("id_col", "doc_id"))).write.mode(
+            "overwrite"
+        ).partitionBy("band_no").parquet(posixpath.join(delta, "bands"))
+
+    _append_delta(
+        spark, path, "phash", {"phash_bands": PHASH_BANDS}, extra,
+        rows, write,
+    )
 
 
 def _phash_index_parts(spark: SparkSession, index_path: str):
-    """(meta, [artifact dirs]) of the committed pHash index —
-    _band_index_parts' seventh-layout twin (r14 review: the probe
-    used to re-inline this gate)."""
-    from ..versioned import current_meta, version_dir
-
-    meta = current_meta(spark, index_path)
-    if not meta:
-        raise FileNotFoundError(
-            f"no committed phash index under {index_path}"
-        )
-    _require_kind(meta, "phash", index_path)
-    base = version_dir(index_path, int(meta["version"]))
+    """(meta, [artifact dirs]) of the committed pHash index."""
+    meta, base = _committed_index(spark, index_path, "phash")
     return meta, _delta_dirs(base, meta)
 
 
@@ -1546,16 +1515,8 @@ def semdedup_prune_persisted(
         centroid_score,
         norm,
     )
-    from ..versioned import check_meta, current_meta, version_dir
 
-    meta = current_meta(spark, index_path)
-    ver = int(meta.get("version", 0))
-    if ver == 0:
-        raise FileNotFoundError(f"no committed IVF index under {index_path}")
-    _require_kind(meta, "ivf", index_path)
-    if expect:
-        check_meta(meta, expect, index_path)
-    base = version_dir(index_path, ver)
+    meta, base = _committed_index(spark, index_path, "ivf", expect=expect)
     cents_row = _version_artifacts(
         spark, index_path, meta, ("centroids",)
     )["centroids"]
@@ -1645,7 +1606,7 @@ def write_pq_index(
         pq_codebook_trained,
         pq_encode,
     )
-    from ..versioned import commit_version, current_version, version_dir
+    from ..versioned import current_version
 
     spark = embeddings.sparkSession
     if embeddings.isEmpty():
@@ -1685,57 +1646,27 @@ def append_to_pq_index(
     extra: dict | None = None,
 ) -> None:
     """Fold a new embedding batch into the PQ index: encode it against
-    the STORED codebook (read from the committed version — an append
-    can never silently use different entries than the build) and
-    commit the codes as an atomic `appends` delta, base codes
-    untouched. Same contract as `append_to_ivf_index` /
-    `append_to_band_index`: batch j lands at the nonce-unique
-    `v{N}/appends/a{j}.{8-hex}/codes` (_alloc_delta, r13),
-    `_CURRENT` records the directory names, torn deltas are invisible
-    and a rebuild (write_pq_index) bumps the version and resets the
-    counter — rebuild IS the compaction (and the moment to re-derive
-    the codebook after drift). `extra` entries merge into `_CURRENT`
-    alongside the append counter (the band/SQ append rule — the
-    streaming replay gate rides the same atomic commit; r10); an
-    empty batch writes no delta but still commits `extra`. Dedup
-    across batches is the caller's contract."""
+    the STORED codebook into one `appends/a{j}.{8-hex}/codes` delta.
+    The PQ geometry gate is unconditional (pq_encode packs with the
+    CURRENT module constants), and the layout gate comes first: an
+    IVF-PQ index records the same geometry, and a codes-only delta
+    there would break every probe. Rebuild is the moment to re-derive
+    the codebook after drift. Shared append contract: _append_delta."""
     import posixpath
 
     from ..operators.similarity import PQ_K, PQ_M, PQ_SUB, pq_encode
-    from ..versioned import (
-        check_meta,
-        current_meta,
-        recommit_meta,
-        version_dir,
-    )
 
     spark = batch.sparkSession
-    meta = current_meta(spark, path)
-    ver = int(meta.get("version", 0))
-    if ver == 0:
-        raise FileNotFoundError(f"no committed PQ index under {path}")
-    # the layout gate must come first (r9 review): an IVF-PQ index
-    # records the same pq_m/pq_sub/pq_k, so the geometry gate alone
-    # would wave a mistaken PQ append through — committing a
-    # codes-only delta whose a{j}/cells read then breaks every probe
-    _require_kind(meta, "pq", path)
-    # unconditional geometry gate (r8 review): pq_encode packs with
-    # the CURRENT module constants — encoding against an old-geometry
-    # codebook would commit permanently garbled codes with no error
-    check_meta(meta, {"pq_m": PQ_M, "pq_sub": PQ_SUB, "pq_k": PQ_K}, path)
-    if batch.isEmpty():
-        if extra:
-            recommit_meta(spark, path, meta, extra=extra)
-        return
-    base = version_dir(path, ver)
-    cb = spark.read.parquet(posixpath.join(base, "codebook"))
-    idx_id = str(meta.get("id_col", "vec_id"))
-    delta, j, dx = _alloc_delta(base, meta)
-    pq_encode(batch, cb, vec_col, idx_id).write.mode("overwrite").parquet(
-        posixpath.join(delta, "codes")
-    )
-    recommit_meta(
-        spark, path, meta, extra={**(extra or {}), **dx}, appends=j
+
+    def write(rows, meta, base, delta):
+        cb = spark.read.parquet(posixpath.join(base, "codebook"))
+        pq_encode(
+            rows, cb, vec_col, str(meta.get("id_col", "vec_id"))
+        ).write.mode("overwrite").parquet(posixpath.join(delta, "codes"))
+
+    _append_delta(
+        spark, path, "pq", {"pq_m": PQ_M, "pq_sub": PQ_SUB, "pq_k": PQ_K},
+        extra, _id_vectors(batch, vec_col), write,
     )
 
 
@@ -1857,8 +1788,6 @@ def pq_index_probe(
     with no cell pruning in this layout, R bounds the only serving
     error, so recall@k approaches 1.0 as R grows; output becomes
     (id, adist, dist) ranked by `dist`."""
-    import posixpath
-
     from ..operators.similarity import (
         PQ_K,
         PQ_M,
@@ -1868,23 +1797,12 @@ def pq_index_probe(
         as_double,
         pq_adc_dist,
     )
-    from ..versioned import check_meta, current_meta, version_dir
 
-    meta = current_meta(spark, path)
-    ver = int(meta.get("version", 0))
-    if ver == 0:
-        raise FileNotFoundError(f"no committed PQ index under {path}")
-    _require_kind(meta, "pq", path)
-    # the nibble-unpack scoring is built from the CURRENT module
-    # constants — a recorded-geometry mismatch silently mis-reads
-    # every code, so this gate is unconditional (r8 review);
-    # `expect` adds caller-specific pins on top
-    check_meta(
-        meta, {"pq_m": PQ_M, "pq_sub": PQ_SUB, "pq_k": PQ_K}, path
+    meta, base = _committed_index(
+        spark, path, "pq",
+        geometry={"pq_m": PQ_M, "pq_sub": PQ_SUB, "pq_k": PQ_K},
+        expect=expect,
     )
-    if expect:
-        check_meta(meta, expect, path)
-    base = version_dir(path, ver)
     cb = _version_artifacts(spark, path, meta, ("codebook",))["codebook"]
     codes = _read_index_codes(spark, path, base, meta)
     idx_id = str(meta.get("id_col", "vec_id"))
@@ -1985,11 +1903,6 @@ def _require_unique_qids(
         )
 
 
-_KIND_LABELS = {"band": "band", "phash": "pHash band", "ivf": "IVF",
-                "pq": "PQ", "sq": "SQ",
-                "ivfsq": "IVF-SQ", "ivfpq": "IVF-PQ"}
-
-
 def _batch_probe_queries(
     queries: DataFrame, op: str, qid_col: str, qvec_col: str, dim: int
 ) -> DataFrame:
@@ -2009,32 +1922,6 @@ def _batch_probe_queries(
         q.unpersist()
         raise
     return q
-
-
-def _committed_index(
-    spark: SparkSession,
-    path: str,
-    kind: str,
-    geometry: dict | None = None,
-    expect: dict | None = None,
-):
-    """The probes' shared metadata gate: committed version (loud when
-    none), layout kind, the layout's UNCONDITIONAL geometry pin, then
-    the caller's `expect`. Returns (meta, version dir)."""
-    from ..versioned import check_meta, current_meta, version_dir
-
-    meta = current_meta(spark, path)
-    ver = int(meta.get("version", 0))
-    if ver == 0:
-        raise FileNotFoundError(
-            f"no committed {_KIND_LABELS[kind]} index under {path}"
-        )
-    _require_kind(meta, kind, path)
-    if geometry:
-        check_meta(meta, geometry, path)
-    if expect:
-        check_meta(meta, expect, path)
-    return meta, version_dir(path, ver)
 
 
 def _batch_topk(
@@ -2279,7 +2166,7 @@ def write_sq_index(
     import posixpath
 
     from ..operators.similarity import DIM, SQ_BUCKETS, sq_encode, sq_quantizer
-    from ..versioned import commit_version, current_version, version_dir
+    from ..versioned import current_version
 
     spark = embeddings.sparkSession
     if embeddings.isEmpty():
@@ -2313,49 +2200,28 @@ def append_to_sq_index(
     vec_col: str = "embedding",
     extra: dict | None = None,
 ) -> None:
-    """Fold a new embedding batch into the SQ index: encode against
-    the STORED quantizer and commit the codes as an atomic `appends`
-    delta — the append_to_pq_index contract verbatim (codes are
-    row-independent; torn deltas invisible; rebuild = new quantizer =
-    the compaction moment after distribution drift, which for SQ
-    means values drifting OUTSIDE the recorded ranges start
-    saturating at the clamp). `extra` entries merge into `_CURRENT`
-    alongside the append counter (the band/IVF-PQ append rule) — the
-    streaming maintenance loop records its (run_id, epoch) replay
-    gate there, atomically with the delta it guards; an EMPTY batch
-    writes no delta but still commits `extra`, so the gate advances."""
+    """Fold a new embedding batch into the SQ index: encode it against
+    the STORED quantizer into one `appends/a{j}.{8-hex}/codes` delta.
+    Values drifting outside the recorded ranges saturate at the clamp;
+    rebuild (a new quantizer) is the remedy. Shared append contract:
+    _append_delta."""
     import posixpath
 
     from ..operators.similarity import DIM, SQ_BUCKETS, sq_encode
-    from ..versioned import (
-        check_meta,
-        current_meta,
-        recommit_meta,
-        version_dir,
-    )
 
     spark = batch.sparkSession
-    meta = current_meta(spark, path)
-    ver = int(meta.get("version", 0))
-    if ver == 0:
-        raise FileNotFoundError(f"no committed SQ index under {path}")
-    _require_kind(meta, "sq", path)
-    check_meta(meta, {"sq_buckets": SQ_BUCKETS, "dim": DIM}, path)
-    if batch.isEmpty():
-        if extra:
-            recommit_meta(spark, path, meta, extra=extra)
-        return
-    base = version_dir(path, ver)
-    quant = _version_artifacts(spark, path, meta, ("quantizer",))[
-        "quantizer"
-    ]
-    idx_id = str(meta.get("id_col", "vec_id"))
-    delta, j, dx = _alloc_delta(base, meta)
-    sq_encode(batch, quant, vec_col, idx_id).write.mode(
-        "overwrite"
-    ).parquet(posixpath.join(delta, "codes"))
-    recommit_meta(
-        spark, path, meta, extra={**(extra or {}), **dx}, appends=j
+
+    def write(rows, meta, base, delta):
+        quant = _version_artifacts(spark, path, meta, ("quantizer",))[
+            "quantizer"
+        ]
+        sq_encode(
+            rows, quant, vec_col, str(meta.get("id_col", "vec_id"))
+        ).write.mode("overwrite").parquet(posixpath.join(delta, "codes"))
+
+    _append_delta(
+        spark, path, "sq", {"sq_buckets": SQ_BUCKETS, "dim": DIM}, extra,
+        _id_vectors(batch, vec_col), write,
     )
 
 
@@ -2383,17 +2249,12 @@ def sq_index_probe(
         as_double,
         sq_adc_dist,
     )
-    from ..versioned import check_meta, current_meta, version_dir
 
-    meta = current_meta(spark, path)
-    ver = int(meta.get("version", 0))
-    if ver == 0:
-        raise FileNotFoundError(f"no committed SQ index under {path}")
-    _require_kind(meta, "sq", path)
-    check_meta(meta, {"sq_buckets": SQ_BUCKETS, "dim": DIM}, path)
-    if expect:
-        check_meta(meta, expect, path)
-    base = version_dir(path, ver)
+    meta, base = _committed_index(
+        spark, path, "sq",
+        geometry={"sq_buckets": SQ_BUCKETS, "dim": DIM},
+        expect=expect,
+    )
     quant = _version_artifacts(spark, path, meta, ("quantizer",))[
         "quantizer"
     ]
@@ -2521,7 +2382,7 @@ def write_ivfsq_index(
         sq_encode,
         sq_quantizer,
     )
-    from ..versioned import commit_version, current_version, version_dir
+    from ..versioned import current_version
 
     spark = embeddings.sparkSession
     if embeddings.isEmpty():
@@ -2573,55 +2434,35 @@ def append_to_ivfsq_index(
     vec_col: str = "embedding",
     extra: dict | None = None,
 ) -> None:
-    """Fold a new embedding batch into the IVF-SQ index: assign
-    against the STORED centroids, encode against the STORED quantizer,
-    commit one atomic cell-partitioned `appends` delta — the
-    append_to_ivfpq_index contract with the SQ fine quantizer (and the
-    append_to_sq_index `extra` rule: gate metadata rides the same
-    commit; empty batches advance it deltalessly)."""
+    """Fold a new embedding batch into the IVF-SQ index: assign it
+    against the STORED centroids, encode it against the STORED
+    quantizer, and commit one cell-partitioned
+    `appends/a{j}.{8-hex}/cells/cell=*/` delta. Shared append
+    contract: _append_delta."""
     import posixpath
 
-    from ..operators.similarity import (
-        DIM,
-        SQ_BUCKETS,
-        ivf_assign,
-        sq_encode,
-    )
-    from ..versioned import (
-        check_meta,
-        current_meta,
-        recommit_meta,
-        version_dir,
-    )
+    from ..operators.similarity import DIM, SQ_BUCKETS, ivf_assign, sq_encode
 
     spark = batch.sparkSession
-    meta = current_meta(spark, path)
-    ver = int(meta.get("version", 0))
-    if ver == 0:
-        raise FileNotFoundError(f"no committed IVF-SQ index under {path}")
-    _require_kind(meta, "ivfsq", path)
-    check_meta(meta, {"sq_buckets": SQ_BUCKETS, "dim": DIM}, path)
-    if batch.isEmpty():
-        if extra:
-            recommit_meta(spark, path, meta, extra=extra)
-        return
-    arts = _version_artifacts(
-        spark, path, meta, ("centroids", "quantizer")
-    )
-    idx_id = str(meta.get("id_col", "vec_id"))
-    base = version_dir(path, ver)
-    delta, j, dx = _alloc_delta(base, meta)
-    (
-        sq_encode(
-            ivf_assign(batch, arts["centroids"], vec_col),
-            arts["quantizer"], vec_col, idx_id, keep=("cell",),
+
+    def write(rows, meta, base, delta):
+        arts = _version_artifacts(
+            spark, path, meta, ("centroids", "quantizer")
         )
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(posixpath.join(delta, "cells"))
-    )
-    recommit_meta(
-        spark, path, meta, extra={**(extra or {}), **dx}, appends=j
+        (
+            sq_encode(
+                ivf_assign(rows, arts["centroids"], vec_col),
+                arts["quantizer"], vec_col,
+                str(meta.get("id_col", "vec_id")), keep=("cell",),
+            )
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(posixpath.join(delta, "cells"))
+        )
+
+    _append_delta(
+        spark, path, "ivfsq", {"sq_buckets": SQ_BUCKETS, "dim": DIM},
+        extra, _id_vectors(batch, vec_col), write,
     )
 
 
@@ -2646,17 +2487,12 @@ def ivfsq_probe(
     rule: empty/multi-row/NULL queries refuse loudly, no extra
     jobs)."""
     from ..operators.similarity import DIM, SQ_BUCKETS, sq_adc_dist
-    from ..versioned import check_meta, current_meta, version_dir
 
-    meta = current_meta(spark, path)
-    ver = int(meta.get("version", 0))
-    if ver == 0:
-        raise FileNotFoundError(f"no committed IVF-SQ index under {path}")
-    _require_kind(meta, "ivfsq", path)
-    check_meta(meta, {"sq_buckets": SQ_BUCKETS, "dim": DIM}, path)
-    if expect:
-        check_meta(meta, expect, path)
-    base = version_dir(path, ver)
+    meta, base = _committed_index(
+        spark, path, "ivfsq",
+        geometry={"sq_buckets": SQ_BUCKETS, "dim": DIM},
+        expect=expect,
+    )
     arts = _version_artifacts(
         spark, path, meta, ("centroids", "quantizer")
     )
@@ -2844,7 +2680,7 @@ def write_ivfpq_index(
         pq_codebook_trained,
         pq_encode,
     )
-    from ..versioned import commit_version, current_version, version_dir
+    from ..versioned import current_version
 
     spark = documents.sparkSession
     eligible = eligible_embeddings(documents, embeddings, min_chars, lang)
@@ -2934,22 +2770,13 @@ def append_to_ivfpq_index(
     extra: dict | None = None,
 ) -> None:
     """Fold a new embedding batch into the IVF-PQ index: gate it with
-    the RECORDED eligibility parameters, assign against the STORED
-    centroids, encode against the STORED codebook — never re-derived
-    ones — and commit codes+cells as one atomic `appends` delta
-    (nonce-unique `v{N}/appends/a{j}.{8-hex}/cells/cell=*/` — _alloc_delta, r13), base untouched. Readers union
-    base + committed deltas with every leg partition-pruned
-    (`_read_index_cells` via `_delta_dirs`). Torn deltas invisible;
-    empty eligible batch writes NO delta (an empty partitioned write
-    poisons read-back — the r7-advice class) but still commits
-    `extra`, so a streaming fold's replay gate advances (the
-    append_to_band_index rule, r9). `extra` entries merge into
-    `_CURRENT` alongside the counter — the streaming maintenance loop
-    records its (run_id, epoch) gate there, committed ATOMICALLY with
-    the delta it guards. Rebuild = the moment to refresh both
-    quantizers after drift; compact_index folds deltas without
-    touching them. One batch scan + a metadata commit per day at
-    100 TB."""
+    the RECORDED eligibility parameters, assign it against the STORED
+    centroids, encode it against the STORED codebook (residual codes
+    when the index records `residual`), and commit one
+    cell-partitioned `appends/a{j}.{8-hex}/cells/cell=*/` delta. The
+    PQ geometry gate is unconditional. An eligible-empty batch counts
+    as empty. Rebuild is the moment to refresh both quantizers after
+    drift. Shared append contract: _append_delta."""
     import posixpath
 
     from ..operators.similarity import (
@@ -2957,43 +2784,18 @@ def append_to_ivfpq_index(
         PQ_M,
         PQ_SUB,
         ivf_assign,
+        ivf_residual,
         pq_encode,
     )
-    from ..versioned import check_meta, current_meta, recommit_meta, version_dir
 
     spark = documents.sparkSession
-    meta = current_meta(spark, path)
-    ver = int(meta.get("version", 0))
-    if ver == 0:
-        raise FileNotFoundError(f"no committed IVF-PQ index under {path}")
-    _require_kind(meta, "ivfpq", path)
-    # both geometries are unconditional: encode runs with the CURRENT
-    # module constants (the PQ-append gate) and assignment/eligibility
-    # use the RECORDED build parameters
-    check_meta(meta, {"pq_m": PQ_M, "pq_sub": PQ_SUB, "pq_k": PQ_K}, path)
-    # persisted: the emptiness probe and the delta write would
-    # otherwise evaluate the eligibility semi-join twice per batch —
-    # the streaming maintenance loop's per-micro-batch hot path
-    # (r9 review)
-    eligible = eligible_embeddings(
-        documents, embeddings,
-        int(meta["min_chars"]), str(meta["lang"]),
-    ).persist()
-    try:
-        if eligible.isEmpty():
-            if extra:
-                recommit_meta(spark, path, meta, extra=extra)
-            return
-        base = version_dir(path, ver)
+
+    def write(eligible, meta, base, delta):
         cents = spark.read.parquet(posixpath.join(base, "centroids"))
         cb = spark.read.parquet(posixpath.join(base, "codebook"))
-        delta, j, dx = _alloc_delta(base, meta)
         if meta.get("residual"):
-            # the RECORDED encode geometry includes the residual flag:
             # appending raw-vector codes into a residual index (or
             # vice versa) would be permanently garbled with no error
-            from ..operators.similarity import ivf_residual
-
             enc_in = ivf_residual(ivf_assign(eligible, cents), cents)
             enc = pq_encode(enc_in, cb, "residual", keep=("cell",))
         else:
@@ -3003,11 +2805,12 @@ def append_to_ivfpq_index(
             .partitionBy("cell")
             .parquet(posixpath.join(delta, "cells"))
         )
-        recommit_meta(
-            spark, path, meta, extra={**(extra or {}), **dx}, appends=j
-        )
-    finally:
-        eligible.unpersist()
+
+    _append_delta(
+        spark, path, "ivfpq",
+        {"pq_m": PQ_M, "pq_sub": PQ_SUB, "pq_k": PQ_K}, extra,
+        _recorded_eligible(documents, embeddings), write,
+    )
 
 
 def ivfpq_probe(
@@ -3060,21 +2863,12 @@ def ivfpq_probe(
         _pq_lut_array,
         pq_adc_dist,
     )
-    from ..versioned import check_meta, current_meta, version_dir
 
-    meta = current_meta(spark, path)
-    ver = int(meta.get("version", 0))
-    if ver == 0:
-        raise FileNotFoundError(f"no committed IVF-PQ index under {path}")
-    _require_kind(meta, "ivfpq", path)
-    # unconditional PQ-geometry gate, same reason as pq_index_probe
-    # (r8 review); `expect` adds caller pins (n_cells, gate params)
-    check_meta(
-        meta, {"pq_m": PQ_M, "pq_sub": PQ_SUB, "pq_k": PQ_K}, path
+    meta, base = _committed_index(
+        spark, path, "ivfpq",
+        geometry={"pq_m": PQ_M, "pq_sub": PQ_SUB, "pq_k": PQ_K},
+        expect=expect,
     )
-    if expect:
-        check_meta(meta, expect, path)
-    base = version_dir(path, ver)
     arts = _version_artifacts(spark, path, meta, ("centroids", "codebook"))
     cents, cb = arts["centroids"], arts["codebook"]
     # bounded driver materialization (<= one row per stored centroid):
@@ -3254,13 +3048,10 @@ def delete_from_index(
     (idempotent takedown replays)."""
     import posixpath
 
-    from ..versioned import current_meta, recommit_meta, version_dir
+    from ..versioned import recommit_meta
 
     spark = ids.sparkSession
-    meta = current_meta(spark, path)
-    ver = int(meta.get("version", 0))
-    if ver == 0:
-        raise FileNotFoundError(f"no committed index under {path}")
+    meta, base = _committed_index(spark, path)
     kind = _index_kind(meta)  # refuse unrecognized layouts first
     idc = str(meta.get("id_col", "vec_id"))
     if len(ids.columns) != 1:
@@ -3293,8 +3084,7 @@ def delete_from_index(
         )
     leg = _COMPACT_SPECS[kind]["data"][0][0]
     leg_sch = _leg_schema(
-        spark, path, meta, leg,
-        posixpath.join(version_dir(path, ver), leg),
+        spark, path, meta, leg, posixpath.join(base, leg)
     )
     if idc not in leg_sch.fieldNames():
         raise ValueError(
@@ -3327,7 +3117,6 @@ def delete_from_index(
                 "is a caller bug, not a no-op"
             )
         j = int(meta.get("tombstones", 0)) + 1
-        base = version_dir(path, ver)
         rel.write.mode("overwrite").parquet(
             posixpath.join(base, "tombstones", f"t{j}", "ids")
         )
@@ -3384,17 +3173,7 @@ def compact_index(
     the old version (base + deltas) fully served."""
     import posixpath
 
-    from ..versioned import (
-        commit_version,
-        current_meta,
-        fence_snapshot,
-        version_dir,
-    )
-
-    meta = current_meta(spark, path)
-    ver = int(meta.get("version", 0))
-    if ver == 0:
-        raise FileNotFoundError(f"no committed index under {path}")
+    meta, base = _committed_index(spark, path)
     # tombstones alone also justify a compaction (r11): the physical
     # purge of deleted rows is this fold, even with zero append legs
     if (int(meta.get("appends", 0)) < min_appends
@@ -3405,7 +3184,6 @@ def compact_index(
         # since r9) unless the caller overrides explicitly
         keep_versions = int(meta.get("keep_versions", 2))
     spec = _COMPACT_SPECS[_index_kind(meta)]
-    base = version_dir(path, ver)
     nbase, _vtok = _stage_version(spark, path)
     dirs = _delta_dirs(base, meta)
     idc = str(meta.get("id_col", "vec_id"))
@@ -3444,9 +3222,9 @@ def compact_index(
     # lock lease mid-rewrite can neither commit over a newer writer's
     # metadata nor publish metadata over a replaced data directory
     # (r13, _stage_version / _commit_staged_version)
-    _commit_staged_version(spark, path, nbase, ver + 1, _vtok,
-                           extra=extra, keep_versions=keep_versions,
-                           fence_meta=meta)
+    _commit_staged_version(spark, path, nbase, int(meta["version"]) + 1,
+                           _vtok, extra=extra,
+                           keep_versions=keep_versions, fence_meta=meta)
     return True
 
 

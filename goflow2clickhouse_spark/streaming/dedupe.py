@@ -99,16 +99,15 @@ def incremental_dedup_fold(
     from pyspark.sql import functions as F
 
     from ..plans.storage import (
+        _committed_index,
         append_to_band_index,
         band_index_sha_set,
         incremental_neardup_pairs_indexed,
     )
-    from ..versioned import current_meta, epoch_replayed
+    from ..versioned import epoch_replayed
 
     spark = batch_df.sparkSession
-    meta = current_meta(spark, index_path)
-    if not meta:
-        raise FileNotFoundError(f"no committed band index under {index_path}")
+    meta, _ = _committed_index(spark, index_path, "band")
     if epoch_replayed(meta, epoch_id, run_id):
         return False
 

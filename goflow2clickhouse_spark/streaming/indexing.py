@@ -1,20 +1,18 @@
-"""Streaming maintenance of the persisted ANN index — the embedding
+"""Streaming maintenance of the persisted ANN indexes — the embedding
 side of the crawl loop (r8 verdict item 4): where
 `streaming_incremental_dedup` folds each micro-batch of DOCUMENTS into
-the band index, this folds each micro-batch of EMBEDDINGS into the
-persisted IVF-PQ index (`plans/storage.write_ivfpq_index`), so a
-vector-serving index tracks the corpus continuously instead of waiting
-for rebuilds. Since r10 the fold is LAYOUT-GENERIC
-(`index_maintenance_fold` — dispatch on the committed metadata's
-layout kind), so every embedding-side layout (SQ, IVF-SQ, PQ, IVF-PQ,
-and since r11 the filtered IVF) shares one streaming story; the
-layout-specific wrappers remain as the explicit-intent API.
+the band index, this folds each micro-batch of EMBEDDINGS into a
+persisted vector index, so a vector-serving index tracks the corpus
+continuously instead of waiting for rebuilds. The fold is
+LAYOUT-GENERIC (`index_maintenance_fold` — dispatch on the committed
+metadata's layout kind), so every embedding-side layout (SQ, IVF-SQ,
+PQ, IVF-PQ and the filtered IVF) shares one streaming story.
 
 Spark-first shape: foreachBatch over a Structured Streaming source —
-each batch is ONE `append_to_ivfpq_index` call (gate with the RECORDED
-eligibility, assign against the STORED centroids, encode against the
-STORED codebook, one atomic cells delta), so the per-batch cost is a
-single batch-sized scan + a metadata commit, never an index rebuild.
+each batch is ONE `append_to_*` call (plans/storage._append_delta:
+rows built from the RECORDED metadata, encoded against the STORED
+quantizers, one atomic delta), so the per-batch cost is a single
+batch-sized scan + a metadata commit, never an index rebuild.
 Exactly-once on at-least-once delivery via the shared (run_id, epoch)
 replay gate (`versioned.epoch_replayed`) committed atomically with the
 delta inside `_CURRENT`. Delta count is bounded operationally by
@@ -32,152 +30,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def ivfpq_maintenance_fold(
-    batch_df: DataFrame,
-    documents: DataFrame,
-    index_path: str,
-    epoch_id: int,
-    run_id: str | None = None,
-    compact_over: int | None = None,
-) -> bool:
-    """One turn of the embedding-maintenance loop (the testable unit
-    the foreachBatch wrapper below calls): fold `batch_df` — new
-    (vec_id, embedding) rows — into the persisted IVF-PQ index.
-    `documents` is the static metadata side of the recorded
-    eligibility gate (stream-static join semantics: the batch is
-    gated exactly as the build was).
-
-    Returns False (and touches nothing) when the (run_id, epoch) gate
-    says this epoch already folded — the shared `epoch_replayed`
-    contract: without it a restart replay would append the same batch
-    twice and every probe would serve its vectors twice. The gate
-    commits ATOMICALLY with the delta (both ride the same `_CURRENT`
-    rename inside append_to_ivfpq_index), so there is no torn window
-    between "delta visible" and "epoch recorded". An eligible-empty
-    batch advances the gate without writing a delta. Within-batch /
-    cross-batch id dedup is the caller's contract, same as every
-    index append.
-
-    `compact_over` bounds the delta count operationally: after the
-    fold, if more than that many append legs are committed, they are
-    folded into a new single-leg base (plans/storage.compact_index —
-    gate metadata carries over, so a compaction between two folds can
-    never reopen a replayed epoch). A crash between append and
-    compaction loses nothing: the compaction is re-attempted on the
-    next fold."""
-    from ..plans.storage import append_to_ivfpq_index, compact_index
-    from ..versioned import current_meta, epoch_replayed
-
-    spark = batch_df.sparkSession
-    meta = current_meta(spark, index_path)
-    if not meta:
-        raise FileNotFoundError(
-            f"no committed IVF-PQ index under {index_path}"
-        )
-    if epoch_replayed(meta, epoch_id, run_id):
-        return False
-    append_to_ivfpq_index(
-        documents, batch_df, index_path,
-        extra={"epoch": int(epoch_id), "run_id": run_id},
-    )
-    if compact_over is not None:
-        compact_index(spark, index_path, min_appends=compact_over + 1)
-    return True
-
-
-def streaming_ivfpq_maintenance(
-    stream_df: DataFrame,
-    documents: DataFrame,
-    index_path: str,
-    checkpoint_dir: str,
-    compact_over: int | None = None,
-):
-    """The embedding-maintenance loop as a running stream: each
-    micro-batch of (vec_id, embedding) rows folds into the persisted
-    IVF-PQ index (ivfpq_maintenance_fold above). Returns the started
-    StreamingQuery. run_id = the checkpoint lineage's query id
-    (streaming/hll._checkpoint_run_id), so restart replays skip and a
-    fresh checkpoint over a reused index folds — the
-    streaming_incremental_dedup twin, differentially pinned equal to
-    the same batches applied via plain append_to_ivfpq_index calls."""
-    from .hll import _checkpoint_run_id
-
-    def _fold(batch_df: DataFrame, epoch_id: int) -> None:
-        ivfpq_maintenance_fold(
-            batch_df, documents, index_path, epoch_id,
-            run_id=_checkpoint_run_id(batch_df.sparkSession, checkpoint_dir),
-            compact_over=compact_over,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(_fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def sq_maintenance_fold(
-    batch_df: DataFrame,
-    index_path: str,
-    epoch_id: int,
-    run_id: str | None = None,
-    compact_over: int | None = None,
-) -> bool:
-    """ivfpq_maintenance_fold's SQ-layout twin (r10): fold a
-    (vec_id, embedding) micro-batch into the persisted SQ8 index —
-    encode against the STORED quantizer, one atomic codes delta.
-    No `documents` side: the SQ layout records no eligibility gate.
-    Same (run_id, epoch) replay contract, committed atomically with
-    the delta; an empty batch advances the gate deltalessly;
-    `compact_over` bounds the append-leg count in-loop."""
-    from ..plans.storage import append_to_sq_index, compact_index
-    from ..versioned import current_meta, epoch_replayed
-
-    spark = batch_df.sparkSession
-    meta = current_meta(spark, index_path)
-    if not meta:
-        raise FileNotFoundError(
-            f"no committed SQ index under {index_path}"
-        )
-    if epoch_replayed(meta, epoch_id, run_id):
-        return False
-    append_to_sq_index(
-        batch_df, index_path,
-        extra={"epoch": int(epoch_id), "run_id": run_id},
-    )
-    if compact_over is not None:
-        compact_index(spark, index_path, min_appends=compact_over + 1)
-    return True
-
-
-def streaming_sq_maintenance(
-    stream_df: DataFrame,
-    index_path: str,
-    checkpoint_dir: str,
-    compact_over: int | None = None,
-):
-    """The SQ maintenance loop as a running stream — the
-    streaming_ivfpq_maintenance twin over the scalar-quantized
-    layout: each micro-batch of (vec_id, embedding) rows folds via
-    sq_maintenance_fold; run_id = the checkpoint lineage's query id,
-    so restart replays skip and a fresh checkpoint over a reused
-    index folds."""
-    from .hll import _checkpoint_run_id
-
-    def _fold(batch_df: DataFrame, epoch_id: int) -> None:
-        sq_maintenance_fold(
-            batch_df, index_path, epoch_id,
-            run_id=_checkpoint_run_id(batch_df.sparkSession, checkpoint_dir),
-            compact_over=compact_over,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(_fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+# kind -> (plans.storage append function, needs `documents`): the gated
+# layouts (IVF, IVF-PQ) re-apply the eligibility gate recorded at build
+# time, so their appends take the documents side first
+_MAINTENANCE_APPENDS = {
+    "ivf": ("append_to_ivf_index", True),
+    "ivfpq": ("append_to_ivfpq_index", True),
+    "pq": ("append_to_pq_index", False),
+    "sq": ("append_to_sq_index", False),
+    "ivfsq": ("append_to_ivfsq_index", False),
+}
 
 
 def index_maintenance_fold(
@@ -188,72 +50,91 @@ def index_maintenance_fold(
     compact_over: int | None = None,
     documents: DataFrame | None = None,
 ) -> bool:
-    """Layout-generic maintenance fold (r10): read the committed
+    """One turn of the embedding-maintenance loop (the testable unit
+    the foreachBatch wrapper below calls): read the committed
     metadata, infer the layout (plans/storage._index_kind — the same
-    total inference compaction uses) and dispatch to that layout's
-    append under the shared (run_id, epoch) replay gate. One fold
-    definition serves every embedding-side layout — SQ, IVF-SQ, PQ,
-    IVF-PQ and (since r11, closing the r10 verdict's misrouting
-    finding) the filtered-IVF layout; the two gated layouts (IVF,
-    IVF-PQ) additionally need the `documents` metadata side for their
-    recorded eligibility gate — so a new layout's streaming story is
-    its append function plus one dispatch row. The band
-    (document-side) fold keeps its own loop in streaming/dedupe.py:
-    its batches carry text, not vectors."""
-    from ..plans.storage import (
-        _index_kind,
-        append_to_ivf_index,
-        append_to_ivfpq_index,
-        append_to_ivfsq_index,
-        append_to_pq_index,
-        append_to_sq_index,
-        compact_index,
-    )
-    from ..versioned import current_meta, epoch_replayed
+    total inference compaction uses) and fold `batch_df` — new
+    (vec_id, embedding) rows — through that layout's append. The two
+    gated layouts (IVF, IVF-PQ) need the `documents` metadata side
+    (stream-static join semantics: the batch is gated exactly as the
+    build was). A new layout's streaming story is its append function
+    plus one `_MAINTENANCE_APPENDS` row. The band (document-side) fold
+    keeps its own loop in streaming/dedupe.py: its batches carry text,
+    not vectors.
+
+    Returns False (and touches nothing) when the (run_id, epoch) gate
+    says this epoch already folded — the shared `epoch_replayed`
+    contract: without it a restart replay would append the same batch
+    twice and every probe would serve its vectors twice. The gate
+    commits ATOMICALLY with the delta (both ride the same `_CURRENT`
+    rename inside the append), so there is no torn window between
+    "delta visible" and "epoch recorded". An empty (or eligible-empty)
+    batch advances the gate without writing a delta.
+
+    `compact_over` bounds the delta count operationally: after the
+    fold, if more than that many append legs are committed, they are
+    folded into a new single-leg base (plans/storage.compact_index —
+    gate metadata carries over, so a compaction between two folds can
+    never reopen a replayed epoch). A crash between append and
+    compaction loses nothing: the compaction is re-attempted on the
+    next fold."""
+    from ..plans import storage as S
+    from ..versioned import epoch_replayed
 
     spark = batch_df.sparkSession
-    meta = current_meta(spark, index_path)
-    if not meta:
-        raise FileNotFoundError(f"no committed index under {index_path}")
-    kind = _index_kind(meta)
+    meta, _ = S._committed_index(spark, index_path)
+    kind = S._index_kind(meta)
     if epoch_replayed(meta, epoch_id, run_id):
         return False
-    extra = {"epoch": int(epoch_id), "run_id": run_id}
-    if kind in ("ivfpq", "ivf"):
-        # both layouts record an eligibility gate at build time and
-        # re-apply it per batch, so both need the documents side
-        if documents is None:
-            raise ValueError(
-                f"{kind.upper()} maintenance needs the `documents` "
-                "metadata side (the layout records an eligibility gate)"
-            )
-        if kind == "ivfpq":
-            append_to_ivfpq_index(
-                documents, batch_df, index_path, extra=extra
-            )
-        else:
-            append_to_ivf_index(documents, batch_df, index_path, extra=extra)
-    elif kind == "sq":
-        append_to_sq_index(batch_df, index_path, extra=extra)
-    elif kind == "ivfsq":
-        append_to_ivfsq_index(batch_df, index_path, extra=extra)
-    elif kind == "pq":
-        append_to_pq_index(batch_df, index_path, extra=extra)
-    elif kind == "band":
+    if kind == "band":
         raise ValueError(
             f"index at {index_path} is the document-side 'band' layout — "
             "its maintenance loop is streaming/dedupe.py's "
             "streaming_incremental_dedup (its batches carry text, "
             "not vectors)"
         )
-    else:
+    if kind not in _MAINTENANCE_APPENDS:
         raise ValueError(
             f"index at {index_path} is an unrecognized '{kind}' layout — "
             "no maintenance fold is defined for it"
         )
+    name, gated = _MAINTENANCE_APPENDS[kind]
+    append = getattr(S, name)
+    extra = {"epoch": int(epoch_id), "run_id": run_id}
+    if not gated:
+        append(batch_df, index_path, extra=extra)
+    elif documents is None:
+        raise ValueError(
+            f"{kind.upper()} maintenance needs the `documents` "
+            "metadata side (the layout records an eligibility gate)"
+        )
+    else:
+        append(documents, batch_df, index_path, extra=extra)
     if compact_over is not None:
-        compact_index(spark, index_path, min_appends=compact_over + 1)
+        S.compact_index(spark, index_path, min_appends=compact_over + 1)
     return True
+
+
+def _start_fold(stream_df: DataFrame, checkpoint_dir: str, fold):
+    """Start `fold(batch_df, epoch_id, run_id)` as a foreachBatch
+    stream. run_id = the checkpoint lineage's query id
+    (streaming/hll._checkpoint_run_id), so restart replays skip and a
+    fresh checkpoint over a reused index folds. Returns the started
+    StreamingQuery."""
+    from .hll import _checkpoint_run_id
+
+    def _fold(batch_df: DataFrame, epoch_id: int) -> None:
+        fold(
+            batch_df, epoch_id,
+            _checkpoint_run_id(batch_df.sparkSession, checkpoint_dir),
+        )
+
+    return (
+        stream_df.writeStream.foreachBatch(_fold)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+    )
 
 
 def streaming_index_maintenance(
@@ -263,26 +144,17 @@ def streaming_index_maintenance(
     compact_over: int | None = None,
     documents: DataFrame | None = None,
 ):
-    """The layout-generic loop as a running stream: each (vec_id,
-    embedding) micro-batch folds via index_maintenance_fold, which
-    infers the layout from the committed metadata — point it at ANY
-    embedding-side index. Same run_id/restart contract as the
-    layout-specific wrappers."""
-    from .hll import _checkpoint_run_id
-
-    def _fold(batch_df: DataFrame, epoch_id: int) -> None:
-        index_maintenance_fold(
-            batch_df, index_path, epoch_id,
-            run_id=_checkpoint_run_id(batch_df.sparkSession, checkpoint_dir),
-            compact_over=compact_over,
-            documents=documents,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(_fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    """The embedding-maintenance loop as a running stream: each
+    (vec_id, embedding) micro-batch folds via index_maintenance_fold,
+    which infers the layout from the committed metadata — point it at
+    ANY embedding-side index. Differentially pinned equal to the same
+    batches applied via plain `append_to_*` calls."""
+    return _start_fold(
+        stream_df, checkpoint_dir,
+        lambda batch_df, epoch_id, run_id: index_maintenance_fold(
+            batch_df, index_path, epoch_id, run_id=run_id,
+            compact_over=compact_over, documents=documents,
+        ),
     )
 
 
@@ -316,13 +188,15 @@ def index_takedown_fold(
     bounded number of batches. `id_col` selects the id column when
     the batch carries more than one (default: the batch's single
     column)."""
-    from ..plans.storage import compact_index, delete_from_index
+    from ..plans.storage import (
+        _committed_index,
+        compact_index,
+        delete_from_index,
+    )
     from ..versioned import current_meta, epoch_replayed
 
     spark = batch_df.sparkSession
-    meta = current_meta(spark, index_path)
-    if not meta:
-        raise FileNotFoundError(f"no committed index under {index_path}")
+    meta, _ = _committed_index(spark, index_path)
     if epoch_replayed(meta, epoch_id, run_id, ns="del_"):
         return False
     ids = batch_df.select(id_col) if id_col else batch_df
@@ -349,21 +223,12 @@ def streaming_index_takedown(
 ):
     """The takedown loop as a running stream: each micro-batch of ids
     folds into the index's tombstones via index_takedown_fold. Same
-    run_id/restart contract as the maintenance wrappers; point one at
+    run_id/restart contract as the maintenance stream; point one at
     each index a deletion feed must reach."""
-    from .hll import _checkpoint_run_id
-
-    def _fold(batch_df: DataFrame, epoch_id: int) -> None:
-        index_takedown_fold(
-            batch_df, index_path, epoch_id,
-            run_id=_checkpoint_run_id(batch_df.sparkSession, checkpoint_dir),
-            compact_over=compact_over,
-            id_col=id_col,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(_fold)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _start_fold(
+        stream_df, checkpoint_dir,
+        lambda batch_df, epoch_id, run_id: index_takedown_fold(
+            batch_df, index_path, epoch_id, run_id=run_id,
+            compact_over=compact_over, id_col=id_col,
+        ),
     )

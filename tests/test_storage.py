@@ -117,8 +117,10 @@ def test_clustered_write_rowgroup_pruning(spark, tmp_path):
 
     from goflow2clickhouse_spark.plans.storage import write_clustered
 
+    # numPartitions pins the input's split count, so the unclustered
+    # control's file/row-group layout is the same at every core count
     df = (
-        spark.range(0, 100_000)
+        spark.range(0, 100_000, numPartitions=8)
         .select(
             (F.col("id") * 2654435761 % 100_000).alias("key"),
             F.col("id").alias("payload"),
@@ -780,58 +782,186 @@ def test_band_index_append_all_short_docs_delta_stays_readable(spark, tmp_path):
     assert want_short <= shas
 
 
-def test_band_index_append_empty_batch_advances_gate_only(spark, tmp_path):
-    """An EMPTY kept batch (every doc in the micro-batch was a dup —
-    routine in crawl steady state) must not commit an unreadable
-    delta: no appends bump, but the caller's `extra` (the streaming
-    replay gate) still commits, and the index stays fully servable."""
-    from goflow2clickhouse_spark.plans.storage import (
-        append_to_band_index,
-        incremental_neardup_pairs_indexed,
-        write_band_index,
-    )
-    from goflow2clickhouse_spark.versioned import current_meta
-
-    old, new = _band_corpus(spark)
-    path = str(tmp_path / "bandidx_emptyappend")
-    write_band_index(old, path)
-    empty = spark.createDataFrame([], "doc_id bigint, text string")
-    append_to_band_index(empty, path, extra={"epoch": 7, "run_id": "ck-E"})
-    meta = current_meta(spark, path)
-    assert meta.get("appends", 0) == 0  # no delta committed
-    assert meta["epoch"] == 7 and meta["run_id"] == "ck-E"  # gate advanced
-    assert incremental_neardup_pairs_indexed(new, path).collect()
-    # without extra: complete no-op
-    append_to_band_index(empty, path)
-    assert current_meta(spark, path) == meta
-
-
-def test_ivf_append_empty_eligible_batch_is_noop(spark, tmp_path):
-    """An append whose batch has no ELIGIBLE vectors (all filtered by
-    the recorded min_chars/lang gate) must not commit an empty
-    partitioned cells delta — the probe after it must keep working."""
-    from goflow2clickhouse_spark.plans.storage import (
-        append_to_ivf_index,
-        ivf_index_probe,
-        write_filtered_ivf_index,
-    )
-    from goflow2clickhouse_spark.versioned import current_meta
+def _seven_layouts(spark):
+    """layout -> (build(path), append(batch, path, **kw), batch,
+    probe(path) -> sorted rows) for every persisted index layout. The
+    gated layouts' (IVF, IVF-PQ) `append` closes over the documents
+    side; `batch` is a non-empty append batch of the layout's shape."""
+    from goflow2clickhouse_spark.plans import storage as S
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    path = str(tmp_path / "fivf_emptyappend")
-    write_filtered_ivf_index(docs, emb, path, n_cells=8)
-    before = current_meta(spark, path)
-    # batch of vectors whose ids match NO document → nothing eligible
-    ghost = emb.limit(3).select(
-        (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
+    base = emb.filter(F.col("vec_id") % 3 == 0)
+    vecs = emb.filter(F.col("vec_id") % 3 == 1)
+    q = emb.filter(F.col("vec_id") == 0)
+    old_text, new_text = _band_corpus(spark)
+
+    def hashes(lo, hi, shift=0):
+        return spark.range(lo, hi).select(
+            (F.col("id") + shift).alias("doc_id"),
+            F.xxhash64("id").bitwiseAND(F.lit(2**63 - 1)).alias("phash"),
+        )
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    return {
+        "band": (
+            lambda p: S.write_band_index(old_text, p),
+            S.append_to_band_index, new_text,
+            lambda p: rows(S.incremental_neardup_pairs_indexed(new_text, p)),
+        ),
+        "phash": (
+            lambda p: S.write_phash_index(hashes(0, 40), p),
+            S.append_to_phash_index, hashes(40, 60),
+            lambda p: rows(S.incremental_phash_pairs_indexed(
+                hashes(0, 10, shift=1_000_000), p)),
+        ),
+        "ivf": (
+            lambda p: S.write_filtered_ivf_index(docs, base, p, n_cells=8),
+            lambda b, p, **kw: S.append_to_ivf_index(docs, b, p, **kw),
+            vecs,
+            lambda p: rows(S.ivf_index_probe(spark, p, q, k=5)),
+        ),
+        "pq": (
+            lambda p: S.write_pq_index(base, p),
+            S.append_to_pq_index, vecs,
+            lambda p: rows(S.pq_index_probe(spark, p, q, k=5)),
+        ),
+        "sq": (
+            lambda p: S.write_sq_index(base, p),
+            S.append_to_sq_index, vecs,
+            lambda p: rows(S.sq_index_probe(spark, p, q, k=5)),
+        ),
+        "ivfsq": (
+            lambda p: S.write_ivfsq_index(base, p, n_cells=8),
+            S.append_to_ivfsq_index, vecs,
+            lambda p: rows(S.ivfsq_probe(spark, p, q, k=5, nprobe=8)),
+        ),
+        "ivfpq": (
+            lambda p: S.write_ivfpq_index(docs, base, p, n_cells=8),
+            lambda b, p, **kw: S.append_to_ivfpq_index(docs, b, p, **kw),
+            vecs,
+            lambda p: rows(S.ivfpq_probe(spark, p, q, k=5, nprobe=8)),
+        ),
+    }
+
+
+@pytest.fixture(scope="module")
+def built_layouts(spark, tmp_path_factory):
+    """Every layout built once; tests append to private copies."""
+    root = tmp_path_factory.mktemp("layouts")
+    cases = _seven_layouts(spark)
+    for layout, (build, _, _, _) in cases.items():
+        build(str(root / layout))
+    return root, cases
+
+
+def _index_copy(built_layouts, layout, dest):
+    import shutil
+
+    root, _ = built_layouts
+    shutil.copytree(root / layout, dest)
+    return str(dest)
+
+
+def _delta_listing(path):
+    import glob
+    import os
+
+    return sorted(
+        os.path.basename(d) for d in glob.glob(f"{path}/v*/appends/*")
     )
-    append_to_ivf_index(docs, ghost, path)
-    assert current_meta(spark, path) == before  # no commit
-    res = ivf_index_probe(
-        spark, path, emb.filter(F.col("vec_id") == 0), k=5
-    ).collect()
-    assert res
+
+
+def test_band_index_append_empty_batch_advances_gate_only(
+    spark, tmp_path, built_layouts
+):
+    """An EMPTY batch (a crawl micro-batch where every doc was a dup —
+    routine in steady state) must not commit an unreadable delta, on
+    every layout: the caller's `extra` (the streaming replay gate)
+    commits, no `appends/` directory is written, `appends` and
+    `delta_dirs` stay as they were, and the probe serves the same rows.
+    Without `extra` the append is a complete no-op, also after a real
+    delta has landed."""
+    from goflow2clickhouse_spark.versioned import current_meta
+
+    gate = {"epoch": 7, "run_id": "ck-E"}
+    for layout, (_, append, batch, probe) in built_layouts[1].items():
+        path = _index_copy(built_layouts, layout, tmp_path / layout)
+        before, rows = current_meta(spark, path), probe(path)
+        append(batch.limit(0), path, extra=gate)
+        meta = current_meta(spark, path)
+        assert {k: meta[k] for k in gate} == gate, layout  # gate advanced
+        for key in ("appends", "delta_dirs"):
+            assert meta.get(key) == before.get(key), (layout, key)
+        assert _delta_listing(path) == [], layout
+        assert probe(path) == rows, layout
+
+        append(batch, path)
+        meta = current_meta(spark, path)
+        assert meta["appends"] == 1 and len(meta["delta_dirs"]) == 1
+        rows, deltas = probe(path), _delta_listing(path)
+        append(batch.limit(0), path)
+        assert current_meta(spark, path) == meta, layout  # no commit
+        assert _delta_listing(path) == deltas, layout
+        assert probe(path) == rows, layout
+
+
+def test_ivf_append_empty_eligible_batch_is_noop(
+    spark, tmp_path, built_layouts
+):
+    """An append whose batch keeps no rows must not commit an empty
+    delta on any layout — for the gated layouts (IVF, IVF-PQ) a batch
+    whose ids match NO document (nothing passes the recorded
+    min_chars/lang gate), for the others an empty batch. Without
+    `extra` nothing commits, and the probe after it keeps working and
+    serves the same rows."""
+    from goflow2clickhouse_spark.versioned import current_meta
+
+    for layout, (_, append, batch, probe) in built_layouts[1].items():
+        path = _index_copy(built_layouts, layout, tmp_path / layout)
+        before, rows = current_meta(spark, path), probe(path)
+        if layout in ("ivf", "ivfpq"):
+            kept_none = batch.limit(3).select(
+                (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
+            )
+        else:
+            kept_none = batch.filter(F.lit(False))
+        append(kept_none, path)
+        assert current_meta(spark, path) == before, layout  # no commit
+        assert _delta_listing(path) == [], layout
+        assert rows and probe(path) == rows, layout
+
+
+def test_append_reads_its_batch_once(spark, tmp_path, built_layouts):
+    """Every append evaluates its input batch exactly once: the rows
+    are persisted before the emptiness check, so the check and the
+    delta write share one evaluation. Counted by a nondeterministic
+    Python UDF filter that logs one line per row it evaluates (a
+    filter, unlike a projected column, the emptiness check cannot
+    prune away; a file, unlike an accumulator, also keeps the updates
+    of the check's early-stopped task)."""
+    from pyspark.sql.types import BooleanType
+
+    for layout, (_, append, batch, _) in built_layouts[1].items():
+        path = _index_copy(built_layouts, layout, tmp_path / layout)
+        idc = "doc_id" if layout in ("band", "phash") else "vec_id"
+        log = tmp_path / f"{layout}.seen"
+        log.touch()
+
+        def seen(v, log=str(log)):
+            with open(log, "a") as fh:
+                fh.write(f"{v}\n")
+            return True
+
+        counted = batch.filter(
+            F.udf(seen, BooleanType()).asNondeterministic()(F.col(idc))
+        )
+        n = batch.count()
+        append(counted, path)
+        evaluated = len(log.read_text().split())
+        assert evaluated == n, (layout, evaluated, n)
 
 
 def test_write_band_index_empty_corpus_raises(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Streaming IVF-PQ maintenance (streaming/indexing.py): the
+"""Streaming index maintenance (streaming/indexing.py): the
 embedding-side crawl loop — per-epoch folds through the shared
 (run_id, epoch) replay gate, differentially equal to the same batches
 applied as plain appends."""
@@ -37,32 +37,38 @@ def test_ivfpq_maintenance_fold_replay_gate(spark, tmp_path):
     lineage over a reused index."""
     from goflow2clickhouse_spark.plans.storage import write_ivfpq_index
     from goflow2clickhouse_spark.streaming.indexing import (
-        ivfpq_maintenance_fold,
+        index_maintenance_fold,
     )
     from goflow2clickhouse_spark.versioned import current_meta
 
     docs, emb, base, b1, b2 = _parts(spark)
     path = str(tmp_path / "ivfpq_m")
     with pytest.raises(FileNotFoundError, match="no committed"):
-        ivfpq_maintenance_fold(b1, docs, path, 0, run_id="A")
+        index_maintenance_fold(b1, path, 0, run_id="A", documents=docs)
     write_ivfpq_index(docs, base, path, n_cells=8)
 
-    assert ivfpq_maintenance_fold(b1, docs, path, 0, run_id="A") is True
+    assert index_maintenance_fold(
+        b1, path, 0, run_id="A", documents=docs
+    ) is True
     meta = current_meta(spark, path)
     assert meta["epoch"] == 0 and meta["run_id"] == "A"
     assert meta["appends"] == 1
 
     # restart replay of the same epoch: skipped, index untouched
-    assert ivfpq_maintenance_fold(b1, docs, path, 0, run_id="A") is False
+    assert index_maintenance_fold(
+        b1, path, 0, run_id="A", documents=docs
+    ) is False
     assert current_meta(spark, path) == meta
 
     # next epoch folds
-    assert ivfpq_maintenance_fold(b2, docs, path, 1, run_id="A") is True
+    assert index_maintenance_fold(
+        b2, path, 1, run_id="A", documents=docs
+    ) is True
     assert current_meta(spark, path)["appends"] == 2
 
     # no run_id + non-monotonic epoch must refuse, not guess
     with pytest.raises(ValueError, match="non-monotonic epoch"):
-        ivfpq_maintenance_fold(b1, docs, path, 0, run_id=None)
+        index_maintenance_fold(b1, path, 0, run_id=None, documents=docs)
 
     # eligible-empty batch (ids with no eligible doc): gate advances,
     # no delta is written
@@ -70,12 +76,16 @@ def test_ivfpq_maintenance_fold_replay_gate(spark, tmp_path):
         (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
     )
     before = current_meta(spark, path)
-    assert ivfpq_maintenance_fold(ghost, docs, path, 2, run_id="A") is True
+    assert index_maintenance_fold(
+        ghost, path, 2, run_id="A", documents=docs
+    ) is True
     after = current_meta(spark, path)
     assert after["epoch"] == 2 and after["appends"] == before["appends"]
 
     # a NEW lineage over the reused index folds even at epoch 0
-    assert ivfpq_maintenance_fold(ghost, docs, path, 0, run_id="B") is True
+    assert index_maintenance_fold(
+        ghost, path, 0, run_id="B", documents=docs
+    ) is True
     assert current_meta(spark, path)["run_id"] == "B"
 
 
@@ -92,7 +102,7 @@ def test_streaming_ivfpq_maintenance_equals_batch_appends(spark, tmp_path):
         write_ivfpq_index,
     )
     from goflow2clickhouse_spark.streaming.indexing import (
-        streaming_ivfpq_maintenance,
+        streaming_index_maintenance,
     )
     from goflow2clickhouse_spark.versioned import current_meta
 
@@ -119,7 +129,7 @@ def test_streaming_ivfpq_maintenance_equals_batch_appends(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(indir))
     )
-    q = streaming_ivfpq_maintenance(stream, docs, stream_idx, ckpt)
+    q = streaming_index_maintenance(stream, stream_idx, ckpt, documents=docs)
     try:
         q.processAllAvailable()
         append_to_ivfpq_index(docs, b1, twin_idx)
@@ -146,7 +156,7 @@ def test_streaming_ivfpq_maintenance_equals_batch_appends(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(indir))
     )
-    q2 = streaming_ivfpq_maintenance(stream2, docs, stream_idx, ckpt)
+    q2 = streaming_index_maintenance(stream2, stream_idx, ckpt, documents=docs)
     try:
         q2.processAllAvailable()
     finally:
@@ -162,7 +172,7 @@ def test_maintenance_fold_auto_compacts_over_threshold(spark, tmp_path):
     compaction), and subsequent folds keep the bound."""
     from goflow2clickhouse_spark.plans.storage import write_ivfpq_index
     from goflow2clickhouse_spark.streaming.indexing import (
-        ivfpq_maintenance_fold,
+        index_maintenance_fold,
     )
     from goflow2clickhouse_spark.versioned import current_meta
 
@@ -174,22 +184,22 @@ def test_maintenance_fold_auto_compacts_over_threshold(spark, tmp_path):
     write_ivfpq_index(docs, base, path, n_cells=8)
     write_ivfpq_index(docs, base, twin, n_cells=8)
 
-    assert ivfpq_maintenance_fold(
-        b1, docs, path, 0, run_id="A", compact_over=1
+    assert index_maintenance_fold(
+        b1, path, 0, run_id="A", compact_over=1, documents=docs
     ) is True
     # one delta <= threshold: no compaction yet
     m1 = current_meta(spark, path)
     assert m1["version"] == 1 and m1["appends"] == 1
 
-    assert ivfpq_maintenance_fold(
-        b2, docs, path, 1, run_id="A", compact_over=1
+    assert index_maintenance_fold(
+        b2, path, 1, run_id="A", compact_over=1, documents=docs
     ) is True
     # two deltas > threshold: compacted into v2, counter reset
     m2 = current_meta(spark, path)
     assert m2["version"] == 2 and "appends" not in m2
     # the gate survived compaction: a replayed epoch still skips
-    assert ivfpq_maintenance_fold(
-        b1, docs, path, 1, run_id="A", compact_over=1
+    assert index_maintenance_fold(
+        b1, path, 1, run_id="A", compact_over=1, documents=docs
     ) is False
     assert current_meta(spark, path) == m2
     # compacted index serves exactly what plain (uncompacted) appends
@@ -200,7 +210,7 @@ def test_maintenance_fold_auto_compacts_over_threshold(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# SQ-layout maintenance twin (r10)
+# SQ layout through the generic fold
 # ---------------------------------------------------------------------------
 
 def _sq_probe_ids(spark, path, emb, k=10):
@@ -220,40 +230,40 @@ def test_sq_maintenance_fold_replay_gate_and_compaction(spark, tmp_path):
     carrying the gate."""
     from goflow2clickhouse_spark.plans.storage import write_sq_index
     from goflow2clickhouse_spark.streaming.indexing import (
-        sq_maintenance_fold,
+        index_maintenance_fold,
     )
     from goflow2clickhouse_spark.versioned import current_meta
 
     _, emb, base, b1, b2 = _parts(spark)
     path = str(tmp_path / "sq_m")
     with pytest.raises(FileNotFoundError, match="no committed"):
-        sq_maintenance_fold(b1, path, 0, run_id="A")
+        index_maintenance_fold(b1, path, 0, run_id="A")
     write_sq_index(base, path)
 
-    assert sq_maintenance_fold(b1, path, 0, run_id="A") is True
+    assert index_maintenance_fold(b1, path, 0, run_id="A") is True
     meta = current_meta(spark, path)
     assert meta["epoch"] == 0 and meta["run_id"] == "A"
     assert meta["appends"] == 1
     # replay skips, index untouched
-    assert sq_maintenance_fold(b1, path, 0, run_id="A") is False
+    assert index_maintenance_fold(b1, path, 0, run_id="A") is False
     assert current_meta(spark, path) == meta
     # empty batch advances the gate without a delta
-    assert sq_maintenance_fold(
+    assert index_maintenance_fold(
         b1.filter(F.col("vec_id") < 0), path, 1, run_id="A"
     ) is True
     after = current_meta(spark, path)
     assert after["epoch"] == 1 and after["appends"] == 1
     # compact_over folds legs into a new version, gate carried
-    assert sq_maintenance_fold(
+    assert index_maintenance_fold(
         b2, path, 2, run_id="A", compact_over=1
     ) is True
     m2 = current_meta(spark, path)
     assert m2["version"] == 2 and "appends" not in m2
-    assert sq_maintenance_fold(
+    assert index_maintenance_fold(
         b2, path, 2, run_id="A", compact_over=1
     ) is False
     # new lineage over the reused index folds at epoch 0
-    assert sq_maintenance_fold(
+    assert index_maintenance_fold(
         b1.limit(0), path, 0, run_id="B"
     ) is True
     assert current_meta(spark, path)["run_id"] == "B"
@@ -271,7 +281,7 @@ def test_streaming_sq_maintenance_equals_batch_appends(spark, tmp_path):
         write_sq_index,
     )
     from goflow2clickhouse_spark.streaming.indexing import (
-        streaming_sq_maintenance,
+        streaming_index_maintenance,
     )
     from goflow2clickhouse_spark.versioned import current_meta
 
@@ -298,7 +308,7 @@ def test_streaming_sq_maintenance_equals_batch_appends(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(indir))
     )
-    q = streaming_sq_maintenance(stream, stream_idx, ckpt)
+    q = streaming_index_maintenance(stream, stream_idx, ckpt)
     try:
         q.processAllAvailable()
         append_to_sq_index(b1, twin_idx)
@@ -322,7 +332,7 @@ def test_streaming_sq_maintenance_equals_batch_appends(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(indir))
     )
-    q2 = streaming_sq_maintenance(stream2, stream_idx, ckpt)
+    q2 = streaming_index_maintenance(stream2, stream_idx, ckpt)
     try:
         q2.processAllAvailable()
     finally:
