@@ -291,6 +291,7 @@ def write_filtered_ivf_index(
 
     from ..operators.dedup import _ckpt_rdd_ids, _release_rdds
     from ..operators.similarity import ivf_centroids, ivf_centroids_trained
+
     spark = documents.sparkSession
     eligible = eligible_embeddings(documents, embeddings, min_chars, lang)
     ver = _ivf_current_version(spark, path) + 1
@@ -591,15 +592,24 @@ def _append_delta(
     extra: dict | None,
     rows,
     write,
+    persist: bool = True,
 ) -> None:
     """The one append path of the seven layouts: fold a batch into the
     committed version as a delta, never reading or rewriting the
     existing legs. Steps: the metadata gate; `rows(meta)` builds the
     batch's rows from the RECORDED metadata (eligibility gate, id
-    column, shingle width — never caller arguments) and is persisted,
-    so the batch source is evaluated once; `write(rows, meta, base,
-    delta_dir)` writes the layout's legs; `_CURRENT` re-commits with
-    the delta's directory name, the `appends` counter and `extra`.
+    column, shingle width — never caller arguments); an emptiness
+    check; `write(rows, meta, base, delta_dir)` writes the layout's
+    legs; `_CURRENT` re-commits with the delta's directory name, the
+    `appends` counter and `extra`.
+
+    `persist` caches the rows for the check and the write to share —
+    the gated layouts' eligibility join and the band writer's two
+    reads need it. The PQ, SQ and IVF-SQ appends pass False: their
+    rows are a projection of the caller's batch read once by the
+    write, and `isEmpty()` prunes every column, so the check runs the
+    batch's filters but never its vector computation; that measured
+    no slower than caching the whole batch.
 
     Contract:
       * the delta lands at a NONCE-UNIQUE `v{N}/appends/a{j}.{8-hex}/`
@@ -619,7 +629,9 @@ def _append_delta(
     from ..versioned import recommit_meta
 
     meta, base = _committed_index(spark, path, kind, geometry)
-    batch = rows(meta).persist()
+    batch = rows(meta)
+    if persist:
+        batch = batch.persist()
     try:
         if batch.isEmpty():
             if extra:
@@ -631,7 +643,8 @@ def _append_delta(
             spark, path, meta, extra={**(extra or {}), **dx}, appends=j
         )
     finally:
-        batch.unpersist()
+        if persist:
+            batch.unpersist()
 
 
 def _recorded_eligible(documents: DataFrame, embeddings: DataFrame):
@@ -1666,7 +1679,7 @@ def append_to_pq_index(
 
     _append_delta(
         spark, path, "pq", {"pq_m": PQ_M, "pq_sub": PQ_SUB, "pq_k": PQ_K},
-        extra, _id_vectors(batch, vec_col), write,
+        extra, _id_vectors(batch, vec_col), write, persist=False,
     )
 
 
@@ -2221,7 +2234,7 @@ def append_to_sq_index(
 
     _append_delta(
         spark, path, "sq", {"sq_buckets": SQ_BUCKETS, "dim": DIM}, extra,
-        _id_vectors(batch, vec_col), write,
+        _id_vectors(batch, vec_col), write, persist=False,
     )
 
 
@@ -2462,7 +2475,7 @@ def append_to_ivfsq_index(
 
     _append_delta(
         spark, path, "ivfsq", {"sq_buckets": SQ_BUCKETS, "dim": DIM},
-        extra, _id_vectors(batch, vec_col), write,
+        extra, _id_vectors(batch, vec_col), write, persist=False,
     )
 
 

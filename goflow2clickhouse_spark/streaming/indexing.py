@@ -30,18 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-# kind -> (plans.storage append function, needs `documents`): the gated
-# layouts (IVF, IVF-PQ) re-apply the eligibility gate recorded at build
-# time, so their appends take the documents side first
-_MAINTENANCE_APPENDS = {
-    "ivf": ("append_to_ivf_index", True),
-    "ivfpq": ("append_to_ivfpq_index", True),
-    "pq": ("append_to_pq_index", False),
-    "sq": ("append_to_sq_index", False),
-    "ivfsq": ("append_to_ivfsq_index", False),
-}
-
-
 def index_maintenance_fold(
     batch_df: DataFrame,
     index_path: str,
@@ -58,9 +46,9 @@ def index_maintenance_fold(
     gated layouts (IVF, IVF-PQ) need the `documents` metadata side
     (stream-static join semantics: the batch is gated exactly as the
     build was). A new layout's streaming story is its append function
-    plus one `_MAINTENANCE_APPENDS` row. The band (document-side) fold
-    keeps its own loop in streaming/dedupe.py: its batches carry text,
-    not vectors.
+    plus one row of the dispatch table below. The band (document-side)
+    fold keeps its own loop in streaming/dedupe.py: its batches carry
+    text, not vectors.
 
     Returns False (and touches nothing) when the (run_id, epoch) gate
     says this epoch already folded — the shared `epoch_replayed`
@@ -81,6 +69,16 @@ def index_maintenance_fold(
     from ..plans import storage as S
     from ..versioned import epoch_replayed
 
+    # kind -> (append, needs `documents`): the gated layouts (IVF,
+    # IVF-PQ) re-apply the eligibility gate recorded at build time, so
+    # their appends take the documents side first
+    appends = {
+        "ivf": (S.append_to_ivf_index, True),
+        "ivfpq": (S.append_to_ivfpq_index, True),
+        "pq": (S.append_to_pq_index, False),
+        "sq": (S.append_to_sq_index, False),
+        "ivfsq": (S.append_to_ivfsq_index, False),
+    }
     spark = batch_df.sparkSession
     meta, _ = S._committed_index(spark, index_path)
     kind = S._index_kind(meta)
@@ -93,13 +91,12 @@ def index_maintenance_fold(
             "streaming_incremental_dedup (its batches carry text, "
             "not vectors)"
         )
-    if kind not in _MAINTENANCE_APPENDS:
+    if kind not in appends:
         raise ValueError(
             f"index at {index_path} is an unrecognized '{kind}' layout — "
             "no maintenance fold is defined for it"
         )
-    name, gated = _MAINTENANCE_APPENDS[kind]
-    append = getattr(S, name)
+    append, gated = appends[kind]
     extra = {"epoch": int(epoch_id), "run_id": run_id}
     if not gated:
         append(batch_df, index_path, extra=extra)

@@ -934,16 +934,20 @@ def test_ivf_append_empty_eligible_batch_is_noop(
         assert rows and probe(path) == rows, layout
 
 
-def test_append_reads_its_batch_once(spark, tmp_path, built_layouts):
-    """Every append evaluates its input batch exactly once: the rows
-    are persisted before the emptiness check, so the check and the
-    delta write share one evaluation. Counted by a nondeterministic
-    Python UDF filter that logs one line per row it evaluates (a
-    filter, unlike a projected column, the emptiness check cannot
-    prune away; a file, unlike an accumulator, also keeps the updates
-    of the check's early-stopped task)."""
+def test_append_write_reads_its_batch_once(spark, tmp_path, built_layouts):
+    """Every append's delta write evaluates its input batch once. Band,
+    pHash, IVF and IVF-PQ persist their rows, so the emptiness check
+    shares that evaluation. PQ, SQ and IVF-SQ do not: their check
+    evaluates the batch's filters again with every column pruned
+    (measured no slower than caching the batch), so they evaluate a
+    filter at most twice. Counted by a
+    nondeterministic Python UDF filter that logs one line per row it
+    evaluates (a filter, unlike a projected column, the emptiness
+    check cannot prune away; a file, unlike an accumulator, also keeps
+    the updates of the check's early-stopped tasks)."""
     from pyspark.sql.types import BooleanType
 
+    persisted = {"band", "phash", "ivf", "ivfpq"}
     for layout, (_, append, batch, _) in built_layouts[1].items():
         path = _index_copy(built_layouts, layout, tmp_path / layout)
         idc = "doc_id" if layout in ("band", "phash") else "vec_id"
@@ -961,7 +965,10 @@ def test_append_reads_its_batch_once(spark, tmp_path, built_layouts):
         n = batch.count()
         append(counted, path)
         evaluated = len(log.read_text().split())
-        assert evaluated == n, (layout, evaluated, n)
+        if layout in persisted:
+            assert evaluated == n, (layout, evaluated, n)
+        else:
+            assert n <= evaluated <= 2 * n, (layout, evaluated, n)
 
 
 def test_write_band_index_empty_corpus_raises(spark, tmp_path):
