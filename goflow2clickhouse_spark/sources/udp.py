@@ -93,15 +93,15 @@ def parse_datagram(payload: bytes) -> tuple | None:
                 # stream's string-typed JSON schema cannot distinguish
                 # {"SamplerAddress": 5} from {"SamplerAddress": "5"},
                 # so this path must decode both spellings identically
-                # to stay transport-equivalent (r6 review)
+                # to stay transport-equivalent
                 if isinstance(v, str) and v.isdigit():
                     v = int(v)
                 elif isinstance(v, (bool, float)):
                     # bool is an int subclass: ip_address(True) would
                     # yield 0.0.0.1 here while the stream path's
                     # _parse_ip_string("true") falls back to zeros —
-                    # same-message divergence (r7 review). Match the
-                    # stream: junk address → zero fallback, record kept.
+                    # same-message divergence. Match the stream: junk
+                    # address → zero fallback, record kept.
                     v = None
                 try:
                     v = ipaddress.ip_address(v or "0.0.0.0").packed
@@ -110,12 +110,12 @@ def parse_datagram(payload: bytes) -> tuple | None:
             elif v is None:
                 v = 0
             elif isinstance(v, (bool, float)):
-                # transport parity (r7 advice): the jsonl/Kafka path
-                # parses every field as a string and try_casts to the
-                # long type, so "1.5"/"true" become NULL and the record
-                # DROPS there; int(1.5) here silently truncated and
-                # ingested the same message on UDP. Non-integral JSON
-                # numerics and booleans now drop on BOTH transports.
+                # transport parity: the jsonl/Kafka path parses every
+                # field as a string and try_casts to the long type, so
+                # "1.5"/"true" become NULL and the record DROPS there;
+                # int(1.5) here would silently truncate and ingest the
+                # same message on UDP. Non-integral JSON numerics and
+                # booleans drop on BOTH transports.
                 return None
             else:
                 v = int(v)
@@ -124,7 +124,7 @@ def parse_datagram(payload: bytes) -> tuple | None:
                     # stream at Arrow conversion (breaking the never-
                     # crash contract), and the jsonl/Kafka twin's
                     # try_cast turns the same value into NULL → drop —
-                    # so drop here too (r7 review)
+                    # so drop here too
                     return None
             row.append(v)
     except (ValueError, TypeError, AttributeError, OverflowError):
@@ -170,8 +170,8 @@ def decode_netflow_v5(payload: bytes, sampler: bytes) -> list[tuple] | None:
         # them to wall time via the header pair (uptime, unix_secs).
         # The uptime counter is 32-bit and wraps every ~49.7 days: a
         # record whose first/last predate the wrap while the header
-        # postdates it makes the raw delta negative, which anchored the
-        # flow ~49.7 days in the FUTURE (r8 review) — the delta is an
+        # postdates it makes the raw delta negative, which would anchor
+        # the flow ~49.7 days in the FUTURE — so the delta is an
         # unsigned mod-2^32 difference.
         t_start = unix_secs - ((sys_uptime - first) % 2**32) // 1000
         t_end = unix_secs - ((sys_uptime - last) % 2**32) // 1000
@@ -350,167 +350,8 @@ def decode_sflow_v5(
 # big-endian unsigned ints except the address fields, kept as bytes.
 _V9_ADDR_FIELDS = {8, 12, 27, 28}  # IPv4 src/dst, IPv6 src/dst
 
-
-class NetflowV9Decoder:
-    """Stateful NetFlow v9 decode (RFC 3954; the template-dependent
-    protocol the reference handles via goflow, main.go:231-235).
-
-    Template flowsets (id 0) populate a per-(exporter, source_id)
-    template cache; data flowsets (id >= 256) parse against it. Data
-    arriving before its template is dropped-and-counted — the
-    protocol's defined behavior (exporters re-send templates
-    periodically). One decoder instance lives on each listener's
-    reader: template state is per-socket, exactly like a collector.
-
-    Template lifecycle (RFC 3954 §9): every re-received template
-    REFRESHES (and may redefine) its cache slot; a template not
-    refreshed within `template_ttl` seconds is expired on next use and
-    its data dropped-and-counted until the exporter re-sends it. The
-    clock is the exporters' own header export time (unix_secs) — the
-    stream carries it, so restart/replay scenarios behave
-    deterministically and tests need no wall-clock control.
-
-    Options templates (flowset id 1) are cached too; their DATA sets
-    are consumed as collector metadata, not flow rows: records are
-    counted in `options_records` and a samplingInterval option (IE 34)
-    becomes the default SamplingRate for subsequent flow rows of that
-    (exporter, source_id) that do not export IE 34 themselves — the
-    observable behavior goflow's sampling-rate tracking gives the
-    reference."""
-
-    def __init__(self, template_ttl: int | None = 1800) -> None:
-        # (sampler, source_id, template_id) -> (fields, refreshed_at)
-        self._templates: dict[tuple, tuple[list[tuple[int, int]], int]] = {}
-        # options: (sampler, source_id, tid) -> (scope+option fields, at)
-        self._options: dict[tuple, tuple[list[tuple[int, int]], int]] = {}
-        self._sampling: dict[tuple, int] = {}
-        self._ttl = template_ttl
-        self.dropped_no_template = 0
-        self.expired_templates = 0
-        self.options_records = 0
-
-    def _live(self, cache: dict, key: tuple, now: int):
-        ent = cache.get(key)
-        if ent is None:
-            return None
-        fields, at = ent
-        if self._ttl is not None and now - at > self._ttl:
-            del cache[key]
-            self.expired_templates += 1
-            return None
-        return fields
-
-    def decode(self, payload: bytes, sampler: bytes) -> list[tuple] | None:
-        try:
-            if len(payload) < 20:
-                return None
-            version, _count, sys_uptime, unix_secs, seq, source_id = \
-                struct.unpack_from(">HHIIII", payload, 0)
-            if version != 9:
-                return None
-            rows: list[tuple] = []
-            off = 20
-            while off + 4 <= len(payload):
-                fs_id, fs_len = struct.unpack_from(">HH", payload, off)
-                if fs_len < 4 or off + fs_len > len(payload):
-                    return None  # malformed flowset length
-                body, body_end = off + 4, off + fs_len
-                off += fs_len
-                if fs_id == 0:
-                    self._ingest_templates(payload, body, body_end,
-                                           sampler, source_id, unix_secs)
-                elif fs_id == 1:
-                    self._ingest_options(payload, body, body_end,
-                                         sampler, source_id, unix_secs)
-                elif fs_id >= 256:
-                    key = (sampler, source_id, fs_id)
-                    opt = self._live(self._options, key, unix_secs)
-                    if opt is not None:
-                        self._consume_options_data(
-                            payload, body, body_end, opt, sampler, source_id)
-                        continue
-                    tmpl = self._live(self._templates, key, unix_secs)
-                    if tmpl is None:
-                        self.dropped_no_template += 1
-                        continue
-                    rows.extend(self._parse_data(
-                        payload, body, body_end, tmpl, sampler, source_id,
-                        sys_uptime, unix_secs, seq))
-            return rows
-        except struct.error:
-            return None
-
-    def _ingest_templates(self, payload, p, end, sampler, source_id,
-                          now) -> None:
-        while p + 4 <= end:
-            tid, n_fields = struct.unpack_from(">HH", payload, p)
-            p += 4
-            if p + n_fields * 4 > end:
-                return
-            fields = [
-                struct.unpack_from(">HH", payload, p + i * 4)
-                for i in range(n_fields)
-            ]
-            p += n_fields * 4
-            # reject zero-stride templates: a data set parsed against
-            # one would never advance (crafted-datagram hang)
-            if tid >= 256 and fields and sum(ln for _, ln in fields) > 0:
-                self._templates[(sampler, source_id, tid)] = (fields, now)
-
-    def _ingest_options(self, payload, p, end, sampler, source_id,
-                        now) -> None:
-        # RFC 3954 §6.1: tid, scope LENGTH (bytes), option LENGTH (bytes)
-        while p + 6 <= end:
-            tid, scope_len, opt_len = struct.unpack_from(">HHH", payload, p)
-            p += 6
-            if scope_len % 4 or opt_len % 4 or p + scope_len + opt_len > end:
-                return
-            fields = [
-                struct.unpack_from(">HH", payload, p + i * 4)
-                for i in range((scope_len + opt_len) // 4)
-            ]
-            p += scope_len + opt_len
-            if tid >= 256 and fields and sum(ln for _, ln in fields) > 0:
-                self._options[(sampler, source_id, tid)] = (fields, now)
-
-    def _consume_options_data(self, payload, p, end, fields, sampler,
-                              source_id) -> None:
-        rec_len = sum(ln for _, ln in fields)
-        while rec_len > 0 and p + rec_len <= end:
-            f: dict[int, int] = {}
-            for ftype, ln in fields:
-                f[ftype] = int.from_bytes(payload[p:p + ln], "big")
-                p += ln
-            self.options_records += 1
-            rate = f.get(34) or f.get(305)
-            if rate:
-                self._sampling[(sampler, source_id)] = rate
-
-    def _parse_data(self, payload, p, end, tmpl, sampler, source_id,
-                    sys_uptime, unix_secs, seq) -> list[tuple]:
-        rec_len = sum(ln for _, ln in tmpl)
-        default_rate = self._sampling.get((sampler, source_id), 0)
-        rows = []
-        while rec_len > 0 and p + rec_len <= end:
-            f: dict[int, int | bytes] = {}
-            for ftype, ln in tmpl:
-                raw = payload[p:p + ln]
-                if ftype is not None:
-                    f[ftype] = raw if ftype in _V9_ADDR_FIELDS else \
-                        int.from_bytes(raw, "big")
-                p += ln
-            # sysuptime-ms clocks anchored at the header pair, as in
-            # v5 — including the unsigned mod-2^32 wrap handling (the
-            # 32-bit uptime counter wraps every ~49.7 days, r8 review)
-            first, last = f.get(22), f.get(21)
-            t_start = (unix_secs - ((sys_uptime - first) % 2**32) // 1000
-                       if first is not None else unix_secs)
-            t_end = (unix_secs - ((sys_uptime - last) % 2**32) // 1000
-                     if last is not None else unix_secs)
-            rows.append(_fields_to_row(
-                f, _TYPE_NETFLOW_V9, unix_secs, seq, sampler, t_start, t_end,
-                default_rate))
-        return rows
+_HH = struct.Struct(">HH")    # set header, field specifier, template header
+_HHH = struct.Struct(">HHH")  # options-template header
 
 
 def _fields_to_row(f: dict, flow_type: int, time_received: int, seq: int,
@@ -546,30 +387,59 @@ def _fields_to_row(f: dict, flow_type: int, time_received: int, seq: int,
     )
 
 
-class IpfixDecoder:
-    """Stateful IPFIX decode (RFC 7011; version tag 10) — the v9
-    successor the reference also takes on its netflow:// listener
-    (goflow's NFv9/IPFIX routine, main.go:231-235).
+class _TemplateFlowDecoder:
+    """Stateful decode of the template-based flow protocols, NetFlow v9
+    (RFC 3954) and IPFIX (RFC 7011), which the reference handles with
+    one goflow template system (main.go:231-235).
 
-    Differences from v9 handled here: 16-byte header whose export time
-    is already epoch seconds (no sysuptime anchor), set ids 2/3 for
-    templates/options templates, enterprise-bit field specifiers
-    (skipped but correctly advanced over), and absolute-time elements
-    (flowStartSeconds 150/151, flowStartMilliseconds 152/153) taking
-    precedence for flow times. Variable-length elements (len 0xFFFF)
-    make a template unusable for fixed-stride parsing; its data sets
-    are dropped-and-counted.
+    Template sets populate a per-(exporter, domain) template cache —
+    the domain is v9's source id or IPFIX's observation domain; data
+    sets (id >= 256) parse against it. Data arriving before its
+    template is dropped-and-counted — the protocol's defined behavior
+    (exporters re-send templates periodically). One decoder instance
+    per version lives on each listener's reader: template state is
+    per-socket, exactly like a collector.
 
-    Template lifecycle mirrors the v9 decoder (for IPFIX-over-UDP,
-    RFC 7011 §8.4 prescribes exactly this timeout model — withdrawals
-    only exist on SCTP/TCP): re-received templates refresh their slot,
-    unrefreshed templates expire after `template_ttl` seconds of the
-    exporters' export-time clock. Options-template DATA sets are
-    consumed as metadata: counted, and samplingInterval (IE 34) /
-    samplingPacketInterval (IE 305) set the default SamplingRate for
-    the (exporter, domain)."""
+    Template lifecycle (RFC 3954 §9; RFC 7011 §8.4 prescribes the same
+    timeout model for IPFIX over UDP, where withdrawals do not exist):
+    every re-received template REFRESHES (and may redefine) its cache
+    slot; a template not refreshed within `template_ttl` seconds is
+    expired on next use and its data dropped-and-counted until the
+    exporter re-sends it. The clock is the exporters' own header export
+    time — the stream carries it, so restart/replay scenarios behave
+    deterministically and tests need no wall-clock control.
+
+    Options templates are cached too; their DATA sets are consumed as
+    collector metadata, not flow rows: records are counted in
+    `options_records`, and a samplingInterval (IE 34) or
+    samplingPacketInterval (IE 305) option becomes the default
+    SamplingRate for subsequent flow rows of that (exporter, domain)
+    that do not export IE 34 themselves — the observable behavior
+    goflow's sampling-rate tracking gives the reference.
+
+    The subclasses carry only their version's facts: the header, the
+    template/options set ids, the options-template header, the field
+    specifier rules and the flow-time rule."""
+
+    _HEADER: struct.Struct
+    _TEMPLATE_SET: int
+    _OPTIONS_SET: int
+    _FLOW_TYPE: int
+    #: field-id bit announcing a 4-byte enterprise number after the
+    #: specifier (0: the version has none)
+    _ENTERPRISE_BIT = 0
+    #: field length marking a variable-length element, whose template is
+    #: cached with no fields (None: the version has no such rule)
+    _VARLEN: int | None = None
+    # Each subclass also defines _header(payload) -> (end of sets, export
+    # time, sequence, domain, flow-time anchor) or None when not its
+    # version; _options_field_count(a, b) -> the field count its
+    # options-template header gives, or None when malformed; and
+    # _flow_times(f, export time, anchor) -> (TimeFlowStart, TimeFlowEnd).
 
     def __init__(self, template_ttl: int | None = 1800) -> None:
+        # (sampler, domain, template_id) -> (fields, refreshed_at); an
+        # enterprise-specific field keeps its length under the id None
         self._templates: dict[
             tuple, tuple[list[tuple[int | None, int]], int]
         ] = {}
@@ -582,82 +452,84 @@ class IpfixDecoder:
         self.expired_templates = 0
         self.options_records = 0
 
-    _live = NetflowV9Decoder._live
+    def _live(self, cache: dict, key: tuple, now: int):
+        ent = cache.get(key)
+        if ent is None:
+            return None
+        fields, at = ent
+        if self._ttl is not None and now - at > self._ttl:
+            del cache[key]
+            self.expired_templates += 1
+            return None
+        return fields
 
     def decode(self, payload: bytes, sampler: bytes) -> list[tuple] | None:
         try:
-            if len(payload) < 16:
+            head = self._header(payload)  # struct.error if too short
+            if head is None:
                 return None
-            version, total_len, export_secs, seq, domain = \
-                struct.unpack_from(">HHIII", payload, 0)
-            if version != 10:
-                return None
-            end_all = min(total_len, len(payload))
+            end, now, seq, domain, anchor = head
             rows: list[tuple] = []
-            off = 16
-            while off + 4 <= end_all:
-                set_id, set_len = struct.unpack_from(">HH", payload, off)
-                if set_len < 4 or off + set_len > end_all:
-                    return None
+            off = self._HEADER.size
+            while off + 4 <= end:
+                set_id, set_len = _HH.unpack_from(payload, off)
+                if set_len < 4 or off + set_len > end:
+                    return None  # malformed set length
                 body, body_end = off + 4, off + set_len
                 off += set_len
-                if set_id == 2:
-                    self._ingest_templates(payload, body, body_end,
-                                           sampler, domain, export_secs,
-                                           options=False)
-                elif set_id == 3:
-                    self._ingest_templates(payload, body, body_end,
-                                           sampler, domain, export_secs,
-                                           options=True)
-                elif set_id >= 256:
+                if set_id >= 256:
                     key = (sampler, domain, set_id)
-                    opt = self._live(self._options, key, export_secs)
+                    opt = self._live(self._options, key, now)
                     if opt is not None:
-                        if not any(ln == 0xFFFF for _, ln in opt):
-                            self._consume_options_data(
-                                payload, body, body_end, opt, sampler, domain)
+                        self._consume_options_data(
+                            payload, body, body_end, opt, sampler, domain)
                         continue
-                    tmpl = self._live(self._templates, key, export_secs)
-                    if tmpl is None or any(ln == 0xFFFF for _, ln in tmpl):
+                    tmpl = self._live(self._templates, key, now)
+                    if not tmpl:  # unknown, expired or variable-length
                         self.dropped_no_template += 1
                         continue
                     rows.extend(self._parse_data(
                         payload, body, body_end, tmpl, sampler, domain,
-                        export_secs, seq))
+                        now, seq, anchor))
+                elif set_id in (self._TEMPLATE_SET, self._OPTIONS_SET):
+                    self._ingest_templates(payload, body, body_end, sampler,
+                                           domain, now,
+                                           set_id == self._OPTIONS_SET)
             return rows
         except struct.error:
             return None
 
     def _ingest_templates(self, payload, p, end, sampler, domain, now,
-                          options: bool = False) -> None:
-        # options-template sets (RFC 7011 §3.4.2.2) carry an extra
-        # scope-field-count halfword; the specifier wire format is the
-        # same, and scope fields parse like option fields here
-        head = 6 if options else 4
-        while p + head <= end:
+                          options: bool) -> None:
+        while p + (6 if options else 4) <= end:
             if options:
-                tid, n_fields, _scope_n = struct.unpack_from(">HHH", payload, p)
+                tid, a, b = _HHH.unpack_from(payload, p)
+                n_fields = self._options_field_count(a, b)
+                if n_fields is None:
+                    return
+                p += 6
             else:
-                tid, n_fields = struct.unpack_from(">HH", payload, p)
-            p += head
+                tid, n_fields = _HH.unpack_from(payload, p)
+                p += 4
             fields: list[tuple[int | None, int]] = []
-            ok = True
             for _ in range(n_fields):
                 if p + 4 > end:
-                    ok = False
-                    break
-                ie, ln = struct.unpack_from(">HH", payload, p)
+                    return  # truncated template: nothing stored
+                ie, ln = _HH.unpack_from(payload, p)
                 p += 4
-                if ie & 0x8000:  # enterprise-specific: skip id, keep stride
+                if ie & self._ENTERPRISE_BIT:
+                    # enterprise-specific: skip its number, keep its stride
                     if p + 4 > end:
-                        ok = False
-                        break
-                    p += 4
-                    fields.append((None, ln))
-                else:
-                    fields.append((ie, ln))
-            # zero-stride templates rejected, as in the v9 decoder
-            if ok and tid >= 256 and fields and sum(ln for _, ln in fields) > 0:
+                        return
+                    ie, p = None, p + 4
+                fields.append((ie, ln))
+            # reject zero-stride templates: a data set parsed against
+            # one would never advance (crafted-datagram hang)
+            if tid >= 256 and sum(ln for _, ln in fields) > 0:
+                if self._VARLEN in (ln for _, ln in fields):
+                    # no fixed stride to parse by: the slot is kept (it
+                    # refreshes or redefines the id), its data is not
+                    fields = []
                 cache = self._options if options else self._templates
                 cache[(sampler, domain, tid)] = (fields, now)
 
@@ -675,10 +547,11 @@ class IpfixDecoder:
             if rate:
                 self._sampling[(sampler, domain)] = rate
 
-    def _parse_data(self, payload, p, end, tmpl, sampler, domain,
-                    export_secs, seq) -> list[tuple]:
+    def _parse_data(self, payload, p, end, tmpl, sampler, domain, now, seq,
+                    anchor) -> list[tuple]:
         rec_len = sum(ln for _, ln in tmpl)
         default_rate = self._sampling.get((sampler, domain), 0)
+        flow_times, flow_type = self._flow_times, self._FLOW_TYPE
         rows = []
         while rec_len > 0 and p + rec_len <= end:
             f: dict[int, int | bytes] = {}
@@ -688,18 +561,89 @@ class IpfixDecoder:
                     f[ftype] = raw if ftype in _V9_ADDR_FIELDS else \
                         int.from_bytes(raw, "big")
                 p += ln
-            if 150 in f or 151 in f:      # flowStart/EndSeconds
-                t_start = f.get(150, export_secs)
-                t_end = f.get(151, t_start)
-            elif 152 in f or 153 in f:    # flowStart/EndMilliseconds
-                t_start = f.get(152, export_secs * 1000) // 1000
-                t_end = f.get(153, f.get(152, export_secs * 1000)) // 1000
-            else:
-                t_start = t_end = export_secs
+            t_start, t_end = flow_times(f, now, anchor)
             rows.append(_fields_to_row(
-                f, _TYPE_IPFIX, export_secs, seq, sampler, t_start, t_end,
+                f, flow_type, now, seq, sampler, t_start, t_end,
                 default_rate))
         return rows
+
+
+class NetflowV9Decoder(_TemplateFlowDecoder):
+    """NetFlow v9 (RFC 3954): 20-byte header whose export time anchors a
+    sysuptime clock; template/options flowset ids 0/1; options-template
+    header of scope and option LENGTHS in bytes (§6.1); flow times from
+    sysuptime-ms elements 22/21."""
+
+    #: version, count, sys_uptime ms, unix_secs, sequence, source_id
+    _HEADER = struct.Struct(">HHIIII")
+    _TEMPLATE_SET, _OPTIONS_SET = 0, 1
+    _FLOW_TYPE = _TYPE_NETFLOW_V9
+
+    def _header(self, payload: bytes) -> tuple | None:
+        version, _count, sys_uptime, unix_secs, seq, source_id = \
+            self._HEADER.unpack_from(payload, 0)
+        if version != 9:
+            return None
+        return len(payload), unix_secs, seq, source_id, sys_uptime
+
+    @staticmethod
+    def _options_field_count(scope_len: int, opt_len: int) -> int | None:
+        if scope_len % 4 or opt_len % 4:
+            return None
+        return (scope_len + opt_len) // 4
+
+    @staticmethod
+    def _flow_times(f: dict, unix_secs: int, sys_uptime: int) -> tuple:
+        # sysuptime-ms clocks anchored at the header pair, as in v5 —
+        # the delta is an unsigned mod-2^32 difference because the
+        # 32-bit uptime counter wraps every ~49.7 days
+        first, last = f.get(22), f.get(21)
+        t_start = (unix_secs - ((sys_uptime - first) % 2**32) // 1000
+                   if first is not None else unix_secs)
+        t_end = (unix_secs - ((sys_uptime - last) % 2**32) // 1000
+                 if last is not None else unix_secs)
+        return t_start, t_end
+
+
+class IpfixDecoder(_TemplateFlowDecoder):
+    """IPFIX (RFC 7011; version tag 10): 16-byte header whose Length
+    bounds the sets and whose export time is already epoch seconds;
+    template/options set ids 2/3; options-template header of field and
+    scope-field COUNTS (§3.4.2.2); enterprise-bit field specifiers,
+    skipped but correctly advanced over; a variable-length element (len
+    0xFFFF) makes a template unusable for fixed-stride parsing, so its
+    data sets are dropped-and-counted (options data is ignored); flow
+    times from absolute elements flowStart/EndSeconds (150/151) or
+    flowStart/EndMilliseconds (152/153)."""
+
+    #: version, length, export_secs, sequence, observation domain
+    _HEADER = struct.Struct(">HHIII")
+    _TEMPLATE_SET, _OPTIONS_SET = 2, 3
+    _FLOW_TYPE = _TYPE_IPFIX
+    _ENTERPRISE_BIT = 0x8000
+    _VARLEN = 0xFFFF
+
+    def _header(self, payload: bytes) -> tuple | None:
+        version, length, export_secs, seq, domain = \
+            self._HEADER.unpack_from(payload, 0)
+        # Length counts the header itself: a shorter one is malformed
+        if version != 10 or length < self._HEADER.size:
+            return None
+        return min(length, len(payload)), export_secs, seq, domain, None
+
+    @staticmethod
+    def _options_field_count(n_fields: int, _scope_n: int) -> int:
+        return n_fields  # scope fields included, parsed like the rest
+
+    @staticmethod
+    def _flow_times(f: dict, export_secs: int, _anchor: None) -> tuple:
+        if 150 in f or 151 in f:      # flowStart/EndSeconds
+            t_start = f.get(150, export_secs)
+            return t_start, f.get(151, t_start)
+        if 152 in f or 153 in f:      # flowStart/EndMilliseconds
+            t_start = f.get(152, export_secs * 1000)
+            return t_start // 1000, f.get(153, t_start) // 1000
+        return export_secs, export_secs
 
 
 def decode_datagram(
