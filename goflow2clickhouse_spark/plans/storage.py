@@ -499,53 +499,49 @@ def _commit_staged_version(
     )
 
 
-def _alloc_delta(base: str, meta: dict) -> tuple[str, int, dict]:
-    """Allocate an append-delta slot: (delta_dir, j, commit_extra).
-    Delta directories are NONCE-UNIQUE — `a{j}.{8-hex}` — and the
-    committed metadata records the exact directory NAMES
-    (`delta_dirs`), not just a counter (r13, closing the meta_mutex
-    residual hazard the r12 docstring sketched): under the old
-    `a{j}`-by-counter naming, a holder paused past its lock lease and
-    resumed MID-DATA-WRITE would overwrite the new holder's
-    same-named uncommitted delta before its own commit was fenced —
-    the one window the commit-nonce fence could not close. With
-    nonce-unique names the zombie's resumed write lands in its OWN
-    directory, which no committed `delta_dirs` list ever references:
-    it is orphaned, never read, and dies with the version directory
-    at the next rebuild/compaction prune. Pre-r13 indexes (counter
-    only, `a{j}` dirs) stay readable — the reader falls back to the
-    counter rule — and their first new append migrates the list."""
+_DELTA_LISTS = {"appends": "delta_dirs", "tombstones": "tombstone_dirs"}
+
+
+def _delta_names(meta: dict, family: str) -> list[str]:
+    """The committed delta directory names of `family` (`appends` or
+    `tombstones`): the names recorded in `delta_dirs` /
+    `tombstone_dirs`, or the counter rule `a{1..appends}` /
+    `t{1..tombstones}` for indexes that predate the recorded list.
+    Directories not named here are torn, uncommitted or zombie writes,
+    and no reader sees them."""
+    names = meta.get(_DELTA_LISTS[family])
+    if names is None:
+        names = [
+            f"{family[0]}{j}" for j in range(1, int(meta.get(family, 0)) + 1)
+        ]
+    return list(names)
+
+
+def _alloc_delta(base: str, meta: dict, family: str) -> tuple[str, int, dict]:
+    """Allocate a delta slot of `family`: (delta_dir, j, commit_extra).
+    Directory names are nonce-unique (`a{j}.{8-hex}`, `t{j}.{8-hex}`)
+    and the commit records the exact names, not just the counter: a
+    writer that lost its lock lease and resumes mid-write lands in its
+    own directory, which no committed list references, instead of
+    overwriting a committed or a successor's delta. An index that
+    predates the recorded list migrates it on its first new delta."""
     import posixpath
     import uuid
 
-    j = int(meta.get("appends", 0)) + 1
-    names = list(meta.get(
-        "delta_dirs", [f"a{i}" for i in range(1, j)]
-    ))
-    dname = f"a{j}.{uuid.uuid4().hex[:8]}"
-    names.append(dname)
-    return (
-        posixpath.join(base, "appends", dname),
-        j,
-        {"delta_dirs": names},
-    )
+    j = int(meta.get(family, 0)) + 1
+    names = _delta_names(meta, family)
+    names.append(f"{family[0]}{j}.{uuid.uuid4().hex[:8]}")
+    dx = {family: j, _DELTA_LISTS[family]: names}
+    return posixpath.join(base, family, names[-1]), j, dx
 
 
 def _delta_dirs(base: str, meta: dict) -> list[str]:
     """The committed version's artifact directories: the base dir plus
-    every COMMITTED append delta — the directory names recorded in
-    `delta_dirs` (nonce-unique since r13, see _alloc_delta), falling
-    back to the pre-r13 counter rule (`a{1..meta['appends']}`) for
-    indexes built before the migration. Directories NOT in the list
-    are torn/uncommitted/zombie writes and deliberately ignored. THE
-    single statement of the append-visibility rule — it previously
-    lived restated in three readers (r8 review), where a future layout
-    change would have had to land three times or silently diverge."""
+    every committed append delta (_delta_names). The one statement of
+    the append-visibility rule, shared by every reader."""
     import posixpath
 
-    names = meta.get("delta_dirs")
-    if names is None:
-        names = [f"a{j}" for j in range(1, int(meta.get("appends", 0)) + 1)]
+    names = _delta_names(meta, "appends")
     return [base] + [posixpath.join(base, "appends", n) for n in names]
 
 
@@ -584,67 +580,81 @@ def _committed_index(
     return meta, version_dir(path, ver)
 
 
+def _observed(df: DataFrame):
+    """(df', count): df' carries a row-count observation at its root,
+    and count() returns the rows df' produced once its first action
+    has run. The observation rides the write the caller makes anyway,
+    so no check costs a job of its own. Nothing above df' may be
+    pruned for emptiness: an observed node below a join with an empty
+    side is optimized away, and its count never arrives. The joins
+    the layout writers put above it are with committed one-row
+    artifacts (centroids, codebook, quantizer), never empty."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    counted = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    return counted, lambda: obs.get["n"]
+
+
+def _write_delta(
+    spark: SparkSession, path: str, meta: dict, base: str, family: str,
+    extra: dict | None, rows: DataFrame, write,
+) -> int:
+    """The one write-then-commit path of index appends (`appends`) and
+    deletes (`tombstones`); returns the row count it observed.
+
+      1. allocate a nonce-unique delta directory (_alloc_delta);
+      2. `write(rows, meta, base, delta_dir)` writes the delta's legs,
+         counting `rows` as they are written (_observed);
+      3. rows written: `_CURRENT` re-commits with the family's counter,
+         its recorded directory names and `extra`;
+      4. no rows: the directory is deleted (an empty write still
+         leaves a `_SUCCESS`-only or schema-only directory) and only
+         `extra` commits, if given.
+
+    A torn write (delta written, commit lost) stays invisible, since
+    readers follow the recorded names, and its retry lands in a fresh
+    directory. `extra` commits atomically with the delta: the
+    streaming folds record their (run_id, epoch) replay gate there, so
+    the gate advances with the delta it guards, and also for an empty
+    batch."""
+    from ..versioned import _fs, recommit_meta
+
+    delta, _, dx = _alloc_delta(base, meta, family)
+    counted, count = _observed(rows)
+    write(counted, meta, base, delta)
+    n = count()
+    if n:
+        recommit_meta(spark, path, meta, extra={**(extra or {}), **dx})
+        return n
+    fs, hdelta = _fs(spark, delta)
+    fs.delete(hdelta, True)
+    family_dir = hdelta.getParent()
+    if len(fs.listStatus(family_dir)) == 0:
+        fs.delete(family_dir, False)
+    if extra:
+        recommit_meta(spark, path, meta, extra=extra)
+    return 0
+
+
 def _append_delta(
-    spark: SparkSession,
-    path: str,
-    kind: str,
-    geometry: dict | None,
-    extra: dict | None,
-    rows,
-    write,
-    persist: bool = True,
+    spark: SparkSession, path: str, kind: str, geometry: dict | None,
+    extra: dict | None, rows, write,
 ) -> None:
     """The one append path of the seven layouts: fold a batch into the
     committed version as a delta, never reading or rewriting the
-    existing legs. Steps: the metadata gate; `rows(meta)` builds the
-    batch's rows from the RECORDED metadata (eligibility gate, id
-    column, shingle width — never caller arguments); an emptiness
-    check; `write(rows, meta, base, delta_dir)` writes the layout's
-    legs; `_CURRENT` re-commits with the delta's directory name, the
-    `appends` counter and `extra`.
+    existing legs. The metadata gate runs first; `rows(meta)` builds
+    the batch's rows from the RECORDED metadata (eligibility gate, id
+    column, shingle width — never caller arguments); _write_delta
+    writes the layout's legs and commits. Each layout's writer reads
+    its rows once.
 
-    `persist` caches the rows for the check and the write to share —
-    the gated layouts' eligibility join and the band writer's two
-    reads need it. The PQ, SQ and IVF-SQ appends pass False: their
-    rows are a projection of the caller's batch read once by the
-    write, and `isEmpty()` prunes every column, so the check runs the
-    batch's filters but never its vector computation; that measured
-    no slower than caching the whole batch.
-
-    Contract:
-      * the delta lands at a NONCE-UNIQUE `v{N}/appends/a{j}.{8-hex}/`
-        (_alloc_delta), and readers scan base + the RECORDED dirs
-        (_delta_dirs), so a torn append (delta written, commit lost)
-        is invisible and its retry lands in a fresh directory;
-      * `extra` merges into `_CURRENT` atomically with the counter —
-        the streaming folds record their (run_id, epoch) replay gate
-        there, so the gate commits with the delta it guards;
-      * an EMPTY batch writes no delta (an empty partitioned parquet
-        write holds only `_SUCCESS` and would poison every union read)
-        but still commits `extra`, so the replay gate advances;
-      * quantizers/centroids are read from the committed version,
-        never re-derived; a rebuild bumps the version and resets the
-        counter, and compact_index folds the deltas into a new base.
+    Quantizers and centroids are read from the committed version,
+    never re-derived; a rebuild bumps the version and resets the
+    counter, and compact_index folds the deltas into a new base.
     Dedup across batches is the caller's contract."""
-    from ..versioned import recommit_meta
-
     meta, base = _committed_index(spark, path, kind, geometry)
-    batch = rows(meta)
-    if persist:
-        batch = batch.persist()
-    try:
-        if batch.isEmpty():
-            if extra:
-                recommit_meta(spark, path, meta, extra=extra)
-            return
-        delta, j, dx = _alloc_delta(base, meta)
-        write(batch, meta, base, delta)
-        recommit_meta(
-            spark, path, meta, extra={**(extra or {}), **dx}, appends=j
-        )
-    finally:
-        if persist:
-            batch.unpersist()
+    _write_delta(spark, path, meta, base, "appends", extra, rows(meta), write)
 
 
 def _recorded_eligible(documents: DataFrame, embeddings: DataFrame):
@@ -666,22 +676,20 @@ def _id_vectors(batch: DataFrame, vec_col: str):
 def _read_tombstones(
     spark: SparkSession, base: str, meta: dict, id_col: str
 ) -> DataFrame | None:
-    """The committed version's tombstoned-id relation (union of
-    `tombstones/t{1..meta['tombstones']}/ids` — dirs beyond the
-    counter are torn/uncommitted and ignored, the _delta_dirs rule);
-    None when the index has no deletions, so undeleted indexes keep
-    their exact pre-deletion plans. The schema is a literal (ids are
-    always written as one BIGINT column named after the layout's id
-    column), so the read never pays an inference footer pass."""
+    """The committed version's tombstoned-id relation: the union of
+    the committed `tombstones/<name>/ids` deltas (_delta_names). None
+    when the index has no deletions, so undeleted indexes keep their
+    exact pre-deletion plans. The schema is a literal (ids are always
+    written as one BIGINT column named after the layout's id column),
+    so the read never pays an inference footer pass."""
     import posixpath
 
-    nt = int(meta.get("tombstones", 0))
-    if nt == 0:
-        return None
     legs = [
-        posixpath.join(base, "tombstones", f"t{j}", "ids")
-        for j in range(1, nt + 1)
+        posixpath.join(base, "tombstones", n, "ids")
+        for n in _delta_names(meta, "tombstones")
     ]
+    if not legs:
+        return None
     return spark.read.schema(f"{id_col} bigint").parquet(*legs).distinct()
 
 
@@ -930,11 +938,9 @@ def write_band_index(
     ver = current_version(spark, path) + 1
     base, _vtok = _stage_version(spark, path)
     sh_path = posixpath.join(base, "shingles")
-    shingle_arrays(corpus, text_col, id_col, n).write.mode(
-        "overwrite"
-    ).parquet(sh_path)
-    sh = spark.read.parquet(sh_path)
-    if sh.isEmpty():
+    shingles, count = _observed(shingle_arrays(corpus, text_col, id_col, n))
+    shingles.write.mode("overwrite").parquet(sh_path)
+    if count() == 0:
         # an all-too-short (or empty) corpus would commit a base whose
         # partitioned bands leg holds only _SUCCESS — unreadable without
         # a schema and useless as an index; fail the BUILD loudly
@@ -942,6 +948,7 @@ def write_band_index(
             f"band index build over {path}: corpus produced no shingles "
             f"(every doc shorter than n={n} words?) — nothing to index"
         )
+    sh = spark.read.parquet(sh_path)
     band_key_rows(array_minhash_sigs(sh, id_col), id_col).write.mode(
         "overwrite"
     ).partitionBy("band_no").parquet(posixpath.join(base, "bands"))
@@ -1003,18 +1010,23 @@ def append_to_band_index(
     def write(norm, meta, base, delta):
         idx_id = str(meta.get("id_col", "doc_id"))
         sh_path = posixpath.join(delta, "shingles")
-        shingle_arrays(norm, "text", idx_id, int(meta["n"])).write.mode(
-            "overwrite"
-        ).parquet(sh_path)
-        sh = spark.read.parquet(sh_path)
-        band_key_rows(array_minhash_sigs(sh, idx_id), idx_id).write.mode(
-            "overwrite"
-        ).partitionBy("band_no").parquet(posixpath.join(delta, "bands"))
-        norm.select(
-            F.col(idx_id), F.sha2(F.col("text"), 256).alias("_sha")
-        ).distinct().write.mode("overwrite").parquet(
-            posixpath.join(delta, "shas")
-        )
+        # the one leg writer that reads its rows twice (shingles, shas)
+        norm = norm.persist()
+        try:
+            shingle_arrays(norm, "text", idx_id, int(meta["n"])).write.mode(
+                "overwrite"
+            ).parquet(sh_path)
+            sh = spark.read.parquet(sh_path)
+            band_key_rows(array_minhash_sigs(sh, idx_id), idx_id).write.mode(
+                "overwrite"
+            ).partitionBy("band_no").parquet(posixpath.join(delta, "bands"))
+            norm.select(
+                F.col(idx_id), F.sha2(F.col("text"), 256).alias("_sha")
+            ).distinct().write.mode("overwrite").parquet(
+                posixpath.join(delta, "shas")
+            )
+        finally:
+            norm.unpersist()
 
     _append_delta(
         spark, path, "band", {"num_perm": NUM_PERM, "bands": BANDS},
@@ -1353,15 +1365,16 @@ def write_phash_index(
     ver = current_version(spark, path) + 1
     base, _vtok = _stage_version(spark, path)
     h_path = posixpath.join(base, "hashes")
-    sigs.select(
+    hashes, count = _observed(sigs.select(
         F.col(id_col), F.col(hash_col).cast("long").alias("phash")
-    ).write.mode("overwrite").parquet(h_path)
-    hs = spark.read.parquet(h_path)
-    if hs.isEmpty():
+    ))
+    hashes.write.mode("overwrite").parquet(h_path)
+    if count() == 0:
         raise ValueError(
             f"phash index build over {path}: the hash relation is "
             "empty — nothing to index"
         )
+    hs = spark.read.parquet(h_path)
     _phash_band_rows(hs, id_col).write.mode("overwrite").partitionBy(
         "band_no"
     ).parquet(posixpath.join(base, "bands"))
@@ -1679,7 +1692,7 @@ def append_to_pq_index(
 
     _append_delta(
         spark, path, "pq", {"pq_m": PQ_M, "pq_sub": PQ_SUB, "pq_k": PQ_K},
-        extra, _id_vectors(batch, vec_col), write, persist=False,
+        extra, _id_vectors(batch, vec_col), write,
     )
 
 
@@ -2234,7 +2247,7 @@ def append_to_sq_index(
 
     _append_delta(
         spark, path, "sq", {"sq_buckets": SQ_BUCKETS, "dim": DIM}, extra,
-        _id_vectors(batch, vec_col), write, persist=False,
+        _id_vectors(batch, vec_col), write,
     )
 
 
@@ -2475,7 +2488,7 @@ def append_to_ivfsq_index(
 
     _append_delta(
         spark, path, "ivfsq", {"sq_buckets": SQ_BUCKETS, "dim": DIM},
-        extra, _id_vectors(batch, vec_col), write, persist=False,
+        extra, _id_vectors(batch, vec_col), write,
     )
 
 
@@ -3031,21 +3044,20 @@ def _require_kind(meta: dict, kind: str, path: str) -> None:
 def delete_from_index(
     ids: DataFrame, path: str, extra: dict | None = None
 ) -> None:
-    """Tombstone deletion from any of the seven persisted layouts (r11
-    — the r10 verdict's missing lifecycle verb: build / append /
-    compact / probe existed, but takedown/opt-out removal of an id —
-    a routine operation for a 100 TB corpus index — required a full
-    rebuild). `ids` is a one-column relation of ids to remove (any
-    column name; vector layouts delete by their recorded `id_col`,
-    the band layout by its doc id). The delta commits ATOMICALLY via
-    the appends machinery verbatim: distinct non-NULL ids land at
-    `v{N}/tombstones/t{j}/ids` and `_CURRENT` re-commits with
-    `tombstones: j` — a torn write (ids written, commit lost) is
-    invisible and the retried delete overwrites it. Every reader
-    anti-joins the committed tombstone union (_drop_tombstoned — a
-    broadcast; takedown lists are small, and a tombstone set that has
-    grown large is the signal to compact). `compact_index` physically
-    drops tombstoned rows into the new base and resets the counter.
+    """Tombstone deletion from any of the seven persisted layouts:
+    takedown/opt-out removal of ids without a rebuild. `ids` is a
+    one-column relation of ids to remove (any column name; vector
+    layouts delete by their recorded `id_col`, the band layout by its
+    doc id). The distinct non-NULL ids commit as one tombstone delta
+    through the appends' write-then-commit path (_write_delta): a
+    nonce-unique `v{N}/tombstones/t{j}.{8-hex}/ids` directory, recorded
+    in `_CURRENT` (`tombstones`, `tombstone_dirs`), so a torn or
+    zombie write is invisible and never overwrites a committed one.
+    Every reader anti-joins the committed tombstone union
+    (_drop_tombstoned — a broadcast; takedown lists are small, and a
+    tombstone set that has grown large is the signal to compact).
+    `compact_index` physically drops tombstoned rows into the new base
+    and resets the counter.
 
     Contract notes: a tombstoned id is suppressed from EVERY
     committed leg, including appends folded AFTER the deletion —
@@ -3061,8 +3073,6 @@ def delete_from_index(
     (idempotent takedown replays)."""
     import posixpath
 
-    from ..versioned import recommit_meta
-
     spark = ids.sparkSession
     meta, base = _committed_index(spark, path)
     kind = _index_kind(meta)  # refuse unrecognized layouts first
@@ -3072,15 +3082,15 @@ def delete_from_index(
             f"delete_from_index expects a single-column id relation, "
             f"got columns {ids.columns}"
         )
-    # type gates (r11 advice): tombstones are stored as one BIGINT
-    # column (_read_tombstones' literal schema), so both sides must
-    # actually BE integral — a string id relation would cast
+    # type gates: tombstones are stored as one BIGINT column
+    # (_read_tombstones' literal schema), so both sides must actually
+    # BE integral — a string id relation would cast
     # non-numeric values to NULLs (misreported as "empty id
     # relation"), and a non-long stored id column (id_col is
     # caller-chosen on the band layout) would type-mismatch the
     # readers' anti-join. Refuse each with its own diagnostic.
-    # Scale-0 decimals are admitted (review: JDBC/ClickHouse feeds
-    # deliver DECIMAL(n,0) ids, which cast to long losslessly).
+    # Scale-0 decimals are admitted (JDBC/ClickHouse feeds deliver
+    # DECIMAL(n,0) ids, which cast to long losslessly).
     from pyspark.sql import types as T
 
     in_type = ids.schema[ids.columns[0]].dataType
@@ -3096,9 +3106,7 @@ def delete_from_index(
             "tombstones are stored as BIGINT, so pass integral ids"
         )
     leg = _COMPACT_SPECS[kind]["data"][0][0]
-    leg_sch = _leg_schema(
-        spark, path, meta, leg, posixpath.join(base, leg)
-    )
+    leg_sch = _leg_schema(spark, path, meta, leg, posixpath.join(base, leg))
     if idc not in leg_sch.fieldNames():
         raise ValueError(
             f"delete_from_index over {path}: the '{leg}' leg has no "
@@ -3117,27 +3125,18 @@ def delete_from_index(
         ids.select(F.col(ids.columns[0]).cast("long").alias(idc))
         .where(F.col(idc).isNotNull())
         .distinct()
-        .persist()
     )
-    try:
-        if rel.isEmpty():
-            if extra:
-                recommit_meta(spark, path, meta, extra=extra)
-                return
-            raise ValueError(
-                f"delete_from_index over {path}: the id relation is "
-                "empty (or all-NULL) — a takedown that deletes nothing "
-                "is a caller bug, not a no-op"
-            )
-        j = int(meta.get("tombstones", 0)) + 1
-        rel.write.mode("overwrite").parquet(
-            posixpath.join(base, "tombstones", f"t{j}", "ids")
+
+    def write(df, meta, base, delta):
+        df.write.mode("overwrite").parquet(posixpath.join(delta, "ids"))
+
+    n = _write_delta(spark, path, meta, base, "tombstones", extra, rel, write)
+    if n == 0 and not extra:
+        raise ValueError(
+            f"delete_from_index over {path}: the id relation is "
+            "empty (or all-NULL) — a takedown that deletes nothing "
+            "is a caller bug, not a no-op"
         )
-        merged = dict(extra or {})
-        merged["tombstones"] = j
-        recommit_meta(spark, path, meta, extra=merged)
-    finally:
-        rel.unpersist()
 
 
 @_meta_locked
@@ -3148,9 +3147,8 @@ def compact_index(
     keep_versions: int | None = None,
 ) -> bool:
     """Fold the committed append deltas of a persisted index into a
-    new base version (r8 verdict item 3 — the maintenance operation
-    the append loops were missing): every reader unions base +
-    `a{1..j}` legs, so a year of daily appends is 365 parquet legs in
+    new base version: every reader unions base + every committed
+    append leg, so a year of daily appends is 365 parquet legs in
     every probe plan; compaction rewrites them as ONE leg under
     `v{N+1}/` and re-commits with the append counter reset. Works on
     all seven layouts (band / pHash / filtered-IVF / PQ / SQ / IVF-SQ / IVF-PQ), reading
@@ -3159,8 +3157,8 @@ def compact_index(
     relations, orders of magnitude smaller than the text/floats they
     summarize). The band layout's sha set is re-deduped across legs
     (a doc repeated verbatim across batches is stored once after
-    compaction — exactly what a fresh build would hold). Since r11
-    this is also deletion's physical half: committed tombstones
+    compaction — exactly what a fresh build would hold). This is also
+    deletion's physical half: committed tombstones
     (delete_from_index) are dropped from every folded data leg and
     the tombstone counter resets — after the fold the deleted rows
     exist nowhere on disk, and the per-probe anti-join disappears
@@ -3187,14 +3185,14 @@ def compact_index(
     import posixpath
 
     meta, base = _committed_index(spark, path)
-    # tombstones alone also justify a compaction (r11): the physical
+    # tombstones alone also justify a compaction: the physical
     # purge of deleted rows is this fold, even with zero append legs
     if (int(meta.get("appends", 0)) < min_appends
             and int(meta.get("tombstones", 0)) == 0):
         return False
     if keep_versions is None:
-        # honor the retention the BUILD chose (recorded in _CURRENT
-        # since r9) unless the caller overrides explicitly
+        # honor the retention the BUILD chose (recorded in _CURRENT)
+        # unless the caller overrides explicitly
         keep_versions = int(meta.get("keep_versions", 2))
     spec = _COMPACT_SPECS[_index_kind(meta)]
     nbase, _vtok = _stage_version(spark, path)
@@ -3207,34 +3205,35 @@ def compact_index(
             # the physical half of deletion: tombstoned rows do not
             # reach the new base, and the counter resets below
             rel = rel.join(F.broadcast(tombs), idc, "left_anti")
-            if rel.isEmpty():
-                # an all-tombstoned leg would commit a _SUCCESS-only
-                # dir, poisoning every read until a rebuild (the empty
-                # build/append rule) — the index has no rows left to
-                # serve, so a fold cannot represent it
-                raise ValueError(
-                    f"compaction over {path}: tombstones cover every "
-                    f"row of the '{leg}' leg — rebuild the index "
-                    "instead of compacting it away"
-                )
         if dedup:
             rel = rel.distinct()
+        rel, count = _observed(rel)
         w = rel.write.mode("overwrite")
         if part_col is not None:
             w = w.partitionBy(part_col)
         w.parquet(posixpath.join(nbase, leg))
+        if tombs is not None and count() == 0:
+            # an all-tombstoned leg is a _SUCCESS-only dir, poisoning
+            # every read until a rebuild (the empty build/append rule)
+            # — the index has no rows left to serve, so a fold cannot
+            # represent it; the staged version is never committed
+            raise ValueError(
+                f"compaction over {path}: tombstones cover every "
+                f"row of the '{leg}' leg — rebuild the index "
+                "instead of compacting it away"
+            )
     for leg in spec["copy"]:
         spark.read.parquet(posixpath.join(base, leg)).write.mode(
             "overwrite"
         ).parquet(posixpath.join(nbase, leg))
     extra = {k: v for k, v in meta.items()
              if k not in ("version", "appends", "tombstones",
-                          "delta_dirs")}
+                          "delta_dirs", "tombstone_dirs")}
     # claim v{N+1} by rename + verified stamp, fence on the snapshot
-    # nonce (r12), THEN commit — a compaction whose holder lost its
-    # lock lease mid-rewrite can neither commit over a newer writer's
+    # nonce, THEN commit — a compaction whose holder lost its lock
+    # lease mid-rewrite can neither commit over a newer writer's
     # metadata nor publish metadata over a replaced data directory
-    # (r13, _stage_version / _commit_staged_version)
+    # (_stage_version / _commit_staged_version)
     _commit_staged_version(spark, path, nbase, int(meta["version"]) + 1,
                            _vtok, extra=extra,
                            keep_versions=keep_versions, fence_meta=meta)

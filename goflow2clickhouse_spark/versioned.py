@@ -90,8 +90,8 @@ def meta_mutex(
     poll_sec: float = 0.05,
     lease_sec: float = 30.0,
 ):
-    """Serialize read-modify-write metadata cycles on one index (r11
-    review finding): every append / delete / compaction is a
+    """Serialize read-modify-write metadata cycles on one index:
+    every append / delete / compaction is a
     current_meta snapshot → artifact write → recommit, and two such
     cycles overlapping in time LOSE one side's update — e.g. a
     takedown stream's recommit carrying a stale snapshot reverts the
@@ -105,19 +105,18 @@ def meta_mutex(
     file, then `<path>/_LOCK` is acquired via plain
     FileSystem.rename(tmp, lock) — rename refuses an existing
     destination, so a successful rename is atomic create-if-absent
-    WITH the ownership token already inside (r12 advice: a
-    create-then-stamp pair let a holder stalled between the steps
-    overwrite a new holder's token). Atomicity caveat class matches
+    WITH the ownership token already inside (a create-then-stamp
+    pair would let a holder stalled between the steps overwrite a new
+    holder's token). Atomicity caveat class matches
     the `_CURRENT` rename: object stores without atomic rename keep
     last-writer-wins semantics. Readers never take the lock:
     `_CURRENT` stays a single atomic rename, so probes are wait-free
     and always see a complete commit.
 
-    Lease + takeover (r12, the r11 verdict's sharp edge: a crashed
-    holder orphaned `_LOCK` until manual deletion, and the timeout
-    message invited deleting a LIVE lock, since writers legitimately
-    hold it for the full data-write duration — minutes+ for a
-    compaction): the holder HEARTBEATS the lock file's mtime every
+    Lease + takeover (without it a crashed holder orphans `_LOCK`
+    until manual deletion, and deleting a lock by hand risks deleting
+    a LIVE one, since writers legitimately hold it for the full
+    data-write duration — minutes+ for a compaction): the holder HEARTBEATS the lock file's mtime every
     lease_sec/3 from a daemon thread, and a waiter that finds the
     lock older than `lease_sec` takes it over — atomically, by
     renaming the stale file to a unique tombstone (only one renamer
@@ -135,20 +134,21 @@ def meta_mutex(
     the commit-nonce fence in `recommit_meta` instead of reverting
     the new holder's updates, and its lock release is
     ownership-checked (the token the acquire rename carried) so it
-    cannot delete the new holder's lock. The last residual hazard —
-    a zombie resumed mid-DATA-write overwriting the new holder's
-    same-named uncommitted delta before its commit is fenced — was
-    closed in r13 by nonce-unique delta directory names
-    (plans/storage._alloc_delta): the committed metadata records the
-    exact directory names, so a zombie's resumed write lands in its
-    own never-referenced directory and is simply orphaned until the
-    next version prune.
+    cannot delete the new holder's lock. A zombie resumed
+    mid-DATA-write cannot overwrite a committed delta or the new
+    holder's uncommitted one either: append and tombstone deltas both
+    get nonce-unique directory names (plans/storage._alloc_delta) and
+    the committed metadata records the exact names, so the zombie's
+    write lands in its own never-referenced directory and is orphaned
+    until the next version prune. Version directories get the same
+    protection from staged writes claimed by a stamped rename
+    (plans/storage._stage_version).
 
     `timeout_sec=None` (the @_meta_locked wrappers' call) reads the
     session conf `spark.goflow2clickhouse.metaLockTimeoutSec`
     (default 600) — a deployment whose compactions legitimately hold
     the lock for longer raises one conf instead of threading a
-    parameter through every fold (r11 advice)."""
+    parameter through every fold."""
     import threading
     import time
 
@@ -435,8 +435,8 @@ def recommit_meta(
     was taken over, or an operator removed a live `_LOCK`), and
     committing the stale snapshot would revert that writer's
     counters. Raise FencingError instead; the caller's work is lost,
-    the other writer's committed METADATA is not (its data legs keep
-    the narrower guarantee — see meta_mutex's residual-hazard note).
+    the other writer's committed metadata and data are not (see
+    meta_mutex on zombie data writes).
     One extra small-JSON read per metadata cycle. Pre-nonce snapshots
     (no `commit_nonce` recorded) skip the fence — nothing to
     compare."""

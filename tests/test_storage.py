@@ -866,11 +866,16 @@ def _index_copy(built_layouts, layout, dest):
 
 
 def _delta_listing(path):
+    """Every delta family directory and delta directory on disk, as
+    `v{N}/appends[/<name>]` and `v{N}/tombstones[/<name>]`."""
     import glob
     import os
 
     return sorted(
-        os.path.basename(d) for d in glob.glob(f"{path}/v*/appends/*")
+        os.path.relpath(d, path)
+        for fam in ("appends", "tombstones")
+        for pattern in (f"v*/{fam}", f"v*/{fam}/*")
+        for d in glob.glob(f"{path}/{pattern}")
     )
 
 
@@ -935,23 +940,20 @@ def test_ivf_append_empty_eligible_batch_is_noop(
 
 
 def test_append_write_reads_its_batch_once(spark, tmp_path, built_layouts):
-    """Every append's delta write evaluates its input batch once. Band,
-    pHash, IVF and IVF-PQ persist their rows, so the emptiness check
-    shares that evaluation. PQ, SQ and IVF-SQ do not: their check
-    evaluates the batch's filters again with every column pruned
-    (measured no slower than caching the batch), so they evaluate a
-    filter at most twice. Counted by a
+    """Every append's delta write, and a delete's tombstone write,
+    evaluates its input exactly once per row on every layout: the row
+    count that decides the commit rides the write itself, so there is
+    no emptiness check to evaluate it again. Counted by a
     nondeterministic Python UDF filter that logs one line per row it
-    evaluates (a filter, unlike a projected column, the emptiness
-    check cannot prune away; a file, unlike an accumulator, also keeps
-    the updates of the check's early-stopped tasks)."""
+    evaluates (a filter cannot be pruned away like a projected column;
+    a file, unlike an accumulator, also keeps the updates of
+    early-stopped tasks)."""
     from pyspark.sql.types import BooleanType
 
-    persisted = {"band", "phash", "ivf", "ivfpq"}
-    for layout, (_, append, batch, _) in built_layouts[1].items():
-        path = _index_copy(built_layouts, layout, tmp_path / layout)
-        idc = "doc_id" if layout in ("band", "phash") else "vec_id"
-        log = tmp_path / f"{layout}.seen"
+    from goflow2clickhouse_spark.plans.storage import delete_from_index
+
+    def counted(df, col, tag):
+        log = tmp_path / f"{tag}.seen"
         log.touch()
 
         def seen(v, log=str(log)):
@@ -959,16 +961,82 @@ def test_append_write_reads_its_batch_once(spark, tmp_path, built_layouts):
                 fh.write(f"{v}\n")
             return True
 
-        counted = batch.filter(
-            F.udf(seen, BooleanType()).asNondeterministic()(F.col(idc))
-        )
-        n = batch.count()
-        append(counted, path)
-        evaluated = len(log.read_text().split())
-        if layout in persisted:
-            assert evaluated == n, (layout, evaluated, n)
-        else:
-            assert n <= evaluated <= 2 * n, (layout, evaluated, n)
+        udf = F.udf(seen, BooleanType()).asNondeterministic()
+        return df.filter(udf(F.col(col))), log
+
+    for layout, (_, append, batch, _) in built_layouts[1].items():
+        path = _index_copy(built_layouts, layout, tmp_path / layout)
+        idc = "doc_id" if layout in ("band", "phash") else "vec_id"
+        rows, log = counted(batch, idc, layout)
+        append(rows, path)
+        evaluated, n = len(log.read_text().split()), batch.count()
+        assert evaluated == n, (layout, evaluated, n)
+
+    ids = built_layouts[1]["pq"][2].select("vec_id")
+    path = _index_copy(built_layouts, "pq", tmp_path / "pq_delete")
+    rows, log = counted(ids, "vec_id", "delete")
+    delete_from_index(rows, path)
+    evaluated, n = len(log.read_text().split()), ids.count()
+    assert evaluated == n, ("delete", evaluated, n)
+
+
+def test_commit_lost_after_delta_write_retries_in_fresh_dir(
+    spark, tmp_path, built_layouts, monkeypatch
+):
+    """Fault injection: `_CURRENT`'s recommit fails once, after the
+    delta's data is written, for one append and one delete. The probe
+    keeps serving the pre-mutation rows, the retry commits in a fresh
+    directory (the torn one stays unreferenced), and the retried index
+    serves exactly what an uninterrupted run serves."""
+    import os
+
+    from goflow2clickhouse_spark import versioned
+    from goflow2clickhouse_spark.plans.storage import (
+        delete_from_index,
+        pq_index_probe,
+    )
+    from goflow2clickhouse_spark.versioned import current_meta
+
+    _, append, batch, probe = built_layouts[1]["pq"]
+    clean = _index_copy(built_layouts, "pq", tmp_path / "clean")
+    torn = _index_copy(built_layouts, "pq", tmp_path / "torn")
+    q = spark.read.parquet(f"{SF}/embeddings.parquet").filter(
+        F.col("vec_id") == 0
+    )
+
+    # the uninterrupted run: append, then take down the top-2 hits
+    append(batch, clean)
+    victims = [
+        int(r["vec_id"])
+        for r in pq_index_probe(spark, clean, q, k=5).collect()[:2]
+    ]
+    dead = spark.createDataFrame([(v,) for v in victims], "vec_id long")
+    delete_from_index(dead, clean)
+
+    real = versioned.recommit_meta
+
+    def lose_commit_once(*args, **kwargs):
+        monkeypatch.setattr(versioned, "recommit_meta", real)
+        raise OSError("injected: commit lost after the delta write")
+
+    for mutate, family, listed in (
+        (lambda p: append(batch, p), "appends", "delta_dirs"),
+        (lambda p: delete_from_index(dead, p), "tombstones",
+         "tombstone_dirs"),
+    ):
+        before, rows = current_meta(spark, torn), probe(torn)
+        monkeypatch.setattr(versioned, "recommit_meta", lose_commit_once)
+        with pytest.raises(OSError, match="injected"):
+            mutate(torn)
+        assert current_meta(spark, torn) == before, family
+        assert probe(torn) == rows, family  # pre-mutation rows served
+        torn_dirs = set(os.listdir(f"{torn}/v1/{family}"))
+        assert len(torn_dirs) == 1, family
+        mutate(torn)
+        meta = current_meta(spark, torn)
+        assert meta[family] == 1 and len(meta[listed]) == 1, family
+        assert meta[listed][0] not in torn_dirs, family  # fresh dir
+    assert probe(torn) == probe(clean)
 
 
 def test_write_band_index_empty_corpus_raises(spark, tmp_path):
@@ -2476,10 +2544,20 @@ def test_delete_from_index_vector_layouts(spark, tmp_path):
 
         with pytest.raises(ValueError, match="single-column"):
             delete_from_index(emb.select("vec_id", "label"), path)
+        before = current_meta(spark, path)
+        nothing = emb.filter(F.col("vec_id") < 0).select("vec_id")
         with pytest.raises(ValueError, match="deletes nothing"):
-            delete_from_index(
-                emb.filter(F.col("vec_id") < 0).select("vec_id"), path
-            )
+            delete_from_index(nothing, path)
+        # refused: no commit, and no tombstones/ directory left behind
+        assert current_meta(spark, path) == before, tag
+        assert _delta_listing(path) == [], tag
+        # an empty delete carrying `extra` advances only the gate
+        gate = {"del_epoch": 4, "del_run": "ck-D"}
+        delete_from_index(nothing, path, extra=gate)
+        meta = current_meta(spark, path)
+        assert {k: meta[k] for k in gate} == gate, tag
+        assert "tombstones" not in meta and "tombstone_dirs" not in meta
+        assert _delta_listing(path) == [], tag
 
         delete_from_index(dead, path)
         assert current_meta(spark, path)["tombstones"] == 1
@@ -2496,6 +2574,7 @@ def test_delete_from_index_vector_layouts(spark, tmp_path):
         assert compact_index(spark, path) is True
         meta = current_meta(spark, path)
         assert meta["version"] == 2 and "tombstones" not in meta, tag
+        assert "tombstone_dirs" not in meta, tag
         assert [tuple(r) for r in probe(path).collect()] == [
             tuple(r) for r in served
         ], tag
@@ -3251,7 +3330,7 @@ def test_zombie_data_write_cannot_clobber_committed_delta(spark, tmp_path):
 
     # the zombie resumes its data write from the STALE snapshot: same
     # j, different nonce -> a disjoint directory
-    zdelta, zj, _ = _alloc_delta(version_dir(path, 1), snap)
+    zdelta, zj, _ = _alloc_delta(version_dir(path, 1), snap, "appends")
     assert zj == 1 and not zdelta.endswith(meta["delta_dirs"][0])
     cb = spark.read.parquet(f"{path}/v1/codebook")
     z_batch = emb.filter(
@@ -3274,17 +3353,65 @@ def test_zombie_data_write_cannot_clobber_committed_delta(spark, tmp_path):
         recommit_meta(spark, path, snap, appends=1)
 
 
+def test_zombie_delete_cannot_resurface_taken_down_ids(
+    spark, tmp_path, monkeypatch
+):
+    """A takedown whose holder lost its lock lease and resumes from a
+    stale snapshot writes its tombstones into its own never-committed
+    directory. Simulated end to end: snapshot `_CURRENT`, let a live
+    delete commit tombstones for ids A, then run the zombie's
+    delete_from_index from the stale snapshot (its first metadata read
+    returns the snapshot), so it writes along the path the code
+    allocates for it. A stays hidden from the probe, the zombie's ids
+    are not served as deletions, and its recommit is fenced."""
+    from goflow2clickhouse_spark import versioned
+    from goflow2clickhouse_spark.plans.storage import (
+        delete_from_index,
+        pq_index_probe,
+        write_pq_index,
+    )
+    from goflow2clickhouse_spark.versioned import FencingError, current_meta
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    path = str(tmp_path / "pq_zombie_delete")
+    write_pq_index(emb.filter(F.col("vec_id") < 40), path)
+    snap = current_meta(spark, path)  # the zombie's stale snapshot
+
+    def ids(lo, hi):
+        return emb.filter(F.col("vec_id").between(lo, hi - 1)).select("vec_id")
+
+    delete_from_index(ids(0, 5), path)  # the live writer's takedown: A
+
+    real, stale = versioned.current_meta, [snap]
+
+    def first_read_stale(spark_, path_):
+        return stale.pop() if stale else real(spark_, path_)
+
+    monkeypatch.setattr(versioned, "current_meta", first_read_stale)
+    with pytest.raises(FencingError, match="another writer"):
+        delete_from_index(ids(10, 15), path)
+    monkeypatch.undo()
+
+    q = emb.filter(F.col("vec_id") == 0)
+    served = {
+        r["vec_id"] for r in pq_index_probe(spark, path, q, k=100).collect()
+    }
+    assert served == set(range(5, 40))  # A hidden, zombie's ids served
+    assert current_meta(spark, path)["tombstones"] == 1
+
+
 def test_delta_dirs_backward_compat_counter_rule(spark, tmp_path):
-    """Pre-r13 indexes recorded only the `appends` counter with `a{j}`
-    dirs. The reader falls back to the counter rule for them, and the
-    FIRST new append migrates the recorded list while keeping the old
-    dirs served."""
-    import json
+    """Indexes that predate the recorded directory lists hold only the
+    `appends` / `tombstones` counters with plain `a{j}` / `t{j}` dirs.
+    The readers fall back to the counter rule for them, and the FIRST
+    new append (delete) migrates the recorded list while keeping the
+    old dirs served."""
     import os
 
     from goflow2clickhouse_spark.plans.storage import (
         _read_index_codes,
         append_to_pq_index,
+        delete_from_index,
         write_pq_index,
     )
     from goflow2clickhouse_spark.versioned import (
@@ -3295,46 +3422,50 @@ def test_delta_dirs_backward_compat_counter_rule(spark, tmp_path):
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     path = str(tmp_path / "pq_compat")
-    write_pq_index(emb.filter(F.col("vec_id") < 20), path)
-    append_to_pq_index(
-        emb.filter((F.col("vec_id") >= 20) & (F.col("vec_id") < 30)), path
-    )
-    # rewrite the index's metadata and delta layout to the PRE-R13
-    # shape: counter only, plain a1 dir
+
+    def ids(lo, hi):
+        return emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
+
+    write_pq_index(ids(0, 20), path)
+    append_to_pq_index(ids(20, 30), path)
+    delete_from_index(ids(0, 2).select("vec_id"), path)
+    # rewrite the index's metadata and delta layout to the counter-only
+    # shape: plain a1 and t1 dirs, no recorded lists
     meta = current_meta(spark, path)
-    old_name = meta["delta_dirs"][0]
     base = version_dir(path, 1)
-    os.rename(
-        os.path.join(base, "appends", old_name),
-        os.path.join(base, "appends", "a1"),
-    )
+    for family, listed, old in (("appends", "delta_dirs", "a1"),
+                                ("tombstones", "tombstone_dirs", "t1")):
+        os.rename(
+            os.path.join(base, family, meta[listed][0]),
+            os.path.join(base, family, old),
+        )
     legacy = {k: v for k, v in meta.items()
-              if k not in ("version", "delta_dirs", "commit_nonce")}
+              if k not in ("version", "delta_dirs", "tombstone_dirs",
+                           "commit_nonce")}
     commit_version(spark, path, 1, extra=legacy)
 
-    served = {
-        r["vec_id"]
-        for r in _read_index_codes(
-            spark, path, base, current_meta(spark, path)
-        ).select("vec_id").collect()
-    }
-    assert served == set(range(30))  # counter rule still serves a1
+    def served(meta):
+        rel = _read_index_codes(spark, path, base, meta).select("vec_id")
+        return {r["vec_id"] for r in rel.collect()}
+
+    # counter rule still serves a1 and still hides t1's ids
+    assert served(current_meta(spark, path)) == set(range(2, 30))
 
     # first post-migration append records BOTH dirs in the list
-    append_to_pq_index(
-        emb.filter((F.col("vec_id") >= 30) & (F.col("vec_id") < 35)), path
-    )
+    append_to_pq_index(ids(30, 35), path)
     meta2 = current_meta(spark, path)
     assert meta2["appends"] == 2
     assert meta2["delta_dirs"][0] == "a1"
     assert meta2["delta_dirs"][1].startswith("a2.")
-    served2 = {
-        r["vec_id"]
-        for r in _read_index_codes(
-            spark, path, base, meta2
-        ).select("vec_id").collect()
-    }
-    assert served2 == set(range(35))
+    assert served(meta2) == set(range(2, 35))
+
+    # and the first post-migration delete records both tombstone dirs
+    delete_from_index(ids(2, 3).select("vec_id"), path)
+    meta3 = current_meta(spark, path)
+    assert meta3["tombstones"] == 2
+    assert meta3["tombstone_dirs"][0] == "t1"
+    assert meta3["tombstone_dirs"][1].startswith("t2.")
+    assert served(meta3) == set(range(3, 35))
 
 
 def test_staged_version_claim_two_claimants_one_wins(spark, tmp_path):
