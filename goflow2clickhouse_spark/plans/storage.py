@@ -15,15 +15,19 @@ materialized views. Here the equivalents are explicit parquet layouts:
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import similarity as _sim
 from ..schema import local_rel as _local_rel
 
 
 def _meta_locked(fn):
     """Serialize an index's metadata read-modify-write cycle under
-    `versioned.meta_mutex` (r11 review finding): every append /
+    `versioned.meta_mutex`: every append /
     delete / compaction is a current_meta snapshot → artifact write →
     recommit, and two such cycles overlapping in time lose one side's
     update — a stale-snapshot recommit reverts the other writer's
@@ -228,8 +232,7 @@ def eligible_embeddings(
     ONE implementation — extension_queries._filtered_eligible and the
     persisted index build both route here, so the index can never
     silently hold a different eligible set than the query/oracle it
-    materializes (r6 review: the predicate was restated in three
-    places)."""
+    materializes (one statement of the predicate, not three)."""
     ok = documents.filter(
         (F.col("n_chars") >= min_chars) & (F.col("lang") == lang)
     ).select(F.col("doc_id").alias("vec_id"))
@@ -239,10 +242,9 @@ def eligible_embeddings(
 def _ivf_current_version(spark: SparkSession, path: str) -> int:
     """Committed index version from `<path>/_CURRENT`; 0 when none.
     Resolved through the Hadoop FileSystem API (versioned.py) so the
-    metadata lives on the SAME filesystem as the parquet cells — the
-    r6 version read/wrote _CURRENT with driver-local os.* calls, which
-    silently broke the atomicity contract on any non-local path
-    (r7 advice)."""
+    metadata lives on the SAME filesystem as the parquet cells —
+    driver-local os.* calls on _CURRENT would silently break the
+    atomicity contract on any non-local path."""
     from ..versioned import current_version
 
     return current_version(spark, path)
@@ -269,7 +271,7 @@ def write_filtered_ivf_index(
     because probes must rank cells with exactly the centroids the
     build used. The filter pays once at build, not per query.
 
-    ATOMIC builds (r6 review): cells + centroids land under
+    ATOMIC builds: cells + centroids land under
     `<path>/v{N}/` and `<path>/_CURRENT` commits LAST via atomic
     rename — the versioned.py pattern. A build that dies mid-write
     leaves _CURRENT on the previous complete version, so a probe can
@@ -278,9 +280,9 @@ def write_filtered_ivf_index(
     argmax-assigned against DIFFERENT centroids). This also removes
     the append failure mode — every build is a full self-consistent
     version; versions beyond `keep_versions` are pruned. ALL metadata
-    I/O routes through the Hadoop FileSystem API (r7 advice): the
-    os.replace commit only worked when the index path was on the
-    driver's local disk.
+    I/O routes through the Hadoop FileSystem API: an os.replace
+    commit only works when the index path is on the driver's local
+    disk.
 
     Build = eligibility gate feeding the SAME write_ivf_index path the
     unfiltered layout uses; the 1-row centroid relation is
@@ -296,10 +298,10 @@ def write_filtered_ivf_index(
     eligible = eligible_embeddings(documents, embeddings, min_chars, lang)
     ver = _ivf_current_version(spark, path) + 1
     base, _vtok = _stage_version(spark, path)
-    # coarse_train_iterations > 0 (r11, the r10 verdict's #2): Lloyd-
-    # refine the seed centroids over the ELIGIBLE corpus before
-    # assignment — one eligible scan per iteration, paid at build
-    # time only; recorded below so probes can pin the regime
+    # coarse_train_iterations > 0: Lloyd-refine the seed centroids
+    # over the ELIGIBLE corpus before assignment — one eligible scan
+    # per iteration, paid at build time only; recorded below so
+    # probes can pin the regime
     cents_rel = (
         ivf_centroids_trained(eligible, n_cells, coarse_train_iterations)
         if coarse_train_iterations > 0
@@ -310,8 +312,8 @@ def write_filtered_ivf_index(
         if not cents.first()["_cents"]:
             # committing an empty build would write a cells/ dir
             # holding only _SUCCESS — schema-less, poisoning every
-            # probe until a rebuild (r8 review; write_band_index's
-            # twin). Checked on the already-materialized checkpointed
+            # probe until a rebuild (write_band_index's twin).
+            # Checked on the already-materialized checkpointed
             # centroid row — a separate eligible.isEmpty() would cost
             # one more full evaluation of the eligibility semi-join.
             raise ValueError(
@@ -328,9 +330,8 @@ def write_filtered_ivf_index(
     finally:
         _release_rdds(spark.sparkContext, _ckpt_rdd_ids(cents))
     # record the build parameters so probes can refuse a mismatched
-    # index (r7 review: the band index had this gate, the IVF layout
-    # didn't — a rebuild with different n_cells/eligibility would
-    # silently serve a different geometry than the caller assumes)
+    # index: a rebuild with different n_cells/eligibility would
+    # silently serve a different geometry than the caller assumes
     _commit_staged_version(
         spark, path, base, ver, _vtok,
         extra={"n_cells": n_cells, "min_chars": min_chars, "lang": lang,
@@ -373,14 +374,15 @@ def append_to_ivf_index(
 
 def _stage_version(spark: SparkSession, path: str) -> tuple[str, str]:
     """A unique scratch directory for a new version's artifacts,
-    pre-stamped with this writer's claim token (r13, the delta-dir
-    fix's version-dir sibling): builders and compactions used to write
-    legs DIRECTLY into the deterministic `v{N+1}` directory, so a
-    holder paused past its lock lease and resumed mid-write could
-    interleave its legs with a successor's — committing a TORN
-    artifact pair (one writer's codebook under the other's codes)
-    that the metadata fence alone cannot catch, because the fence
-    checks commit lineage, not data-directory identity. Staging dirs
+    pre-stamped with this writer's claim token (the version-dir
+    sibling of the nonce-unique delta dirs): were builders and
+    compactions to write legs DIRECTLY into the deterministic `v{N+1}`
+    directory, a holder paused past its lock lease and resumed
+    mid-write could interleave its legs with a successor's —
+    committing a TORN artifact pair (one writer's codebook under the
+    other's codes) that the metadata fence alone cannot catch,
+    because the fence checks commit lineage, not data-directory
+    identity. Staging dirs
     are `<path>/_v.tmp.{hex}`; `_commit_staged_version` claims the
     real `v{N}` name by rename and verifies the stamp before
     committing. A crashed writer's staging dir is an orphan — never
@@ -424,7 +426,7 @@ def _commit_staged_version(
          version is < ver while the lock is held, so a leftover is a
          crashed or overtaken writer's orphan; a COMMITTED v{ver}
          refuses loudly — another writer already won);
-      2. plain-rename staging -> v{ver}. NOTE (r13 advice): for
+      2. plain-rename staging -> v{ver}. NOTE: for
          DIRECTORY destinations the local FS does NOT refuse an
          existing target — it "succeeds" by NESTING the staging dir
          inside it — so the rename result alone proves nothing;
@@ -545,11 +547,6 @@ def _delta_dirs(base: str, meta: dict) -> list[str]:
     return [base] + [posixpath.join(base, "appends", n) for n in names]
 
 
-_KIND_LABELS = {"band": "band", "phash": "pHash band", "ivf": "IVF",
-                "pq": "PQ", "sq": "SQ",
-                "ivfsq": "IVF-SQ", "ivfpq": "IVF-PQ"}
-
-
 def _committed_index(
     spark: SparkSession,
     path: str,
@@ -569,7 +566,7 @@ def _committed_index(
     meta = current_meta(spark, path)
     ver = int(meta.get("version", 0))
     if ver == 0:
-        label = f"{_KIND_LABELS[kind]} " if kind else ""
+        label = f"{_LAYOUTS[kind].label} " if kind else ""
         raise FileNotFoundError(f"no committed {label}index under {path}")
     if kind is not None:
         _require_kind(meta, kind, path)
@@ -716,8 +713,7 @@ def _read_index_codes(
     """The committed version's full PQ-code relation (base + committed
     deltas, minus committed tombstones) with the per-commit cached
     schema — _read_index_cells' codes-leg twin, shared by the single
-    and batch PQ probes (r10 review: two verbatim copies of the leg
-    construction)."""
+    and batch probes of the code layouts."""
     import posixpath
 
     legs = [posixpath.join(d, "codes") for d in _delta_dirs(base, meta)]
@@ -745,6 +741,673 @@ def _read_index_cells(
     return _drop_tombstoned(spark, rel, base, meta)
 
 
+# ---------------------------------------------------------------------------
+# vector index probes: one single-query and one batch pipeline for the
+# five vector layouts, driven by the layout table (_LAYOUTS)
+# ---------------------------------------------------------------------------
+
+
+def _collect_single_probe_cells(
+    op: str, query: DataFrame, cents: DataFrame, nprobe: int,
+    batch_hint: str,
+) -> tuple[list[int], list[float]]:
+    """The cell layouts' driver-side step of a single probe: collect
+    ALL ranked cells for the query (bounded — one row per stored
+    centroid per query row), validate the single-query contract from
+    that same collect, and return the top-nprobe cells
+    (top_probe_cells — the relational ordering's driver twin) plus the
+    query vector as Python floats, so pruning and scoring use the SAME
+    vector.
+
+    Contract checks, all jobless (they read the pruning collect):
+      * 0 rows            -> empty query relation, refuse;
+      * >1 distinct _qv   -> two different query vectors interleaved,
+                             refuse (collecting WITHOUT a limit is what
+                             makes this complete — an in-plan
+                             limit(nprobe) would hide a second query
+                             whose cells all ranked below the first's);
+      * duplicate cell id -> the same vector submitted twice (identical
+                             _qv, so the distinct check can't see it),
+                             refuse;
+      * NULL vector / NULL element -> every score is NULL and the
+                             'top-k' would rank purely by id, refuse
+                             loudly (the _require_unique_qids rule).
+    A legally-built index with FEWER centroids than the requested
+    n_cells (eligible set smaller than the knob) serves normally: the
+    row count is whatever the centroid array holds, never compared
+    against the recorded knob."""
+    qrows = _sim.rank_probe_cells(query, cents, None).collect()
+    if not qrows:
+        raise ValueError(
+            f"{op} serves exactly one query vector, got 0 rows"
+        )
+    qvs = {
+        None if r["_qv"] is None else tuple(r["_qv"]) for r in qrows
+    }
+    cells_all = [r["probe_cell"] for r in qrows]
+    if len(qvs) > 1 or len(set(cells_all)) != len(cells_all):
+        raise ValueError(
+            f"{op} serves exactly one query vector, got multiple query "
+            f"rows — use {batch_hint} for query batches"
+        )
+    qv_raw = qrows[0]["_qv"]
+    if qv_raw is None or any(x is None for x in qv_raw):
+        raise ValueError(
+            f"{op}: the query vector is NULL or has NULL elements — "
+            "every distance would be NULL and the top-k would rank "
+            "purely by id"
+        )
+    probed = _sim.top_probe_cells(qrows, nprobe)
+    return probed, [float(x) for x in qv_raw]
+
+
+# The layouts' scoring functions. Each takes the probe state `p` built
+# by _probe / _batch_probe and the (pruned) data leg, and returns the
+# relation to score with its distance expression; the shared path
+# projects, rounds and ranks. Single-query scorers read `p.qrel`, one
+# `_qv` row; batch scorers read `p.queries` (qid, qvec) and, on the
+# cell layouts, `p.qcells`, each query's ranked (qid, probe_cell) rows.
+
+
+def _cell_side(p, rel: DataFrame) -> DataFrame:
+    """A per-qid relation joined onto each query's ranked cells: the
+    Q x nprobe broadcast side of a cell layout's batch scan."""
+    return p.qcells.join(rel, p.qid).withColumnRenamed("probe_cell", "cell")
+
+
+def _ivf_one(p, data):
+    cos = _sim.cosine(_sim.as_double("embedding"), _sim.as_double("_qv"))
+    return data.join(F.broadcast(p.qrel)), cos  # bcast bound: 1 row
+
+
+def _ivf_batch(p, data):
+    cos = _sim.cosine(_sim.as_double("embedding"), _sim.as_double(p.qvec))
+    return data.join(F.broadcast(_cell_side(p, p.queries)), "cell"), cos
+
+
+def _pq_one(p, data):
+    # the query's PQ_M x PQ_K lookup table against the stored codebook
+    lut = p.qrel.join(F.broadcast(p.arts["codebook"])).select(
+        _sim._pq_lut_array().alias("_lut")
+    )
+    return data.join(F.broadcast(lut)), _sim.pq_adc_dist()
+
+
+def _pq_batch(p, data):
+    luts = _sim.pq_lut_rows(p.queries, p.arts["codebook"], p.qvec, p.qid)
+    return data.join(F.broadcast(luts)), _sim.pq_adc_dist()  # Q rows
+
+
+def _sq_one(p, data):
+    qrow = p.qrel.join(F.broadcast(p.arts["quantizer"]))
+    return data.join(F.broadcast(qrow)), _sim.sq_adc_dist()
+
+
+def _sq_l2(p):
+    """Squared L2 of the raw query against the dequantized `_deq`."""
+    qv = F.col(p.qvec).cast("array<double>")
+    return _sim._l2sq(qv, F.col("_deq"))
+
+
+def _sq_batch(p, data):
+    # each code row is dequantized ONCE, below the query join, so only
+    # the DIM-element squared-diff fold pays per (code, query) pair
+    deq = data.join(F.broadcast(p.arts["quantizer"])).select(
+        F.col(p.idc), _sim.sq_dequant().alias("_deq")
+    )
+    return deq.join(F.broadcast(p.queries)), _sq_l2(p)
+
+
+def _ivfsq_one(p, data):
+    rel = data.join(F.broadcast(p.qrel)).join(
+        F.broadcast(p.arts["quantizer"])
+    )
+    return rel, _sim.sq_adc_dist()
+
+
+def _ivfsq_batch(p, data):
+    deq = data.join(F.broadcast(p.arts["quantizer"])).select(
+        "cell", F.col(p.idc), _sim.sq_dequant().alias("_deq")
+    )
+    return deq.join(F.broadcast(_cell_side(p, p.queries)), "cell"), _sq_l2(p)
+
+
+def _ivfpq_one(p, data):
+    if not p.meta.get("residual"):
+        return _pq_one(p, data)
+    # IVFADC (Jégou §V): residual codes score against one LUT per
+    # probed cell, built from the query's residual to that cell's
+    # centroid by the same ivf_residual the encode side uses
+    qrel = _local_rel(
+        p.spark, [(c, p.qv) for c in p.probed],
+        "cell bigint, _qv array<double>",
+    )
+    qres = _sim.ivf_residual(
+        qrel, p.arts["centroids"], "_qv", "_qres"
+    ).select("cell", "_qres")
+    luts = _sim.pq_lut_rows(qres, p.arts["codebook"], "_qres", "cell")
+    return data.join(F.broadcast(luts), "cell"), _sim.pq_adc_dist()
+
+
+def _ivfpq_batch(p, data):
+    cb = p.arts["codebook"]
+    if p.meta.get("residual"):
+        # one LUT per (qid, probed cell), from that cell's residual
+        qres = _sim.ivf_residual(
+            _cell_side(p, p.queries), p.arts["centroids"], p.qvec, "_qres"
+        ).select(p.qid, "cell", "_qres")
+        side = _sim.pq_lut_rows(qres, cb, "_qres", p.qid, keep=("cell",))
+    else:
+        side = _cell_side(p, _sim.pq_lut_rows(p.queries, cb, p.qvec, p.qid))
+    return data.join(F.broadcast(side), "cell"), _sim.pq_adc_dist()
+
+
+class _Layout(NamedTuple):
+    """One row of the layout table: what the generic index verbs need
+    to know about a layout. A new layout adds one row.
+
+    `data` lists the data legs as (leg, partition column, re-dedup):
+    compaction unions each over base + deltas into the new base, and
+    probes scan the first. `quantizers` are the 1-row artifacts
+    compaction copies verbatim and probes read through
+    _version_artifacts. The probe fields exist on the vector layouts
+    only: the unconditional `geometry` pin, the probe names (the
+    batch name is also the single probe's hint for query batches),
+    the query dimension `dim`, the score column and its order, the
+    extra output `cols`, and the single and batch scorers."""
+
+    label: str
+    data: tuple
+    quantizers: tuple = ()
+    geometry: dict | None = None
+    probe: str = ""
+    batch: str = ""
+    dim: int = 0
+    score: str = "adist"
+    desc: bool = False
+    cols: tuple = ()
+    score_one: Callable | None = None
+    score_batch: Callable | None = None
+
+    @property
+    def cells(self) -> bool:
+        """The data leg is partitioned by IVF cell: probes rank cells
+        and partition-prune the scan to the probed ones."""
+        return self.data[0][1] == "cell"
+
+    @property
+    def order(self):
+        """The score ordering, NULL scores last."""
+        by = F.desc_nulls_last if self.desc else F.asc_nulls_last
+        return by(self.score)
+
+
+_CELLS = (("cells", "cell", False),)
+_CODES = (("codes", None, False),)
+_PQ_PIN = {"pq_m": _sim.PQ_M, "pq_sub": _sim.PQ_SUB, "pq_k": _sim.PQ_K}
+_SQ_PIN = {"sq_buckets": _sim.SQ_BUCKETS, "dim": _sim.DIM}
+
+_LAYOUTS = {
+    "band": _Layout(
+        "band",
+        (("shingles", None, False), ("bands", "band_no", False),
+         ("shas", None, True)),
+    ),
+    "phash": _Layout(
+        "pHash band", (("hashes", None, False), ("bands", "band_no", False))
+    ),
+    "ivf": _Layout(
+        "IVF", _CELLS, ("centroids",),
+        probe="ivf_index_probe", batch="ivf_batch_probe", dim=_sim.DIM,
+        score="cos_sim", desc=True,
+        score_one=_ivf_one, score_batch=_ivf_batch,
+    ),
+    "pq": _Layout(
+        "PQ", _CODES, ("codebook",), _PQ_PIN,
+        probe="pq_index_probe", batch="pq_index_batch_probe",
+        dim=_sim.PQ_M * _sim.PQ_SUB, cols=("pq_code",),
+        score_one=_pq_one, score_batch=_pq_batch,
+    ),
+    "sq": _Layout(
+        "SQ", _CODES, ("quantizer",), _SQ_PIN,
+        probe="sq_index_probe", batch="sq_index_batch_probe", dim=_sim.DIM,
+        score_one=_sq_one, score_batch=_sq_batch,
+    ),
+    "ivfsq": _Layout(
+        "IVF-SQ", _CELLS, ("centroids", "quantizer"), _SQ_PIN,
+        probe="ivfsq_probe", batch="ivfsq_batch_probe", dim=_sim.DIM,
+        score_one=_ivfsq_one, score_batch=_ivfsq_batch,
+    ),
+    "ivfpq": _Layout(
+        "IVF-PQ", _CELLS, ("centroids", "codebook"), _PQ_PIN,
+        probe="ivfpq_probe", batch="ivfpq_batch_probe",
+        dim=_sim.PQ_M * _sim.PQ_SUB, cols=("pq_code",),
+        score_one=_ivfpq_one, score_batch=_ivfpq_batch,
+    ),
+}
+
+
+def _check_rerank(op: str, k: int, rerank: int, source) -> None:
+    """The exact tier's argument checks, made before a probe starts
+    any job (artifact collect, query persist, contract aggregate)."""
+    if rerank and rerank < k:
+        raise ValueError(
+            f"{op}: rerank={rerank} must be >= k={k} — fewer "
+            "candidates than requested results"
+        )
+    if rerank and source is None:
+        raise ValueError(
+            f"{op}: rerank requires rerank_source (the raw corpus "
+            "relation the index was built from)"
+        )
+
+
+def _probed_cells(spark, path, base, meta, probed) -> DataFrame:
+    """The cell leg partition-pruned to the probed `cell=` dirs."""
+    rel = _read_index_cells(spark, path, base, meta)
+    return rel.filter(F.col("cell").isin(probed))
+
+
+def _probe(
+    kind: str,
+    spark: SparkSession,
+    path: str,
+    query: DataFrame,
+    k: int,
+    nprobe: int | None = None,
+    vec_col: str = "embedding",
+    expect: dict | None = None,
+    rerank: int = 0,
+    rerank_source: DataFrame | None = None,
+) -> DataFrame:
+    """The single-query probe of the five vector layouts; the layout's
+    row in _LAYOUTS supplies everything that differs.
+
+      1. the rerank arguments are checked before any job runs;
+      2. gate: committed version, layout kind, the row's geometry pin
+         (scoring runs with the CURRENT module constants, so a recorded
+         mismatch would garble every distance silently), then the
+         caller's `expect`;
+      3. quantizer artifacts through the per-commit cache
+         (_version_artifacts), so a warm probe reads no artifact file;
+      4. the query side. Cell layouts collect the ranked cells once
+         (_collect_single_probe_cells): that bounded collect validates
+         the single-query contract, drives partition pruning, and
+         returns the query vector, which then feeds scoring as a
+         LITERAL. Code layouts scan every code and guard the query
+         in-plan (_single_query: a correct call costs zero extra
+         jobs); with rerank they collect the validated vector once, so
+         the LUT and the exact tier score one vector even for a
+         nondeterministic query relation;
+      5. the row's scorer joins the query side onto the data leg; the
+         score is rounded to 6 places and ordered by the row's order
+         (NULLs last), ties to the smaller id;
+      6. top-k, or with `rerank=R` the exact tier over the top-R
+         candidates (_rerank_exact).
+
+    Returns (id, *cols, score); with rerank, (id, adist, dist)."""
+    lay = _LAYOUTS[kind]
+    _check_rerank(lay.probe, k, rerank, rerank_source)
+    meta, base = _committed_index(spark, path, kind, lay.geometry, expect)
+    arts = _version_artifacts(spark, path, meta, lay.quantizers)
+    p = SimpleNamespace(
+        spark=spark, meta=meta, arts=arts,
+        idc=str(meta.get("id_col", "vec_id")),
+    )
+    if lay.cells:
+        p.probed, p.qv = _collect_single_probe_cells(
+            lay.probe, query, arts["centroids"], nprobe, lay.batch
+        )
+        data = _probed_cells(spark, path, base, meta, p.probed)
+        p.qrel = _local_rel(spark, [(p.qv,)], "_qv array<double>")
+    else:
+        data = _read_index_codes(spark, path, base, meta)
+        p.qrel = _sim._single_query(
+            query, lay.probe, _qv=_sim.as_double(vec_col)
+        )
+        if rerank:
+            # bounded: the guard's aggregate is one row, and its
+            # in-plan assert fires on this very collect
+            qv = p.qrel.first()["_qv"]
+            p.qrel = _local_rel(spark, [(qv,)], "_qv array<double>")
+    rel, dist = lay.score_one(p, data)
+    ranked = rel.select(
+        F.col(p.idc), *lay.cols, F.round(dist, 6).alias(lay.score)
+    ).orderBy(lay.order, p.idc)
+    if rerank:
+        return _rerank_exact(
+            spark, ranked.limit(rerank), p.qrel, rerank_source, k,
+            lay.probe, id_col=p.idc, vec_col=vec_col,
+        )
+    return ranked.limit(k)
+
+
+def _batch_probe(
+    kind: str,
+    spark: SparkSession,
+    path: str,
+    queries: DataFrame,
+    k: int,
+    nprobe: int | None,
+    qvec_col: str,
+    qid_col: str,
+    expect: dict | None,
+    rerank: int = 0,
+    rerank_source: DataFrame | None = None,
+) -> DataFrame:
+    """The batch probe of the five vector layouts: one corpus pass
+    serves Q queries, reading only the stored codes (or, on IVF, the
+    cell leg).
+
+      1. the rerank arguments are checked before any job runs;
+      2. the batch is normalized to (qid, qvec), persisted, and its
+         contract enforced (_batch_probe_queries: an empty batch, a
+         duplicated qid and a NULL, NULL-element or wrong-dimension
+         qvec all refuse loudly);
+      3. the gate and artifacts as in _probe;
+      4. cell layouts rank each query's cells relationally
+         (rank_probe_cells_batch: Q x nprobe WindowGroupLimit rows, no
+         per-query collect loop); the only driver-side materialization
+         is the distinct probed-cell list (<= n_cells integers), which
+         prunes the ONE shared scan of the union of probed cells;
+      5. the row's batch scorer joins the broadcast query side (Q LUT
+         rows, Q x nprobe cell rows, or the Q raw vectors);
+      6. per-query top-k as a row_number over the row's order, which
+         Spark plans as WindowGroupLimit, so the shuffle carries at
+         most Q x k rows per input partition (_batch_topk); or with
+         `rerank=R` the relational exact tier (_batch_rerank_exact).
+
+    Returns (qid, id, *cols, score, rank); with rerank
+    (qid, id, adist, dist, rank)."""
+    lay = _LAYOUTS[kind]
+    _check_rerank(lay.batch, k, rerank, rerank_source)
+    queries = _batch_probe_queries(
+        queries, lay.batch, qid_col, qvec_col, lay.dim
+    )
+    try:
+        meta, base = _committed_index(
+            spark, path, kind, lay.geometry, expect
+        )
+        p = SimpleNamespace(
+            meta=meta, queries=queries, qid=qid_col, qvec=qvec_col,
+            arts=_version_artifacts(spark, path, meta, lay.quantizers),
+            idc=str(meta.get("id_col", "vec_id")), qcells=None,
+        )
+        if lay.cells:
+            p.qcells = _sim.rank_probe_cells_batch(
+                queries, p.arts["centroids"], nprobe, qvec_col, qid_col
+            ).select(qid_col, "probe_cell")
+            probed = sorted({
+                int(r["probe_cell"]) for r in p.qcells.collect()
+            })
+            data = _probed_cells(spark, path, base, meta, probed)
+        else:
+            data = _read_index_codes(spark, path, base, meta)
+        rel, dist = lay.score_batch(p, data)
+        scored = rel.select(
+            F.col(qid_col), F.col(p.idc), *lay.cols,
+            F.round(dist, 6).alias(lay.score),
+        )
+        if rerank:
+            return _batch_rerank_exact(
+                scored, queries, rerank_source, k, rerank, lay.batch,
+                qid_col=qid_col, qvec_col=qvec_col, id_col=p.idc,
+            )
+        return _batch_topk(
+            scored, queries, qid_col, [lay.order, p.idc],
+            [p.idc, *lay.cols, lay.score], k,
+        )
+    except BaseException:
+        queries.unpersist()
+        raise
+
+
+def _rerank_exact(
+    spark: SparkSession,
+    adc_topr: DataFrame,
+    qrel: DataFrame,
+    source: DataFrame,
+    k: int,
+    op: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The exact re-rank tier of the single PQ-family probes —
+    IVFADC+R (Jégou et al. 2011 §V-D): take the top-R ADC candidates
+    (`adc_topr`), fetch their RAW vectors from `source` by id, and
+    re-order by exact squared L2 against the query. Recovers most of
+    the 4-bit quantization loss for R extra vector reads per query
+    (the cell-pruning loss is untouched — candidates only ever come
+    from the probed cells).
+
+    Plan shape at 100 TB: the candidate collect is bounded (<= R
+    rows — the probed-cells precedent), and the candidate ids are
+    pushed into `source`'s parquet scan as a literal id predicate
+    (PushedFilters: In/range on the id column), so a corpus clustered
+    or sorted by id serves the fetch from O(R) row groups — never
+    a second full corpus scan. The exact distance reuses _l2sq (the
+    topk_l2_bruteforce arithmetic: round-6 before ordering, ties to
+    id, NULLs last) so the re-ranked order replays in any engine.
+    `source` must be unique on `id_col` (the corpus relation the index
+    was built from); a duplicated id would duplicate its candidate
+    row, and a candidate id MISSING from the source refuses loudly
+    instead of under-delivering or promoting worse vectors. Returns
+    (id, adist, dist) — the ADC score is carried through from the
+    candidate collect, not recomputed."""
+    # bounded driver materialization: <= R (id, adist) rows
+    rows = adc_topr.collect()
+    cand = _local_rel(
+        spark,
+        [
+            (
+                int(r[0]),
+                None if r["adist"] is None else float(r["adist"]),
+            )
+            for r in rows
+        ],
+        f"{id_col} bigint, adist double",
+    )
+    ids = [int(r[0]) for r in rows]
+    # the pushed-down filter bounds the scan output at <= R rows, so
+    # the SOURCE side is the broadcastable one — which lets the
+    # candidates drive a LEFT join whose unmatched rows prove a
+    # missing id in-plan (assert_true wraps the distance, so any
+    # action over the top-k raises; a correct call costs zero jobs)
+    src = source.filter(F.col(id_col).isin(ids)).select(
+        F.col(id_col), _sim.as_double(vec_col).alias("_v")
+    )
+    return (
+        cand.join(F.broadcast(src), id_col, "left")  # bcast: <= R rows
+        .join(F.broadcast(qrel))  # bcast bound: 1 row
+        .select(id_col, "adist", _exact_dist(op, id_col).alias("dist"))
+        .orderBy(F.asc_nulls_last("dist"), id_col)
+        .limit(k)
+    )
+
+
+def _exact_dist(op: str, id_col: str):
+    """The exact tier's distance: squared L2 of the fetched raw vector
+    `_v` against the query `_qv`, rounded to 6 places, wrapped in an
+    assert_true that names a candidate id missing from the source."""
+    missing_msg = F.concat(
+        F.lit(f"{op}: rerank candidate id "),
+        F.col(id_col).cast("string"),
+        F.lit(" is missing from rerank_source — pass the corpus "
+              "relation the index was built from"),
+    )
+    return F.when(
+        F.assert_true(F.col("_v").isNotNull(), missing_msg).isNull(),
+        F.round(_sim._l2sq(F.col("_v"), F.col("_qv")), 6),
+    )
+
+
+def _require_unique_qids(
+    queries: DataFrame,
+    qid_col: str,
+    op: str,
+    qvec_col: str | None = None,
+    dim: int | None = None,
+) -> None:
+    """The single-probe n!=1 rule in batch form: an EMPTY batch raises
+    (silently returning nothing hides an upstream bug), and a
+    duplicated qid (an at-least-once upstream redelivering a query
+    row, or two vectors colliding on one id) emits two LUT rows for
+    one qid — the unkeyed broadcast join then scores every code twice
+    and the 'top-k' silently interleaves duplicate ranks.
+
+    When (qvec_col, dim) are given, also rejects NULL,
+    wrong-dimension, or NULL-ELEMENT query vectors: a degenerate qvec
+    yields an all-NULL LUT, so that qid would still return k rows with
+    NULL adist ranked purely by id — silent garbage for one batch
+    member. Same single aggregate, no extra job."""
+    aggs = [
+        F.count("*").alias("_n"),
+        F.count_distinct(F.col(qid_col)).alias("_nd"),
+    ]
+    if qvec_col is not None:
+        aggs.append(
+            F.count_if(
+                F.col(qvec_col).isNull()
+                | (F.size(F.col(qvec_col)) != F.lit(int(dim)))
+                | F.exists(F.col(qvec_col), lambda x: x.isNull())
+            ).alias("_bad")
+        )
+    counts = queries.agg(*aggs).first()
+    if counts["_n"] == 0:
+        raise ValueError(f"{op} got an empty query batch — nothing to serve")
+    if counts["_n"] != counts["_nd"]:
+        raise ValueError(
+            f"{op} requires unique {qid_col} per query row, got "
+            f"{counts['_n']} rows over {counts['_nd']} distinct ids"
+        )
+    if qvec_col is not None and counts["_bad"] != 0:
+        raise ValueError(
+            f"{op} got {counts['_bad']} query row(s) with NULL or "
+            f"wrong-dimension {qvec_col} (expected size {dim}, no "
+            "NULL elements) — a NULL LUT would rank that qid's top-k "
+            "purely by id"
+        )
+
+
+def _batch_probe_queries(
+    queries: DataFrame, op: str, qid_col: str, qvec_col: str, dim: int
+) -> DataFrame:
+    """The batch probe's prologue: normalize to (qid, qvec), persist —
+    the probe's cached query relation — and enforce the batch contract
+    (_require_unique_qids). On a contract failure the cache is
+    released HERE; after a successful return the caller owns the
+    except-BaseException unpersist until tie_cache takes ownership on
+    success."""
+    q = queries.select(
+        F.col(qid_col).alias(qid_col), F.col(qvec_col).alias(qvec_col)
+    ).persist()
+    try:
+        _require_unique_qids(q, qid_col, op, qvec_col=qvec_col, dim=dim)
+    except BaseException:
+        q.unpersist()
+        raise
+    return q
+
+
+def _batch_topk(
+    scored: DataFrame,
+    queries: DataFrame,
+    qid_col: str,
+    order_exprs: list,
+    keep: list,
+    k: int,
+) -> DataFrame:
+    """The batch probe's epilogue: per-query top-k as row_number over
+    the layout's ordering — Spark plans it as WindowGroupLimit, a
+    per-partition top-k heap BEFORE the exchange, so the shuffle
+    carries at most Q x k rows per input partition, never the Q x N
+    scored relation. Output (qid, *keep, rank); tie_cache takes
+    ownership of the persisted query relation."""
+    from ..operators.dedup import tie_cache
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(qid_col).orderBy(*order_exprs)
+    out = (
+        scored.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .select(qid_col, *keep, F.col("_rn").cast("int").alias("rank"))
+    )
+    return tie_cache(out, queries)
+
+
+def _batch_rerank_exact(
+    scored: DataFrame,
+    queries: DataFrame,
+    source: DataFrame,
+    k: int,
+    rerank: int,
+    op: str,
+    qid_col: str = "qid",
+    qvec_col: str = "qvec",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The batch probe's IVFADC+R tier: per-query top-R ADC candidates
+    via the same WindowGroupLimit shape the final top-k uses (Q x R
+    rows, never collected), raw vectors fetched through ONE broadcast
+    join against `source`, exact squared-L2 re-ranked per query
+    (round-6, ties to id, NULLs last). Output
+    (qid, id, adist, dist, rank) ranked by `dist`.
+
+    Source-completeness is enforced IN-PLAN, as in the single tier: the
+    corpus pass is pruned by a broadcast SEMI join on the candidate
+    ids (the batch form of the single tier's pushed-down isin), the
+    pruned <= Q x R fetch result is broadcast back onto the candidates
+    as a LEFT join, and the exact distance is wrapped in an
+    assert_true missing-id proof — any action raises, naming the id,
+    while a correct call keeps one corpus pass and ONE index codes
+    scan (the candidate relation is persisted — it feeds both the
+    prune and the final join; tie_cache owns its lifetime). Pass the
+    corpus relation the index was built from. At 100 TB pair the fetch
+    with an id-clustered corpus + runtime bloom-filter join pruning so
+    the scan skips non-candidate row groups."""
+    from pyspark.sql import Window
+
+    from ..operators.dedup import tie_cache
+
+    wr = Window.partitionBy(qid_col).orderBy(
+        F.asc_nulls_last("adist"), id_col
+    )
+    cand = (  # WindowGroupLimit: Q x R rows, never collected
+        scored.withColumn("_rn", F.row_number().over(wr))
+        .filter(F.col("_rn") <= rerank)
+        .select(qid_col, id_col, "adist")
+        # persisted: cand feeds BOTH the semi-join prune of the fetch
+        # AND the final left join — without the cache each reference
+        # re-runs the whole ADC pipeline (index codes scan + LUT join
+        # + window top-R), doubling the dominant I/O. Lifetime ties to
+        # the returned result (tie_cache below).
+        .persist()
+    )
+    src = (
+        source.select(F.col(id_col), _sim.as_double(vec_col).alias("_v"))
+        # one corpus pass, pruned to <= Q x R rows before it is
+        # broadcast back onto the candidates
+        .join(F.broadcast(cand.select(id_col)), id_col, "semi")
+    )
+    qv = queries.select(qid_col, _sim.as_double(qvec_col).alias("_qv"))
+    exact = (
+        cand.join(F.broadcast(src), id_col, "left")  # bcast: <= Q x R
+        .join(F.broadcast(qv), qid_col)  # bcast: Q rows
+        .select(
+            qid_col, id_col, "adist", _exact_dist(op, id_col).alias("dist")
+        )
+    )
+    return tie_cache(
+        _batch_topk(
+            exact, queries, qid_col,
+            [F.asc_nulls_last("dist"), id_col],
+            [id_col, "adist", "dist"], k,
+        ),
+        cand,
+    )
+
+
 def ivf_index_probe(
     spark: SparkSession,
     path: str,
@@ -757,48 +1420,14 @@ def ivf_index_probe(
     the stored centroids against the query vector, then scan ONLY the
     nprobe winning `cell=` directories of the CURRENT committed
     version (Catalyst partition-prunes the isin filter — tests assert
-    the executed scan's partition count). The centroid read and cell
-    ranking are O(n_cells); the data read is nprobe/n_cells of the
-    (already filtered) index. Cell ranking is the shared
-    `rank_probe_cells` — identical tie-breaks to the in-memory
-    ivf_topk, which the layout test pins result-equal.
-
-    Single-query contract + serving cost (r10, the r9 verdict's
-    probe-QPS item): the centroid read goes through the
-    (path, version) meta-cache (_version_artifacts) and the contract
-    is validated from the SAME bounded collect that drives partition
-    pruning (the ivfpq_probe rule — empty query, a second distinct
-    vector, or a duplicated query row all refuse loudly with no extra
-    job); the collected vector then feeds the scoring side as a
-    LITERAL, so the query subtree is evaluated exactly once per probe
-    and pruning + scoring provably use the same vector."""
-    from ..operators.similarity import as_double, cosine
-
-    # `expect`, e.g. {"n_cells": 8, "lang": "en"}, refuses a build with
-    # a different geometry/eligibility than the caller's oracle assumes
-    meta, base = _committed_index(spark, path, "ivf", expect=expect)
-    cents = _version_artifacts(spark, path, meta, ("centroids",))[
-        "centroids"
-    ]
-    probed, qv_list = _collect_single_probe_cells(
-        "ivf_index_probe", query, cents, nprobe,
-        "operators/similarity.batch_topk",
-    )
-    qv = _local_rel(spark, [(qv_list,)], "_qv array<double>")
-    idx = _read_index_cells(spark, path, base, meta).filter(
-        F.col("cell").isin(probed)
-    )
-    return (
-        idx.join(F.broadcast(qv))  # bcast bound: 1 query row
-        .select(
-            "vec_id",
-            F.round(
-                cosine(as_double("embedding"), as_double("_qv")), 6
-            ).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(k)
-    )
+    the executed scan's partition count), scoring the raw stored
+    floats by cosine. Cell ranking is the shared `rank_probe_cells` —
+    identical tie-breaks to the in-memory ivf_topk, which the layout
+    test pins result-equal. `expect`, e.g. {"n_cells": 8, "lang":
+    "en"}, refuses a build with a different geometry or eligibility
+    than the caller's oracle assumes. Returns (vec_id, cos_sim);
+    shared contract: _probe."""
+    return _probe("ivf", spark, path, query, k, nprobe, expect=expect)
 
 
 def ivf_batch_probe(
@@ -812,67 +1441,15 @@ def ivf_batch_probe(
     expect: dict | None = None,
 ) -> DataFrame:
     """Serve a Q-query top-k batch from the persisted filtered-IVF
-    layout (r11 — completes the batch-serving matrix: every persisted
-    vector layout {IVF, SQ, PQ, IVF-SQ, IVF-PQ} now has both a single
-    and a batch probe). Same composition as its siblings: relational
-    per-query cell ranking (`rank_probe_cells_batch` — Q x nprobe
-    WindowGroupLimit rows, no per-query collect loop), ONE
-    partition-pruned scan of the union of probed `cell=` directories
-    for the whole batch, cosine scoring of the raw stored floats
-    against the Q x nprobe broadcast query side, per-query top-k
-    bounded at Q x k rows by WindowGroupLimit. Returns
-    (qid, vec_id, cos_sim, rank) with the single probe's exact
-    ordering rule (cos_sim desc, vec_id asc). The only driver-side
-    materialization is the distinct probed-cell id list. Empty batch
-    / duplicate qid / NULL or wrong-dim qvec refuse loudly
-    (_require_unique_qids)."""
-    from ..operators.similarity import (
-        DIM,
-        as_double,
-        cosine,
-        rank_probe_cells_batch,
+    layout: relational per-query cell ranking, ONE partition-pruned
+    scan of the union of probed `cell=` directories for the whole
+    batch, cosine scoring of the raw stored floats against the
+    Q x nprobe broadcast query side. Returns (qid, vec_id, cos_sim,
+    rank) with the single probe's ordering rule (cos_sim desc, vec_id
+    asc); shared contract: _batch_probe."""
+    return _batch_probe(
+        "ivf", spark, path, queries, k, nprobe, qvec_col, qid_col, expect
     )
-
-    queries = _batch_probe_queries(
-        queries, "ivf_batch_probe", qid_col, qvec_col, DIM
-    )
-    try:
-        meta, base = _committed_index(spark, path, "ivf", expect=expect)
-        cents = _version_artifacts(spark, path, meta, ("centroids",))[
-            "centroids"
-        ]
-        qcells = rank_probe_cells_batch(
-            queries, cents, nprobe, qvec_col, qid_col
-        ).select(qid_col, "probe_cell")
-        # bounded driver materialization: the distinct probed cells
-        # (<= n_cells integers) drive partition pruning for the ONE
-        # shared scan
-        probed = sorted({
-            int(r["probe_cell"]) for r in qcells.collect()
-        })
-        idx = _read_index_cells(spark, path, base, meta).filter(
-            F.col("cell").isin(probed)
-        )
-        qside = qcells.join(queries, qid_col).withColumnRenamed(
-            "probe_cell", "cell"
-        )
-        scored = idx.join(  # bcast bound: Q x nprobe rows
-            F.broadcast(qside), "cell"
-        ).select(
-            F.col(qid_col),
-            "vec_id",
-            F.round(
-                cosine(as_double("embedding"), as_double(qvec_col)), 6
-            ).alias("cos_sim"),
-        )
-        return _batch_topk(
-            scored, queries, qid_col,
-            [F.desc_nulls_last("cos_sim"), "vec_id"],
-            ["vec_id", "cos_sim"], k,
-        )
-    except BaseException:
-        queries.unpersist()
-        raise
 
 
 @_meta_locked
@@ -952,7 +1529,7 @@ def write_band_index(
     band_key_rows(array_minhash_sigs(sh, id_col), id_col).write.mode(
         "overwrite"
     ).partitionBy("band_no").parquet(posixpath.join(base, "bands"))
-    # shas carry the doc id (r11): the exact-dup gate only reads the
+    # shas carry the doc id: the exact-dup gate only reads the
     # distinct _sha column, but deletion (delete_from_index) must be
     # able to address a doc's hash — an unlinked distinct-sha set
     # could never drop a tombstoned doc's content hash at compaction
@@ -1048,8 +1625,8 @@ def _version_artifacts(
     spark: SparkSession, path: str, meta: dict, legs: tuple[str, ...]
 ) -> dict[str, DataFrame]:
     """1-row quantizer artifacts (codebook / centroids) cached per
-    (path, version, leg) — the probe meta-cache the r9 verdict asked
-    for: the persisted probes spent ~95% of their ~1 s per query on
+    (path, version, leg) — the probe meta-cache: uncached, the
+    persisted probes spent ~95% of their ~1 s per query on
     guard/meta/quantizer reads while the pruned 8-byte code scan
     itself cost 0.06 s. Each leg's parquet is read and collected ONCE
     per committed version; later probes rebuild it as a LOCAL relation
@@ -1066,9 +1643,9 @@ def _version_artifacts(
     the `commit_nonce` recorded in `_CURRENT`, so reading it costs
     nothing; mtime fallback for pre-nonce indexes): a rebuild or
     compaction bumps the version, and a wipe-and-rebuild that RESTARTS
-    at v1 still gets a fresh nonce (r10 review — version alone served
-    the old build's codebook against the new build's codes, silently;
-    an mtime-only token aliased on second-granularity filesystems).
+    at v1 still gets a fresh nonce (version alone would serve the old
+    build's codebook against the new build's codes, silently; an
+    mtime-only token aliases on second-granularity filesystems).
     Appends never touch these legs (quantizers are copied, never
     re-derived) but re-commit `_CURRENT` with a fresh nonce — an
     acceptable miss: the artifacts are re-read once per append, still
@@ -1106,64 +1683,6 @@ def _prune_artifact_cache(path: str, ver: int, tok: int) -> None:
         del _ARTIFACT_CACHE[k]
 
 
-def _collect_single_probe_cells(
-    op: str, query: DataFrame, cents: DataFrame, nprobe: int,
-    batch_hint: str,
-) -> tuple[list[int], list[float]]:
-    """The IVF-family probes' shared driver-side step (r10 review: two
-    hand-maintained copies had already diverged from each other's
-    edge-case handling): collect ALL ranked cells for the query
-    (bounded — one row per stored centroid per query row), validate
-    the single-query contract from that same collect, and return the
-    top-nprobe cells (top_probe_cells — the relational ordering's
-    driver twin) plus the query vector as Python floats so pruning and
-    scoring provably use the SAME vector.
-
-    Contract checks, all jobless (they read the pruning collect):
-      * 0 rows            -> empty query relation, refuse;
-      * >1 distinct _qv   -> two different query vectors interleaved,
-                             refuse (collecting WITHOUT a limit is what
-                             makes this complete — an in-plan
-                             limit(nprobe) hid a second query whose
-                             cells all ranked below the first's);
-      * duplicate cell id -> the same vector submitted twice (identical
-                             _qv, so the distinct check can't see it),
-                             refuse;
-      * NULL vector / NULL element -> every score is NULL and the
-                             'top-k' would rank purely by id, refuse
-                             loudly (the _require_unique_qids rule).
-    A legally-built index with FEWER centroids than the requested
-    n_cells (eligible set smaller than the knob) serves normally — the
-    row count is whatever the centroid array holds, never compared
-    against the recorded knob (r10 review: a meta['n_cells'] equality
-    check refused every probe of such an index)."""
-    from ..operators.similarity import rank_probe_cells, top_probe_cells
-
-    qrows = rank_probe_cells(query, cents, None).collect()
-    if not qrows:
-        raise ValueError(
-            f"{op} serves exactly one query vector, got 0 rows"
-        )
-    qvs = {
-        None if r["_qv"] is None else tuple(r["_qv"]) for r in qrows
-    }
-    cells_all = [r["probe_cell"] for r in qrows]
-    if len(qvs) > 1 or len(set(cells_all)) != len(cells_all):
-        raise ValueError(
-            f"{op} serves exactly one query vector, got multiple query "
-            f"rows — use {batch_hint} for query batches"
-        )
-    qv_raw = qrows[0]["_qv"]
-    if qv_raw is None or any(x is None for x in qv_raw):
-        raise ValueError(
-            f"{op}: the query vector is NULL or has NULL elements — "
-            "every distance would be NULL and the top-k would rank "
-            "purely by id"
-        )
-    probed = top_probe_cells(qrows, nprobe)
-    return probed, [float(x) for x in qv_raw]
-
-
 def _union_parquet(
     spark: SparkSession, paths: list[str], schema=None
 ) -> DataFrame:
@@ -1172,10 +1691,10 @@ def _union_parquet(
     happens to be empty (e.g. a folded batch where every doc is shorter
     than the shingle width — non-empty shas, empty bands) holds only
     `_SUCCESS`, and a plain read of it throws UNABLE_TO_INFER_SCHEMA
-    (r7 advice; verified on this env). With an explicit schema the same
+    With an explicit schema the same
     directory reads as a valid empty relation.
 
-    `schema` (r10): read EVERY leg (base included) with the given
+    `schema`: read EVERY leg (base included) with the given
     schema — schema inference is an EAGER footer read per
     spark.read.parquet call, which dominated warm-probe plan
     construction (profiled ~0.9 s of a 1.4 s probe at sf0.1); the
@@ -1194,11 +1713,11 @@ def _leg_schema(
     spark: SparkSession, path: str, meta: dict, leg: str, first_path: str
 ):
     """Data-leg schema cached under the same (path, version, token)
-    keying and pruning as _version_artifacts (r10 review: base-dir
-    keys were never pruned and survived a wipe-and-rebuild that reused
+    keying and pruning as _version_artifacts (base-dir keys would
+    never be pruned and would survive a wipe-and-rebuild that reuses
     the version dir). Partition columns (cells' `cell`) are part of
     the inferred schema and Spark honors user-specified partition
-    columns, the same contract the delta legs have used since r7."""
+    columns, the same contract the delta legs rely on."""
     from ..versioned import commit_token
 
     ver = int(meta["version"])
@@ -1256,13 +1775,13 @@ def incremental_neardup_pairs_indexed(
 
     # only the OLD sides differ from the recompute form — both route
     # through the one shared pipeline (operators/dedup._incremental_
-    # pairs), so the two forms cannot drift (r7 review). The old side
+    # pairs), so the two forms cannot drift. The old side
     # is base + committed append deltas (append_to_band_index).
     sh_new = shingle_arrays(new, text_col, id_col, n).persist()
     try:
         # the delta-leg reads do eager file listing, so they stay
-        # INSIDE the protected region (r9 review — the ivf_index_probe
-        # r8 rule): a leg read raising between persist and tie_cache
+        # INSIDE the protected region: a leg read raising between
+        # persist and tie_cache
         # would orphan the cache with no owner to unpersist it
         # committed tombstones (delete_from_index) drop out of both
         # old sides — a deleted doc can never resurface as a
@@ -1293,7 +1812,7 @@ def incremental_neardup_pairs_indexed(
 
 
 # ---------------------------------------------------------------------------
-# Persisted pHash band index (r14, the r13 verdict's #3): the IMAGE
+# Persisted pHash band index: the IMAGE
 # family's crawl-loop artifact — the seventh persisted layout, the
 # band index's shape applied to the 63-bit DCT perceptual hash. A
 # multimodal pipeline hashes each ingested image once (map-only
@@ -1356,7 +1875,7 @@ def write_phash_index(
     AQE broadcasts the batch side when small. Appends, takedown
     (delete_from_index), compaction (compact_index) and gc
     (gc_scratch) reuse the shared lifecycle verbs — this layout adds
-    no new crash-safety machinery, only a _COMPACT_SPECS entry."""
+    no new crash-safety machinery, only a _LAYOUTS row."""
     import posixpath
 
     from ..versioned import current_version
@@ -1520,8 +2039,8 @@ def semdedup_prune_persisted(
     expect: dict | None = None,
 ) -> DataFrame:
     """SemDeDup served from the persisted filtered-IVF layout
-    (`write_filtered_ivf_index`) — the production shape the r6 verdict
-    asked for: the in-memory form recomputes centroids + assignment
+    (`write_filtered_ivf_index`) — the production shape: the in-memory
+    form recomputes centroids + assignment
     per run; here both are READ from the committed index, and the
     prune proceeds cell-partition-by-cell-partition — the self-join on
     `cell` aligns with the layout's `cell=` directory partitioning, so
@@ -1594,8 +2113,8 @@ def write_pq_index(
     8-byte packed codes, never the float vectors, so the per-query
     scan is 32x less IO than the embedding column and the codebook
     derivation + full-corpus encode pay at build time, not per query
-    (r7 verdict: the in-query form re-encodes the corpus per probe,
-    so its bench number measured the build, not the serving path).
+    (the in-query form re-encodes the corpus per probe, so its timing
+    measures the build, not the serving path).
 
     Two artifacts per version:
 
@@ -1614,9 +2133,8 @@ def write_pq_index(
     row-independent); rebuild = re-derived codebook = the compaction,
     same contract as the IVF/band layouts.
 
-    `train_iterations` (r10, the r9 verdict's recall-ceiling item):
-    when > 0 the codebook is Lloyd-trained on the corpus subvector
-    distribution for that many iterations
+    `train_iterations`: when > 0 the codebook is Lloyd-trained on the
+    corpus subvector distribution for that many iterations
     (operators/similarity.pq_codebook_trained — deterministic seeds +
     fixed iteration count, so the oracle replays training exactly);
     recorded in `_CURRENT` as `pq_train_iters` so a probe can pin the
@@ -1638,7 +2156,7 @@ def write_pq_index(
     if embeddings.isEmpty():
         # an empty-corpus codebook would be a 1-row empty-entries
         # relation that NaNs/nulls every future LUT — fail the build
-        # loudly (the write_band_index guard's twin, r8 review)
+        # loudly (the write_band_index guard's twin)
         raise ValueError(
             f"PQ index build over {path}: corpus is empty — nothing to index"
         )
@@ -1696,91 +2214,6 @@ def append_to_pq_index(
     )
 
 
-def _rerank_exact(
-    spark: SparkSession,
-    adc_topr: DataFrame,
-    qrel: DataFrame,
-    source: DataFrame,
-    k: int,
-    rerank: int,
-    op: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The exact re-rank tier shared by the PQ-family probes —
-    IVFADC+R (Jégou et al. 2011 §V-D): take the top-`rerank` ADC
-    candidates, fetch their RAW vectors from `source` by id, and
-    re-order by exact squared L2 against the query. Recovers most of
-    the 4-bit quantization loss for `rerank` extra vector reads per
-    query (the cell-pruning loss is untouched — candidates only ever
-    come from the probed cells).
-
-    Plan shape at 100 TB: the candidate collect is bounded (<= rerank
-    rows — the probed-cells precedent), and the candidate ids are
-    pushed into `source`'s parquet scan as a literal id predicate
-    (PushedFilters: In/range on the id column), so a corpus clustered
-    or sorted by id serves the fetch from O(rerank) row groups — never
-    a second full corpus scan. The exact distance reuses _l2sq (the
-    topk_l2_bruteforce arithmetic: round-6 before ordering, ties to
-    id, NULLs last) so the re-ranked order replays in any engine.
-    `source` must be unique on `id_col` (the corpus relation the index
-    was built from); a duplicated id would duplicate its candidate
-    row, and a candidate id MISSING from the source refuses loudly
-    (r12 review: the earlier inner join silently dropped it, so a
-    wrong source — eligible-only for a full-corpus index, a corpus
-    that lost rows since the build — under-delivered or promoted
-    worse vectors with no error). Returns (id, adist, dist) — the
-    ADC score is carried through from the candidate collect, not
-    recomputed."""
-    from ..operators.similarity import _l2sq, as_double
-
-    if rerank < k:
-        raise ValueError(
-            f"{op}: rerank={rerank} must be >= k={k} — fewer "
-            "candidates than requested results"
-        )
-    # bounded driver materialization: <= rerank (id, adist) rows
-    rows = adc_topr.collect()
-    cand = _local_rel(
-        spark,
-        [
-            (
-                int(r[0]),
-                None if r["adist"] is None else float(r["adist"]),
-            )
-            for r in rows
-        ],
-        f"{id_col} bigint, adist double",
-    )
-    ids = [int(r[0]) for r in rows]
-    # the pushed-down filter bounds the scan output at <= R rows, so
-    # the SOURCE side is the broadcastable one — which lets the
-    # candidates drive a LEFT join whose unmatched rows prove a
-    # missing id in-plan (assert_true wraps the distance, so any
-    # action over the top-k raises; a correct call costs zero jobs)
-    src = source.filter(F.col(id_col).isin(ids)).select(
-        F.col(id_col), as_double(vec_col).alias("_v")
-    )
-    missing_msg = F.concat(
-        F.lit(f"{op}: rerank candidate id "),
-        F.col(id_col).cast("string"),
-        F.lit(" is missing from rerank_source — pass the corpus "
-              "relation the index was built from"),
-    )
-    dist = F.when(
-        F.assert_true(F.col("_v").isNotNull(), missing_msg).isNull(),
-        F.round(_l2sq(F.col("_v"), F.col("_qv")), 6),
-    )
-    return (
-        cand.join(F.broadcast(src), id_col, "left")  # bcast: <= R rows
-        .join(F.broadcast(qrel))  # bcast bound: 1 row
-        .select(id_col, "adist", dist.alias("dist"))
-        # asc_nulls_last: the topk_l2_bruteforce rule (r9)
-        .orderBy(F.asc_nulls_last("dist"), id_col)
-        .limit(k)
-    )
-
-
 def pq_index_probe(
     spark: SparkSession,
     path: str,
@@ -1793,283 +2226,22 @@ def pq_index_probe(
 ) -> DataFrame:
     """Serve an ADC top-k from the persisted PQ index: the query
     builds its PQ_M x PQ_K lookup table against the STORED codebook
-    (one broadcast row), and the timed scan reads ONLY the codes
-    parquet — 8 bytes per vector, the 100 TB serving shape
-    (tests/test_storage.py pins the executed plan's file scans to the
-    index directories). LUT construction and the nibble-unpack scoring
-    go through the SAME definitions as the in-memory form
-    (operators/similarity._pq_lut_array / pq_adc_dist), which the
-    parity test pins result-equal. Returns (id, pq_code, adist).
+    (one broadcast row), and the scan reads ONLY the codes parquet —
+    8 bytes per vector, the 100 TB serving shape (tests/test_storage.py
+    pins the executed plan's file scans to the index directories). LUT
+    construction and the nibble-unpack scoring go through the SAME
+    definitions as the in-memory form (operators/similarity.
+    _pq_lut_array / pq_adc_dist), which the parity test pins
+    result-equal. Returns (id, pq_code, adist).
 
-    Single-query contract, enforced IN-PLAN (_single_query — r10, the
-    r9 verdict's probe-QPS item: the eager count() was its own job
-    over the query subtree per probe): >1 query row or an empty query
-    raises loudly at the first action over the result; a correct call
-    costs zero extra jobs. The quantizer read goes through the
-    (path, version) meta-cache (_version_artifacts), so a warm probe
-    is the pruned code scan plus the broadcast LUT build.
-
-    `rerank=R` (r12): exact re-rank of the top-R ADC candidates
-    against raw vectors from `rerank_source` (_rerank_exact) —
-    with no cell pruning in this layout, R bounds the only serving
-    error, so recall@k approaches 1.0 as R grows; output becomes
-    (id, adist, dist) ranked by `dist`."""
-    from ..operators.similarity import (
-        PQ_K,
-        PQ_M,
-        PQ_SUB,
-        _pq_lut_array,
-        _single_query,
-        as_double,
-        pq_adc_dist,
-    )
-
-    meta, base = _committed_index(
-        spark, path, "pq",
-        geometry={"pq_m": PQ_M, "pq_sub": PQ_SUB, "pq_k": PQ_K},
-        expect=expect,
-    )
-    cb = _version_artifacts(spark, path, meta, ("codebook",))["codebook"]
-    codes = _read_index_codes(spark, path, base, meta)
-    idx_id = str(meta.get("id_col", "vec_id"))
-    q1 = _single_query(query, "pq_index_probe", _qv=as_double(vec_col))
-    if rerank:
-        if rerank_source is None:
-            raise ValueError(
-                "pq_index_probe: rerank requires rerank_source (the "
-                "raw corpus relation the index was built from)"
-            )
-        # single-evaluation guarantee (r12 advice): the earlier form
-        # re-evaluated the query subtree twice — once inside the ADC
-        # candidate collect and again for the exact tier's qrel — so
-        # a NONDETERMINISTIC query relation could re-rank candidates
-        # against a different vector than the one that scored them.
-        # Collect the validated vector ONCE (bounded: the
-        # _single_query aggregate is exactly one row, and its
-        # in-plan assert fires on this very collect) and feed both
-        # the LUT and the exact tier the same literal — ivfpq_probe's
-        # guarantee, now shared by this layout.
-        qv = q1.first()["_qv"]
-        lut_src = _local_rel(spark, [(qv,)], "_qv array<double>")
-    else:
-        # the plain probe keeps its zero-collect, audited plan shape
-        lut_src = q1
-    lut_row = lut_src.join(F.broadcast(cb)).select(  # bcast bound: 1 row
-        _pq_lut_array().alias("_lut")
-    )
-    adc = (
-        codes.join(F.broadcast(lut_row))  # bcast bound: 1 row
-        .select(
-            F.col(idx_id),
-            "pq_code",
-            F.round(pq_adc_dist(), 6).alias("adist"),
-        )
-        # asc_nulls_last: the topk_l2_bruteforce rule (r9)
-        .orderBy(F.asc_nulls_last("adist"), idx_id)
-    )
-    if rerank:
-        return _rerank_exact(
-            spark, adc.limit(rerank), lut_src,
-            rerank_source, k, rerank, "pq_index_probe",
-            id_col=idx_id, vec_col=vec_col,
-        )
-    return adc.limit(k)
-
-
-def _require_unique_qids(
-    queries: DataFrame,
-    qid_col: str,
-    op: str,
-    qvec_col: str | None = None,
-    dim: int | None = None,
-) -> None:
-    """The single-probe n!=1 rule in batch form, shared by both batch
-    probes: an EMPTY batch raises (silently returning nothing hides an
-    upstream bug), and a duplicated qid (an at-least-once upstream
-    redelivering a query row, or two vectors colliding on one id)
-    emits two LUT rows for one qid — the unkeyed broadcast join then
-    scores every code twice and the 'top-k' silently interleaves
-    duplicate ranks (r9 review: reproduced — 5 rows, 3 distinct
-    neighbors, no error).
-
-    When (qvec_col, dim) are given, also rejects NULL,
-    wrong-dimension, or NULL-ELEMENT query vectors (r9 advice; the
-    element check is the r10 review's completion — a correct-size
-    vector with one NULL element NULLs the whole LUT the same way): a
-    degenerate qvec yields an all-NULL LUT, so that qid would still
-    return k rows with NULL adist ranked purely by id — silent
-    garbage for one batch member. Same single aggregate, no extra
-    job."""
-    aggs = [
-        F.count("*").alias("_n"),
-        F.count_distinct(F.col(qid_col)).alias("_nd"),
-    ]
-    if qvec_col is not None:
-        aggs.append(
-            F.count_if(
-                F.col(qvec_col).isNull()
-                | (F.size(F.col(qvec_col)) != F.lit(int(dim)))
-                | F.exists(F.col(qvec_col), lambda x: x.isNull())
-            ).alias("_bad")
-        )
-    counts = queries.agg(*aggs).first()
-    if counts["_n"] == 0:
-        raise ValueError(f"{op} got an empty query batch — nothing to serve")
-    if counts["_n"] != counts["_nd"]:
-        raise ValueError(
-            f"{op} requires unique {qid_col} per query row, got "
-            f"{counts['_n']} rows over {counts['_nd']} distinct ids"
-        )
-    if qvec_col is not None and counts["_bad"] != 0:
-        raise ValueError(
-            f"{op} got {counts['_bad']} query row(s) with NULL or "
-            f"wrong-dimension {qvec_col} (expected size {dim}, no "
-            "NULL elements) — a NULL LUT would rank that qid's top-k "
-            "purely by id"
-        )
-
-
-def _batch_probe_queries(
-    queries: DataFrame, op: str, qid_col: str, qvec_col: str, dim: int
-) -> DataFrame:
-    """The batch probes' shared prologue (r11 review: five verbatim
-    copies of it had to be kept in sync by hand): normalize to
-    (qid, qvec), persist — the probe's cached query relation — and
-    enforce the shared batch contract (_require_unique_qids). On a
-    contract failure the cache is released HERE; after a successful
-    return the caller owns the except-BaseException unpersist until
-    tie_cache takes ownership on success."""
-    q = queries.select(
-        F.col(qid_col).alias(qid_col), F.col(qvec_col).alias(qvec_col)
-    ).persist()
-    try:
-        _require_unique_qids(q, qid_col, op, qvec_col=qvec_col, dim=dim)
-    except BaseException:
-        q.unpersist()
-        raise
-    return q
-
-
-def _batch_topk(
-    scored: DataFrame,
-    queries: DataFrame,
-    qid_col: str,
-    order_exprs: list,
-    keep: list,
-    k: int,
-) -> DataFrame:
-    """The batch probes' shared epilogue: per-query top-k as
-    row_number over the layout's ordering — Spark plans it as
-    WindowGroupLimit, a per-partition top-k heap BEFORE the exchange,
-    so the shuffle carries at most Q x k rows per input partition,
-    never the Q x N scored relation. Output (qid, *keep, rank);
-    tie_cache takes ownership of the persisted query relation."""
-    from ..operators.dedup import tie_cache
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(qid_col).orderBy(*order_exprs)
-    out = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(qid_col, *keep, F.col("_rn").cast("int").alias("rank"))
-    )
-    return tie_cache(out, queries)
-
-
-def _batch_rerank_exact(
-    scored: DataFrame,
-    queries: DataFrame,
-    source: DataFrame | None,
-    k: int,
-    rerank: int,
-    op: str,
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The batch probes' shared IVFADC+R tier (r12): per-query top-R
-    ADC candidates via the same WindowGroupLimit shape the final
-    top-k uses (Q x R rows, never collected), raw vectors fetched
-    through ONE broadcast join against `source`, exact squared-L2
-    re-ranked per query (round-6, ties to id, NULLs last). Output
-    (qid, id, adist, dist, rank) ranked by `dist`.
-
-    Source-completeness is enforced IN-PLAN, mirroring the single
-    probe (r12 advice closed the asymmetry: the earlier inner-join
-    fetch silently shrank a query's pool when `source` lost ids —
-    the identical mistake _rerank_exact refuses loudly): the corpus
-    pass is pruned by a broadcast SEMI join on the candidate ids
-    (the batch form of the single probe's pushed-down isin), the
-    pruned <= Q x R fetch result is broadcast back onto the
-    candidates as a LEFT join, and the exact distance is wrapped in
-    an assert_true missing-id proof — any action raises, naming the
-    id, while a correct call keeps one corpus pass and ONE index
-    codes scan (the candidate relation is persisted — it feeds both
-    the prune and the final join; tie_cache owns its lifetime).
-    Pass the corpus relation the index was built from. At 100 TB
-    pair the fetch with an id-clustered corpus + runtime
-    bloom-filter join pruning so the scan skips non-candidate row
-    groups."""
-    from ..operators.similarity import _l2sq, as_double
-    from pyspark.sql import Window
-
-    if rerank < k:
-        raise ValueError(
-            f"{op}: rerank={rerank} must be >= k={k} — fewer "
-            "candidates than requested results"
-        )
-    if source is None:
-        raise ValueError(
-            f"{op}: rerank requires rerank_source (the raw corpus "
-            "relation the index was built from)"
-        )
-    wr = Window.partitionBy(qid_col).orderBy(
-        F.asc_nulls_last("adist"), id_col
-    )
-    cand = (  # WindowGroupLimit: Q x R rows, never collected
-        scored.withColumn("_rn", F.row_number().over(wr))
-        .filter(F.col("_rn") <= rerank)
-        .select(qid_col, id_col, "adist")
-        # persisted: cand feeds BOTH the semi-join prune of the fetch
-        # AND the final left join — without the cache each reference
-        # re-runs the whole ADC pipeline (index codes scan + LUT join
-        # + window top-R), doubling the dominant I/O (r13 review,
-        # confirmed from the executed plan: two codes FileScans).
-        # Lifetime ties to the returned result (tie_cache below).
-        .persist()
-    )
-    src = (
-        source.select(F.col(id_col), as_double(vec_col).alias("_v"))
-        # one corpus pass, pruned to <= Q x R rows before it is
-        # broadcast back onto the candidates
-        .join(F.broadcast(cand.select(id_col)), id_col, "semi")
-    )
-    qv = queries.select(qid_col, as_double(qvec_col).alias("_qv"))
-    missing_msg = F.concat(
-        F.lit(f"{op}: rerank candidate id "),
-        F.col(id_col).cast("string"),
-        F.lit(" is missing from rerank_source — pass the corpus "
-              "relation the index was built from"),
-    )
-    dist = F.when(
-        F.assert_true(F.col("_v").isNotNull(), missing_msg).isNull(),
-        F.round(_l2sq(F.col("_v"), F.col("_qv")), 6),
-    )
-    exact = (
-        cand.join(F.broadcast(src), id_col, "left")  # bcast: <= Q x R
-        .join(F.broadcast(qv), qid_col)  # bcast: Q rows
-        .select(qid_col, id_col, "adist", dist.alias("dist"))
-    )
-    from ..operators.dedup import tie_cache
-
-    return tie_cache(
-        _batch_topk(
-            exact, queries, qid_col,
-            [F.asc_nulls_last("dist"), id_col],
-            [id_col, "adist", "dist"], k,
-        ),
-        cand,
+    `rerank=R`: exact re-rank of the top-R ADC candidates against raw
+    vectors from `rerank_source` (_rerank_exact) — with no cell
+    pruning in this layout, R bounds the only serving error, so
+    recall@k approaches 1.0 as R grows; output becomes
+    (id, adist, dist) ranked by `dist`. Shared contract: _probe."""
+    return _probe(
+        "pq", spark, path, query, k, vec_col=vec_col, expect=expect,
+        rerank=rerank, rerank_source=rerank_source,
     )
 
 
@@ -2084,76 +2256,26 @@ def pq_index_batch_probe(
     rerank: int = 0,
     rerank_source: DataFrame | None = None,
 ) -> DataFrame:
-    """Serve a Q-query ADC top-k batch from the persisted PQ index —
-    the serving shape the single-query probe's error message used to
-    point at the in-memory `batch_topk` for, which scans the FLOAT
-    embeddings (r8 verdict item 5): here the one corpus pass for the
-    whole batch still reads only the stored 8-byte codes. Per-query
-    LUT rows (operators/similarity.pq_lut_rows — the shared
-    `_pq_lut_array` definition) are broadcast against the codes scan;
-    the per-query top-k is a `row_number <= k` over (adist, id), which
-    Spark plans as WindowGroupLimit — a per-partition top-k heap
-    BEFORE the exchange, so the shuffle carries at most Q x k rows per
-    input partition, never the Q x N scored relation (the batch_topk
-    scale argument; both the code-only scan and the group-limit are
-    pinned by executed-plan tests). Returns (qid, id, pq_code, adist,
-    rank).
+    """Serve a Q-query ADC top-k batch from the persisted PQ index:
+    per-query LUT rows (operators/similarity.pq_lut_rows — the shared
+    `_pq_lut_array` definition) are broadcast against ONE codes scan
+    for the whole batch, which still reads only the stored 8-byte
+    codes, never the float embeddings the in-memory `batch_topk`
+    scans. Both the code-only scan and the WindowGroupLimit top-k are
+    pinned by executed-plan tests. Returns (qid, id, pq_code, adist,
+    rank); Q is bounded by the caller's batch (Q LUT rows, ~1 KiB
+    each).
 
-    Q is bounded by the caller's batch (broadcast bound: Q LUT rows,
-    ~1 KiB each). An EMPTY batch raises — the single-probe rule:
-    silently returning nothing hides an upstream bug.
-
-    `rerank=R` (r12): the flat-PQ batch refine tier — per-query top-R
-    ADC candidates exact-re-ranked against raw vectors from
-    `rerank_source` (_batch_rerank_exact, the shared relational
-    shape); with no cell pruning in this layout, per-query recall
-    approaches 1.0 as R grows (unit-pinned at R=N ≡ the exact batch
-    top-k). Output becomes (qid, id, adist, dist, rank)."""
-    from ..operators.similarity import (
-        PQ_K,
-        PQ_M,
-        PQ_SUB,
-        pq_adc_dist,
-        pq_lut_rows,
+    `rerank=R`: the flat-PQ batch refine tier — per-query top-R ADC
+    candidates exact-re-ranked against raw vectors from
+    `rerank_source` (_batch_rerank_exact); with no cell pruning in
+    this layout, per-query recall approaches 1.0 as R grows
+    (unit-pinned at R=N ≡ the exact batch top-k). Output becomes
+    (qid, id, adist, dist, rank). Shared contract: _batch_probe."""
+    return _batch_probe(
+        "pq", spark, path, queries, k, None, qvec_col, qid_col, expect,
+        rerank, rerank_source,
     )
-
-    queries = _batch_probe_queries(
-        queries, "pq_index_batch_probe", qid_col, qvec_col, PQ_M * PQ_SUB
-    )
-    try:
-        # unconditional geometry gate — same reason as pq_index_probe
-        meta, base = _committed_index(
-            spark, path, "pq",
-            geometry={"pq_m": PQ_M, "pq_sub": PQ_SUB, "pq_k": PQ_K},
-            expect=expect,
-        )
-        cb = _version_artifacts(spark, path, meta, ("codebook",))[
-            "codebook"
-        ]
-        codes = _read_index_codes(spark, path, base, meta)
-        idx_id = str(meta.get("id_col", "vec_id"))
-        luts = pq_lut_rows(queries, cb, qvec_col, qid_col)
-        scored = codes.join(F.broadcast(luts)).select(  # bcast: Q rows
-            F.col(qid_col),
-            F.col(idx_id),
-            "pq_code",
-            F.round(pq_adc_dist(), 6).alias("adist"),
-        )
-        if rerank:
-            return _batch_rerank_exact(
-                scored, queries, rerank_source, k, rerank,
-                "pq_index_batch_probe",
-                qid_col=qid_col, qvec_col=qvec_col, id_col=idx_id,
-            )
-        # asc_nulls_last: the topk_l2_bruteforce rule (r9)
-        return _batch_topk(
-            scored, queries, qid_col,
-            [F.asc_nulls_last("adist"), idx_id],
-            [idx_id, "pq_code", "adist"], k,
-        )
-    except BaseException:
-        queries.unpersist()
-        raise
 
 
 @_meta_locked
@@ -2164,9 +2286,9 @@ def write_sq_index(
     id_col: str = "vec_id",
     keep_versions: int = 2,
 ) -> None:
-    """Persist a scalar-quantization (SQ8) index — the fifth layout
-    (r10): 8 bits PER DIMENSION instead of PQ's 4 bits per 8-dim
-    block, i.e. 16x more code budget for 8x the code size. The
+    """Persist a scalar-quantization (SQ8) index: 8 bits PER
+    DIMENSION instead of PQ's 4 bits per 8-dim block, i.e. 16x more
+    code budget for 8x the code size. The
     capacity/recall trade sits between raw floats and PQ (Faiss's
     ScalarQuantizer tier): near-exact recall at 4-8x less probe IO
     than the embedding column, where PQ4 is 32x less IO at real
@@ -2263,41 +2385,10 @@ def sq_index_probe(
     query vector is scored against DEQUANTIZED bucket centers
     (operators/similarity.sq_adc_dist — shared with the recall gate
     and the oracles), reading ONLY the packed codes parquet. Returns
-    (id, adist). Same serving contract as pq_index_probe: in-plan
-    single-query guard (zero extra jobs on a correct call), quantizer
-    through the (path, version) meta-cache, geometry gate
-    unconditional — mismatched DIM would zip_with to NULL distances
-    silently, ranking purely by id."""
-    from ..operators.similarity import (
-        DIM,
-        SQ_BUCKETS,
-        _single_query,
-        as_double,
-        sq_adc_dist,
-    )
-
-    meta, base = _committed_index(
-        spark, path, "sq",
-        geometry={"sq_buckets": SQ_BUCKETS, "dim": DIM},
-        expect=expect,
-    )
-    quant = _version_artifacts(spark, path, meta, ("quantizer",))[
-        "quantizer"
-    ]
-    codes = _read_index_codes(spark, path, base, meta)
-    idx_id = str(meta.get("id_col", "vec_id"))
-    q1 = _single_query(query, "sq_index_probe", _qv=as_double(vec_col))
-    qrow = q1.join(F.broadcast(quant))  # bcast bound: 1 row
-    return (
-        codes.join(F.broadcast(qrow))  # bcast bound: 1 row
-        .select(
-            F.col(idx_id),
-            F.round(sq_adc_dist(), 6).alias("adist"),
-        )
-        # asc_nulls_last: the topk_l2_bruteforce rule (r9)
-        .orderBy(F.asc_nulls_last("adist"), idx_id)
-        .limit(k)
-    )
+    (id, adist). The geometry gate matters here: a mismatched DIM
+    would zip_with to NULL distances silently, ranking purely by id.
+    Shared contract: _probe."""
+    return _probe("sq", spark, path, query, k, vec_col=vec_col, expect=expect)
 
 
 def sq_index_batch_probe(
@@ -2309,54 +2400,16 @@ def sq_index_batch_probe(
     qid_col: str = "qid",
     expect: dict | None = None,
 ) -> DataFrame:
-    """Serve a Q-query top-k batch from the persisted SQ index — the
-    pq_index_batch_probe contract on the SQ layout: one code-only
-    corpus pass for the whole batch. SQ needs no LUT — the per-query
-    'quantizer artifact' IS the raw query vector — so the scan
-    dequantizes each code row ONCE (a projection before the query
+    """Serve a Q-query top-k batch from the persisted SQ index: one
+    code-only corpus pass for the whole batch. SQ needs no LUT — the
+    per-query 'quantizer artifact' IS the raw query vector — so the
+    scan dequantizes each code row ONCE (a projection before the query
     join, not per (code, query) pair) and the Q-row broadcast join
-    only pays the DIM-element squared-diff fold per pair. Per-query
-    top-k via row_number over (adist, id) → WindowGroupLimit, so the
-    shuffle is bounded at Q x k rows per partition. Returns
-    (qid, id, adist, rank). Empty batch / duplicate qid / degenerate
-    qvec all refuse loudly (_require_unique_qids)."""
-    from ..operators.similarity import DIM, SQ_BUCKETS, _l2sq, sq_dequant
-
-    queries = _batch_probe_queries(
-        queries, "sq_index_batch_probe", qid_col, qvec_col, DIM
+    only pays the DIM-element squared-diff fold per pair. Returns
+    (qid, id, adist, rank). Shared contract: _batch_probe."""
+    return _batch_probe(
+        "sq", spark, path, queries, k, None, qvec_col, qid_col, expect
     )
-    try:
-        meta, base = _committed_index(
-            spark, path, "sq",
-            geometry={"sq_buckets": SQ_BUCKETS, "dim": DIM},
-            expect=expect,
-        )
-        quant = _version_artifacts(spark, path, meta, ("quantizer",))[
-            "quantizer"
-        ]
-        codes = _read_index_codes(spark, path, base, meta)
-        idx_id = str(meta.get("id_col", "vec_id"))
-        deq = (
-            codes.join(F.broadcast(quant))  # bcast bound: 1 row
-            .select(F.col(idx_id), sq_dequant().alias("_deq"))
-        )
-        scored = deq.join(F.broadcast(queries)).select(  # bcast: Q rows
-            F.col(qid_col),
-            F.col(idx_id),
-            F.round(
-                _l2sq(F.col(qvec_col).cast("array<double>"), F.col("_deq")),
-                6,
-            ).alias("adist"),
-        )
-        # asc_nulls_last: the topk_l2_bruteforce rule (r9)
-        return _batch_topk(
-            scored, queries, qid_col,
-            [F.asc_nulls_last("adist"), idx_id],
-            [idx_id, "adist"], k,
-        )
-    except BaseException:
-        queries.unpersist()
-        raise
 
 
 @_meta_locked
@@ -2369,7 +2422,7 @@ def write_ivfsq_index(
     keep_versions: int = 2,
     coarse_train_iterations: int = 0,
 ) -> None:
-    """Persist an IVF-SQ8 index — the sixth layout (r10), Faiss's
+    """Persist an IVF-SQ8 index — Faiss's
     IVFScalarQuantizer shape and the last cell of the quantization
     matrix ({flat, SQ8, PQ4, residual-PQ4} x {exhaustive, IVF}): the
     inverted file prunes WHICH vectors are scored (nprobe/n_cells of
@@ -2417,7 +2470,7 @@ def write_ivfsq_index(
         )
     ver = current_version(spark, path) + 1
     base, _vtok = _stage_version(spark, path)
-    # coarse_train_iterations > 0 (r11): Lloyd-refined coarse
+    # coarse_train_iterations > 0: Lloyd-refined coarse
     # quantizer — one corpus scan per iteration at build time;
     # recorded below so probes can pin the regime
     cents_rel = (
@@ -2508,39 +2561,10 @@ def ivfsq_probe(
     against DEQUANTIZED bucket centers (sq_adc_dist — the same shared
     expression as the flat SQ probe and the oracles). Returns
     (id, adist). Serving IO: nprobe/n_cells of ~1-byte-per-dim codes —
-    the strict-recall sibling of ivfpq_probe's 8-byte rows. Contract
-    checks ride the pruning collect (the _collect_single_probe_cells
-    rule: empty/multi-row/NULL queries refuse loudly, no extra
-    jobs)."""
-    from ..operators.similarity import DIM, SQ_BUCKETS, sq_adc_dist
-
-    meta, base = _committed_index(
-        spark, path, "ivfsq",
-        geometry={"sq_buckets": SQ_BUCKETS, "dim": DIM},
-        expect=expect,
-    )
-    arts = _version_artifacts(
-        spark, path, meta, ("centroids", "quantizer")
-    )
-    probed, qv_list = _collect_single_probe_cells(
-        "ivfsq_probe", query, arts["centroids"], nprobe,
-        "operators/similarity.batch_topk",
-    )
-    qdf = _local_rel(spark, [(qv_list,)], "_qv array<double>")
-    idx = _read_index_cells(spark, path, base, meta).filter(
-        F.col("cell").isin(probed)
-    )
-    idx_id = str(meta.get("id_col", "vec_id"))
-    return (
-        idx.join(F.broadcast(qdf))  # bcast bound: 1 query row
-        .join(F.broadcast(arts["quantizer"]))  # bcast bound: 1 row
-        .select(
-            F.col(idx_id),
-            F.round(sq_adc_dist(), 6).alias("adist"),
-        )
-        # asc_nulls_last: the topk_l2_bruteforce rule (r9)
-        .orderBy(F.asc_nulls_last("adist"), idx_id)
-        .limit(k)
+    the strict-recall sibling of ivfpq_probe's 8-byte rows. Shared
+    contract: _probe."""
+    return _probe(
+        "ivfsq", spark, path, query, k, nprobe, vec_col, expect=expect
     )
 
 
@@ -2554,88 +2578,17 @@ def ivfsq_batch_probe(
     qid_col: str = "qid",
     expect: dict | None = None,
 ) -> DataFrame:
-    """Serve a Q-query top-k batch from the IVF-SQ8 index (r11 — the
-    r10 verdict's last minor gap: PQ and SQ had batch probes, the
-    composed SQ layout served single queries only). Composition =
-    ivfpq_batch_probe's relational per-query cell ranking
-    (`rank_probe_cells_batch`, a Q x nprobe WindowGroupLimit over the
-    broadcast centroid row — no per-query collect loop) x
-    sq_index_batch_probe's scoring shape (each code row in the probed
-    cells is dequantized ONCE in a named projection BELOW the query
-    join; only the DIM-element squared-diff fold pays per
-    (code, query) pair). Returns (qid, id, adist, rank).
-
-    Plan at 100 TB: ONE partition-pruned scan of the union of probed
-    `cell=` directories serves the whole batch — |union| / n_cells of
-    the corpus x ~1 byte per dim (a Q-loop over ivfsq_probe reads
-    overlapping cells Q times); the join side is the Q x nprobe
-    (cell, qid, qvec) broadcast; per-query top-k is
-    WindowGroupLimit-bounded at Q x k rows per partition. The only
-    driver-side materialization is the distinct probed-cell id list
-    (<= n_cells integers — the single probe's same legitimate
-    collect). Empty batch / duplicate qid / NULL or wrong-dim qvec
-    refuse loudly (_require_unique_qids)."""
-    from ..operators.similarity import (
-        DIM,
-        SQ_BUCKETS,
-        _l2sq,
-        rank_probe_cells_batch,
-        sq_dequant,
+    """Serve a Q-query top-k batch from the IVF-SQ8 index: relational
+    per-query cell ranking x the SQ batch scoring shape (each code row
+    in the probed cells is dequantized ONCE in a projection BELOW the
+    query join; only the DIM-element squared-diff fold pays per
+    (code, query) pair). ONE partition-pruned scan of the union of
+    probed `cell=` directories serves the whole batch, where a Q-loop
+    over ivfsq_probe reads overlapping cells Q times. Returns
+    (qid, id, adist, rank). Shared contract: _batch_probe."""
+    return _batch_probe(
+        "ivfsq", spark, path, queries, k, nprobe, qvec_col, qid_col, expect
     )
-
-    queries = _batch_probe_queries(
-        queries, "ivfsq_batch_probe", qid_col, qvec_col, DIM
-    )
-    try:
-        meta, base = _committed_index(
-            spark, path, "ivfsq",
-            geometry={"sq_buckets": SQ_BUCKETS, "dim": DIM},
-            expect=expect,
-        )
-        arts = _version_artifacts(
-            spark, path, meta, ("centroids", "quantizer")
-        )
-        qcells = rank_probe_cells_batch(
-            queries, arts["centroids"], nprobe, qvec_col, qid_col
-        ).select(qid_col, "probe_cell")
-        # bounded driver materialization: the distinct probed cells
-        # (<= n_cells integers) drive partition pruning for the ONE
-        # shared scan
-        probed = sorted({
-            int(r["probe_cell"]) for r in qcells.collect()
-        })
-        codes = _read_index_cells(spark, path, base, meta).filter(
-            F.col("cell").isin(probed)
-        )
-        idx_id = str(meta.get("id_col", "vec_id"))
-        # dequantize each code row ONCE, below the query join — the
-        # sq_index_batch_probe plan shape, now per probed cell
-        deq = (
-            codes.join(F.broadcast(arts["quantizer"]))  # bcast: 1 row
-            .select("cell", F.col(idx_id), sq_dequant().alias("_deq"))
-        )
-        qside = qcells.join(queries, qid_col).withColumnRenamed(
-            "probe_cell", "cell"
-        )
-        scored = deq.join(  # bcast bound: Q x nprobe rows
-            F.broadcast(qside), "cell"
-        ).select(
-            F.col(qid_col),
-            F.col(idx_id),
-            F.round(
-                _l2sq(F.col(qvec_col).cast("array<double>"), F.col("_deq")),
-                6,
-            ).alias("adist"),
-        )
-        # asc_nulls_last: the topk_l2_bruteforce rule (r9)
-        return _batch_topk(
-            scored, queries, qid_col,
-            [F.asc_nulls_last("adist"), idx_id],
-            [idx_id, "adist"], k,
-        )
-    except BaseException:
-        queries.unpersist()
-        raise
 
 
 @_meta_locked
@@ -2674,7 +2627,7 @@ def write_ivfpq_index(
     probe refuses any mismatch. Versioned-atomic via versioned.py;
     rebuild = new version = compaction.
 
-    Build cost (r8 review): both seed relations (centroids, codebook)
+    Build cost: both seed relations (centroids, codebook)
     derive from the LOWEST-id prefix of the eligible set, so one
     TakeOrdered pass materializes a tiny localCheckpoint'ed prefix
     that feeds both; codes and cell assignments are then computed in
@@ -2684,7 +2637,7 @@ def write_ivfpq_index(
     fails the build loudly — committing it would write a cells/ dir
     holding only _SUCCESS, poisoning every probe until a rebuild.
 
-    `train_iterations` (r10): when > 0, the PQ codebook is
+    `train_iterations`: when > 0, the PQ codebook is
     Lloyd-trained on the full encode relation's subvector distribution
     (residuals when `residual`, raw otherwise — the distribution the
     codes quantize; Jégou §II-B) instead of stopping at the
@@ -2723,7 +2676,7 @@ def write_ivfpq_index(
             )
         ver = current_version(spark, path) + 1
         base, _vtok = _stage_version(spark, path)
-        # coarse_train_iterations > 0 (r11): Lloyd-refine the coarse
+        # coarse_train_iterations > 0: Lloyd-refine the coarse
         # quantizer over the FULL eligible relation (the seeds derive
         # from the lowest-id prefix either way, so the untrained
         # layout is byte-identical to before); one eligible scan per
@@ -2755,7 +2708,7 @@ def write_ivfpq_index(
             seed_rel, enc_rel, vec = (
                 low, ivf_assign(eligible, cents), "embedding"
             )
-        # Trained codebooks (r10): Lloyd-refine over the FULL encode
+        # Trained codebooks: Lloyd-refine over the FULL encode
         # relation's subvector distribution (residual or raw — the
         # distribution the codes will quantize), seeded from the same
         # lowest-id prefix (pq_codebook(enc_rel) == pq_codebook(
@@ -2855,153 +2808,26 @@ def ivfpq_probe(
     nprobe winning `cell=` directories, and score ONLY their packed
     codes via the query's LUT (_pq_lut_array / pq_adc_dist — the
     shared definitions, so scoring cannot drift from pq_index_probe
-    or the in-memory form). Returns (vec_id, pq_code, adist).
+    or the in-memory form). A residual index builds one LUT per probed
+    cell from the query's residual to that cell's centroid. Returns
+    (vec_id, pq_code, adist).
 
-    Plan shape at 100 TB: two 1-row broadcasts (LUT, implicit in the
-    join; centroid ranking is O(n_cells)), one pruned scan of
-    nprobe/n_cells x 8-byte-per-vector data, one TakeOrdered. The
-    executed-scan test pins both prunings (partition count AND
-    no-float-column) from real scan metadata.
+    Plan shape at 100 TB: two 1-row broadcasts (LUT; centroid ranking
+    is O(n_cells)), one pruned scan of nprobe/n_cells x
+    8-byte-per-vector data, one TakeOrdered. The executed-scan test
+    pins both prunings (partition count AND no-float-column) from
+    real scan metadata.
 
-    Serving cost (r10, the r9 verdict's probe-QPS item): the centroid
-    and codebook reads go through the (path, version) meta-cache
-    (_version_artifacts), and the single-query contract is validated
-    from the SAME bounded collect that drives partition pruning — the
-    ranked-cell rows carry the query vector, so an empty query (zero
-    rows back), a second distinct vector (two _qv values interleaved)
-    or a duplicated query row (the same cell ranked twice) all refuse
-    loudly with no extra job, and the collected vector feeds the LUT
-    as a LITERAL: the query subtree is evaluated exactly once per
-    probe, and the pruning decision and the LUT provably use the same
-    vector even for a nondeterministic query relation.
-
-    `rerank=R` (r12, the r11 verdict's #3) adds the IVFADC+R exact
-    re-rank tier: the top-R ADC candidates are re-ordered by exact
-    squared L2 against their raw vectors fetched from
-    `rerank_source` by pushed-down id predicate (_rerank_exact —
-    R extra vector reads per query, never a second corpus scan);
-    output becomes (vec_id, adist, dist) ranked by `dist`."""
-
-    from ..operators.similarity import (
-        PQ_K,
-        PQ_M,
-        PQ_SUB,
-        _pq_lut_array,
-        pq_adc_dist,
+    `rerank=R` adds the IVFADC+R exact re-rank tier: the top-R ADC
+    candidates are re-ordered by exact squared L2 against their raw
+    vectors fetched from `rerank_source` by pushed-down id predicate
+    (_rerank_exact — R extra vector reads per query, never a second
+    corpus scan); output becomes (vec_id, adist, dist) ranked by
+    `dist`. Shared contract: _probe."""
+    return _probe(
+        "ivfpq", spark, path, query, k, nprobe, expect=expect,
+        rerank=rerank, rerank_source=rerank_source,
     )
-
-    meta, base = _committed_index(
-        spark, path, "ivfpq",
-        geometry={"pq_m": PQ_M, "pq_sub": PQ_SUB, "pq_k": PQ_K},
-        expect=expect,
-    )
-    arts = _version_artifacts(spark, path, meta, ("centroids", "codebook"))
-    cents, cb = arts["centroids"], arts["codebook"]
-    # bounded driver materialization (<= one row per stored centroid):
-    # drives partition pruning AND carries the query vector + the
-    # single-query contract validation (_collect_single_probe_cells)
-    probed, qv = _collect_single_probe_cells(
-        "ivfpq_probe", query, cents, nprobe, "ivfpq_batch_probe"
-    )
-    # base + committed append deltas, every leg partition-pruned
-    codes = _read_index_cells(spark, path, base, meta).filter(
-        F.col("cell").isin(probed)
-    )
-    if meta.get("residual"):
-        # IVFADC asymmetric distance (Jégou §V): codes are
-        # residual-encoded, so the LUT must be built from the
-        # QUERY'S residual against each probed cell's centroid —
-        # one LUT row PER probed cell (the batch-LUT machinery
-        # keyed by cell id), joined to the codes of that cell.
-        # Still nprobe 1-KiB broadcast rows + the same pruned
-        # 8-byte scan. The residual comes from the SAME
-        # ivf_residual definition the encode side uses, over the
-        # SAME ranked cells that drove the pruning (r9 review: a
-        # restated expression / second ranking could drift).
-        from ..operators.similarity import ivf_residual, pq_lut_rows
-
-        qrel = _local_rel(
-            spark, [(c, qv) for c in probed],
-            "cell bigint, _qv array<double>",
-        )
-        qres = ivf_residual(qrel, cents, "_qv", "_qres").select(
-            "cell", "_qres"
-        )
-        luts = pq_lut_rows(qres, cb, "_qres", "cell")
-        scored = codes.join(  # bcast bound: nprobe LUT rows
-            F.broadcast(luts), "cell"
-        )
-    else:
-        qrel = _local_rel(spark, [(qv,)], "_qv array<double>")
-        lut_row = qrel.join(F.broadcast(cb)).select(
-            _pq_lut_array().alias("_lut")
-        )
-        scored = codes.join(F.broadcast(lut_row))  # bcast bound: 1 row
-    adc = (
-        scored.select(
-            "vec_id",
-            "pq_code",
-            F.round(pq_adc_dist(), 6).alias("adist"),
-        )
-        # asc_nulls_last: the topk_l2_bruteforce rule (r9)
-        .orderBy(F.asc_nulls_last("adist"), "vec_id")
-    )
-    if rerank:
-        # IVFADC+R (Jégou §V-D): exact re-rank of the top-`rerank` ADC
-        # candidates against their raw vectors. The query vector is
-        # the SAME validated collect that drove the pruning (qv), so
-        # candidates, pruning and the exact distances provably share
-        # one query. Cell-pruning loss is untouched — this tier
-        # recovers quantization loss only.
-        if rerank_source is None:
-            raise ValueError(
-                "ivfpq_probe: rerank requires rerank_source (the raw "
-                "corpus relation the index was built from)"
-            )
-        qrel_r = _local_rel(spark, [(qv,)], "_qv array<double>")
-        return _rerank_exact(
-            spark, adc.limit(rerank), qrel_r, rerank_source,
-            k, rerank, "ivfpq_probe",
-        )
-    return adc.limit(k)
-
-
-# per-layout compaction spec: which meta keys identify the layout,
-# which artifact legs carry DATA (unioned base + deltas into the new
-# base; partition column preserved; "distinct" re-dedups the relation)
-# and which are QUANTIZER artifacts (copied from the current version,
-# never re-derived). One table, so a future layout adds one row.
-_COMPACT_SPECS = {
-    "band": {
-        "data": [("shingles", None, False), ("bands", "band_no", False),
-                 ("shas", None, True)],
-        "copy": [],
-    },
-    "phash": {
-        "data": [("hashes", None, False), ("bands", "band_no", False)],
-        "copy": [],
-    },
-    "ivf": {
-        "data": [("cells", "cell", False)],
-        "copy": ["centroids"],
-    },
-    "pq": {
-        "data": [("codes", None, False)],
-        "copy": ["codebook"],
-    },
-    "sq": {
-        "data": [("codes", None, False)],
-        "copy": ["quantizer"],
-    },
-    "ivfsq": {
-        "data": [("cells", "cell", False)],
-        "copy": ["centroids", "quantizer"],
-    },
-    "ivfpq": {
-        "data": [("cells", "cell", False)],
-        "copy": ["centroids", "codebook"],
-    },
-}
 
 
 def _index_kind(meta: dict) -> str:
@@ -3025,12 +2851,12 @@ def _index_kind(meta: dict) -> str:
 
 
 def _require_kind(meta: dict, kind: str, path: str) -> None:
-    """Refuse an operation aimed at the wrong index layout (r9
-    review): the four builders share call signatures, and a mistaken
-    append could PASS its geometry gate on a sibling layout — e.g.
-    append_to_ivf_index against an IVF-PQ index (whose meta also has
-    min_chars/lang/centroids) committed a raw-embedding cells delta
-    whose pq_code read back NULL, silently filling every probe's
+    """Refuse an operation aimed at the wrong index layout: the
+    builders share call signatures, and a mistaken append could PASS
+    its geometry gate on a sibling layout — e.g. append_to_ivf_index
+    against an IVF-PQ index (whose meta also has
+    min_chars/lang/centroids) would commit a raw-embedding cells delta
+    whose pq_code reads back NULL, silently filling every probe's
     top-k with null-distance rows."""
     got = _index_kind(meta)
     if got != kind:
@@ -3105,7 +2931,7 @@ def delete_from_index(
             f"'{ids.columns[0]}' has type {in_type.simpleString()}; "
             "tombstones are stored as BIGINT, so pass integral ids"
         )
-    leg = _COMPACT_SPECS[kind]["data"][0][0]
+    leg = _LAYOUTS[kind].data[0][0]
     leg_sch = _leg_schema(spark, path, meta, leg, posixpath.join(base, leg))
     if idc not in leg_sch.fieldNames():
         raise ValueError(
@@ -3194,12 +3020,12 @@ def compact_index(
         # honor the retention the BUILD chose (recorded in _CURRENT)
         # unless the caller overrides explicitly
         keep_versions = int(meta.get("keep_versions", 2))
-    spec = _COMPACT_SPECS[_index_kind(meta)]
+    lay = _LAYOUTS[_index_kind(meta)]
     nbase, _vtok = _stage_version(spark, path)
     dirs = _delta_dirs(base, meta)
     idc = str(meta.get("id_col", "vec_id"))
     tombs = _read_tombstones(spark, base, meta, idc)
-    for leg, part_col, dedup in spec["data"]:
+    for leg, part_col, dedup in lay.data:
         rel = _union_parquet(spark, [posixpath.join(d, leg) for d in dirs])
         if tombs is not None:
             # the physical half of deletion: tombstoned rows do not
@@ -3222,7 +3048,7 @@ def compact_index(
                 f"row of the '{leg}' leg — rebuild the index "
                 "instead of compacting it away"
             )
-    for leg in spec["copy"]:
+    for leg in lay.quantizers:
         spark.read.parquet(posixpath.join(base, leg)).write.mode(
             "overwrite"
         ).parquet(posixpath.join(nbase, leg))
@@ -3252,124 +3078,26 @@ def ivfpq_batch_probe(
     rerank: int = 0,
     rerank_source: DataFrame | None = None,
 ) -> DataFrame:
-    """Serve a Q-query ADC top-k batch from the IVF-PQ index — the
-    composed analog of `pq_index_batch_probe` (r9): per-query cell
-    ranking is RELATIONAL (`rank_probe_cells_batch`, a Q x nprobe
-    WindowGroupLimit over the broadcast centroid row — no per-query
-    collect loop), each query's LUT row joins its ranked cells, and
-    ONE partition-pruned scan of the union of probed cells serves the
-    whole batch. Returns (qid, vec_id, pq_code, adist, rank).
+    """Serve a Q-query ADC top-k batch from the IVF-PQ index: each
+    query's LUT row joins its ranked cells (residual layouts key one
+    LUT per (qid, cell)), and ONE partition-pruned scan of the union
+    of probed cells serves the whole batch — |union| / n_cells of the
+    corpus x 8 bytes per vector, read ONCE for all Q queries. Returns
+    (qid, vec_id, pq_code, adist, rank).
 
-    Plan at 100 TB: the scan reads |union of probed cells| / n_cells
-    of the corpus x 8 bytes per vector ONCE for all Q queries (a
-    Q-loop over the single probe reads overlapping cells Q times);
-    the join side is a Q x nprobe broadcast of (cell, qid, LUT) rows
-    ~1 KiB each; the per-query top-k is WindowGroupLimit-bounded at
-    Q x k rows per partition. The only driver-side materialization is
-    the distinct probed-cell id list (<= n_cells integers — the
-    single probe's same legitimate collect).
-
-    `rerank=R` (r12): the batch IVFADC+R tier, FULLY RELATIONAL —
-    the per-query top-R ADC candidates come from the same
-    WindowGroupLimit shape (Q x R rows, never collected), broadcast
-    against `rerank_source` to fetch raw vectors, exact-squared-L2
-    re-ranked per query. Unlike the single probe's pushed-down id
-    list, the batch fetch is a broadcast hash join against the
-    corpus scan — at 100 TB pair it with an id-clustered corpus and
-    runtime bloom-filter join pruning
-    (spark.sql.optimizer.runtime.bloomFilter.enabled) so the scan
-    skips non-candidate row groups. Output (qid, vec_id, adist,
-    dist, rank) ranked by `dist`; works on residual layouts too (the
-    candidates come through the per-(qid, cell) residual LUTs, the
-    exact tier scores raw vectors against the raw query either
-    way)."""
-
-    from ..operators.similarity import (
-        PQ_K,
-        PQ_M,
-        PQ_SUB,
-        pq_adc_dist,
-        pq_lut_rows,
-        rank_probe_cells_batch,
+    `rerank=R`: the batch IVFADC+R tier, fully relational
+    (_batch_rerank_exact). The batch fetch is a broadcast hash join
+    against the corpus scan, so at 100 TB pair it with an
+    id-clustered corpus and runtime bloom-filter join pruning
+    (spark.sql.optimizer.runtime.bloomFilter.enabled). Output
+    (qid, vec_id, adist, dist, rank) ranked by `dist`; residual
+    layouts compose too (candidates come through the per-(qid, cell)
+    residual LUTs, the exact tier scores raw vectors against the raw
+    query). Shared contract: _batch_probe."""
+    return _batch_probe(
+        "ivfpq", spark, path, queries, k, nprobe, qvec_col, qid_col, expect,
+        rerank, rerank_source,
     )
-
-    if rerank and rerank < k:
-        raise ValueError(
-            f"ivfpq_batch_probe: rerank={rerank} must be >= k={k} — "
-            "fewer candidates than requested results"
-        )
-
-    queries = _batch_probe_queries(
-        queries, "ivfpq_batch_probe", qid_col, qvec_col, PQ_M * PQ_SUB
-    )
-    try:
-        meta, base = _committed_index(
-            spark, path, "ivfpq",
-            geometry={"pq_m": PQ_M, "pq_sub": PQ_SUB, "pq_k": PQ_K},
-            expect=expect,
-        )
-        arts = _version_artifacts(
-            spark, path, meta, ("centroids", "codebook")
-        )
-        cents, cb = arts["centroids"], arts["codebook"]
-        qcells = rank_probe_cells_batch(
-            queries, cents, nprobe, qvec_col, qid_col
-        ).select(qid_col, "probe_cell")
-        # bounded driver materialization: the distinct probed cells
-        # (<= n_cells integers) drive partition pruning for the ONE
-        # shared scan
-        probed = sorted({
-            int(r["probe_cell"]) for r in qcells.collect()
-        })
-        codes = _read_index_cells(spark, path, base, meta).filter(
-            F.col("cell").isin(probed)
-        )
-        # each query's LUT rides its ranked cells: Q x nprobe
-        # broadcast rows, the batch's single join side. Residual
-        # layout (IVFADC, r9): the LUT is built from each query's
-        # PER-CELL residual (the shared ivf_residual definition),
-        # keyed by (qid, cell) — same broadcast bound.
-        if meta.get("residual"):
-            from ..operators.similarity import ivf_residual
-
-            qres = ivf_residual(
-                qcells.join(queries, qid_col)
-                .withColumnRenamed("probe_cell", "cell"),
-                cents, qvec_col, "_qres",
-            ).select(qid_col, "cell", "_qres")
-            qside = pq_lut_rows(qres, cb, "_qres", qid_col, keep=("cell",))
-        else:
-            luts = pq_lut_rows(queries, cb, qvec_col, qid_col)
-            qside = qcells.join(luts, qid_col).withColumnRenamed(
-                "probe_cell", "cell"
-            )
-        scored = codes.join(  # bcast bound: Q x nprobe rows
-            F.broadcast(qside), "cell"
-        ).select(
-            F.col(qid_col),
-            "vec_id",
-            "pq_code",
-            F.round(pq_adc_dist(), 6).alias("adist"),
-        )
-        if rerank:
-            # residual layouts need no special casing here: the ADC
-            # candidates already came through the per-(qid, cell)
-            # residual LUTs above, and the exact tier scores RAW
-            # vectors against the RAW query either way
-            return _batch_rerank_exact(
-                scored, queries, rerank_source, k, rerank,
-                "ivfpq_batch_probe",
-                qid_col=qid_col, qvec_col=qvec_col,
-            )
-        # asc_nulls_last: the topk_l2_bruteforce rule (r9)
-        return _batch_topk(
-            scored, queries, qid_col,
-            [F.asc_nulls_last("adist"), "vec_id"],
-            ["vec_id", "pq_code", "adist"], k,
-        )
-    except BaseException:
-        queries.unpersist()
-        raise
 
 
 def band_index_sha_set(spark: SparkSession, index_path: str) -> DataFrame:
@@ -3377,7 +3105,7 @@ def band_index_sha_set(spark: SparkSession, index_path: str) -> DataFrame:
     the exact-dup gate's old side, served from the index so an
     increment's exact gate never re-hashes (or even reads) old corpus
     text. 64-byte keys; the gate is a LEFT SEMI join on them. Includes
-    every committed append delta, EXCLUDES tombstoned docs (r11: the
+    every committed append delta, EXCLUDES tombstoned docs (the
     stored rows carry the doc id precisely so deletion can address a
     doc's content hash); the cross-delta distinct is cheap (the
     relation is hash-sized) and only needed because a doc may repeat

@@ -536,11 +536,12 @@ class _TemplateFlowDecoder:
     def _consume_options_data(self, payload, p, end, fields, sampler,
                               domain) -> None:
         rec_len = sum(ln for _, ln in fields)
+        from_bytes = int.from_bytes  # bound once, not per field
         while rec_len > 0 and p + rec_len <= end:
             f: dict[int, int] = {}
             for ftype, ln in fields:
                 if ftype is not None:
-                    f[ftype] = int.from_bytes(payload[p:p + ln], "big")
+                    f[ftype] = from_bytes(payload[p:p + ln], "big")
                 p += ln
             self.options_records += 1
             rate = f.get(34) or f.get(305)
@@ -552,14 +553,16 @@ class _TemplateFlowDecoder:
         rec_len = sum(ln for _, ln in tmpl)
         default_rate = self._sampling.get((sampler, domain), 0)
         flow_times, flow_type = self._flow_times, self._FLOW_TYPE
+        # per-field lookups bound once, not per field of every record
+        from_bytes, addr_fields = int.from_bytes, _V9_ADDR_FIELDS
         rows = []
         while rec_len > 0 and p + rec_len <= end:
             f: dict[int, int | bytes] = {}
             for ftype, ln in tmpl:
                 raw = payload[p:p + ln]
                 if ftype is not None:
-                    f[ftype] = raw if ftype in _V9_ADDR_FIELDS else \
-                        int.from_bytes(raw, "big")
+                    f[ftype] = raw if ftype in addr_fields else \
+                        from_bytes(raw, "big")
                 p += ln
             t_start, t_end = flow_times(f, now, anchor)
             rows.append(_fields_to_row(

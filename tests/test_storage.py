@@ -353,8 +353,8 @@ def test_filtered_ivf_rebuild_commits_atomically(spark, tmp_path):
 
 def test_ivf_probe_rejects_multi_query(spark, tmp_path):
     """>1 query row would merge queries into one interleaved top-k
-    with no qid — the probe must refuse loudly (batch serving is
-    batch_topk)."""
+    with no qid — the probe must refuse loudly and point at the
+    persisted batch probe."""
     import pytest as _pytest
 
     from goflow2clickhouse_spark.plans.storage import (
@@ -366,7 +366,9 @@ def test_ivf_probe_rejects_multi_query(spark, tmp_path):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     path = str(tmp_path / "fivf2")
     write_filtered_ivf_index(docs, emb, path, n_cells=8)
-    with _pytest.raises(ValueError, match="one query"):
+    # the hint names the persisted batch twin, not the float-scanning
+    # in-memory batch_topk
+    with _pytest.raises(ValueError, match="one query.*use ivf_batch_probe"):
         ivf_index_probe(spark, path, emb.filter(F.col("vec_id") < 2), k=5)
 
 
@@ -1075,7 +1077,9 @@ def test_ivf_probe_early_raise_does_not_leak_cache(spark, tmp_path):
 
     base = cached_count()
     # multi-row query → ValueError; the probe's private cache must be gone
-    with _pytest.raises(ValueError, match="one query"):
+    # the hint names the persisted batch twin, not the float-scanning
+    # in-memory batch_topk
+    with _pytest.raises(ValueError, match="one query.*use ivf_batch_probe"):
         ivf_index_probe(spark, path, emb.filter(F.col("vec_id") < 2), k=5)
     assert cached_count() == base
     # missing index → FileNotFoundError; same invariant
@@ -2400,7 +2404,9 @@ def test_ivfsq_probe_prunes_cells_and_lifecycle(spark, tmp_path):
         append_to_sq_index(emb, path)
     with _pytest.raises(ValueError, match="built with"):
         ivfsq_probe(spark, path, q1, expect={"n_cells": 4})
-    with _pytest.raises(ValueError, match="one query"):
+    with _pytest.raises(
+        ValueError, match="one query.*use ivfsq_batch_probe"
+    ):
         ivfsq_probe(spark, path, emb.filter(F.col("vec_id") < 3))
 
 
@@ -2872,13 +2878,29 @@ def test_concurrent_append_and_takedown_lose_no_updates(spark, tmp_path):
     assert not served & gone
 
 
+def _jobs_started(spark, fn) -> int:
+    """The Spark jobs `fn()` starts, counted by the status tracker over
+    a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted calls")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_rerank_exact_tier_guards_plan_and_full_R_equivalence(
     spark, tmp_path
 ):
     """IVFADC+R (r12, plans/storage._rerank_exact): the guards refuse
-    a missing source and R < k; the candidate fetch pushes the id
-    list into the raw-vector parquet scan (PushedFilters — never a
-    second full corpus scan); the output is ordered by exact distance
+    a missing source and R < k before any job runs; the candidate
+    fetch pushes the id list into the raw-vector parquet scan
+    (PushedFilters — never a second full corpus scan); the output is ordered by exact distance
     with the topk_l2_bruteforce tie-break; and with R = |corpus| the
     re-ranked top-k EQUALS the exact brute-force top-k (the refine
     tier's correctness limit)."""
@@ -2893,10 +2915,14 @@ def test_rerank_exact_tier_guards_plan_and_full_R_equivalence(
     write_pq_index(emb, path)
     q = emb.filter(F.col("vec_id") == 0)
 
-    with pytest.raises(ValueError, match="rerank_source"):
-        pq_index_probe(spark, path, q, k=10, rerank=20)
-    with pytest.raises(ValueError, match="must be >= k"):
-        pq_index_probe(spark, path, q, k=10, rerank=5, rerank_source=emb)
+    def guards():
+        with pytest.raises(ValueError, match="rerank_source"):
+            pq_index_probe(spark, path, q, k=10, rerank=20)
+        with pytest.raises(ValueError, match="must be >= k"):
+            pq_index_probe(spark, path, q, k=10, rerank=5,
+                           rerank_source=emb)
+
+    assert _jobs_started(spark, guards) == 0
 
     res = pq_index_probe(spark, path, q, k=10, rerank=20,
                          rerank_source=emb)
@@ -3078,11 +3104,13 @@ def test_batch_rerank_relational_guards_and_plan(spark, tmp_path):
     """ivfpq_batch_probe(rerank=R) — the batch refine tier stays
     relational: candidate selection plans as WindowGroupLimit (no
     driver collect of Q x R rows), the guards refuse a missing
-    source and R < k, per-query output is k rows ordered by exact
+    source and R < k before any job runs (the single IVF-PQ probe's
+    guards too), per-query output is k rows ordered by exact
     distance, and the RESIDUAL layout composes too (pinned below at
     nprobe=n_cells, R=N against the exact batch top-k)."""
     from goflow2clickhouse_spark.plans.storage import (
         ivfpq_batch_probe,
+        ivfpq_probe,
         write_ivfpq_index,
     )
 
@@ -3093,11 +3121,22 @@ def test_batch_rerank_relational_guards_and_plan(spark, tmp_path):
     qs = emb.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    with pytest.raises(ValueError, match="rerank_source"):
-        ivfpq_batch_probe(spark, path, qs, k=5, rerank=10).collect()
-    with pytest.raises(ValueError, match="must be >= k"):
-        ivfpq_batch_probe(spark, path, qs, k=5, rerank=3,
-                          rerank_source=emb)
+    q = emb.filter(F.col("vec_id") == 0)
+
+    def guards():
+        with pytest.raises(ValueError, match="rerank_source"):
+            ivfpq_batch_probe(spark, path, qs, k=5, rerank=10).collect()
+        with pytest.raises(ValueError, match="must be >= k"):
+            ivfpq_batch_probe(spark, path, qs, k=5, rerank=3,
+                              rerank_source=emb)
+        # the single probe's guards, before its ranked-cells collect
+        with pytest.raises(ValueError, match="rerank_source"):
+            ivfpq_probe(spark, path, q, k=5, rerank=10)
+        with pytest.raises(ValueError, match="must be >= k"):
+            ivfpq_probe(spark, path, q, k=5, rerank=3, rerank_source=emb)
+
+    # refused before the batch is persisted or its contract aggregated
+    assert _jobs_started(spark, guards) == 0
     res = ivfpq_batch_probe(spark, path, qs, k=5, nprobe=2,
                             rerank=10, rerank_source=emb)
     rows = res.collect()
@@ -3156,11 +3195,14 @@ def test_pq_batch_rerank_full_R_equals_exact(spark, tmp_path):
     qs = emb.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    with pytest.raises(ValueError, match="rerank_source"):
-        pq_index_batch_probe(spark, path, qs, k=5, rerank=10).collect()
-    with pytest.raises(ValueError, match="must be >= k"):
-        pq_index_batch_probe(spark, path, qs, k=5, rerank=3,
-                             rerank_source=emb)
+    def guards():
+        with pytest.raises(ValueError, match="rerank_source"):
+            pq_index_batch_probe(spark, path, qs, k=5, rerank=10).collect()
+        with pytest.raises(ValueError, match="must be >= k"):
+            pq_index_batch_probe(spark, path, qs, k=5, rerank=3,
+                                 rerank_source=emb)
+
+    assert _jobs_started(spark, guards) == 0
     n = emb.count()
     full = pq_index_batch_probe(spark, path, qs, k=5, rerank=int(n),
                                 rerank_source=emb)

@@ -185,18 +185,21 @@ def test_foreach_batch_stream_matches_batch_twin_per_batch(spark, tmp_path):
         chunks.append(rows)
 
     def write_chunk(n):
-        spark.createDataFrame(
-            chunks[n], "etype string, uid long"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            str(indir / f"chunk{n}")
-        )
-        # file source watches a flat dir: link the part file in
+        # stage outside the watched dir, copy in under a `_` name (the
+        # file source skips those), then rename atomically: a trigger
+        # never lists a half-written or vanishing file
         import glob
+        import os
         import shutil
 
-        for f in glob.glob(str(indir / f"chunk{n}" / "part-*.parquet")):
-            shutil.copy(f, str(indir / f"batch{n}.parquet"))
-        shutil.rmtree(str(indir / f"chunk{n}"))
+        stage = tmp_path / "stage" / f"chunk{n}"
+        spark.createDataFrame(
+            chunks[n], "etype string, uid long"
+        ).coalesce(1).write.mode("overwrite").parquet(str(stage))
+        for f in glob.glob(str(stage / "part-*.parquet")):
+            tmp = str(indir / f"_batch{n}.parquet")
+            shutil.copy(f, tmp)
+            os.replace(tmp, str(indir / f"batch{n}.parquet"))
 
     write_chunk(0)
     stream = (

@@ -5,11 +5,15 @@ inside a docstring (the string that opens a module, class or function
 body). Prints one `<count> <path>` line per file, then the total:
 
     python3 tools/code_lines.py goflow2clickhouse_spark/plans/storage.py
+
+With no arguments it counts every `goflow2clickhouse_spark/**/*.py`.
 """
 
 from __future__ import annotations
 
 import ast
+import glob
+import os
 import sys
 
 
@@ -55,4 +59,10 @@ def main(paths: list[str]) -> None:
 
 
 if __name__ == "__main__":
-    main(sys.argv[1:])
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    main(sys.argv[1:] or sorted(
+        os.path.relpath(p) for p in glob.glob(
+            os.path.join(root, "goflow2clickhouse_spark", "**", "*.py"),
+            recursive=True,
+        )
+    ))
