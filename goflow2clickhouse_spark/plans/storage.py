@@ -21,6 +21,7 @@ from typing import Callable, NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import dedup as _dedup
 from ..operators import similarity as _sim
 from ..schema import local_rel as _local_rel
 
@@ -96,8 +97,8 @@ def write_ivf_index(
     """Persist the IVF-assigned embeddings partitioned by cell; probes
     then read only the probed cells' directories. Pass `centroids_row`
     to build against precomputed (e.g. already-materialized) centroids;
-    returns the centroid row used, so callers can persist it alongside
-    (the filtered layout does)."""
+    returns the centroid row used, so callers can persist it
+    alongside."""
     from ..operators.similarity import ivf_assign, ivf_centroids
 
     cents = (
@@ -239,18 +240,6 @@ def eligible_embeddings(
     return embeddings.join(ok, "vec_id", "left_semi")
 
 
-def _ivf_current_version(spark: SparkSession, path: str) -> int:
-    """Committed index version from `<path>/_CURRENT`; 0 when none.
-    Resolved through the Hadoop FileSystem API (versioned.py) so the
-    metadata lives on the SAME filesystem as the parquet cells —
-    driver-local os.* calls on _CURRENT would silently break the
-    atomicity contract on any non-local path."""
-    from ..versioned import current_version
-
-    return current_version(spark, path)
-
-
-@_meta_locked
 def write_filtered_ivf_index(
     documents: DataFrame,
     embeddings: DataFrame,
@@ -271,76 +260,28 @@ def write_filtered_ivf_index(
     because probes must rank cells with exactly the centroids the
     build used. The filter pays once at build, not per query.
 
-    ATOMIC builds: cells + centroids land under
-    `<path>/v{N}/` and `<path>/_CURRENT` commits LAST via atomic
-    rename — the versioned.py pattern. A build that dies mid-write
-    leaves _CURRENT on the previous complete version, so a probe can
-    never pair one build's centroids with another build's cell
-    assignments (a torn index silently degrades recall: cells were
-    argmax-assigned against DIFFERENT centroids). This also removes
-    the append failure mode — every build is a full self-consistent
-    version; versions beyond `keep_versions` are pruned. ALL metadata
-    I/O routes through the Hadoop FileSystem API: an os.replace
-    commit only works when the index path is on the driver's local
-    disk.
+    ATOMIC builds: cells + centroids land under `<path>/v{N}/` and
+    `<path>/_CURRENT` commits LAST via atomic rename (_build). A build
+    that dies mid-write leaves _CURRENT on the previous complete
+    version, so a probe can never pair one build's centroids with
+    another build's cell assignments (a torn index silently degrades
+    recall: cells were argmax-assigned against DIFFERENT centroids).
+    Versions beyond `keep_versions` are pruned.
 
-    Build = eligibility gate feeding the SAME write_ivf_index path the
-    unfiltered layout uses; the 1-row centroid relation is
-    localCheckpoint'ed so the eligible subtree runs once for the
-    centroid build and once for the assignment write, and its blocks
-    are released deterministically after the writes."""
-    import posixpath
-
-    from ..operators.dedup import _ckpt_rdd_ids, _release_rdds
-    from ..operators.similarity import ivf_centroids, ivf_centroids_trained
-
-    spark = documents.sparkSession
-    eligible = eligible_embeddings(documents, embeddings, min_chars, lang)
-    ver = _ivf_current_version(spark, path) + 1
-    base, _vtok = _stage_version(spark, path)
-    # coarse_train_iterations > 0: Lloyd-refine the seed centroids
-    # over the ELIGIBLE corpus before assignment — one eligible scan
-    # per iteration, paid at build time only; recorded below so
-    # probes can pin the regime
-    cents_rel = (
-        ivf_centroids_trained(eligible, n_cells, coarse_train_iterations)
-        if coarse_train_iterations > 0
-        else ivf_centroids(eligible, n_cells)
-    )
-    cents = cents_rel.localCheckpoint(eager=True)
-    try:
-        if not cents.first()["_cents"]:
-            # committing an empty build would write a cells/ dir
-            # holding only _SUCCESS — schema-less, poisoning every
-            # probe until a rebuild (write_band_index's twin).
-            # Checked on the already-materialized checkpointed
-            # centroid row — a separate eligible.isEmpty() would cost
-            # one more full evaluation of the eligibility semi-join.
-            raise ValueError(
-                f"filtered-IVF build over {path}: eligible set is empty "
-                f"(min_chars={min_chars}, lang={lang!r}) — nothing to index"
-            )
-        write_ivf_index(
-            eligible, posixpath.join(base, "cells"), n_cells,
-            centroids_row=cents,
-        )
-        cents.write.mode("overwrite").parquet(
-            posixpath.join(base, "centroids")
-        )
-    finally:
-        _release_rdds(spark.sparkContext, _ckpt_rdd_ids(cents))
-    # record the build parameters so probes can refuse a mismatched
-    # index: a rebuild with different n_cells/eligibility would
-    # silently serve a different geometry than the caller assumes
-    _commit_staged_version(
-        spark, path, base, ver, _vtok,
-        extra={"n_cells": n_cells, "min_chars": min_chars, "lang": lang,
-               "coarse_train_iters": int(coarse_train_iterations)},
-        keep_versions=keep_versions,
+    `coarse_train_iterations` > 0 Lloyd-refines the seed centroids
+    over the eligible corpus (one eligible scan per iteration, build
+    time only); it is recorded so probes can pin the regime. The
+    build parameters are recorded so probes can refuse a mismatched
+    index. An empty eligible set refuses. Shared build contract:
+    _build."""
+    _build(
+        "ivf", embeddings, path, keep_versions,
+        {"n_cells": n_cells, "min_chars": min_chars, "lang": lang,
+         "coarse_train_iters": int(coarse_train_iterations)},
+        documents=documents,
     )
 
 
-@_meta_locked
 def append_to_ivf_index(
     documents: DataFrame,
     embeddings: DataFrame,
@@ -353,23 +294,8 @@ def append_to_ivf_index(
     (`appends/a{j}.{8-hex}/cells/cell=*/`). Appended vectors join
     cells seeded from the original build's centroids; after heavy
     drift, rebuild (write_filtered_ivf_index). An eligible-empty batch
-    counts as empty. Shared append contract: _append_delta."""
-    import posixpath
-
-    from ..operators.similarity import ivf_assign
-
-    spark = documents.sparkSession
-
-    def write(eligible, meta, base, delta):
-        cents = spark.read.parquet(posixpath.join(base, "centroids"))
-        ivf_assign(eligible, cents).write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(posixpath.join(delta, "cells"))
-
-    _append_delta(
-        spark, path, "ivf", None, extra,
-        _recorded_eligible(documents, embeddings), write,
-    )
+    counts as empty. Shared append contract: _append."""
+    _append("ivf", embeddings, path, extra, documents=documents)
 
 
 def _stage_version(spark: SparkSession, path: str) -> tuple[str, str]:
@@ -593,6 +519,19 @@ def _observed(df: DataFrame):
     return counted, lambda: obs.get["n"]
 
 
+def _write_leg(
+    rel: DataFrame, out: str, leg: str, part_col: str | None = None
+) -> None:
+    """Write one leg of an index version or delta to `<out>/<leg>/`,
+    hive-partitioned by `part_col` when given."""
+    import posixpath
+
+    w = rel.write.mode("overwrite")
+    if part_col is not None:
+        w = w.partitionBy(part_col)
+    w.parquet(posixpath.join(out, leg))
+
+
 def _write_delta(
     spark: SparkSession, path: str, meta: dict, base: str, family: str,
     extra: dict | None, rows: DataFrame, write,
@@ -632,42 +571,6 @@ def _write_delta(
     if extra:
         recommit_meta(spark, path, meta, extra=extra)
     return 0
-
-
-def _append_delta(
-    spark: SparkSession, path: str, kind: str, geometry: dict | None,
-    extra: dict | None, rows, write,
-) -> None:
-    """The one append path of the seven layouts: fold a batch into the
-    committed version as a delta, never reading or rewriting the
-    existing legs. The metadata gate runs first; `rows(meta)` builds
-    the batch's rows from the RECORDED metadata (eligibility gate, id
-    column, shingle width — never caller arguments); _write_delta
-    writes the layout's legs and commits. Each layout's writer reads
-    its rows once.
-
-    Quantizers and centroids are read from the committed version,
-    never re-derived; a rebuild bumps the version and resets the
-    counter, and compact_index folds the deltas into a new base.
-    Dedup across batches is the caller's contract."""
-    meta, base = _committed_index(spark, path, kind, geometry)
-    _write_delta(spark, path, meta, base, "appends", extra, rows(meta), write)
-
-
-def _recorded_eligible(documents: DataFrame, embeddings: DataFrame):
-    """rows() of the gated layouts (IVF, IVF-PQ): the eligibility gate
-    with the min_chars/lang RECORDED at build time."""
-    return lambda meta: eligible_embeddings(
-        documents, embeddings, int(meta["min_chars"]), str(meta["lang"])
-    )
-
-
-def _id_vectors(batch: DataFrame, vec_col: str):
-    """rows() of the ungated vector layouts (PQ, SQ, IVF-SQ): the
-    batch's recorded id column and its vectors."""
-    return lambda meta: batch.select(
-        F.col(str(meta.get("id_col", "vec_id"))), F.col(vec_col)
-    )
 
 
 def _read_tombstones(
@@ -749,7 +652,7 @@ def _read_index_cells(
 
 def _collect_single_probe_cells(
     op: str, query: DataFrame, cents: DataFrame, nprobe: int,
-    batch_hint: str,
+    batch_hint: str, vec_col: str,
 ) -> tuple[list[int], list[float]]:
     """The cell layouts' driver-side step of a single probe: collect
     ALL ranked cells for the query (bounded — one row per stored
@@ -776,7 +679,7 @@ def _collect_single_probe_cells(
     n_cells (eligible set smaller than the knob) serves normally: the
     row count is whatever the centroid array holds, never compared
     against the recorded knob."""
-    qrows = _sim.rank_probe_cells(query, cents, None).collect()
+    qrows = _sim.rank_probe_cells(query, cents, None, vec_col).collect()
     if not qrows:
         raise ValueError(
             f"{op} serves exactly one query vector, got 0 rows"
@@ -902,6 +805,213 @@ def _ivfpq_batch(p, data):
     return data.join(F.broadcast(side), "cell"), _sim.pq_adc_dist()
 
 
+# The layouts' codecs: one rows/train/encode triple per layout, shared
+# by its build (_build, into the staged version) and its append
+# (_append, into a delta directory), so each leg's encoding exists once.
+#
+#   rows(batch, meta, **cols) -> the caller's batch normalized with the
+#       recorded (or, at build, to-be-recorded) metadata: the
+#       eligibility gate, the id column, the vector/text/hash column;
+#   train(rows, meta, put) -> False for an empty input, checked before
+#       training; each quantizer leg goes through `put(leg, rel)`, which
+#       writes it and returns its read-back. Band and pHash have no
+#       quantizers and no train;
+#   encode(rows, arts, meta, out) -> writes the data legs under `out`
+#       against the quantizers `arts`; band and pHash return the row
+#       count of their first leg, which a build refuses at 0.
+
+PHASH_BANDS = 4  # four 16-bit bands: pigeonhole-complete for hamming <= 3
+
+
+def _idc(meta: dict, default: str = "vec_id") -> str:
+    return str(meta.get("id_col", default))
+
+
+def _gated_rows(batch, meta, documents):
+    """IVF, IVF-PQ: the batch's vectors that pass the recorded
+    min_chars/lang gate (eligible_embeddings)."""
+    return eligible_embeddings(
+        documents, batch, int(meta["min_chars"]), str(meta["lang"])
+    )
+
+
+def _vector_rows(batch, meta, vec_col="embedding"):
+    """PQ, SQ, IVF-SQ: the recorded id column and the vectors, named
+    `embedding` for the codecs."""
+    return batch.select(F.col(_idc(meta)), F.col(vec_col).alias("embedding"))
+
+
+def _band_rows(batch, meta, text_col="text", id_col="doc_id"):
+    return batch.select(
+        F.col(id_col).alias(_idc(meta, "doc_id")),
+        F.col(text_col).alias("text"),
+    )
+
+
+def _phash_rows(batch, meta, id_col="doc_id", hash_col="phash"):
+    return batch.select(
+        F.col(id_col).alias(_idc(meta, "doc_id")),
+        F.col(hash_col).cast("long").alias("phash"),
+    )
+
+
+def _coarse_centroids(rows, meta, seeds):
+    """The IVF coarse quantizer: the lowest-id vectors of `seeds`, or
+    with `coarse_train_iters` > 0 Lloyd-refined over all of `rows`
+    (one scan per iteration, build time only)."""
+    n, iters = meta["n_cells"], int(meta["coarse_train_iters"])
+    if iters > 0:
+        return _sim.ivf_centroids_trained(
+            rows, n, iters, "embedding", _idc(meta)
+        )
+    return _sim.ivf_centroids(seeds, n, "embedding", _idc(meta))
+
+
+def _ivf_train(rows, meta, put) -> bool:
+    from ..operators.dedup import _ckpt_rdd_ids, _release_rdds
+
+    # checkpointed, so the eligible subtree runs once for the centroids
+    # and once for the assignment
+    cents = _coarse_centroids(rows, meta, rows).localCheckpoint(eager=True)
+    try:
+        # read off the materialized centroid row: an isEmpty() would
+        # evaluate the eligibility semi-join once more
+        if not cents.first()["_cents"]:
+            return False
+        put("centroids", cents)
+    finally:
+        _release_rdds(rows.sparkSession.sparkContext, _ckpt_rdd_ids(cents))
+    return True
+
+
+def _pq_train(rows, meta, put) -> bool:
+    if rows.isEmpty():
+        return False
+    iters, idc = int(meta["pq_train_iters"]), _idc(meta)
+    put("codebook", (
+        _sim.pq_codebook_trained(rows, iters, "embedding", idc)
+        if iters > 0
+        else _sim.pq_codebook(rows, "embedding", idc)
+    ))
+    return True
+
+
+def _sq_train(rows, meta, put) -> bool:
+    if rows.isEmpty():
+        return False
+    put("quantizer", _sim.sq_quantizer(rows))
+    return True
+
+
+def _ivfsq_train(rows, meta, put) -> bool:
+    if rows.isEmpty():
+        return False
+    put("centroids", _coarse_centroids(rows, meta, rows))
+    put("quantizer", _sim.sq_quantizer(rows))
+    return True
+
+
+def _ivfpq_train(rows, meta, put) -> bool:
+    from ..operators.dedup import _ckpt_rdd_ids, _release_rdds
+
+    # both seed relations derive from the lowest-id prefix of the
+    # eligible set, so one TakeOrdered pass materializes it for both
+    low = (
+        rows.orderBy("vec_id")
+        .limit(max(meta["n_cells"], _sim.PQ_K))
+        .localCheckpoint(eager=True)
+    )
+    try:
+        if low.isEmpty():
+            return False
+        cents = put("centroids", _coarse_centroids(rows, meta, low))
+        iters = int(meta["pq_train_iters"])
+        if iters > 0:
+            # Lloyd-refined over the distribution the codes quantize
+            # (Jégou §II-B), seeded from the same lowest-id prefix
+            rel, vec = _ivfpq_input(rows, cents, meta)
+            cb = _sim.pq_codebook_trained(rel, iters, vec)
+        else:
+            rel, vec = (
+                _ivfpq_input(low, cents, meta) if meta["residual"]
+                else (low, "embedding")
+            )
+            cb = _sim.pq_codebook(rel, vec)
+        put("codebook", cb)
+    finally:
+        _release_rdds(rows.sparkSession.sparkContext, _ckpt_rdd_ids(low))
+    return True
+
+
+def _ivf_encode(rows, arts, meta, out) -> None:
+    cells = _sim.ivf_assign(rows, arts["centroids"])
+    _write_leg(cells, out, "cells", "cell")
+
+
+def _pq_encode(rows, arts, meta, out) -> None:
+    codes = _sim.pq_encode(rows, arts["codebook"], "embedding", _idc(meta))
+    _write_leg(codes, out, "codes")
+
+
+def _sq_encode(rows, arts, meta, out) -> None:
+    codes = _sim.sq_encode(rows, arts["quantizer"], "embedding", _idc(meta))
+    _write_leg(codes, out, "codes")
+
+
+def _ivfsq_encode(rows, arts, meta, out) -> None:
+    codes = _sim.sq_encode(
+        _sim.ivf_assign(rows, arts["centroids"]), arts["quantizer"],
+        "embedding", _idc(meta), keep=("cell",),
+    )
+    _write_leg(codes, out, "cells", "cell")
+
+
+def _ivfpq_input(rows, cents, meta):
+    """(relation, vector column) the IVF-PQ codes quantize: the
+    cell-assigned vectors, or with `residual` (IVFADC, Jégou §V) their
+    residuals to the assigned centroid, which centers the 4-bit budget
+    on the within-cell distribution."""
+    cells = _sim.ivf_assign(rows, cents)
+    if meta.get("residual"):
+        return _sim.ivf_residual(cells, cents), "residual"
+    return cells, "embedding"
+
+
+def _ivfpq_encode(rows, arts, meta, out) -> None:
+    rel, vec = _ivfpq_input(rows, arts["centroids"], meta)
+    codes = _sim.pq_encode(rel, arts["codebook"], vec, keep=("cell",))
+    _write_leg(codes, out, "cells", "cell")
+
+
+def _band_encode(rows, arts, meta, out) -> int:
+    import posixpath
+
+    idc = _idc(meta, "doc_id")
+    shingles, count = _observed(
+        _dedup.shingle_arrays(rows, "text", idc, int(meta["n"]))
+    )
+    _write_leg(shingles, out, "shingles")
+    # bands derive from the written shingles, never from a second text
+    # scan; shas carry the doc id so deletion can address a doc's hash
+    sh = rows.sparkSession.read.parquet(posixpath.join(out, "shingles"))
+    bands = _dedup.band_key_rows(_dedup.array_minhash_sigs(sh, idc), idc)
+    _write_leg(bands, out, "bands", "band_no")
+    shas = rows.select(F.col(idc), F.sha2(F.col("text"), 256).alias("_sha"))
+    _write_leg(shas.distinct(), out, "shas")
+    return count()
+
+
+def _phash_encode(rows, arts, meta, out) -> int:
+    import posixpath
+
+    hashes, count = _observed(rows)
+    _write_leg(hashes, out, "hashes")
+    hs = rows.sparkSession.read.parquet(posixpath.join(out, "hashes"))
+    _write_leg(_phash_band_rows(hs, _idc(meta, "doc_id")), out, "bands",
+               "band_no")
+    return count()
+
+
 class _Layout(NamedTuple):
     """One row of the layout table: what the generic index verbs need
     to know about a layout. A new layout adds one row.
@@ -910,11 +1020,21 @@ class _Layout(NamedTuple):
     compaction unions each over base + deltas into the new base, and
     probes scan the first. `quantizers` are the 1-row artifacts
     compaction copies verbatim and probes read through
-    _version_artifacts. The probe fields exist on the vector layouts
-    only: the unconditional `geometry` pin, the probe names (the
-    batch name is also the single probe's hint for query batches),
-    the query dimension `dim`, the score column and its order, the
-    extra output `cols`, and the single and batch scorers."""
+    _version_artifacts. `geometry` is the unconditional pin every
+    append and probe checks and every build records. The probe fields
+    exist on the vector layouts only: the probe names (the batch name
+    is also the single probe's hint for query batches), the query
+    dimension `dim`, the score column and its order, the extra output
+    `cols`, and the single and batch scorers.
+
+    The write fields: the `rows`/`train`/`encode` codec, the build's
+    refusal reason for an empty input (`empty`, formatted with the
+    metadata), whether appends read the quantizers through the
+    per-commit cache (`cached_arts`) instead of parquet, and whether
+    an append caches its batch (`cache`: the band codec reads it
+    twice). `maintain` names the maintenance path of a layout whose
+    batches are not vectors; the vector layouts leave it empty and
+    are folded by streaming/indexing.index_maintenance_fold."""
 
     label: str
     data: tuple
@@ -928,12 +1048,25 @@ class _Layout(NamedTuple):
     cols: tuple = ()
     score_one: Callable | None = None
     score_batch: Callable | None = None
+    rows: Callable = _vector_rows
+    train: Callable | None = None
+    encode: Callable | None = None
+    empty: str = "corpus is empty"
+    cached_arts: bool = False
+    cache: bool = False
+    maintain: str = ""
 
     @property
     def cells(self) -> bool:
         """The data leg is partitioned by IVF cell: probes rank cells
         and partition-prune the scan to the probed ones."""
         return self.data[0][1] == "cell"
+
+    @property
+    def gated(self) -> bool:
+        """Rows pass the recorded eligibility gate, so a build or an
+        append needs the `documents` side."""
+        return self.rows is _gated_rows
 
     @property
     def order(self):
@@ -946,45 +1079,162 @@ _CELLS = (("cells", "cell", False),)
 _CODES = (("codes", None, False),)
 _PQ_PIN = {"pq_m": _sim.PQ_M, "pq_sub": _sim.PQ_SUB, "pq_k": _sim.PQ_K}
 _SQ_PIN = {"sq_buckets": _sim.SQ_BUCKETS, "dim": _sim.DIM}
+_NO_ELIGIBLE = "eligible set is empty (min_chars={min_chars}, lang={lang!r})"
 
 _LAYOUTS = {
     "band": _Layout(
         "band",
         (("shingles", None, False), ("bands", "band_no", False),
          ("shas", None, True)),
+        geometry={"num_perm": _dedup.NUM_PERM, "bands": _dedup.BANDS},
+        rows=_band_rows, encode=_band_encode, cache=True,
+        empty="corpus produced no shingles (every doc shorter than "
+              "n={n} words?)",
+        maintain="streaming/dedupe.py's streaming_incremental_dedup",
     ),
     "phash": _Layout(
-        "pHash band", (("hashes", None, False), ("bands", "band_no", False))
+        "pHash band", (("hashes", None, False), ("bands", "band_no", False)),
+        geometry={"phash_bands": PHASH_BANDS},
+        rows=_phash_rows, encode=_phash_encode,
+        empty="the hash relation is empty", maintain="append_to_phash_index",
     ),
     "ivf": _Layout(
         "IVF", _CELLS, ("centroids",),
         probe="ivf_index_probe", batch="ivf_batch_probe", dim=_sim.DIM,
         score="cos_sim", desc=True,
         score_one=_ivf_one, score_batch=_ivf_batch,
+        rows=_gated_rows, train=_ivf_train, encode=_ivf_encode,
+        empty=_NO_ELIGIBLE,
     ),
     "pq": _Layout(
         "PQ", _CODES, ("codebook",), _PQ_PIN,
         probe="pq_index_probe", batch="pq_index_batch_probe",
         dim=_sim.PQ_M * _sim.PQ_SUB, cols=("pq_code",),
         score_one=_pq_one, score_batch=_pq_batch,
+        train=_pq_train, encode=_pq_encode,
     ),
     "sq": _Layout(
         "SQ", _CODES, ("quantizer",), _SQ_PIN,
         probe="sq_index_probe", batch="sq_index_batch_probe", dim=_sim.DIM,
         score_one=_sq_one, score_batch=_sq_batch,
+        train=_sq_train, encode=_sq_encode, cached_arts=True,
     ),
     "ivfsq": _Layout(
         "IVF-SQ", _CELLS, ("centroids", "quantizer"), _SQ_PIN,
         probe="ivfsq_probe", batch="ivfsq_batch_probe", dim=_sim.DIM,
         score_one=_ivfsq_one, score_batch=_ivfsq_batch,
+        train=_ivfsq_train, encode=_ivfsq_encode, cached_arts=True,
     ),
     "ivfpq": _Layout(
         "IVF-PQ", _CELLS, ("centroids", "codebook"), _PQ_PIN,
         probe="ivfpq_probe", batch="ivfpq_batch_probe",
         dim=_sim.PQ_M * _sim.PQ_SUB, cols=("pq_code",),
         score_one=_ivfpq_one, score_batch=_ivfpq_batch,
+        rows=_gated_rows, train=_ivfpq_train, encode=_ivfpq_encode,
+        empty=_NO_ELIGIBLE,
     ),
 }
+
+
+@_meta_locked
+def _build(
+    kind: str, batch: DataFrame, path: str, keep_versions: int,
+    params: dict, **cols,
+) -> None:
+    """The one build path of the seven layouts: a full new version,
+    written under a staging directory and committed last.
+
+      1. the version bump and the staging directory (_stage_version);
+      2. the metadata to record, `{**row.geometry, **params}` (params
+         hold the id column where the layout has one and the build
+         parameters); `rows` normalizes the batch with it;
+      3. `train` writes the quantizer legs, each read back (with the
+         schema it was written with, so no inference job) so codes
+         and cells pair only with this build's quantizers;
+      4. `encode` writes the data legs;
+      5. an empty input (train's verdict, or encode's count of 0)
+         deletes the staging directory and refuses, since a committed
+         empty build would poison every reader until a rebuild;
+      6. `_commit_staged_version` claims `v{N}` and commits `_CURRENT`.
+
+    A build that dies mid-write leaves `_CURRENT` on the previous
+    complete version."""
+    import posixpath
+
+    from ..versioned import _fs, current_version
+
+    lay = _LAYOUTS[kind]
+    spark = batch.sparkSession
+    meta = {**(lay.geometry or {}), **params}
+    rows = lay.rows(batch, meta, **cols)
+    ver = current_version(spark, path) + 1
+    base, token = _stage_version(spark, path)
+    arts = {}
+
+    def put(leg: str, rel: DataFrame) -> DataFrame:
+        _write_leg(rel, base, leg)
+        arts[leg] = spark.read.schema(rel.schema).parquet(
+            posixpath.join(base, leg)
+        )
+        return arts[leg]
+
+    if (lay.train and not lay.train(rows, meta, put)) or (
+        lay.encode(rows, arts, meta, base) == 0
+    ):
+        fs, staged = _fs(spark, base)
+        fs.delete(staged, True)
+        raise ValueError(
+            f"{lay.label} index build over {path}: "
+            f"{lay.empty.format(**meta)} — nothing to index"
+        )
+    _commit_staged_version(
+        spark, path, base, ver, token, extra=meta,
+        keep_versions=keep_versions,
+    )
+
+
+@_meta_locked
+def _append(
+    kind: str, batch: DataFrame, path: str, extra: dict | None, **cols
+) -> None:
+    """The one append path of the seven layouts: fold a batch into the
+    committed version as a delta, never reading or rewriting the
+    existing legs. The metadata gate (layout kind and the row's
+    geometry pin) runs first; `rows` builds the batch's rows from the
+    RECORDED metadata (eligibility gate, id column, shingle width —
+    never caller arguments); _write_delta counts them as `encode`
+    writes the layout's legs against the committed quantizers, and
+    commits.
+
+    Quantizers and centroids are read from the committed version,
+    never re-derived; a rebuild bumps the version and resets the
+    counter, and compact_index folds the deltas into a new base.
+    Dedup across batches is the caller's contract."""
+    import posixpath
+
+    lay = _LAYOUTS[kind]
+    spark = batch.sparkSession
+    meta, base = _committed_index(spark, path, kind, lay.geometry)
+
+    def write(rows, meta, base, delta):
+        if lay.cached_arts:
+            arts = _version_artifacts(spark, path, meta, lay.quantizers)
+        else:
+            arts = {
+                q: spark.read.parquet(posixpath.join(base, q))
+                for q in lay.quantizers
+            }
+        rows = rows.persist() if lay.cache else rows
+        try:
+            lay.encode(rows, arts, meta, delta)
+        finally:
+            if lay.cache:
+                rows.unpersist()
+
+    _write_delta(
+        spark, path, meta, base, "appends", extra,
+        lay.rows(batch, meta, **cols), write,
+    )
 
 
 def _check_rerank(op: str, k: int, rerank: int, source) -> None:
@@ -1056,7 +1306,7 @@ def _probe(
     )
     if lay.cells:
         p.probed, p.qv = _collect_single_probe_cells(
-            lay.probe, query, arts["centroids"], nprobe, lay.batch
+            lay.probe, query, arts["centroids"], nprobe, lay.batch, vec_col
         )
         data = _probed_cells(spark, path, base, meta, p.probed)
         p.qrel = _local_rel(spark, [(p.qv,)], "_qv array<double>")
@@ -1452,7 +1702,6 @@ def ivf_batch_probe(
     )
 
 
-@_meta_locked
 def write_band_index(
     corpus: DataFrame,
     path: str,
@@ -1500,53 +1749,12 @@ def write_band_index(
     broadcasts the batch side when small. `shingles` is corpus-sized
     but column-pruned at probe time (doc_id + shs only) and fetched by
     a candidate-id semi-join."""
-    import posixpath
-
-    from ..operators.dedup import (
-        BANDS,
-        NUM_PERM,
-        array_minhash_sigs,
-        band_key_rows,
-        shingle_arrays,
-    )
-    from ..versioned import current_version
-
-    spark = corpus.sparkSession
-    ver = current_version(spark, path) + 1
-    base, _vtok = _stage_version(spark, path)
-    sh_path = posixpath.join(base, "shingles")
-    shingles, count = _observed(shingle_arrays(corpus, text_col, id_col, n))
-    shingles.write.mode("overwrite").parquet(sh_path)
-    if count() == 0:
-        # an all-too-short (or empty) corpus would commit a base whose
-        # partitioned bands leg holds only _SUCCESS — unreadable without
-        # a schema and useless as an index; fail the BUILD loudly
-        raise ValueError(
-            f"band index build over {path}: corpus produced no shingles "
-            f"(every doc shorter than n={n} words?) — nothing to index"
-        )
-    sh = spark.read.parquet(sh_path)
-    band_key_rows(array_minhash_sigs(sh, id_col), id_col).write.mode(
-        "overwrite"
-    ).partitionBy("band_no").parquet(posixpath.join(base, "bands"))
-    # shas carry the doc id: the exact-dup gate only reads the
-    # distinct _sha column, but deletion (delete_from_index) must be
-    # able to address a doc's hash — an unlinked distinct-sha set
-    # could never drop a tombstoned doc's content hash at compaction
-    corpus.select(
-        F.col(id_col), F.sha2(F.col(text_col), 256).alias("_sha")
-    ).distinct().write.mode("overwrite").parquet(
-        posixpath.join(base, "shas")
-    )
-    _commit_staged_version(
-        spark, path, base, ver, _vtok,
-        extra={"n": n, "num_perm": NUM_PERM, "bands": BANDS,
-               "id_col": id_col},
-        keep_versions=keep_versions,
+    _build(
+        "band", corpus, path, keep_versions, {"id_col": id_col, "n": n},
+        text_col=text_col, id_col=id_col,
     )
 
 
-@_meta_locked
 def append_to_band_index(
     batch: DataFrame,
     path: str,
@@ -1562,52 +1770,13 @@ def append_to_band_index(
     delta. Shingle width, id column and LSH geometry come from the
     RECORDED metadata; the num_perm/bands gate is unconditional, since
     banding runs with the CURRENT module constants and a mismatched
-    delta would never match a probe again. A batch whose docs are all
-    shorter than the shingle width commits an empty `bands` leg, which
-    `_union_parquet` reads with the base leg's schema. Shared append
-    contract: _append_delta."""
-    import posixpath
-
-    from ..operators.dedup import (
-        BANDS,
-        NUM_PERM,
-        array_minhash_sigs,
-        band_key_rows,
-        shingle_arrays,
-    )
-
-    spark = batch.sparkSession
-
-    def rows(meta):
-        return batch.select(
-            F.col(id_col).alias(str(meta.get("id_col", "doc_id"))),
-            F.col(text_col).alias("text"),
-        )
-
-    def write(norm, meta, base, delta):
-        idx_id = str(meta.get("id_col", "doc_id"))
-        sh_path = posixpath.join(delta, "shingles")
-        # the one leg writer that reads its rows twice (shingles, shas)
-        norm = norm.persist()
-        try:
-            shingle_arrays(norm, "text", idx_id, int(meta["n"])).write.mode(
-                "overwrite"
-            ).parquet(sh_path)
-            sh = spark.read.parquet(sh_path)
-            band_key_rows(array_minhash_sigs(sh, idx_id), idx_id).write.mode(
-                "overwrite"
-            ).partitionBy("band_no").parquet(posixpath.join(delta, "bands"))
-            norm.select(
-                F.col(idx_id), F.sha2(F.col("text"), 256).alias("_sha")
-            ).distinct().write.mode("overwrite").parquet(
-                posixpath.join(delta, "shas")
-            )
-        finally:
-            norm.unpersist()
-
-    _append_delta(
-        spark, path, "band", {"num_perm": NUM_PERM, "bands": BANDS},
-        extra, rows, write,
+    delta would never match a probe again. The batch is cached for the
+    write: the codec reads it twice (shingles, shas). A batch whose
+    docs are all shorter than the shingle width commits an empty
+    `bands` leg, which `_union_parquet` reads with the base leg's
+    schema. Shared append contract: _append."""
+    _append(
+        "band", batch, path, extra, text_col=text_col, id_col=id_col
     )
 
 
@@ -1757,20 +1926,13 @@ def incremental_neardup_pairs_indexed(
     the candidate count, never the corpus."""
     import posixpath
 
-    from ..operators.dedup import (
-        BANDS,
-        NUM_PERM,
-        _incremental_pairs,
-        shingle_arrays,
-        tie_cache,
-    )
+    from ..operators.dedup import _incremental_pairs, shingle_arrays, tie_cache
     from ..versioned import check_meta
 
     spark = new.sparkSession
     meta, dirs = _band_index_parts(spark, index_path)
     # a silent geometry mismatch would collapse recall with no error
-    check_meta(meta, {"n": n, "num_perm": NUM_PERM, "bands": BANDS},
-               index_path)
+    check_meta(meta, {"n": n, **_LAYOUTS["band"].geometry}, index_path)
     idx_id = str(meta.get("id_col", "doc_id"))
 
     # only the OLD sides differ from the recompute form — both route
@@ -1820,9 +1982,6 @@ def incremental_neardup_pairs_indexed(
 # re-hashing (or even re-reading) the already-ingested corpus.
 # ---------------------------------------------------------------------------
 
-PHASH_BANDS = 4  # four 16-bit bands: pigeonhole-complete for hamming <= 3
-
-
 def _phash_band_rows(
     sigs: DataFrame, id_col: str, hash_col: str = "phash"
 ) -> DataFrame:
@@ -1846,7 +2005,6 @@ def _phash_band_rows(
     return out
 
 
-@_meta_locked
 def write_phash_index(
     sigs: DataFrame,
     path: str,
@@ -1866,8 +2024,8 @@ def write_phash_index(
 
     The band relation derives FROM the written hashes parquet
     (read-back), so a probe can never pair one build's bands with
-    another's hashes. Versioned-atomic via the staged-claim machinery
-    (_stage_version / _commit_staged_version); `_CURRENT` records the
+    another's hashes. Versioned-atomic through the shared build path
+    (_build); `_CURRENT` records the
     band geometry (`phash_bands`) and the probe refuses a mismatch.
 
     100 TB notes: `bands` is partitioned by band_no (4 small fixed
@@ -1876,35 +2034,12 @@ def write_phash_index(
     (delete_from_index), compaction (compact_index) and gc
     (gc_scratch) reuse the shared lifecycle verbs — this layout adds
     no new crash-safety machinery, only a _LAYOUTS row."""
-    import posixpath
-
-    from ..versioned import current_version
-
-    spark = sigs.sparkSession
-    ver = current_version(spark, path) + 1
-    base, _vtok = _stage_version(spark, path)
-    h_path = posixpath.join(base, "hashes")
-    hashes, count = _observed(sigs.select(
-        F.col(id_col), F.col(hash_col).cast("long").alias("phash")
-    ))
-    hashes.write.mode("overwrite").parquet(h_path)
-    if count() == 0:
-        raise ValueError(
-            f"phash index build over {path}: the hash relation is "
-            "empty — nothing to index"
-        )
-    hs = spark.read.parquet(h_path)
-    _phash_band_rows(hs, id_col).write.mode("overwrite").partitionBy(
-        "band_no"
-    ).parquet(posixpath.join(base, "bands"))
-    _commit_staged_version(
-        spark, path, base, ver, _vtok,
-        extra={"phash_bands": PHASH_BANDS, "id_col": id_col},
-        keep_versions=keep_versions,
+    _build(
+        "phash", sigs, path, keep_versions, {"id_col": id_col},
+        id_col=id_col, hash_col=hash_col,
     )
 
 
-@_meta_locked
 def append_to_phash_index(
     batch: DataFrame,
     path: str,
@@ -1915,29 +2050,8 @@ def append_to_phash_index(
     """Fold an ingested image batch's hashes INTO the pHash index — the
     crawl loop's second half: one `appends/a{j}.{8-hex}/{hashes,bands}`
     delta, bands derived from the written hashes. The band geometry
-    gate is unconditional. Shared append contract: _append_delta."""
-    import posixpath
-
-    spark = batch.sparkSession
-
-    def rows(meta):
-        return batch.select(
-            F.col(id_col).alias(str(meta.get("id_col", "doc_id"))),
-            F.col(hash_col).cast("long").alias("phash"),
-        )
-
-    def write(norm, meta, base, delta):
-        h_path = posixpath.join(delta, "hashes")
-        norm.write.mode("overwrite").parquet(h_path)
-        hs = spark.read.parquet(h_path)
-        _phash_band_rows(hs, str(meta.get("id_col", "doc_id"))).write.mode(
-            "overwrite"
-        ).partitionBy("band_no").parquet(posixpath.join(delta, "bands"))
-
-    _append_delta(
-        spark, path, "phash", {"phash_bands": PHASH_BANDS}, extra,
-        rows, write,
-    )
+    gate is unconditional. Shared append contract: _append."""
+    _append("phash", batch, path, extra, id_col=id_col, hash_col=hash_col)
 
 
 def _phash_index_parts(spark: SparkSession, index_path: str):
@@ -1980,7 +2094,7 @@ def incremental_phash_pairs_indexed(
         )
     spark = new_sigs.sparkSession
     meta, dirs = _phash_index_parts(spark, index_path)
-    check_meta(meta, {"phash_bands": PHASH_BANDS}, index_path)
+    check_meta(meta, _LAYOUTS["phash"].geometry, index_path)
     idx_id = str(meta.get("id_col", "doc_id"))
 
     # the batch side is referenced twice (band keys + verify); if it
@@ -2098,7 +2212,6 @@ def semdedup_prune_persisted(
     )
 
 
-@_meta_locked
 def write_pq_index(
     embeddings: DataFrame,
     path: str,
@@ -2125,7 +2238,7 @@ def write_pq_index(
 
     Codes are derived from the READ-BACK codebook parquet, so a probe
     can never pair one build's codes with another's entries.
-    Versioned-atomic via versioned.py; `_CURRENT` records PQ_M/PQ_SUB/
+    Versioned-atomic via _build; `_CURRENT` records PQ_M/PQ_SUB/
     PQ_K and the id column, and the probe REFUSES a geometry mismatch
     (wrong block count silently mis-unpacks every nibble — degraded
     results, no error). Incremental maintenance: new batches can be
@@ -2139,50 +2252,15 @@ def write_pq_index(
     fixed iteration count, so the oracle replays training exactly);
     recorded in `_CURRENT` as `pq_train_iters` so a probe can pin the
     training regime it expects. Appends/probes are untouched either
-    way — they encode/score against the STORED codebook."""
-    import posixpath
-
-    from ..operators.similarity import (
-        PQ_K,
-        PQ_M,
-        PQ_SUB,
-        pq_codebook,
-        pq_codebook_trained,
-        pq_encode,
-    )
-    from ..versioned import current_version
-
-    spark = embeddings.sparkSession
-    if embeddings.isEmpty():
-        # an empty-corpus codebook would be a 1-row empty-entries
-        # relation that NaNs/nulls every future LUT — fail the build
-        # loudly (the write_band_index guard's twin)
-        raise ValueError(
-            f"PQ index build over {path}: corpus is empty — nothing to index"
-        )
-    ver = current_version(spark, path) + 1
-    base, _vtok = _stage_version(spark, path)
-    cb_path = posixpath.join(base, "codebook")
-    cb_rel = (
-        pq_codebook_trained(embeddings, train_iterations, vec_col, id_col)
-        if train_iterations > 0
-        else pq_codebook(embeddings, vec_col, id_col)
-    )
-    cb_rel.write.mode("overwrite").parquet(cb_path)
-    cb = spark.read.parquet(cb_path)
-    pq_encode(embeddings, cb, vec_col, id_col).write.mode(
-        "overwrite"
-    ).parquet(posixpath.join(base, "codes"))
-    _commit_staged_version(
-        spark, path, base, ver, _vtok,
-        extra={"pq_m": PQ_M, "pq_sub": PQ_SUB, "pq_k": PQ_K,
-               "id_col": id_col,
-               "pq_train_iters": int(train_iterations)},
-        keep_versions=keep_versions,
+    way — they encode/score against the STORED codebook. An empty
+    corpus refuses before training. Shared build contract: _build."""
+    _build(
+        "pq", embeddings, path, keep_versions,
+        {"id_col": id_col, "pq_train_iters": int(train_iterations)},
+        vec_col=vec_col,
     )
 
 
-@_meta_locked
 def append_to_pq_index(
     batch: DataFrame,
     path: str,
@@ -2195,23 +2273,8 @@ def append_to_pq_index(
     CURRENT module constants), and the layout gate comes first: an
     IVF-PQ index records the same geometry, and a codes-only delta
     there would break every probe. Rebuild is the moment to re-derive
-    the codebook after drift. Shared append contract: _append_delta."""
-    import posixpath
-
-    from ..operators.similarity import PQ_K, PQ_M, PQ_SUB, pq_encode
-
-    spark = batch.sparkSession
-
-    def write(rows, meta, base, delta):
-        cb = spark.read.parquet(posixpath.join(base, "codebook"))
-        pq_encode(
-            rows, cb, vec_col, str(meta.get("id_col", "vec_id"))
-        ).write.mode("overwrite").parquet(posixpath.join(delta, "codes"))
-
-    _append_delta(
-        spark, path, "pq", {"pq_m": PQ_M, "pq_sub": PQ_SUB, "pq_k": PQ_K},
-        extra, _id_vectors(batch, vec_col), write,
-    )
+    the codebook after drift. Shared append contract: _append."""
+    _append("pq", batch, path, extra, vec_col=vec_col)
 
 
 def pq_index_probe(
@@ -2278,7 +2341,6 @@ def pq_index_batch_probe(
     )
 
 
-@_meta_locked
 def write_sq_index(
     embeddings: DataFrame,
     path: str,
@@ -2310,38 +2372,12 @@ def write_sq_index(
     min/max ranges are exact aggregates, so rebuild determinism needs
     no sampling tricks. Appends encode new batches against the STORED
     quantizer (out-of-range values saturate — sq_encode's clamp);
-    compaction folds deltas like every other layout."""
-    import posixpath
-
-    from ..operators.similarity import DIM, SQ_BUCKETS, sq_encode, sq_quantizer
-    from ..versioned import current_version
-
-    spark = embeddings.sparkSession
-    if embeddings.isEmpty():
-        # an empty-corpus quantizer is all-NULL lo/hi — every future
-        # encode would emit NULL codes silently (the write_pq_index
-        # empty-build guard's twin)
-        raise ValueError(
-            f"SQ index build over {path}: corpus is empty — nothing to index"
-        )
-    ver = current_version(spark, path) + 1
-    base, _vtok = _stage_version(spark, path)
-    q_path = posixpath.join(base, "quantizer")
-    sq_quantizer(embeddings, vec_col).write.mode(
-        "overwrite"
-    ).parquet(q_path)
-    quant = spark.read.parquet(q_path)
-    sq_encode(embeddings, quant, vec_col, id_col).write.mode(
-        "overwrite"
-    ).parquet(posixpath.join(base, "codes"))
-    _commit_staged_version(
-        spark, path, base, ver, _vtok,
-        extra={"sq_buckets": SQ_BUCKETS, "dim": DIM, "id_col": id_col},
-        keep_versions=keep_versions,
-    )
+    compaction folds deltas like every other layout. An empty
+    corpus refuses before training. Shared build contract: _build."""
+    _build("sq", embeddings, path, keep_versions, {"id_col": id_col},
+           vec_col=vec_col)
 
 
-@_meta_locked
 def append_to_sq_index(
     batch: DataFrame,
     path: str,
@@ -2352,25 +2388,8 @@ def append_to_sq_index(
     the STORED quantizer into one `appends/a{j}.{8-hex}/codes` delta.
     Values drifting outside the recorded ranges saturate at the clamp;
     rebuild (a new quantizer) is the remedy. Shared append contract:
-    _append_delta."""
-    import posixpath
-
-    from ..operators.similarity import DIM, SQ_BUCKETS, sq_encode
-
-    spark = batch.sparkSession
-
-    def write(rows, meta, base, delta):
-        quant = _version_artifacts(spark, path, meta, ("quantizer",))[
-            "quantizer"
-        ]
-        sq_encode(
-            rows, quant, vec_col, str(meta.get("id_col", "vec_id"))
-        ).write.mode("overwrite").parquet(posixpath.join(delta, "codes"))
-
-    _append_delta(
-        spark, path, "sq", {"sq_buckets": SQ_BUCKETS, "dim": DIM}, extra,
-        _id_vectors(batch, vec_col), write,
-    )
+    _append."""
+    _append("sq", batch, path, extra, vec_col=vec_col)
 
 
 def sq_index_probe(
@@ -2412,7 +2431,6 @@ def sq_index_batch_probe(
     )
 
 
-@_meta_locked
 def write_ivfsq_index(
     embeddings: DataFrame,
     path: str,
@@ -2449,64 +2467,19 @@ def write_ivfsq_index(
     one build's codes with another's ranges); `_CURRENT` records both
     geometries and probes refuse a mismatch. Build cost: one corpus
     scan for the two 1-row quantizer artifacts + one assignment+encode
-    projection pass — no shuffle wider than the partitioned write."""
-    import posixpath
-
-    from ..operators.similarity import (
-        DIM,
-        SQ_BUCKETS,
-        ivf_assign,
-        ivf_centroids,
-        ivf_centroids_trained,
-        sq_encode,
-        sq_quantizer,
-    )
-    from ..versioned import current_version
-
-    spark = embeddings.sparkSession
-    if embeddings.isEmpty():
-        raise ValueError(
-            f"IVF-SQ build over {path}: corpus is empty — nothing to index"
-        )
-    ver = current_version(spark, path) + 1
-    base, _vtok = _stage_version(spark, path)
-    # coarse_train_iterations > 0: Lloyd-refined coarse
-    # quantizer — one corpus scan per iteration at build time;
-    # recorded below so probes can pin the regime
-    cents_rel = (
-        ivf_centroids_trained(
-            embeddings, n_cells, coarse_train_iterations, vec_col, id_col
-        )
-        if coarse_train_iterations > 0
-        else ivf_centroids(embeddings, n_cells, vec_col, id_col)
-    )
-    cents_rel.write.mode("overwrite").parquet(
-        posixpath.join(base, "centroids")
-    )
-    cents = spark.read.parquet(posixpath.join(base, "centroids"))
-    sq_quantizer(embeddings, vec_col).write.mode("overwrite").parquet(
-        posixpath.join(base, "quantizer")
-    )
-    quant = spark.read.parquet(posixpath.join(base, "quantizer"))
-    (
-        sq_encode(
-            ivf_assign(embeddings, cents, vec_col), quant,
-            vec_col, id_col, keep=("cell",),
-        )
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(posixpath.join(base, "cells"))
-    )
-    _commit_staged_version(
-        spark, path, base, ver, _vtok,
-        extra={"n_cells": n_cells, "sq_buckets": SQ_BUCKETS, "dim": DIM,
-               "id_col": id_col,
-               "coarse_train_iters": int(coarse_train_iterations)},
-        keep_versions=keep_versions,
+    projection pass — no shuffle wider than the partitioned write.
+    `coarse_train_iterations` > 0 Lloyd-refines the coarse quantizer
+    (one corpus scan per iteration, recorded so probes can pin the
+    regime). An empty corpus refuses before training. Shared build
+    contract: _build."""
+    _build(
+        "ivfsq", embeddings, path, keep_versions,
+        {"n_cells": n_cells, "id_col": id_col,
+         "coarse_train_iters": int(coarse_train_iterations)},
+        vec_col=vec_col,
     )
 
 
-@_meta_locked
 def append_to_ivfsq_index(
     batch: DataFrame,
     path: str,
@@ -2517,32 +2490,8 @@ def append_to_ivfsq_index(
     against the STORED centroids, encode it against the STORED
     quantizer, and commit one cell-partitioned
     `appends/a{j}.{8-hex}/cells/cell=*/` delta. Shared append
-    contract: _append_delta."""
-    import posixpath
-
-    from ..operators.similarity import DIM, SQ_BUCKETS, ivf_assign, sq_encode
-
-    spark = batch.sparkSession
-
-    def write(rows, meta, base, delta):
-        arts = _version_artifacts(
-            spark, path, meta, ("centroids", "quantizer")
-        )
-        (
-            sq_encode(
-                ivf_assign(rows, arts["centroids"], vec_col),
-                arts["quantizer"], vec_col,
-                str(meta.get("id_col", "vec_id")), keep=("cell",),
-            )
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(posixpath.join(delta, "cells"))
-        )
-
-    _append_delta(
-        spark, path, "ivfsq", {"sq_buckets": SQ_BUCKETS, "dim": DIM},
-        extra, _id_vectors(batch, vec_col), write,
-    )
+    contract: _append."""
+    _append("ivfsq", batch, path, extra, vec_col=vec_col)
 
 
 def ivfsq_probe(
@@ -2591,7 +2540,6 @@ def ivfsq_batch_probe(
     )
 
 
-@_meta_locked
 def write_ivfpq_index(
     documents: DataFrame,
     embeddings: DataFrame,
@@ -2624,7 +2572,7 @@ def write_ivfpq_index(
     and codes are encoded against the READ-BACK codebook so cells can
     never pair with a different build's entries. `_CURRENT` records
     both geometries (n_cells + pq_m/pq_sub/pq_k + the gate) and the
-    probe refuses any mismatch. Versioned-atomic via versioned.py;
+    probe refuses any mismatch. Versioned-atomic via _build;
     rebuild = new version = compaction.
 
     Build cost: both seed relations (centroids, codebook)
@@ -2643,105 +2591,18 @@ def write_ivfpq_index(
     codes quantize; Jégou §II-B) instead of stopping at the
     deterministic seeds; adds one eligible scan per iteration, paid at
     build time only, and is recorded as `pq_train_iters` so probes can
-    pin the training regime."""
-    import posixpath
-
-    from ..operators.dedup import _ckpt_rdd_ids, _release_rdds
-    from ..operators.similarity import (
-        PQ_K,
-        PQ_M,
-        PQ_SUB,
-        ivf_assign,
-        ivf_centroids,
-        ivf_centroids_trained,
-        ivf_residual,
-        pq_codebook,
-        pq_codebook_trained,
-        pq_encode,
-    )
-    from ..versioned import current_version
-
-    spark = documents.sparkSession
-    eligible = eligible_embeddings(documents, embeddings, min_chars, lang)
-    low = (
-        eligible.orderBy("vec_id")
-        .limit(max(n_cells, PQ_K))
-        .localCheckpoint(eager=True)
-    )
-    try:
-        if low.isEmpty():
-            raise ValueError(
-                f"IVF-PQ build over {path}: eligible set is empty "
-                f"(min_chars={min_chars}, lang={lang!r}) — nothing to index"
-            )
-        ver = current_version(spark, path) + 1
-        base, _vtok = _stage_version(spark, path)
-        # coarse_train_iterations > 0: Lloyd-refine the coarse
-        # quantizer over the FULL eligible relation (the seeds derive
-        # from the lowest-id prefix either way, so the untrained
-        # layout is byte-identical to before); one eligible scan per
-        # iteration, build-time only, recorded so probes pin it
-        cents_rel = (
-            ivf_centroids_trained(
-                eligible, n_cells, coarse_train_iterations
-            )
-            if coarse_train_iterations > 0
-            else ivf_centroids(low, n_cells)
-        )
-        cents_rel.write.mode("overwrite").parquet(
-            posixpath.join(base, "centroids")
-        )
-        cents = spark.read.parquet(posixpath.join(base, "centroids"))
-        cb_path = posixpath.join(base, "codebook")
-        # IVFADC (Jégou §V) when `residual`: the codebook is derived
-        # from — and every vector encoded as — the RESIDUAL
-        # v − centroid of its assigned cell, centering the 4-bit
-        # budget on the within-cell distribution. Seeds stay the
-        # lowest-id prefix (run through assignment + residual — same
-        # checkpointed relation, still tiny). ONE write pipeline for
-        # both layouts; only the encode input and column differ.
-        if residual:
-            seed_rel = ivf_residual(ivf_assign(low, cents), cents)
-            enc_rel = ivf_residual(ivf_assign(eligible, cents), cents)
-            vec = "residual"
-        else:
-            seed_rel, enc_rel, vec = (
-                low, ivf_assign(eligible, cents), "embedding"
-            )
-        # Trained codebooks: Lloyd-refine over the FULL encode
-        # relation's subvector distribution (residual or raw — the
-        # distribution the codes will quantize), seeded from the same
-        # lowest-id prefix (pq_codebook(enc_rel) == pq_codebook(
-        # seed_rel): lowest-PQ_K ids of the eligible set either way),
-        # so the untrained layout is byte-identical to before and the
-        # oracle replays training over its existing `e` CTE.
-        cb_rel = (
-            pq_codebook_trained(enc_rel, train_iterations, vec)
-            if train_iterations > 0
-            else pq_codebook(seed_rel, vec)
-        )
-        cb_rel.write.mode("overwrite").parquet(cb_path)
-        cb = spark.read.parquet(cb_path)
-        (
-            pq_encode(enc_rel, cb, vec, keep=("cell",))
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(posixpath.join(base, "cells"))
-        )
-    finally:
-        _release_rdds(spark.sparkContext, _ckpt_rdd_ids(low))
-    _commit_staged_version(
-        spark, path, base, ver, _vtok,
-        extra={"n_cells": n_cells, "min_chars": min_chars, "lang": lang,
-               "pq_m": PQ_M, "pq_sub": PQ_SUB, "pq_k": PQ_K,
-               "residual": residual,
-               "pq_train_iters": int(train_iterations),
-               "coarse_train_iters": int(coarse_train_iterations)},
-        keep_versions=keep_versions,
+    pin the training regime. `coarse_train_iterations` > 0 likewise
+    Lloyd-refines the coarse quantizer over the full eligible set.
+    Shared build contract: _build."""
+    _build(
+        "ivfpq", embeddings, path, keep_versions,
+        {"n_cells": n_cells, "min_chars": min_chars, "lang": lang,
+         "residual": residual, "pq_train_iters": int(train_iterations),
+         "coarse_train_iters": int(coarse_train_iterations)},
+        documents=documents,
     )
 
 
-@_meta_locked
 def append_to_ivfpq_index(
     documents: DataFrame,
     embeddings: DataFrame,
@@ -2755,41 +2616,8 @@ def append_to_ivfpq_index(
     cell-partitioned `appends/a{j}.{8-hex}/cells/cell=*/` delta. The
     PQ geometry gate is unconditional. An eligible-empty batch counts
     as empty. Rebuild is the moment to refresh both quantizers after
-    drift. Shared append contract: _append_delta."""
-    import posixpath
-
-    from ..operators.similarity import (
-        PQ_K,
-        PQ_M,
-        PQ_SUB,
-        ivf_assign,
-        ivf_residual,
-        pq_encode,
-    )
-
-    spark = documents.sparkSession
-
-    def write(eligible, meta, base, delta):
-        cents = spark.read.parquet(posixpath.join(base, "centroids"))
-        cb = spark.read.parquet(posixpath.join(base, "codebook"))
-        if meta.get("residual"):
-            # appending raw-vector codes into a residual index (or
-            # vice versa) would be permanently garbled with no error
-            enc_in = ivf_residual(ivf_assign(eligible, cents), cents)
-            enc = pq_encode(enc_in, cb, "residual", keep=("cell",))
-        else:
-            enc = pq_encode(ivf_assign(eligible, cents), cb, keep=("cell",))
-        (
-            enc.write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(posixpath.join(delta, "cells"))
-        )
-
-    _append_delta(
-        spark, path, "ivfpq",
-        {"pq_m": PQ_M, "pq_sub": PQ_SUB, "pq_k": PQ_K}, extra,
-        _recorded_eligible(documents, embeddings), write,
-    )
+    drift. Shared append contract: _append."""
+    _append("ivfpq", embeddings, path, extra, documents=documents)
 
 
 def ivfpq_probe(
@@ -3034,10 +2862,7 @@ def compact_index(
         if dedup:
             rel = rel.distinct()
         rel, count = _observed(rel)
-        w = rel.write.mode("overwrite")
-        if part_col is not None:
-            w = w.partitionBy(part_col)
-        w.parquet(posixpath.join(nbase, leg))
+        _write_leg(rel, nbase, leg, part_col)
         if tombs is not None and count() == 0:
             # an all-tombstoned leg is a _SUCCESS-only dir, poisoning
             # every read until a rebuild (the empty build/append rule)
@@ -3049,9 +2874,7 @@ def compact_index(
                 "instead of compacting it away"
             )
     for leg in lay.quantizers:
-        spark.read.parquet(posixpath.join(base, leg)).write.mode(
-            "overwrite"
-        ).parquet(posixpath.join(nbase, leg))
+        _write_leg(spark.read.parquet(posixpath.join(base, leg)), nbase, leg)
     extra = {k: v for k, v in meta.items()
              if k not in ("version", "appends", "tombstones",
                           "delta_dirs", "tombstone_dirs")}

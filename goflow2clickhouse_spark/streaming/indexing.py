@@ -1,5 +1,5 @@
 """Streaming maintenance of the persisted ANN indexes — the embedding
-side of the crawl loop (r8 verdict item 4): where
+side of the crawl loop: where
 `streaming_incremental_dedup` folds each micro-batch of DOCUMENTS into
 the band index, this folds each micro-batch of EMBEDDINGS into a
 persisted vector index, so a vector-serving index tracks the corpus
@@ -9,16 +9,15 @@ metadata's layout kind), so every embedding-side layout (SQ, IVF-SQ,
 PQ, IVF-PQ and the filtered IVF) shares one streaming story.
 
 Spark-first shape: foreachBatch over a Structured Streaming source —
-each batch is ONE `append_to_*` call (plans/storage._append_delta:
-rows built from the RECORDED metadata, encoded against the STORED
-quantizers, one atomic delta), so the per-batch cost is a single
-batch-sized scan + a metadata commit, never an index rebuild.
+each batch is ONE append (plans/storage._append: rows built from the
+RECORDED metadata, encoded against the STORED quantizers, one atomic
+delta), so the per-batch cost is a single batch-sized scan + a
+metadata commit, never an index rebuild.
 Exactly-once on at-least-once delivery via the shared (run_id, epoch)
 replay gate (`versioned.epoch_replayed`) committed atomically with the
 delta inside `_CURRENT`. Delta count is bounded operationally by
 `plans/storage.compact_index` (fold deltas into a new base), and a
-full rebuild remains the quantizer-refresh path after drift — the
-docstring contract the r8 append operators promised.
+full rebuild remains the quantizer-refresh path after drift.
 
 Reference parity note: the reference ships no vector layer at all
 (/root/reference/ is a flow-ingest bridge); this module is part of the
@@ -42,13 +41,14 @@ def index_maintenance_fold(
     the foreachBatch wrapper below calls): read the committed
     metadata, infer the layout (plans/storage._index_kind — the same
     total inference compaction uses) and fold `batch_df` — new
-    (vec_id, embedding) rows — through that layout's append. The two
-    gated layouts (IVF, IVF-PQ) need the `documents` metadata side
-    (stream-static join semantics: the batch is gated exactly as the
-    build was). A new layout's streaming story is its append function
-    plus one row of the dispatch table below. The band (document-side)
-    fold keeps its own loop in streaming/dedupe.py: its batches carry
-    text, not vectors.
+    (vec_id, embedding) rows — through the shared append
+    (plans/storage._append). The layout's row in plans/storage._LAYOUTS
+    says whether it is gated (IVF, IVF-PQ: the `documents` metadata
+    side is required, with stream-static join semantics, so the batch
+    is gated exactly as the build was) and whether its batches are
+    vectors at all: the band and pHash layouts are refused with a
+    pointer to their own maintenance path (band: its loop in
+    streaming/dedupe.py; pHash: append_to_phash_index).
 
     Returns False (and touches nothing) when the (run_id, epoch) gate
     says this epoch already folded — the shared `epoch_replayed`
@@ -69,44 +69,27 @@ def index_maintenance_fold(
     from ..plans import storage as S
     from ..versioned import epoch_replayed
 
-    # kind -> (append, needs `documents`): the gated layouts (IVF,
-    # IVF-PQ) re-apply the eligibility gate recorded at build time, so
-    # their appends take the documents side first
-    appends = {
-        "ivf": (S.append_to_ivf_index, True),
-        "ivfpq": (S.append_to_ivfpq_index, True),
-        "pq": (S.append_to_pq_index, False),
-        "sq": (S.append_to_sq_index, False),
-        "ivfsq": (S.append_to_ivfsq_index, False),
-    }
     spark = batch_df.sparkSession
     meta, _ = S._committed_index(spark, index_path)
     kind = S._index_kind(meta)
     if epoch_replayed(meta, epoch_id, run_id):
         return False
-    if kind == "band":
+    lay = S._LAYOUTS[kind]
+    if lay.maintain:
         raise ValueError(
-            f"index at {index_path} is the document-side 'band' layout — "
-            "its maintenance loop is streaming/dedupe.py's "
-            "streaming_incremental_dedup (its batches carry text, "
-            "not vectors)"
+            f"index at {index_path} is a '{lay.label}' index, whose "
+            f"batches are not vectors — maintain it with {lay.maintain}"
         )
-    if kind not in appends:
-        raise ValueError(
-            f"index at {index_path} is an unrecognized '{kind}' layout — "
-            "no maintenance fold is defined for it"
-        )
-    append, gated = appends[kind]
+    cols = {}
+    if lay.gated:
+        if documents is None:
+            raise ValueError(
+                f"{lay.label} maintenance needs the `documents` "
+                "metadata side (the layout records an eligibility gate)"
+            )
+        cols["documents"] = documents
     extra = {"epoch": int(epoch_id), "run_id": run_id}
-    if not gated:
-        append(batch_df, index_path, extra=extra)
-    elif documents is None:
-        raise ValueError(
-            f"{kind.upper()} maintenance needs the `documents` "
-            "metadata side (the layout records an eligibility gate)"
-        )
-    else:
-        append(documents, batch_df, index_path, extra=extra)
+    S._append(kind, batch_df, index_path, extra, **cols)
     if compact_over is not None:
         S.compact_index(spark, index_path, min_appends=compact_over + 1)
     return True
@@ -163,28 +146,26 @@ def index_takedown_fold(
     compact_over: int | None = None,
     id_col: str | None = None,
 ) -> bool:
-    """One turn of the TAKEDOWN loop (r11 — deletion's streaming
-    half): fold a micro-batch of ids to remove into ANY committed
-    index layout via plans/storage.delete_from_index — an atomic
-    tombstone delta; every probe anti-joins it from this commit on.
-    Layout-generic by construction (deletion is id-based), so the
-    same fold serves band, filtered-IVF, PQ, SQ, IVF-SQ and IVF-PQ
-    indexes — the opt-out/GDPR feed of a crawl pipeline is one stream
-    pointed at each index.
+    """One turn of the TAKEDOWN loop (deletion's streaming half): fold a
+    micro-batch of ids to remove into ANY committed index layout via
+    plans/storage.delete_from_index — an atomic tombstone delta; every
+    probe anti-joins it from this commit on. Layout-generic by
+    construction (deletion is id-based), so the same fold serves band,
+    filtered-IVF, PQ, SQ, IVF-SQ and IVF-PQ indexes — the opt-out/GDPR
+    feed of a crawl pipeline is one stream pointed at each index.
 
-    Same (run_id, epoch) replay contract as the append folds, but in
-    its OWN metadata namespace (`del_epoch`/`del_run_id` —
+    Same (run_id, epoch) replay contract as the append folds, but in its
+    OWN metadata namespace (`del_epoch`/`del_run_id` —
     versioned.epoch_replayed(ns='del_')): an append stream and a
-    takedown stream maintain the same index concurrently, and a
-    shared gate would let either stream's commit make the other skip
-    or raise. The gate commits atomically with the tombstone delta;
-    an EMPTY batch advances it deltalessly. `compact_over` bounds the
-    tombstone-delta count: once more than that many are committed,
-    the fold compacts — which is also deletion's PHYSICAL purge, so a
-    bounded takedown loop guarantees deleted rows leave disk within a
-    bounded number of batches. `id_col` selects the id column when
-    the batch carries more than one (default: the batch's single
-    column)."""
+    takedown stream maintain the same index concurrently, and a shared
+    gate would let either stream's commit make the other skip or raise.
+    The gate commits atomically with the tombstone delta; an EMPTY batch
+    advances it deltalessly. `compact_over` bounds the tombstone-delta
+    count: once more than that many are committed, the fold compacts —
+    which is also deletion's PHYSICAL purge, so a bounded takedown loop
+    guarantees deleted rows leave disk within a bounded number of
+    batches. `id_col` selects the id column when the batch carries more
+    than one (default: the batch's single column)."""
     from ..plans.storage import (
         _committed_index,
         compact_index,

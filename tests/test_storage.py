@@ -941,6 +941,99 @@ def test_ivf_append_empty_eligible_batch_is_noop(
         assert rows and probe(path) == rows, layout
 
 
+def test_empty_build_refuses_on_every_layout(spark, tmp_path, built_layouts):
+    """An empty input refuses the build on all seven layouts with the
+    layout's own reason, and leaves no `_CURRENT` and no staging
+    directory behind. Over an already-built index, an empty rebuild
+    leaves `_CURRENT` (nonce included) and the probe's rows as they
+    were."""
+    import glob
+    import os
+
+    from goflow2clickhouse_spark.plans import storage as S
+    from goflow2clickhouse_spark.versioned import current_meta
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    no_vecs = spark.read.parquet(f"{SF}/embeddings.parquet").limit(0)
+    no_text = spark.createDataFrame([], "doc_id bigint, text string")
+    no_hashes = spark.range(0).select(
+        F.col("id").alias("doc_id"), F.col("id").alias("phash")
+    )
+    builds = {
+        "band": (lambda p: S.write_band_index(no_text, p), "no shingles"),
+        "phash": (
+            lambda p: S.write_phash_index(no_hashes, p),
+            "hash relation is empty",
+        ),
+        "ivf": (
+            lambda p: S.write_filtered_ivf_index(docs, no_vecs, p, n_cells=8),
+            "eligible set is empty",
+        ),
+        "pq": (lambda p: S.write_pq_index(no_vecs, p), "corpus is empty"),
+        "sq": (lambda p: S.write_sq_index(no_vecs, p), "corpus is empty"),
+        "ivfsq": (
+            lambda p: S.write_ivfsq_index(no_vecs, p, n_cells=8),
+            "corpus is empty",
+        ),
+        "ivfpq": (
+            lambda p: S.write_ivfpq_index(docs, no_vecs, p, n_cells=8),
+            "eligible set is empty",
+        ),
+    }
+    assert set(builds) == set(S._LAYOUTS)
+    for layout, (build, reason) in builds.items():
+        void = str(tmp_path / f"void_{layout}")
+        with pytest.raises(ValueError, match=reason):
+            build(void)
+        assert not os.path.exists(os.path.join(void, "_CURRENT")), layout
+        assert glob.glob(f"{void}/_v.tmp.*") == [], layout
+
+        path = _index_copy(built_layouts, layout, tmp_path / layout)
+        probe = built_layouts[1][layout][3]
+        before, rows = current_meta(spark, path), probe(path)
+        with pytest.raises(ValueError, match=reason):
+            build(path)
+        assert current_meta(spark, path) == before, layout
+        assert glob.glob(f"{path}/_v.tmp.*") == [], layout
+        assert rows and probe(path) == rows, layout
+
+
+def test_layout_table_matches_committed_builds(spark, built_layouts):
+    """What each builder commits is what the layout table says: the
+    layout inferred from `_CURRENT` is the row's own kind, and the
+    recorded metadata carries the row's geometry pin, so the pin a
+    build records and the pin appends and probes check cannot drift."""
+    from goflow2clickhouse_spark.plans.storage import _LAYOUTS, _index_kind
+    from goflow2clickhouse_spark.versioned import current_meta
+
+    root, cases = built_layouts
+    assert set(cases) == set(_LAYOUTS)
+    for layout in cases:
+        meta = current_meta(spark, str(root / layout))
+        assert _index_kind(meta) == layout
+        pin = _LAYOUTS[layout].geometry or {}
+        assert {k: meta.get(k) for k in pin} == pin, layout
+
+
+def test_ivfsq_probe_reads_the_named_vector_column(spark, built_layouts):
+    """`ivfsq_probe(vec_col=...)` ranks cells with the named query
+    column: a query whose vector column is renamed returns the same
+    rows as the default-named one."""
+    from goflow2clickhouse_spark.plans.storage import ivfsq_probe
+
+    root, _ = built_layouts
+    path = str(root / "ivfsq")
+    q = spark.read.parquet(f"{SF}/embeddings.parquet").filter(
+        F.col("vec_id") == 0
+    )
+    want = sorted(map(tuple, ivfsq_probe(spark, path, q, k=5).collect()))
+    got = ivfsq_probe(
+        spark, path, q.withColumnRenamed("embedding", "qv"), k=5,
+        vec_col="qv",
+    ).collect()
+    assert want and sorted(map(tuple, got)) == want
+
+
 def test_append_write_reads_its_batch_once(spark, tmp_path, built_layouts):
     """Every append's delta write, and a delete's tombstone write,
     evaluates its input exactly once per row on every layout: the row

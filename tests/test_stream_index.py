@@ -417,6 +417,29 @@ def test_generic_fold_dispatches_by_layout(spark, tmp_path):
         index_maintenance_fold(b1, band, 0, run_id="A")
 
 
+def test_fold_refuses_phash_with_its_own_append(spark, tmp_path):
+    """The pHash layout is recognized but its batches carry image
+    hashes, not vectors: the fold refuses it by name and points at its
+    own append, as it points the band layout at its own loop."""
+    from goflow2clickhouse_spark.plans.storage import write_phash_index
+    from goflow2clickhouse_spark.streaming.indexing import (
+        index_maintenance_fold,
+    )
+
+    _, _, _, b1, _ = _parts(spark)
+    path = str(tmp_path / "gen_phash")
+    write_phash_index(
+        spark.range(8).select(
+            F.col("id").alias("doc_id"), F.col("id").alias("phash")
+        ),
+        path,
+    )
+    with pytest.raises(
+        ValueError, match=r"'pHash band' index.*append_to_phash_index"
+    ):
+        index_maintenance_fold(b1, path, 0, run_id="A")
+
+
 def test_streaming_generic_maintenance_over_ivfsq(spark, tmp_path):
     """The generic stream wrapper pointed at an IVF-SQ index: one
     drop = one fold, probes equal a twin maintained by plain
