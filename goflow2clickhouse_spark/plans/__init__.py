@@ -17,73 +17,10 @@ from . import extension_queries as _extension_queries  # noqa: F401, E402
 from . import corpus_queries as _corpus_queries  # noqa: F401, E402
 from . import tpch_queries as _tpch_queries  # noqa: F401, E402
 
-# Driver-coverage rotation: the correctness driver verifies only the
-# first 50 registry entries each round. After round 13 every
-# registered name is driver-green (newest-green histogram:
-# 44 r10 / 50 r11 / 50 r12 / 50 r13, computed from the
-# CORRECTNESS_r1-r13 union). Round 14's window, per the r13 verdict
-# item 1:
-# (a) the 44 r10-STALE spill names FIRST (the oldest rows in the
-#     registry at 4 rounds stale — the list the r13 header recorded);
-# (b) the 6 queries NEW this round, which MUST take window slots (the
-#     r6 lesson): multimodal_phash_jpeg_neardup (the image-dedup
-#     bridge pinned through the LOSSY leg — pHash across the repo's
-#     own baseline JPEG, gray and 4:2:0; verdict item 2),
-#     incremental_image_dedup_indexed and
-#     incremental_image_dedup_deleted (the persisted pHash band
-#     index — the seventh layout, crawl-loop image dedup with the
-#     full append/delete/compact lifecycle; verdict item 3),
-#     text_bpe_token_ids (token-ID emission under the trained table,
-#     the sum(len(ids)) == bpe_tokens invariant driver-checked) and
-#     token_budget_selection_bpe_trained (budget billed by the
-#     production tokenizer tier; both verdict item 4), and
-#     pq_opq_rotation_recall (the OPQ ROTATION member: trained
-#     mutual-best-covariance matching + paired scaled Hadamard,
-#     rotated 0.4625 vs permuted 0.4125 on the correlated-dims
-#     fixture; verdict item 6 stretch).
-# 44 + 6 = 50 exactly.
-#
-# Changed-but-NOT-windowed (the policy's honesty clause): NO query
-# changed RESULTS this round. Code touched with results UNCHANGED —
-# every name re-proven against its oracle at sf0.01 on a vanilla
-# session in-round after the change:
-#   - bpe_train_merges_demo (r13-advice regex-literal fix: the
-#     pre-token column is now built with F.regexp_extract_all, not an
-#     F.expr SQL string);
-#   - multimodal_phash_neardup (r13-advice ASCII gate on both legs —
-#     a no-op on the ASCII fixtures; hash relation persisted; oracle
-#     text refactored into the shared head + tail generators);
-#   - pq_opq_recall (the permutation-replay CTEs factored into
-#     _opq_perm_ctes(src) — generated oracle text identical);
-#   - text_bpe_token_counts_trained and token_budget_selection_bpe
-#     (bpe_count_word is now len(bpe_encode_word(...)) — same loop,
-#     shared with the new id tier).
-# The spill pool after r14 is the 50 r11-green names — they go FIRST
-# into the r15 window, leaving ZERO slots for new queries unless some
-# of these are displaced to r16 (document any displacement here).
-# Alphabetical: bigram_pmi_top, corpus_curation_funnel,
-# dedup_cluster_sizes, doc_packing_assign, embedding_cluster_sizes,
-# embedding_label_centroids, embedding_neardup_lsh,
-# embedding_neardup_pairs, embedding_quantize_error,
-# events_stream_dedup, filtered_ann_ivf, filtered_ann_recall,
-# flows_ingest_transform, flows_maintenance_overlap,
-# flows_port_fanout, flows_protocol_breakdown,
-# flows_sampler_utilization, flows_tcp_syn_only, flows_top_talkers,
-# flows_tumbling_traffic, hll_distinct_customers,
-# incremental_dedup_deleted, incremental_dedup_indexed,
-# incremental_dedup_newbatch, ivf_append_probe, ivf_batch_probe,
-# ivf_index_probe, ivfpq_fully_trained_recall, ivfsq_batch_probe,
-# ivfsq_probe, ivfsq_recall, ivfsq_trained_recall,
-# jl_projection_recall, multimodal_decode_jpeg420,
-# nation_balance_full_outer, nation_coverage_set_ops,
-# order_value_buckets, orders_above_global_avg, part_brand_stats,
-# pq_adc_topk, pq_deleted_probe, price_percentiles,
-# priority_revenue_union, q12_shipmode_priority,
-# q21_suppliers_kept_waiting, q2_min_cost_supplier,
-# q4_order_priority, semdedup_prune, source_mixture_weights,
-# token_budget_selection. Then the r12 pool.
+# Correctness runs verify only the first 50 registry entries, so the
+# names verified longest ago go first.
 promote([
-    # (a) the 44 r10-stale spill names, FIRST
+    # the longest-unverified names
     "bm25_topk",
     "ch_dialect_port_profile",
     "ch_dialect_sampler_profile",
@@ -128,7 +65,7 @@ promote([
     "sq_recall",
     "text_dupngram_fraction",
     "top_customer_per_nation",
-    # (b) new this round
+    # then the newest names
     "incremental_image_dedup_deleted",
     "incremental_image_dedup_indexed",
     "multimodal_phash_jpeg_neardup",

@@ -10,9 +10,18 @@ verbatim copies for exact dup), built identically in both engines.
 The MinHash/SimHash oracle SQL is generated from the same constants as
 the Spark operators (NUM_PERM, band layout, Mersenne-31 hashing), so a
 drift in either side fails the hash check.
+
+The queries served from a persisted index (IVF, PQ, SQ, IVF-SQ, IVF-PQ,
+band, pHash) are rows of one scenario table at the end of the module
+(`_SCENARIOS`): each row's build spec keys the process-wide index cache
+and the probe's metadata pin, and one loop registers every row with the
+oracle its layout's replay generator derives from the same fields.
 """
 
 from __future__ import annotations
+
+from functools import partial
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,6 +31,7 @@ from ..operators import multimodal as M
 from ..operators import similarity as S
 from ..operators import text as T
 from ..schema import load_table, local_rel
+from . import storage as ST
 from .queries import query
 
 # ---------------------------------------------------------------------------
@@ -40,8 +50,8 @@ FROM documents WHERE doc_id % 20 = 0
 """
 
 
-# the corpus family's scan spreader now lives in schema.spread_small_scan
-# (r14: the events family needs the identical conditional repartition);
+# the corpus family's scan spreader lives in schema.spread_small_scan
+# (the events family needs the identical conditional repartition);
 # this alias keeps the plan-module call sites stable
 from ..schema import spread_small_scan as _spread_small_scan  # noqa: E402
 
@@ -218,12 +228,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.minhash_lsh_dedup_pairs(corpus(spark, sf_dir), threshold=0.5)
 
 
-
 # Exact connected components over a `pairs` CTE, as SQL: undirected
 # edges -> transitive label closure via a RECURSIVE CTE (UNION dedup
 # gives the fixpoint) -> min reachable label per node. This replays
 # cluster_pairs' single-task union-find EXACTLY — unlike a fixed
-# k-round propagation replay, which the r4 sf0.1 soak caught
+# k-round propagation replay, which an sf0.1 soak caught
 # diverging on a >2k-hop-diameter embedding component. Closure size
 # is O(sum of component sizes squared) — bounded by near-dup family
 # sizes, never corpus-wide.
@@ -262,7 +271,7 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifies the clustering against an EXACT connected-components
     replay (recursive-CTE transitive closure → min reachable label),
     the same fixpoint the single-task union-find computes — a fixed
-    2-round replay diverged on a deep component at sf0.1 (r4 soak)."""
+    2-round replay diverged on a deep component at sf0.1."""
     pairs = D.minhash_lsh_dedup_pairs(corpus(spark, sf_dir), threshold=0.5)
     labels = D.cluster_pairs(pairs, iterations=2)
     out = (
@@ -339,7 +348,7 @@ def _stream_neardup_oracle() -> str:
 @query("events_stream_neardup", oracle=_stream_neardup_oracle())
 def events_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time near-dup candidates — the registered face of
-    streaming/neardup.py (the r3 verdict's ask; the "events" prefix
+    streaming/neardup.py (the "events" prefix
     names the arrival-stream semantics: the corpus replayed as a
     document-arrival stream). The Spark side runs
     streaming_candidate_pairs(streaming=False), the BATCH TWIN that
@@ -602,9 +611,8 @@ def _recall_result(
     approx: DataFrame, exact: DataFrame, method: str, k: int
 ) -> DataFrame:
     """THE (method, k, hits, recall) output contract every recall@k
-    query shares (r9 review: it existed restated at five sites — a
-    change to the contract had to land everywhere or silently
-    diverge): |approx ∩ exact| via a broadcast semi-join on vec_id
+    query shares (one statement, so a change to the contract cannot
+    silently diverge between sites): |approx ∩ exact| via a broadcast semi-join on vec_id
     (both sides are k-sized), recall = hits/k rounded to 6."""
     hits = (
         approx.select("vec_id")
@@ -622,7 +630,7 @@ def _recall_result(
 def _recall_result_batch(
     approx: DataFrame, exact: DataFrame, method: str, total: int
 ) -> DataFrame:
-    """_recall_result's batch twin (r10): |approx ∩ exact| keyed by
+    """_recall_result's batch twin: |approx ∩ exact| keyed by
     (qid, vec_id) — both sides are Q x k-sized, so the intersection is
     still a broadcast semi-join — recall = hits/total rounded to 6.
     Output (method, n, hits, recall)."""
@@ -711,7 +719,7 @@ def _neardup_lsh_oracle() -> str:
 @query("embedding_neardup_lsh", oracle=_neardup_lsh_oracle())
 def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup blocked on the sign-RP LSH bucket — the true
-    100 TB composition (VERDICT r1 #7): the block key is data-derived
+    100 TB composition: the block key is data-derived
     (signrp_bucket, ~2^BITS balanced cells), so within-block all-pairs
     cost is bounded by bucket size, not by a label's corpus share. The
     oracle replays the identical integer projection in DuckDB. Recall
@@ -878,8 +886,8 @@ def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def text_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT byte-pair-encoding token counts (r12, the r11 verdict's
-    #8: the regex counter above approximates — BPE is what trainers
+    """EXACT byte-pair-encoding token counts (the regex counter
+    above approximates — BPE is what trainers
     actually bill by). operators/text.bpe_token_count runs the merge
     table as pure column expressions — pre-tokenize, interleave a
     two-char boundary, ONE string replace per merge in rank order —
@@ -893,7 +901,7 @@ def text_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is 28 common English/digit merges — the honest ceiling for
     a one-replace-node-per-merge column chain; production-size
     tables go through the mapInPandas tier
-    (text_bpe_token_counts_trained below, r13). Reported next to
+    (text_bpe_token_counts_trained below). Reported next to
     the pre-token count per source, so the BPE compression ratio of
     each source is one query away."""
     d = load_table(spark, sf_dir, "documents")
@@ -903,7 +911,7 @@ def text_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Planted texts for the production-scale BPE tier (r13): trained-vocab
+# Planted texts for the production-scale BPE tier: trained-vocab
 # words (the table was trained over PySpark source text, so
 # "DataFrame"/"partition" are single tokens), merge-chain compositions,
 # the shared-boundary trap family, digit runs, and out-of-vocabulary
@@ -979,7 +987,7 @@ _BPE_TRAIN_DEMO_N = 8
 
 
 def _bpe_train_oracle(n: int) -> str:
-    """BPE TRAINING replayed in SQL (r13): `n` unrolled iterations of
+    """BPE TRAINING replayed in SQL: `n` unrolled iterations of
     the classic algorithm — per distinct pre-token keep a
     boundary-delimited state string and its corpus frequency; each
     iteration extracts adjacent token pairs, counts them
@@ -1034,7 +1042,7 @@ st{i + 1} AS (
 
 @query("bpe_train_merges_demo", bench=True, oracle=_bpe_train_oracle(_BPE_TRAIN_DEMO_N))
 def bpe_train_merges_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE TRAINING over the corpus, oracle-replayed (r13): the first
+    """BPE TRAINING over the corpus, oracle-replayed: the first
     8 merges the classic trainer learns from the documents table.
     The Spark side is the production shape — the frequency table is
     a DISTRIBUTED count (explode pre-tokens, groupBy — the only part
@@ -1053,8 +1061,8 @@ def bpe_train_merges_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     # column functions, not an F.expr SQL string: Spark's SQL-literal
-    # unescaping would turn the pattern's \s into a bare 's' (r13
-    # advice — latent only because whitespace pre-tokens are
+    # unescaping would turn the pattern's \s into a bare 's' (latent
+    # only because whitespace pre-tokens are
     # single-char and the trainer's len(w)>1 filter drops them)
     cleaned = F.replace(
         F.replace(F.col("text"), F.lit("\x1e"), F.lit("")),
@@ -1068,7 +1076,7 @@ def bpe_train_merges_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("w")
         .agg(F.count("*").alias("cnt"))
-        # HARD-bounded collect (r13 review-of-self): the vocabulary
+        # HARD-bounded collect: the vocabulary
         # relation is corpus-size-independent in the typical case
         # (31 rows on the fixture, ~18k on the 8.9M-char generator
         # corpus) but noisy web text can explode distinct pre-tokens,
@@ -1096,8 +1104,8 @@ def bpe_train_merges_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_bpe_token_counts_trained(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """EXACT BPE token counts at PRODUCTION merge-table size (r13,
-    the r12 verdict's #2: the column-chain form above carries one
+    """EXACT BPE token counts at PRODUCTION merge-table size (the
+    column-chain form above carries one
     Catalyst replace node per merge, honest only for small tables —
     50k chained replaces would choke analysis long before 100 TB).
     The trained 2000-merge table (data/bpe_merges.txt — classic BPE
@@ -1236,8 +1244,8 @@ GROUP BY c.source
 
 @query("text_bpe_token_ids", bench=True, oracle=_BPE_IDS_ORACLE)
 def text_bpe_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TOKEN-ID emission under the trained table (r14, the r13
-    verdict's #4: the tier packing/serving compositions consume):
+    """TOKEN-ID emission under the trained table (the tier the
+    packing/serving compositions consume):
     operators/text.with_bpe_token_ids encodes each document to its
     full id array (codepoint for single-char tokens,
     BPE_MERGED_ID_BASE + min-rank for merges — deterministic in the
@@ -1266,7 +1274,7 @@ def text_bpe_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.with_bpe_token_ids(
             # the chained encoders run in ONE task chain; spread the
             # fixture's single parquet split first (the codec-map rule)
-            # — conditionally (r15): on a production-sized scan the
+            # — conditionally: on a production-sized scan the
             # unconditional form would coalesce it onto #cores
             _spread_small_scan(spark, sf_dir, d.unionByName(planted)),
             merges,
@@ -1582,7 +1590,7 @@ _DECODE_PNG_SCHEMA = (
     """,
 )
 def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real COMPRESSED-image decode through the r10 PNG codec
+    """Real COMPRESSED-image decode through the PNG codec
     (operators/multimodal.encode_png/decode_png — stdlib zlib DEFLATE,
     all five scanline filters, chunk CRCs): per document, synthesize a
     doc_id-derived WxH image in a doc_id-derived mode (gray/RGB/RGBA
@@ -1596,9 +1604,9 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the BMP/WAV twins; the codec cost is per-row Python over tiny
     payloads — at 100 TB this operator's scale story is the Arrow
     batch pipe and partition-parallel decode, not the toy geometry."""
-    # spread the per-row pure-Python codec work — conditionally (r15):
-    # the fixture parquet is one split (the jpeg-leg query's rule,
-    # r14), but on a production-sized scan an unconditional
+    # spread the per-row pure-Python codec work — conditionally: the
+    # fixture parquet is one split (the jpeg-leg query's rule), but on
+    # a production-sized scan an unconditional
     # repartition would coalesce it onto #cores partitions
     d = _spread_small_scan(
         spark, sf_dir,
@@ -1866,7 +1874,7 @@ def top_terms_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         # bcast bound: df_t is vocabulary-sized, which grows with the
         # corpus (Heaps' law) — no hint; AQE broadcasts while small,
-        # shuffle join on the term key once it isn't (r5 audit)
+        # shuffle join on the term key once it isn't
         tf_src.join(df_t, "term")
         .join(F.broadcast(n_docs))  # bcast bound: 1-row scalar
         .withColumn(
@@ -2347,7 +2355,7 @@ def embedding_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     being `id == cluster_id`. Completes the clustering row for the
     embedding modality; the oracle computes EXACT connected components
     over the identically-replayed pair set via a recursive-CTE
-    transitive closure — the r4 sf0.1 soak caught a fixed 2-round
+    transitive closure — an sf0.1 soak caught a fixed 2-round
     replay diverging on a component whose min-id node sits more than
     4 hops from a member."""
 
@@ -2367,7 +2375,7 @@ def embedding_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# weighted sampling + source mixture weights (r4)
+# weighted sampling + source mixture weights
 # ---------------------------------------------------------------------------
 
 _WS_H31 = _H31.format(x="concat('wsample:', CAST(o_orderkey AS VARCHAR))")
@@ -2479,7 +2487,7 @@ def source_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# leakage-free dataset split (cluster-aware train/val/test, r4)
+# leakage-free dataset split (cluster-aware train/val/test)
 # ---------------------------------------------------------------------------
 
 def _leakage_free_split_oracle() -> str:
@@ -2570,7 +2578,7 @@ def leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# filtered vector search (metadata predicate + ANN, r4)
+# filtered vector search (metadata predicate + ANN)
 # ---------------------------------------------------------------------------
 
 @query(
@@ -2631,8 +2639,7 @@ def _filtered_eligible(spark: SparkSession, sf_dir: str) -> DataFrame:
     language over `documents`), via LEFT SEMI join on the id keyspace
     — the pre-filter every filtered-search variant starts from. The
     gate itself is plans/storage.eligible_embeddings, the SAME
-    implementation the persisted index build uses (one predicate, r6
-    review)."""
+    implementation the persisted index build uses (one predicate)."""
     from .storage import eligible_embeddings
 
     return eligible_embeddings(
@@ -2641,20 +2648,106 @@ def _filtered_eligible(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FILTERED_E_SQL = """
-    ok AS (
+# the eligibility gate's replay: the documents predicate, then the
+# vectors it admits (plans/storage.eligible_embeddings)
+_OK_CTE = """ok AS (
         SELECT doc_id FROM documents
         WHERE n_chars >= 200 AND lang = 'en'
     ),
-    e AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+    """
+_ELIGIBLE_SQL = """SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         FROM embeddings
-        WHERE vec_id IN (SELECT doc_id FROM ok)
+        WHERE vec_id IN (SELECT doc_id FROM ok)"""
+_FILTERED_E_SQL = f"""
+    {_OK_CTE}e AS (
+        {_ELIGIBLE_SQL}
     )"""
+
+_COS = (
+    "list_dot_product({a}, {b}) / "
+    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
+)
+
+
+def _cents_cte(
+    src: str = "e", n_cells: int = 8, coarse_iters: int = 0, seed: str = ""
+) -> str:
+    """The coarse centroids as a `cents (cid, cvec)` CTE: the `n_cells`
+    lowest ids of `src` (narrowed by the `seed` SQL suffix), or the
+    Lloyd-trained chain when `coarse_iters` > 0."""
+    if coarse_iters > 0:
+        return _trained_cents_ctes(coarse_iters, n_cells, src)
+    return f"""cents AS (SELECT vec_id AS cid, v AS cvec FROM {src}{seed}
+              ORDER BY vec_id LIMIT {n_cells})"""
+
+
+def _coarse_ctes(
+    src: str = "e", n_cells: int = 8, coarse_iters: int = 0, seed: str = ""
+) -> str:
+    """The coarse quantizer's replay over `src`: the centroids
+    (_cents_cte) and each vector's argmax-cosine cell (ties to the
+    smaller cid — ivf_assign's rule) as `assign (vec_id, cid)`."""
+    return f"""{_cents_cte(src, n_cells, coarse_iters, seed)},
+    cscored AS (
+        SELECT {src}.vec_id, c.cid,
+               {_COS.format(a=f'{src}.v', b='c.cvec')} AS score
+        FROM {src} CROSS JOIN cents c),
+    assign AS (
+        SELECT vec_id, cid FROM (
+            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+                                         ORDER BY score DESC, cid) AS rn
+            FROM cscored) t
+        WHERE rn = 1)"""
+
+
+def _qcells(q: str, nprobe: int, batch: bool) -> str:
+    """The query CTE `q`'s `nprobe` best cells; per qid when `batch`."""
+    rank = _COS.format(a=f"{q}.qv", b="c.cvec")
+    if not batch:
+        return f"""qcells AS (
+        SELECT c.cid FROM cents c, {q}
+        ORDER BY {rank} DESC, c.cid
+        LIMIT {nprobe})"""
+    return f"""qcells AS (
+        SELECT qid, cid FROM (
+            SELECT {q}.qid, c.cid,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY {q}.qid
+                       ORDER BY {rank} DESC,
+                                c.cid) AS rn
+            FROM cents c, {q}) t
+        WHERE rn <= {nprobe})"""
+
+
+def _qs_cells(nprobe: int) -> str:
+    """Each batch query's `nprobe` best cells, from a `qs (qid, qv)` CTE."""
+    return f"""qcells AS (
+        SELECT qid, cid FROM (
+            SELECT qs.qid, c.cid,
+                   ROW_NUMBER() OVER (PARTITION BY qs.qid
+                       ORDER BY {_COS.format(a='qs.qv', b='c.cvec')} DESC,
+                                c.cid) AS rn
+            FROM qs CROSS JOIN cents c) t
+        WHERE rn <= {nprobe})"""
+
+
+def _ranked(col: str, order: str, src: str, k: int) -> str:
+    """The per-qid top-`k` of `src` with every row's rank."""
+    return f"""SELECT qid, vec_id, {col}, CAST(rank AS INT) AS rank FROM (
+        SELECT *, ROW_NUMBER() OVER (
+            PARTITION BY qid ORDER BY {order}, vec_id) AS rank
+        FROM {src}) s
+    WHERE rank <= {k}
+    ORDER BY qid, rank"""
 
 
 def _filtered_ivf_oracle(
-    limit: int, cents_where: str = "", coarse_iters: int = 0
+    limit: int,
+    cents_where: str = "",
+    coarse_iters: int = 0,
+    batch_k: int | None = None,
+    q_where: str = "",
+    nprobe: int = 2,
 ) -> str:
     """IVF replay over ONLY the eligible vectors: centroids are the 8
     lowest-id ELIGIBLE vectors (the index is built on the filtered
@@ -2662,20 +2755,42 @@ def _filtered_ivf_oracle(
     `cents_where` narrows the centroid SEED set only (the append-probe
     query seeds from the original build's subset while assignment runs
     over everything — exactly what an appended index serves).
-    `coarse_iters` (r12) swaps in the Lloyd-trained centroid chain —
-    the trained-by-default serving fixture's replay."""
+    `coarse_iters` swaps in the Lloyd-trained centroid chain.
+    `batch_k` switches to the batch serving replay: `q_where` picks
+    the (qid, qv) query rows, each qid ranks its own `nprobe` cells,
+    and the output is the per-qid cosine top-`batch_k` with ranks."""
     if coarse_iters and cents_where:
         raise ValueError(
             "_filtered_ivf_oracle: coarse_iters does not compose with "
             "cents_where yet — the append replay would silently "
             "retrain on the appended corpus"
         )
-    cents_cte = (
-        _trained_cents_ctes(coarse_iters, 8)
-        if coarse_iters > 0
-        else f"""cents AS (SELECT vec_id AS cid, v AS cvec FROM e {cents_where}
-              ORDER BY vec_id LIMIT 8)"""
-    )
+    cents_cte = _cents_cte("e", 8, coarse_iters, f" {cents_where}")
+    if batch_k is not None:
+        return f"""
+    WITH {_FILTERED_E_SQL},
+    {cents_cte},
+    cscored AS (
+        SELECT e.vec_id, e.v, c.cid,
+               {_COS.format(a='e.v', b='c.cvec')} AS score
+        FROM e CROSS JOIN cents c),
+    assign AS (
+        SELECT vec_id, v, cid FROM (
+            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+                                         ORDER BY score DESC, cid) AS rn
+            FROM cscored) t
+        WHERE rn = 1),
+    qs AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
+           FROM embeddings WHERE {q_where}),
+    {_qs_cells(nprobe)},
+    res AS (
+        SELECT q.qid, a.vec_id,
+               ROUND({_COS.format(a='a.v', b='q.qv')}, 6) AS cos_sim
+        FROM assign a
+        JOIN qcells qc ON a.cid = qc.cid
+        JOIN qs q ON q.qid = qc.qid)
+    {_ranked("cos_sim", "cos_sim DESC", "res", batch_k)}
+    """
     return f"""
     WITH {_FILTERED_E_SQL},
     {cents_cte},
@@ -2697,7 +2812,7 @@ def _filtered_ivf_oracle(
         ORDER BY list_dot_product(qv, c.cvec) /
                  (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.cvec, c.cvec)))
                  DESC, c.cid
-        LIMIT 2)
+        LIMIT {nprobe})
     SELECT a.vec_id,
            ROUND(list_dot_product(a.v, qv) /
                  (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(qv, qv))),
@@ -2771,7 +2886,7 @@ def filtered_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SemDeDup — semantic dedup inside coarse-quantizer cells (r6)
+# SemDeDup — semantic dedup inside coarse-quantizer cells
 # ---------------------------------------------------------------------------
 
 # The fixture embeddings are random synthetic vectors with no semantic
@@ -2807,11 +2922,6 @@ def evec_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.unionByName(planted)
 
 
-_COS = (
-    "list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
-)
-
 def _semdedup_oracle(
     tau: float,
     pre_ctes: str = "",
@@ -2820,10 +2930,9 @@ def _semdedup_oracle(
 ) -> str:
     """SemDeDup replay generator — ONE statement of the prune-replay
     arithmetic (assignment, ccos, dominance rule, per-cell checksum)
-    shared by the in-memory and persisted-layout differentials (r8
-    review: the two were restated string literals, the drift class
-    the parameterized _pq_oracle exists to prevent). `coarse_iters`
-    (r12) swaps in the Lloyd-trained centroid chain — the persisted
+    shared by the in-memory and persisted-layout differentials (one
+    generator, not restated string literals that can drift).
+    `coarse_iters` swaps in the Lloyd-trained centroid chain — the persisted
     form's fixture is the trained-by-default filtered-IVF layout."""
     cents_cte = (
         _trained_cents_ctes(coarse_iters, 8)
@@ -2869,7 +2978,7 @@ def _trained_cents_ctes(iters: int, n_cells: int, src: str = "e") -> str:
     """CTE chain replaying operators/similarity.ivf_centroids_trained
     over the `src` relation (a (vec_id, v) CTE; `e` by default, `e0`
     inside the residual IVF-PQ replay where `e` is the residual encode
-    relation) — the COARSE twin of _trained_cb_ctes (r11): seeded from
+    relation) — the COARSE twin of _trained_cb_ctes: seeded from
     the lowest-id centroids, each iteration assigning every vector by
     argmax cosine (ties to the smaller cid — ivf_assign's rule, the
     same expression the untrained assignment uses), recomputing each
@@ -2909,16 +3018,15 @@ def _trained_cents_ctes(iters: int, n_cells: int, src: str = "e") -> str:
     return ",\n    ".join(chain)
 
 
-
-# training-regime knobs, shared by the gauges AND (since r12, the r11
-# verdict's #4) the serving-path fixtures themselves: production ships
+# training-regime knobs, shared by the gauges AND the serving-path
+# fixtures themselves: production ships
 # trained quantizers, so the registry probes and the bench time the
 # trained configuration and the seed-only builds remain as explicit
 # comparison fixtures
 _TRAINED_ITERS = 2
 _TRAINED_Q = 8  # batch-recall query count (denoises the 1/k steps)
 
-# coarse-training gauge geometry (r11): Q=16 query ids STARTING AT 100
+# coarse-training gauge geometry: Q=16 query ids STARTING AT 100
 # — disjoint from the centroid seed ids (the n_cells lowest), because a
 # seed-id query's own cell always ranks first at cosine 1.0, biasing
 # the seed figure upward (measured at sf0.01: with qids < Q the seed
@@ -2926,7 +3034,6 @@ _TRAINED_Q = 8  # batch-recall query count (denoises the 1/k steps)
 # sweep reads seed 0.4375 vs trained 0.5000 at this geometry)
 _CTR_ITERS = 2
 _CTR_Q = 16
-_CTR_Q_WHERE = f"vec_id >= 100 AND vec_id < {100 + _CTR_Q}"
 
 
 def _semdedup_cell_agg(flags: DataFrame) -> DataFrame:
@@ -2972,26 +3079,15 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SEMDEDUP_PERSISTED_ORACLE = _semdedup_oracle(
-    tau=0.2,
-    pre_ctes="""ok AS (
-        SELECT doc_id FROM documents
-        WHERE n_chars >= 200 AND lang = 'en'
-    ),
-    """,
-    e_sql="""SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        FROM embeddings
-        WHERE vec_id IN (SELECT doc_id FROM ok)""",
-    coarse_iters=_CTR_ITERS,
+    tau=0.2, pre_ctes=_OK_CTE, e_sql=_ELIGIBLE_SQL, coarse_iters=_CTR_ITERS,
 )
 
 
 @query("semdedup_persisted", oracle=_SEMDEDUP_PERSISTED_ORACLE)
 def semdedup_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup served from the PERSISTED filtered-IVF layout
-    (plans/storage.semdedup_prune_persisted, r8 — the r7 verdict's
-    item 5: the operator was parity-pinned ≡ the in-memory form but
-    had no driver-gated registry row). Centroids AND cell assignments
-    are READ from the committed index; the prune proceeds
+    (plans/storage.semdedup_prune_persisted): centroids AND cell
+    assignments are READ from the committed index; the prune proceeds
     cell-partition-by-cell-partition (the self-join on `cell` aligns
     with the `cell=` directory partitioning), and ccos is recomputed
     from the stored centroid row with the shared hoisted-norm
@@ -3002,28 +3098,18 @@ def semdedup_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine near the gate (the natural distribution tops out ~0.49 and
     the oracle replays exact doubles either way). Same per-cell
     contract as semdedup_prune: member count, pruned count, pruned-id
-    checksum — one wrong prune decision hash-mismatches."""
-    from .storage import semdedup_prune_persisted, write_filtered_ivf_index
+    checksum — one wrong prune decision hash-mismatches. The index is
+    the ivf_index_probe scenario's build (_FIVF)."""
+    from .storage import semdedup_prune_persisted
 
-    path = _persisted_index(
-        "fivf", sf_dir,
-        lambda p: write_filtered_ivf_index(
-            load_table(spark, sf_dir, "documents"),
-            load_table(spark, sf_dir, "embeddings"),
-            p, n_cells=8,
-            coarse_train_iterations=_CTR_ITERS,
-        ),
-    )
     flags = semdedup_prune_persisted(
-        spark, path, tau=0.2,
-        expect={"n_cells": 8, "min_chars": 200, "lang": "en",
-                "coarse_train_iters": _CTR_ITERS},
+        spark, _index(spark, sf_dir, _FIVF), tau=0.2, expect=_expect(_FIVF)
     )
     return D.pin(_semdedup_cell_agg(flags), flags)
 
 
 # ---------------------------------------------------------------------------
-# incremental dedup: new batch vs existing corpus (r6)
+# incremental dedup: new batch vs existing corpus
 # ---------------------------------------------------------------------------
 
 # The batch also carries genuinely NOVEL documents (every word suffixed
@@ -3056,7 +3142,7 @@ sh AS (
 
 
 def _incremental_oracle(old_pred: str = "{d} < 1000000") -> str:
-    """`old_pred` (r11) narrows the OLD side everywhere it appears —
+    """`old_pred` narrows the OLD side everywhere it appears —
     the band-candidate a-side, the shared-shingle verify, and the
     exact-dup sha set — formatted with the doc-id expression, so the
     deletion gate's oracle replays a tombstoned old corpus with one
@@ -3133,8 +3219,7 @@ def _incremental_split(
     queries: originals (id < 1e6) are "already ingested"; the planted
     variants (id >= 1e6) plus genuinely novel docs (every word '~q'-
     suffixed, ids +3e6) are "today's crawl"."""
-    # spread=False, and NO per-leg spread either (r14 optimization
-    # round): a repartition below the id filters blocked pushdown and
+    # spread=False, and NO per-leg spread either: a repartition below the id filters blocked pushdown and
     # shuffled the whole corpus once per leg (+0.8 s), and the
     # post-filter per-leg variant ALSO lost its interleaved A/B
     # (indexed min 3.11 vs 2.58 s, newbatch 3.57 vs 3.31) — the
@@ -3215,17 +3300,17 @@ def incremental_dedup_newbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-status count + id checksum so a single misclassification
     hash-mismatches."""
     old, new = _incremental_split(spark, sf_dir)
-    # spread the OLD leg (r15, scale-adaptive): this form re-shingles,
+    # spread the OLD leg (scale-adaptive): this form re-shingles,
     # re-minhashes and re-hashes the whole old corpus cold, and the
     # fixture scan is one split, so all that map work ran on one task.
-    # The r14 A/B rejected this spread, but the 3-distinct-drop
+    # An earlier A/B rejected this spread, but the 3-distinct-drop
     # rebalanced it: interleaved A/B at sf0.1, 7/7 alternations faster
     # (med 2.93 vs 3.54 s, min 2.70 vs 3.38). The NEW leg stays
     # unspread (spreading it measured net-flat-to-worse: batch map
     # work is a quarter of the old side's).
     old = _spread_small_scan(spark, sf_dir, old)
     pairs = D.incremental_neardup_pairs(old, new, threshold=0.5)
-    # no distinct (r15): the exact gate consumes this via LEFT SEMI,
+    # no distinct: the exact gate consumes this via LEFT SEMI,
     # which dedupes by construction — the distinct was a corpus-wide
     # shuffle+agg on 64-byte keys paid for nothing (part of the
     # 3-distinct-drop A/B recorded in dedup._incremental_pairs)
@@ -3236,255 +3321,49 @@ def incremental_dedup_newbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.pin(out, pairs)
 
 
-# process-lifetime persisted-index directories, keyed (kind, sf_dir):
-# an index is built ONCE per corpus version and probed per query /
-# increment — this cache is that amortization, in-process. Bench
-# consequence (deliberate, documented bench policy exception): the
-# warm-up run pays the build; the timed runs measure the PROBE, which
-# is the per-increment production cost.
-_PERSISTED_INDEX_DIRS: dict[tuple[str, str], str] = {}
+# process-lifetime persisted-index directories, keyed (kind, sf_dir)
+# where `kind` is a scenario's `_Build` spec or a name: an index is
+# built ONCE per corpus version and probed per query / increment —
+# this cache is that amortization, in-process. Bench consequence
+# (deliberate, documented bench policy exception): the warm-up run
+# pays the build; the timed runs measure the PROBE, which is the
+# per-increment production cost.
+_PERSISTED_INDEX_DIRS: dict[tuple, str] = {}
 
 
-def _persisted_index(kind: str, sf_dir: str, build) -> str:
+def _persisted_index(kind, sf_dir: str, build) -> str:
     import atexit
     import shutil
     import tempfile
 
     key = (kind, sf_dir)
     if key not in _PERSISTED_INDEX_DIRS:
-        path = tempfile.mkdtemp(prefix=f"g2cs_{kind}_")
+        path = tempfile.mkdtemp(
+            prefix=f"g2cs_{getattr(kind, 'layout', kind)}_"
+        )
         atexit.register(shutil.rmtree, path, ignore_errors=True)
         build(path)  # key set only on success: a failed build retries
         _PERSISTED_INDEX_DIRS[key] = path
     return _PERSISTED_INDEX_DIRS[key]
 
 
-@query("incremental_dedup_indexed", oracle=_incremental_oracle(), bench=True)
-def incremental_dedup_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`incremental_dedup_newbatch` served from the PERSISTED band
-    index (plans/storage.write_band_index): the old corpus is shingled,
-    banded AND hashed once at index-build time; the per-increment probe
-    joins the batch's band keys against the index, fetches old shingle
-    sets by candidate-id semi-join, and runs the exact gate against the
-    index's stored sha set — old corpus text is never re-scanned by ANY
-    gate (tests/test_storage.py pins the pair probe's executed plan to
-    index-only scans). Same output, same oracle as the recompute form;
-    the two queries together put a driver-checked number on what the
-    index saves."""
-    from .storage import (
-        band_index_sha_set,
-        incremental_neardup_pairs_indexed,
-        write_band_index,
-    )
-
-    old, new = _incremental_split(spark, sf_dir)
-    path = _persisted_index(
-        "band", sf_dir, lambda p: write_band_index(old, p)
-    )
-    pairs = incremental_neardup_pairs_indexed(new, path, threshold=0.5)
-    out = _incremental_status(band_index_sha_set(spark, path), new, pairs)
-    return D.pin(out, pairs)
-
-
-@query(
-    "incremental_dedup_deleted",
-    oracle=_incremental_oracle(
-        old_pred="({d} < 1000000 AND {d} % 40 != 0)"
-    ),
-)
-def incremental_dedup_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`incremental_dedup_indexed` after a TAKEDOWN hits the old
-    corpus (r11 — the band layout's driver-green deletion gate,
-    pairing pq_deleted_probe on the vector side): every 40th old doc
-    — half the planted exact twins' partners and a quarter of the
-    near variants' — is tombstoned (plans/storage.delete_from_index)
-    and the increment
-    is classified against what REMAINS — a new doc whose only exact
-    twin or near-dup partner was deleted must now read 'unique', its
-    candidates never generated, its content hash gone from the
-    exact-dup sha set (the r11 (doc_id, _sha) linkage). The oracle
-    replays the whole incremental pipeline with the tombstoned ids
-    excluded from the old side everywhere it appears (band a-side,
-    shared-shingle verify, sha set) — one `old_pred` parameter on the
-    shared generator, zero restated arithmetic. The status counts
-    visibly differ from incremental_dedup_indexed's, so a silently
-    ignored tombstone hash-mismatches."""
-    from .storage import (
-        band_index_sha_set,
-        delete_from_index,
-        incremental_neardup_pairs_indexed,
-        write_band_index,
-    )
-
-    old, new = _incremental_split(spark, sf_dir)
-
-    def build(p: str) -> None:
-        write_band_index(old, p)
-        delete_from_index(
-            old.filter(F.col("doc_id") % 40 == 0).select("doc_id"), p
-        )
-
-    path = _persisted_index("band_del", sf_dir, build)
-    pairs = incremental_neardup_pairs_indexed(new, path, threshold=0.5)
-    out = _incremental_status(band_index_sha_set(spark, path), new, pairs)
-    return D.pin(out, pairs)
-
-
-@query(
-    "ivf_index_probe",
-    oracle=_filtered_ivf_oracle(10, coarse_iters=_CTR_ITERS),
-    bench=True,
-)
-def ivf_index_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`filtered_ann_ivf` served from the PERSISTED filtered-IVF layout
-    (plans/storage.write_filtered_ivf_index → ivf_index_probe): the
-    eligibility gate and centroid build pay once at index-build time;
-    the probe ranks the stored centroids and partition-prune-scans
-    exactly nprobe `cell=` directories of eligible vectors
-    (tests/test_storage.py asserts the executed scan's partition
-    count). Same top-k, same oracle as the in-memory form — this query
-    is the driver-checked proof of §2.C row 53's layout."""
-    from .storage import ivf_index_probe, write_filtered_ivf_index
-
-    path = _persisted_index(
-        "fivf", sf_dir,
-        lambda p: write_filtered_ivf_index(
-            load_table(spark, sf_dir, "documents"),
-            load_table(spark, sf_dir, "embeddings"),
-            p, n_cells=8,
-            coarse_train_iterations=_CTR_ITERS,
-        ),
-    )
-    q = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
-    # expect pins the geometry/eligibility this query's ORACLE replays
-    return ivf_index_probe(
-        spark, path, q, k=10, nprobe=2,
-        expect={"n_cells": 8, "min_chars": 200, "lang": "en",
-                "coarse_train_iters": _CTR_ITERS},
-    )
-
-
-@query(
-    "ivf_append_probe",
-    oracle=_filtered_ivf_oracle(10, cents_where="WHERE vec_id % 2 = 0"),
-    bench=True,
-)
-def ivf_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental index maintenance through the driver gate
-    (plans/storage.append_to_ivf_index): the index is BUILT over the
-    even-id half of the eligible vectors, then the odd-id half arrives
-    as a later batch and is APPENDED — assigned against the stored
-    centroids, committed as an atomic `appends` delta, base cells
-    untouched. The probe unions base + delta (each leg partition-
-    pruned). The DuckDB oracle replays exactly that geometry: centroid
-    seeds from the even half only, assignment over everything — so a
-    wrong append (re-seeded centroids, missed eligibility gate, torn
-    delta visible) hash-mismatches. At 100 TB this is the daily-batch
-    shape: per-batch cost is one assignment scan of the BATCH plus a
-    metadata commit; the rebuild is the compaction."""
-    from .storage import (
-        append_to_ivf_index,
-        ivf_index_probe,
-        write_filtered_ivf_index,
-    )
-
-    def build(p: str) -> None:
-        docs = load_table(spark, sf_dir, "documents")
-        emb = load_table(spark, sf_dir, "embeddings")
-        write_filtered_ivf_index(
-            docs, emb.filter(F.col("vec_id") % 2 == 0), p, n_cells=8
-        )
-        append_to_ivf_index(docs, emb.filter(F.col("vec_id") % 2 == 1), p)
-
-    path = _persisted_index("fivf_app", sf_dir, build)
-    q = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
-    return ivf_index_probe(
-        spark, path, q, k=10, nprobe=2, expect={"n_cells": 8}
-    )
-
-
-_IVF_BATCH_Q = 3
-
-
-@query(
-    "ivf_batch_probe",
-    bench=True,
-    oracle=f"""
-    WITH {_FILTERED_E_SQL},
-    {_trained_cents_ctes(_CTR_ITERS, 8)},
-    cscored AS (
-        SELECT e.vec_id, e.v, c.cid,
-               {_COS.format(a='e.v', b='c.cvec')} AS score
-        FROM e CROSS JOIN cents c),
-    assign AS (
-        SELECT vec_id, v, cid FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                         ORDER BY score DESC, cid) AS rn
-            FROM cscored) t
-        WHERE rn = 1),
-    qs AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-           FROM embeddings WHERE vec_id < {_IVF_BATCH_Q}),
-    qcells AS (
-        SELECT qid, cid FROM (
-            SELECT qs.qid, c.cid,
-                   ROW_NUMBER() OVER (PARTITION BY qs.qid
-                       ORDER BY {_COS.format(a='qs.qv', b='c.cvec')} DESC,
-                                c.cid) AS rn
-            FROM qs CROSS JOIN cents c) t
-        WHERE rn <= 2),
-    res AS (
-        SELECT q.qid, a.vec_id,
-               ROUND({_COS.format(a='a.v', b='q.qv')}, 6) AS cos_sim
-        FROM assign a
-        JOIN qcells qc ON a.cid = qc.cid
-        JOIN qs q ON q.qid = qc.qid)
-    SELECT qid, vec_id, cos_sim, CAST(rank AS INT) AS rank FROM (
-        SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY qid ORDER BY cos_sim DESC, vec_id) AS rank
-        FROM res) s
-    WHERE rank <= 5
-    ORDER BY qid, rank
-    """,
-)
-def ivf_batch_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q-query batch served from the persisted filtered-IVF layout
-    (plans/storage.ivf_batch_probe, r11 — completes the batch-serving
-    matrix: every persisted vector layout now has single AND batch
-    probes): relational per-query cell ranking, ONE partition-pruned
-    scan of the union of probed cells reading eligible floats once
-    for all Q queries, cosine scoring against the Q x nprobe query
-    broadcast, per-query top-k as WindowGroupLimit. The oracle
-    replays eligibility, assignment, each qid's cell ranking and
-    cosine top-k with every row's rank."""
-    from .storage import ivf_batch_probe, write_filtered_ivf_index
-
-    path = _persisted_index(
-        "fivf", sf_dir,
-        lambda p: write_filtered_ivf_index(
-            load_table(spark, sf_dir, "documents"),
-            load_table(spark, sf_dir, "embeddings"),
-            p, n_cells=8,
-            coarse_train_iterations=_CTR_ITERS,
-        ),
-    )
-    qs = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < _IVF_BATCH_Q)
-        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
-    )
-    probe = ivf_batch_probe(
-        spark, path, qs, k=5, nprobe=2,
-        expect={"n_cells": 8, "min_chars": 200, "lang": "en",
-                "coarse_train_iters": _CTR_ITERS},
-    )
-    # pin the probe's persisted query relation to the composed plan
-    # (the D.pin rule)
-    return D.pin(probe.orderBy("qid", "rank"), probe)
-
-
 # ---------------------------------------------------------------------------
-# product quantization ADC (r7)
+# product quantization ADC
 # ---------------------------------------------------------------------------
+
+_L2_SQL = (
+    "list_sum(list_transform(generate_series(1, {dim}), i -> "
+    "({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
+)
+
+
+def _cb_seed(name: str, cb_src: str) -> str:
+    """The seed codebook: the PQ_K lowest-id vectors of `cb_src`."""
+    return f"""{name} AS (
+        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS entry, v
+        FROM (SELECT * FROM {cb_src} ORDER BY vec_id LIMIT {S.PQ_K}) s
+    )"""
+
 
 def _trained_cb_ctes(iters: int, cb_src: str = "e") -> str:
     """CTE chain replaying operators/similarity.pq_codebook_trained:
@@ -3497,12 +3376,9 @@ def _trained_cb_ctes(iters: int, cb_src: str = "e") -> str:
     offsets recovers exactly block j's trained entry, so every
     downstream _pq_oracle expression (encode/LUT/ADC) is reused
     verbatim."""
-    m, sub, kk = S.PQ_M, S.PQ_SUB, S.PQ_K
+    m, sub = S.PQ_M, S.PQ_SUB
     ctes = [
-        f"""cbseed AS (
-        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS entry, v
-        FROM (SELECT * FROM {cb_src} ORDER BY vec_id LIMIT {kk}) s
-    )""",
+        _cb_seed("cbseed", cb_src),
         f"""subs AS (
         SELECT e.vec_id, gb.b AS blk,
                list_transform(generate_series(1, {sub}),
@@ -3571,39 +3447,37 @@ def _pq_oracle(
     rerank_src: str = "e",
     rerank_q: str = "q",
 ) -> str:
-    """PQ encode + ADC replay. Parameterized (r8) so the IVF-PQ
-    composition reuses the SAME generated arithmetic over a different
-    corpus CTE (`e_sql`), with extra CTEs (coarse cells) and a cell
-    filter — one generator, zero restated L2/pack/LUT strings.
-    `batch_k` (r9) switches to the BATCH serving shape: `q_sql` must
-    then yield (qid, qv) rows, the LUT is built per qid, and the
-    output is the per-query top-`batch_k` via ROW_NUMBER — the
-    pq_index_batch_probe replay, still zero restated arithmetic.
-    `keyed_lut` (r9) keys the LUT by qid like batch mode but keeps the
+    """PQ encode + ADC replay. Parameterized so the IVF-PQ composition
+    reuses the SAME generated arithmetic over a different corpus CTE
+    (`e_sql`), with extra CTEs (coarse cells) and a cell filter — one
+    generator, zero restated L2/pack/LUT strings.
+    `batch_k` switches to the BATCH serving shape: `q_sql` must then
+    yield (qid, qv) rows, the LUT is built per qid, and the output is
+    the per-query top-`batch_k` via ROW_NUMBER.
+    `keyed_lut` keys the LUT by qid like batch mode but keeps the
     single GLOBAL top-`limit` output — the residual-IVFADC replay,
     where `q_sql` yields one (qid=cell, qv=query residual) row per
     probed cell and the caller's `where` binds lutl.qid to each
-    vector's assigned cell. `trained_iters` (r10) swaps the seed-only
-    `cb` CTE for the Lloyd-trained chain (_trained_cb_ctes) — every
-    downstream expression is reused verbatim over the trained
-    entries. `rerank` (r12) replays the IVFADC+R tier
-    (plans/storage._rerank_exact): the single-query ADC output
-    becomes a top-`rerank` candidate CTE, joined back by id to the
-    RAW-vector CTE `rerank_src` and re-ordered by exact squared L2
-    against the raw query CTE `rerank_q` — output (vec_id, adist,
-    dist), matching the probe's rerank contract."""
+    vector's assigned cell. With `batch_k` too, `q_sql` yields one
+    (qid, cell, qv=residual) row per (query, probed cell), the LUT
+    keys by both, and `where` binds lutl.cell to the assigned cell.
+    `trained_iters` swaps the seed-only `cb` CTE for the Lloyd-trained
+    chain (_trained_cb_ctes) — every downstream expression is reused
+    verbatim over the trained entries. `rerank` replays the IVFADC+R
+    tier (plans/storage._rerank_exact): the ADC output becomes a
+    top-`rerank` candidate set, joined back by id to the RAW-vector
+    CTE `rerank_src` and re-ordered by exact squared L2 against the
+    raw query CTE `rerank_q` — output (vec_id, adist, dist), matching
+    the probe's rerank contract."""
     if rerank and rerank < (batch_k if batch_k is not None else limit):
         raise ValueError(
             f"_pq_oracle: rerank={rerank} must be >= the requested k"
         )
-    m, sub, kk = S.PQ_M, S.PQ_SUB, S.PQ_K
+    m, sub = S.PQ_M, S.PQ_SUB
     cb_cte = (
         _trained_cb_ctes(trained_iters, cb_src)
         if trained_iters > 0
-        else f"""cb AS (
-        SELECT row_number() OVER (ORDER BY vec_id) - 1 AS entry, v
-        FROM (SELECT * FROM {cb_src} ORDER BY vec_id LIMIT {kk}) s
-    )"""
+        else _cb_seed("cb", cb_src)
     )
 
     def l2(av: str, bv: str, j: int) -> str:
@@ -3613,36 +3487,19 @@ def _pq_oracle(
             f" * ({av}[{j * sub} + i] - {bv}[{j * sub} + i])))"
         )
 
-    d_cols = ",\n           ".join(
-        f"{l2('e.v', 'cb.v', j)} AS d_{j}" for j in range(m)
-    )
-    dlists = ",\n           ".join(
-        f"list(d_{j} ORDER BY entry) AS dl_{j}" for j in range(m)
-    )
-    codes = ",\n           ".join(
-        f"CAST(list_position(dl_{j}, list_min(dl_{j})) - 1 AS BIGINT) AS c_{j}"
-        for j in range(m)
-    )
-    l_cols = ",\n           ".join(
-        f"{l2('q.qv', 'cb.v', j)} AS l_{j}" for j in range(m)
-    )
-    llists = ",\n           ".join(
-        f"list(l_{j} ORDER BY entry) AS L_{j}" for j in range(m)
-    )
+    def cols(fmt) -> str:
+        return ",\n           ".join(fmt(j) for j in range(m))
+
     packed = " + ".join(f"c_{j} * {1 << (4 * j)}" for j in range(m))
     adist = " + ".join(f"L_{j}[CAST(c_{j} AS INT) + 1]" for j in range(m))
-    if batch_k is not None:
-        # keyed_lut in BATCH mode (r12 — the residual-IVFADC batch
-        # replay): q_sql yields one (qid, cell, qv=residual) row per
-        # (query, probed cell), the LUT keys by BOTH, and the
-        # caller's `where` binds lutl.cell to each vector's assigned
-        # cell — the batch twin of the single keyed replay below
-        blut_cell = "q.cell, " if keyed_lut else ""
-        blutl_cell = "cell, " if keyed_lut else ""
-        blut_grp = "qid, cell" if keyed_lut else "qid"
-        if rerank:
-            l2_re = _L2_SQL.format(dim=S.DIM, a="re.v", b="rq.qv")
-            batch_final = f"""
+    batch = batch_k is not None
+    keyed, by_cell = batch or keyed_lut, batch and keyed_lut
+    lut_key = "q.qid, " * keyed + "q.cell, " * by_cell
+    lutl_key = "qid, " * keyed + "cell, " * by_cell
+    lutl_grp = f" GROUP BY qid{', cell' * by_cell}" if keyed else ""
+    l2_re = _L2_SQL.format(dim=S.DIM, a="re.v", b="rq.qv")
+    if batch and rerank:
+        final = f"""
     SELECT qid, vec_id, adist, dist, CAST(rank AS INT) AS rank FROM (
         SELECT a.qid, a.vec_id, a.adist,
                ROUND({l2_re}, 6) AS dist,
@@ -3663,8 +3520,8 @@ def _pq_oracle(
         WHERE a.rn <= {rerank}
     ) t WHERE rank <= {batch_k}
     ORDER BY qid, rank"""
-        else:
-            batch_final = f"""
+    elif batch:
+        final = f"""
     SELECT qid, vec_id, pq_code, adist, CAST(rn AS INT) AS rank FROM (
         SELECT lutl.qid, enc.vec_id,
                CAST({packed} AS BIGINT) AS pq_code,
@@ -3676,40 +3533,8 @@ def _pq_oracle(
         {where}
     ) t WHERE rn <= {batch_k}
     ORDER BY qid, rank"""
-        return f"""
-    WITH {pre_ctes}e AS ({e_sql}),
-    {cb_cte},
-    dists AS (
-        SELECT e.vec_id, cb.entry,
-           {d_cols}
-        FROM e, cb
-    ),
-    dl AS (
-        SELECT vec_id,
-           {dlists}
-        FROM dists GROUP BY vec_id
-    ),
-    enc AS (
-        SELECT vec_id,
-           {codes}
-        FROM dl
-    ),
-    q AS ({q_sql}),
-    lut AS (
-        SELECT q.qid, {blut_cell}cb.entry,
-           {l_cols}
-        FROM cb, q
-    ),
-    lutl AS (
-        SELECT qid, {blutl_cell}{llists} FROM lut GROUP BY {blut_grp}
-    ){post_ctes}{batch_final}
-    """
-    lut_qid = "q.qid, " if keyed_lut else ""
-    lutl_qid = "qid, " if keyed_lut else ""
-    lutl_grp = " GROUP BY qid" if keyed_lut else ""
-    if rerank:
-        l2_re = _L2_SQL.format(dim=S.DIM, a="re.v", b="rq.qv")
-        rerank_final = f""",
+    elif rerank:
+        final = f""",
     adc_top AS (
         SELECT enc.vec_id,
                ROUND({adist}, 6) AS adist
@@ -3725,7 +3550,7 @@ def _pq_oracle(
     ORDER BY dist, a.vec_id
     LIMIT {limit}"""
     else:
-        rerank_final = f"""
+        final = f"""
     SELECT enc.vec_id,
            CAST({packed} AS BIGINT) AS pq_code,
            ROUND({adist}, 6) AS adist
@@ -3738,28 +3563,28 @@ def _pq_oracle(
     {cb_cte},
     dists AS (
         SELECT e.vec_id, cb.entry,
-           {d_cols}
+           {cols(lambda j: f"{l2('e.v', 'cb.v', j)} AS d_{j}")}
         FROM e, cb
     ),
     dl AS (
         SELECT vec_id,
-           {dlists}
+           {cols(lambda j: f"list(d_{j} ORDER BY entry) AS dl_{j}")}
         FROM dists GROUP BY vec_id
     ),
     enc AS (
         SELECT vec_id,
-           {codes}
+           {cols(lambda j: f"CAST(list_position(dl_{j}, list_min(dl_{j})) - 1 AS BIGINT) AS c_{j}")}
         FROM dl
     ),
     q AS ({q_sql}),
     lut AS (
-        SELECT {lut_qid}cb.entry,
-           {l_cols}
+        SELECT {lut_key}cb.entry,
+           {cols(lambda j: f"{l2('q.qv', 'cb.v', j)} AS l_{j}")}
         FROM cb, q
     ),
     lutl AS (
-        SELECT {lutl_qid}{llists} FROM lut{lutl_grp}
-    ){post_ctes}{rerank_final}
+        SELECT {lutl_key}{cols(lambda j: f"list(l_{j} ORDER BY entry) AS L_{j}")} FROM lut{lutl_grp}
+    ){post_ctes}{final}
     """
 
 
@@ -3782,153 +3607,6 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.pq_adc_topk(e, q, k=10)
 
 
-@query(
-    "pq_index_probe",
-    oracle=_pq_oracle(trained_iters=_TRAINED_ITERS),
-    bench=True,
-)
-def pq_index_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`pq_adc_topk` served from the PERSISTED PQ index
-    (plans/storage.write_pq_index → pq_index_probe): the codebook
-    derivation and the full-corpus encode pay once at index-build
-    time; the probe builds one LUT row against the STORED codebook and
-    scans ONLY the 8-byte packed codes (tests/test_storage.py pins the
-    executed plan's file scans to the index directories — the float
-    embedding column of the corpus is read zero times per query).
-    Same top-k, same oracle as the in-query form; this entry carries
-    the bench flag (r8, r7 verdict item 3) because the probe is the
-    per-query production cost — the in-query pq_adc_topk re-encodes
-    the corpus per run, i.e. times the BUILD."""
-    from .storage import pq_index_probe, write_pq_index
-
-    path = _persisted_index(
-        "pq", sf_dir,
-        lambda p: write_pq_index(
-            load_table(spark, sf_dir, "embeddings"), p,
-            train_iterations=_TRAINED_ITERS,
-        ),
-    )
-    q = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
-    # expect pins the code geometry this query's ORACLE replays
-    return pq_index_probe(
-        spark, path, q, k=10,
-        expect={"pq_m": S.PQ_M, "pq_sub": S.PQ_SUB,
-                "pq_k": S.PQ_K,
-                "pq_train_iters": _TRAINED_ITERS},
-    )
-
-
-@query(
-    "pq_append_probe",
-    oracle=_pq_oracle(cb_src="(SELECT * FROM e WHERE vec_id % 2 = 0)"),
-    bench=True,
-)
-def pq_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental PQ maintenance through the driver gate
-    (plans/storage.append_to_pq_index): the index is BUILT over the
-    even-id half of the corpus — so the codebook entries are the 16
-    lowest EVEN ids — then the odd half arrives as a later batch and
-    is APPENDED: encoded against the STORED codebook, committed as an
-    atomic `appends` delta, base codes untouched. The probe unions
-    base + delta codes. The oracle replays exactly that geometry
-    (codebook seeded from the even half only, encode over everything)
-    — a wrong append (re-derived codebook, torn delta visible)
-    hash-mismatches. At 100 TB this is the daily-batch shape: per
-    batch one encode scan of the BATCH + a metadata commit; rebuild
-    is the compaction."""
-    from .storage import append_to_pq_index, pq_index_probe, write_pq_index
-
-    def build(p: str) -> None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        write_pq_index(emb.filter(F.col("vec_id") % 2 == 0), p)
-        append_to_pq_index(emb.filter(F.col("vec_id") % 2 == 1), p)
-
-    path = _persisted_index("pq_app", sf_dir, build)
-    q = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
-    return pq_index_probe(
-        spark, path, q, k=10,
-        expect={"pq_m": S.PQ_M, "pq_sub": S.PQ_SUB, "pq_k": S.PQ_K},
-    )
-
-
-@query(
-    "pq_deleted_probe",
-    oracle=_pq_oracle(where="WHERE enc.vec_id NOT IN (0, 3)"),
-)
-def pq_deleted_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Takedown through the driver gate (plans/storage.
-    delete_from_index, r11 — the r10 verdict's missing lifecycle
-    verb): the PQ index is built over the full corpus, then ids
-    0 and 3 are tombstoned — an atomic `tombstones` delta, the
-    appends commit machinery verbatim — and the probe anti-joins the
-    committed tombstone union, so the deleted ids vanish from serving
-    WITHOUT a rebuild (id 0 is the query vector itself, whose own
-    code is the undeleted rank-1 row — the exclusion visibly reshapes
-    the top-k). The oracle replays the full encode+ADC pipeline with
-    the tombstoned ids excluded from the final scan. Compaction
-    physically drops the rows and resets the counter
-    (tests/test_storage.py pins probe-parity across the fold and the
-    ids' absence from the folded base)."""
-    from .storage import delete_from_index, pq_index_probe, write_pq_index
-
-    def build(p: str) -> None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        write_pq_index(emb, p)
-        delete_from_index(
-            emb.filter(F.col("vec_id").isin(0, 3)).select("vec_id"), p
-        )
-
-    path = _persisted_index("pq_del", sf_dir, build)
-    q = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
-    return pq_index_probe(
-        spark, path, q, k=10,
-        expect={"pq_m": S.PQ_M, "pq_sub": S.PQ_SUB, "pq_k": S.PQ_K},
-    )
-
-
-@query(
-    "pq_batch_probe",
-    oracle=_pq_oracle(
-        batch_k=5,
-        q_sql="SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 3",
-        trained_iters=_TRAINED_ITERS,
-    ),
-    bench=True,
-)
-def pq_batch_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q-query batch served from the persisted PQ codes
-    (plans/storage.pq_index_batch_probe, r8 verdict item 5): before
-    this, a query batch had to fall back to the in-memory batch_topk,
-    which scans the FLOAT embedding column — here the one corpus pass
-    for the whole batch reads only the stored 8-byte codes (code-only
-    scan pinned by the executed-plan test), the Q per-query LUTs ride
-    one broadcast, and the per-query top-k plans as WindowGroupLimit
-    so the shuffle carries at most Q x k rows per partition. The
-    oracle replays the shared PQ arithmetic per qid (same generator
-    as every other PQ query — zero restated strings) including each
-    row's rank."""
-    from .storage import pq_index_batch_probe, write_pq_index
-
-    path = _persisted_index(
-        "pq", sf_dir,
-        lambda p: write_pq_index(
-            load_table(spark, sf_dir, "embeddings"), p,
-            train_iterations=_TRAINED_ITERS,
-        ),
-    )
-    qs = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 3)
-        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
-    )
-    return pq_index_batch_probe(
-        spark, path, qs, k=5,
-        expect={"pq_m": S.PQ_M, "pq_sub": S.PQ_SUB,
-                "pq_k": S.PQ_K,
-                "pq_train_iters": _TRAINED_ITERS},
-    )
-
-
 def _ivfpq_oracle(
     limit: int = 10,
     nprobe: int = 2,
@@ -3938,7 +3616,7 @@ def _ivfpq_oracle(
     trained_iters: int = 0,
     coarse_iters: int = 0,
     rerank: int = 0,
-    batch_q_where: str = "vec_id < 3",
+    q_where: str = "",
 ) -> str:
     """IVF-PQ replay: the PQ generator's arithmetic over the ELIGIBLE
     corpus, composed with the coarse-quantizer CTEs — assignment over
@@ -3947,443 +3625,108 @@ def _ivfpq_oracle(
     `seed_where` narrows BOTH quantizers' seed sets (centroids and
     codebook) to the original build's subset while assignment and
     encode run over everything — exactly what an appended index
-    serves (the append-probe geometry). `batch_k` (r9) switches to
-    the BATCH serving replay (ivfpq_batch_probe): per-qid cell
-    ranking via ROW_NUMBER, per-qid LUTs, per-qid top-`batch_k`.
-    `residual` (r9) replays the IVFADC layout: the PQ arithmetic runs
-    over RESIDUALS v − centroid(assigned cell) — the codebook from
-    the lowest-id residuals, the LUT per probed cell from the QUERY'S
+    serves (the append-probe geometry). `batch_k` switches to the
+    BATCH serving replay: per-qid cell ranking via ROW_NUMBER, per-qid
+    LUTs, per-qid top-`batch_k` over the `q_where` queries.
+    `residual` replays the IVFADC layout: the PQ arithmetic runs over
+    RESIDUALS v − centroid(assigned cell) — the codebook from the
+    lowest-id residuals, the LUT per probed cell from the QUERY'S
     residual against that cell's centroid (keyed_lut), the final join
     binding each vector's cell to its LUT row."""
-    if residual and seed_where:
-        # unsupported compositions must be LOUD (r9 review): silently
-        # ignoring seed_where would replay the wrong append geometry
+    if seed_where and (residual or trained_iters or coarse_iters):
+        # an appended index keeps the quantizers of its ORIGINAL build;
+        # a residual or trained replay here would re-derive them over
+        # the appended corpus and silently replay the wrong geometry
         raise ValueError(
-            "_ivfpq_oracle: residual mode does not compose with "
-            "seed_where yet — the replay would silently use the "
-            "full-set geometry"
+            "_ivfpq_oracle: seed_where (the append geometry) does not "
+            "compose with residual or trained quantizers"
         )
-    if trained_iters and seed_where:
-        # an appended trained index encodes new batches against the
-        # codebook trained on the ORIGINAL corpus; the trained chain
-        # here trains over the full current `e` — replaying that for
-        # an append geometry would silently use the wrong training set
-        raise ValueError(
-            "_ivfpq_oracle: trained_iters does not compose with "
-            "seed_where — the append replay would retrain on the "
-            "appended corpus instead of the stored codebook's"
+    batch = batch_k is not None
+    if not residual:
+        if batch:
+            q_sql = (
+                "SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv "
+                f"FROM embeddings WHERE {q_where}"
+            )
+            bind = "qcells.qid = lutl.qid AND qcells.cid = assign.cid"
+        else:
+            q_sql = (
+                "SELECT CAST(embedding AS DOUBLE[]) AS qv "
+                "FROM embeddings WHERE vec_id = 0"
+            )
+            bind = "assign.cid IN (SELECT cid FROM qcells)"
+        return _pq_oracle(
+            pre_ctes=_OK_CTE,
+            e_sql=_ELIGIBLE_SQL,
+            post_ctes=(
+                f",\n    {_coarse_ctes('e', 8, coarse_iters, f' {seed_where}')},"
+                f"\n    {_qcells('q', nprobe, batch)}"
+            ),
+            from_extra=", assign, qcells" if batch else ", assign",
+            where=f"WHERE assign.vec_id = enc.vec_id AND {bind}",
+            limit=limit,
+            q_sql=q_sql,
+            cb_src=f"(SELECT * FROM e {seed_where})" if seed_where else "e",
+            batch_k=batch_k,
+            trained_iters=trained_iters,
+            rerank=rerank,
         )
-    if coarse_iters and seed_where:
-        raise ValueError(
-            "_ivfpq_oracle: coarse_iters does not compose with "
-            "seed_where yet — the append replay would silently "
-            "retrain the coarse quantizer on the appended corpus"
-        )
-    if residual:
-        dim = S.DIM
-        cents_cte = (
-            _trained_cents_ctes(coarse_iters, 8, src="e0")
-            if coarse_iters > 0
-            else """cents AS (SELECT vec_id AS cid, v AS cvec FROM e0
-              ORDER BY vec_id LIMIT 8)"""
-        )
-        pre = f"""ok AS (
-        SELECT doc_id FROM documents
-        WHERE n_chars >= 200 AND lang = 'en'
-    ),
-    e0 AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        FROM embeddings
-        WHERE vec_id IN (SELECT doc_id FROM ok)
-    ),
-    {cents_cte},
-    cscored AS (
-        SELECT e0.vec_id, c.cid,
-               {_COS.format(a='e0.v', b='c.cvec')} AS score
-        FROM e0 CROSS JOIN cents c),
-    assign AS (
-        SELECT vec_id, cid FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                         ORDER BY score DESC, cid) AS rn
-            FROM cscored) t
-        WHERE rn = 1),
-    """
-        e_sql = f"""SELECT e0.vec_id,
-               list_transform(generate_series(1, {dim}),
-                              i -> e0.v[i] - c.cvec[i]) AS v
-        FROM e0
-        JOIN assign a ON a.vec_id = e0.vec_id
-        JOIN cents c ON c.cid = a.cid"""
-        if batch_k is not None:
-            # batch IVFADC replay (r12): per-qid cell ranking, one
-            # (qid, cell, residual) LUT row per probed pair — the
-            # (qid, cell)-keyed batch LUT in _pq_oracle — and the
-            # final binding joins each vector's assigned cell to its
-            # query's LUT row for that cell
-            pre += f"""q0 AS (
+    dim = S.DIM
+    if batch:
+        q0 = f"""q0 AS (
         SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-        FROM embeddings WHERE {batch_q_where}),
-    qcells AS (
-        SELECT qid, cid FROM (
-            SELECT q0.qid, c.cid,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q0.qid
-                       ORDER BY {_COS.format(a='q0.qv', b='c.cvec')} DESC,
-                                c.cid) AS rn
-            FROM cents c, q0) t
-        WHERE rn <= {nprobe}),
-    """
-            return _pq_oracle(
-                pre_ctes=pre,
-                e_sql=e_sql,
-                from_extra=", assign",
-                where=(
-                    "WHERE assign.vec_id = enc.vec_id "
-                    "AND lutl.cell = assign.cid"
-                ),
-                q_sql=f"""SELECT q0.qid, c.cid AS cell,
+        FROM embeddings WHERE {q_where}),"""
+        q_sql = f"""SELECT q0.qid, c.cid AS cell,
                list_transform(generate_series(1, {dim}),
                               i -> q0.qv[i] - c.cvec[i]) AS qv
         FROM q0
         JOIN qcells ON qcells.qid = q0.qid
-        JOIN cents c ON c.cid = qcells.cid""",
-                keyed_lut=True,
-                batch_k=batch_k,
-                trained_iters=trained_iters,
-                rerank=rerank,
-                rerank_src="e0",
-                rerank_q="q0",
-            )
-        pre += f"""q0 AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-           FROM embeddings WHERE vec_id = 0),
-    qcells AS (
-        SELECT c.cid FROM cents c, q0
-        ORDER BY {_COS.format(a='q0.qv', b='c.cvec')} DESC, c.cid
-        LIMIT {nprobe}),
-    """
-        return _pq_oracle(
-            pre_ctes=pre,
-            e_sql=e_sql,
-            from_extra=", assign",
-            where=(
-                "WHERE assign.vec_id = enc.vec_id "
-                "AND lutl.qid = assign.cid"
-            ),
-            limit=limit,
-            q_sql=f"""SELECT c.cid AS qid,
+        JOIN cents c ON c.cid = qcells.cid"""
+    else:
+        q0 = """q0 AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
+           FROM embeddings WHERE vec_id = 0),"""
+        q_sql = f"""SELECT c.cid AS qid,
                list_transform(generate_series(1, {dim}),
                               i -> q0.qv[i] - c.cvec[i]) AS qv
         FROM cents c
-        JOIN qcells ON qcells.cid = c.cid, q0""",
-            keyed_lut=True,
-            trained_iters=trained_iters,
-            # IVFADC+R replay (r12): raw vectors live in e0 and the
-            # raw query in q0 — `e` here is the RESIDUAL relation, so
-            # the exact tier must reach past it
-            rerank=rerank,
-            rerank_src="e0",
-            rerank_q="q0",
-        )
-    if batch_k is None:
-        qcells = f"""
-    qcells AS (
-        SELECT c.cid FROM cents c, q
-        ORDER BY {_COS.format(a='q.qv', b='c.cvec')} DESC, c.cid
-        LIMIT {nprobe})"""
-        q_sql = (
-            "SELECT CAST(embedding AS DOUBLE[]) AS qv "
-            "FROM embeddings WHERE vec_id = 0"
-        )
-        where = (
-            "WHERE assign.vec_id = enc.vec_id "
-            "AND assign.cid IN (SELECT cid FROM qcells)"
-        )
-        from_extra = ", assign"
-    else:
-        qcells = f"""
-    qcells AS (
-        SELECT qid, cid FROM (
-            SELECT q.qid, c.cid,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q.qid
-                       ORDER BY {_COS.format(a='q.qv', b='c.cvec')} DESC,
-                                c.cid) AS rn
-            FROM cents c, q) t
-        WHERE rn <= {nprobe})"""
-        q_sql = (
-            "SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv "
-            f"FROM embeddings WHERE {batch_q_where}"
-        )
-        where = (
-            "WHERE assign.vec_id = enc.vec_id "
-            "AND qcells.qid = lutl.qid AND qcells.cid = assign.cid"
-        )
-        from_extra = ", assign, qcells"
-    ncents_cte = (
-        _trained_cents_ctes(coarse_iters, 8)
-        if coarse_iters > 0
-        else f"""cents AS (SELECT vec_id AS cid, v AS cvec FROM e {seed_where}
-              ORDER BY vec_id LIMIT 8)"""
-    )
-    post = f""",
-    {ncents_cte},
-    cscored AS (
-        SELECT e.vec_id, c.cid,
-               {_COS.format(a='e.v', b='c.cvec')} AS score
-        FROM e CROSS JOIN cents c),
-    assign AS (
-        SELECT vec_id, cid FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                         ORDER BY score DESC, cid) AS rn
-            FROM cscored) t
-        WHERE rn = 1),{qcells}"""
+        JOIN qcells ON qcells.cid = c.cid, q0"""
+    # the raw vectors live in e0 and the raw query in q0 — `e` here is
+    # the RESIDUAL relation, so the exact re-rank tier reaches past it
     return _pq_oracle(
-        pre_ctes="""ok AS (
-        SELECT doc_id FROM documents
-        WHERE n_chars >= 200 AND lang = 'en'
+        pre_ctes=f"""{_OK_CTE}e0 AS (
+        {_ELIGIBLE_SQL}
     ),
+    {_coarse_ctes("e0", 8, coarse_iters)},
+    {q0}
+    {_qcells("q0", nprobe, batch)},
     """,
-        e_sql="""SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        FROM embeddings
-        WHERE vec_id IN (SELECT doc_id FROM ok)""",
-        post_ctes=post,
-        from_extra=from_extra,
-        where=where,
+        e_sql=f"""SELECT e0.vec_id,
+               list_transform(generate_series(1, {dim}),
+                              i -> e0.v[i] - c.cvec[i]) AS v
+        FROM e0
+        JOIN assign a ON a.vec_id = e0.vec_id
+        JOIN cents c ON c.cid = a.cid""",
+        from_extra=", assign",
+        where=(
+            "WHERE assign.vec_id = enc.vec_id "
+            f"AND lutl.{'cell' if batch else 'qid'} = assign.cid"
+        ),
         limit=limit,
         q_sql=q_sql,
-        cb_src=(
-            "e" if not seed_where
-            else f"(SELECT * FROM e {seed_where})"
-        ),
+        keyed_lut=True,
         batch_k=batch_k,
         trained_iters=trained_iters,
         rerank=rerank,
-    )
-
-
-@query(
-    "ivfpq_probe",
-    oracle=_ivfpq_oracle(trained_iters=_TRAINED_ITERS,
-                         coarse_iters=_CTR_ITERS),
-    bench=True,
-)
-def ivfpq_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ — the composed billion-scale ANN serving shape (Jégou et
-    al. 2011 §V; plans/storage.write_ivfpq_index → ivfpq_probe): the
-    coarse quantizer decides WHICH cells are read (partition-pruned to
-    nprobe `cell=` directories) and product quantization decides WHAT
-    is read to score them (8-byte packed codes, never the floats) —
-    at 100 TB the two savings multiply to nprobe/n_cells x 1/32 of
-    the vector bytes per query. Codebook, centroids and codes all come
-    from one committed version; the oracle re-derives the eligible
-    set, the coarse assignment, the qcell ranking, every 4-bit code
-    AND the ADC arithmetic, so a drift in any stored artifact
-    hash-mismatches."""
-    from .storage import ivfpq_probe, write_ivfpq_index
-
-    path = _persisted_index(
-        "ivfpq", sf_dir,
-        lambda p: write_ivfpq_index(
-            load_table(spark, sf_dir, "documents"),
-            load_table(spark, sf_dir, "embeddings"),
-            p, n_cells=8,
-            train_iterations=_TRAINED_ITERS,
-            coarse_train_iterations=_CTR_ITERS,
-        ),
-    )
-    q = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
-    return ivfpq_probe(
-        spark, path, q, k=10, nprobe=2,
-        expect={"n_cells": 8, "min_chars": 200, "lang": "en",
-                "pq_m": S.PQ_M, "pq_sub": S.PQ_SUB, "pq_k": S.PQ_K,
-                "pq_train_iters": _TRAINED_ITERS,
-                "coarse_train_iters": _CTR_ITERS},
-    )
-
-
-@query(
-    "ivfpq_append_probe",
-    oracle=_ivfpq_oracle(seed_where="WHERE vec_id % 2 = 0"),
-    bench=True,
-)
-def ivfpq_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental IVF-PQ maintenance through the driver gate
-    (plans/storage.append_to_ivfpq_index): the index is BUILT over the
-    even-id half of the eligible corpus — so BOTH quantizer seed sets
-    (centroids AND codebook) come from even ids only — then the odd
-    half arrives as a later batch and is APPENDED: gated with the
-    RECORDED eligibility, assigned against the stored centroids,
-    encoded against the stored codebook, committed as one atomic
-    cells delta. The probe unions base + delta, every leg partition-
-    pruned. The oracle replays exactly that geometry (both seed sets
-    from the even half, assignment + encode over everything) — a
-    re-derived quantizer, missed gate, or visible torn delta
-    hash-mismatches."""
-    from .storage import (
-        append_to_ivfpq_index,
-        ivfpq_probe,
-        write_ivfpq_index,
-    )
-
-    def build(p: str) -> None:
-        docs = load_table(spark, sf_dir, "documents")
-        emb = load_table(spark, sf_dir, "embeddings")
-        write_ivfpq_index(
-            docs, emb.filter(F.col("vec_id") % 2 == 0), p, n_cells=8
-        )
-        append_to_ivfpq_index(docs, emb.filter(F.col("vec_id") % 2 == 1), p)
-
-    path = _persisted_index("ivfpq_app", sf_dir, build)
-    q = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
-    # min_chars/lang pinned too: the oracle hardcodes the gate, so a
-    # changed build default must raise here, not surface as a driver
-    # hash mismatch (r8 review)
-    return ivfpq_probe(
-        spark, path, q, k=10, nprobe=2,
-        expect={"n_cells": 8, "min_chars": 200, "lang": "en"},
-    )
-
-
-_L2_SQL = (
-    "list_sum(list_transform(generate_series(1, {dim}), i -> "
-    "({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
-)
-
-
-@query(
-    "pq_compacted_probe",
-    oracle=_pq_oracle(cb_src="(SELECT * FROM e WHERE vec_id % 2 = 0)"),
-)
-def pq_compacted_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Append-delta compaction through the driver gate
-    (plans/storage.compact_index, r9): the index is built over the
-    even-id half, the odd half is APPENDED as a delta, and the two
-    legs are then COMPACTED into a single-leg v2 — codebook copied
-    verbatim, codes folded, append counter reset. The probe serves
-    the compacted layout; the oracle is the append-probe's exact
-    replay (codebook seeded from the even half, encode over
-    everything), so compaction that dropped/duplicated a code,
-    re-derived the codebook, or leaked a stale leg hash-mismatches.
-    At 100 TB this is the maintenance op that keeps a year of daily
-    appends from unioning 365 legs into every probe plan."""
-    from .storage import (
-        append_to_pq_index,
-        compact_index,
-        pq_index_probe,
-        write_pq_index,
-    )
-
-    def build(p: str) -> None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        write_pq_index(emb.filter(F.col("vec_id") % 2 == 0), p)
-        append_to_pq_index(emb.filter(F.col("vec_id") % 2 == 1), p)
-        # Explicit raise, not `assert`: under `python -O` an assert
-        # statement (call included) is stripped wholesale, so the
-        # query would silently serve the uncompacted base+delta
-        # layout while still matching the oracle (r9 advice).
-        if compact_index(spark, p) is not True:
-            raise RuntimeError(
-                "compact_index reported nothing to compact for "
-                f"{p!r}; pq_compacted_probe requires the folded layout"
-            )
-
-    path = _persisted_index("pq_cmp", sf_dir, build)
-    q = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
-    return pq_index_probe(
-        spark, path, q, k=10,
-        expect={"pq_m": S.PQ_M, "pq_sub": S.PQ_SUB, "pq_k": S.PQ_K},
-    )
-
-
-@query(
-    "ivfpq_batch_probe",
-    oracle=_ivfpq_oracle(nprobe=2, batch_k=5,
-                         trained_iters=_TRAINED_ITERS,
-                         coarse_iters=_CTR_ITERS),
-    bench=True,
-)
-def ivfpq_batch_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q-query batch served from the IVF-PQ index
-    (plans/storage.ivfpq_batch_probe, r9): per-query cell ranking is
-    relational (rank_probe_cells_batch — a Q x nprobe WindowGroupLimit
-    over the broadcast centroid row, no per-query loop), each query's
-    LUT rides its ranked cells as one Q x nprobe broadcast, and ONE
-    partition-pruned scan of the union of probed cells serves the
-    whole batch — a Q-loop over the single probe would re-read
-    overlapping cells Q times. The oracle replays the per-qid cell
-    ranking, every 4-bit code, the per-qid ADC sums and each row's
-    rank through the same shared generators as the single-query
-    form."""
-    from .storage import ivfpq_batch_probe, write_ivfpq_index
-
-    path = _persisted_index(
-        "ivfpq", sf_dir,
-        lambda p: write_ivfpq_index(
-            load_table(spark, sf_dir, "documents"),
-            load_table(spark, sf_dir, "embeddings"),
-            p, n_cells=8,
-            train_iterations=_TRAINED_ITERS,
-            coarse_train_iterations=_CTR_ITERS,
-        ),
-    )
-    qs = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 3)
-        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
-    )
-    return ivfpq_batch_probe(
-        spark, path, qs, k=5, nprobe=2,
-        expect={"n_cells": 8, "min_chars": 200, "lang": "en",
-                "pq_m": S.PQ_M, "pq_sub": S.PQ_SUB, "pq_k": S.PQ_K,
-                "pq_train_iters": _TRAINED_ITERS,
-                "coarse_train_iters": _CTR_ITERS},
-    )
-
-
-def _ivfpq_residual_index(spark: SparkSession, sf_dir: str) -> str:
-    from .storage import write_ivfpq_index
-
-    return _persisted_index(
-        "ivfpq_res", sf_dir,
-        lambda p: write_ivfpq_index(
-            load_table(spark, sf_dir, "documents"),
-            load_table(spark, sf_dir, "embeddings"),
-            p, n_cells=8, residual=True,
-        ),
-    )
-
-
-@query("ivfpq_residual_probe", oracle=_ivfpq_oracle(residual=True), bench=True)
-def ivfpq_residual_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Residual IVF-PQ — IVFADC proper (Jégou et al. 2011 §V;
-    plans/storage.write_ivfpq_index(residual=True)): vectors are
-    PQ-encoded as RESIDUALS v − centroid(assigned cell), centering the
-    4-bit budget on the within-cell distribution instead of the whole
-    embedding space, and the probe builds one LUT PER probed cell from
-    the query's residual against that cell's centroid. Same serving
-    shape as the raw layout (nprobe pruned cell partitions × 8-byte
-    codes; the per-cell LUTs are nprobe ~1 KiB broadcast rows instead
-    of one) — the accuracy gain is measured by ivfpq_residual_recall.
-    The oracle re-derives eligibility, assignment, every residual,
-    the residual codebook, each 4-bit code, the per-cell query-residual
-    LUTs and the ADC sums."""
-    from .storage import ivfpq_probe
-
-    path = _ivfpq_residual_index(spark, sf_dir)
-    q = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
-    return ivfpq_probe(
-        spark, path, q, k=10, nprobe=2,
-        expect={"n_cells": 8, "min_chars": 200, "lang": "en",
-                "pq_m": S.PQ_M, "pq_sub": S.PQ_SUB, "pq_k": S.PQ_K,
-                "residual": True},
+        rerank_src="e0",
+        rerank_q="q0",
     )
 
 
 def _l2_recall_oracle(
     method: str, e_ctes: str, approx_sql: str, k: int = 10
 ) -> str:
-    """ONE recall-replay skeleton for the L2-baselined index gates (r9
-    review: the PQ and IVF-PQ versions restated it): exact = the
+    """ONE recall-replay skeleton for the L2-baselined index gates:
+    exact = the
     squared-L2 top-k over the `e` CTE (rounded to 6 before ordering,
     ties to vec_id — matching topk_l2_bruteforce), approx = the full
     index replay, output = the shared (method, k, hits, recall)
@@ -4412,13 +3755,13 @@ def _batch_l2_recall_oracle(
     method: str, e_ctes: str, approx_sql: str, k: int, n_queries: int,
     q_where: str | None = None,
 ) -> str:
-    """Batch form of _l2_recall_oracle (r10): exact = the per-qid
+    """Batch form of _l2_recall_oracle: exact = the per-qid
     squared-L2 top-k over the `e` CTE (rounded to 6 before ordering,
     ties to vec_id — topk_l2_bruteforce_batch), approx = the full
     batch index replay's (qid, vec_id) pairs, hits = the (qid,
     vec_id)-keyed intersection, recall = hits / (Q*k). Mean recall
     over Q queries de-noises the single-query gauge (recall steps of
-    1/k) enough to show a training-regime difference. `q_where` (r11)
+    1/k) enough to show a training-regime difference. `q_where`
     overrides the default lowest-Q query set — the coarse-training
     gauge needs query ids DISJOINT from the centroid seed ids, which
     are the k lowest (a seed-id query's own cell always ranks first
@@ -4447,222 +3790,8 @@ def _batch_l2_recall_oracle(
     """
 
 
-def _pq_recall_oracle() -> str:
-    """Recall@10 replay for the persisted PQ probe: the exact
-    squared-L2 top-10 (the metric ADC approximates) intersected with
-    the full PQ encode+ADC replay (_pq_oracle)."""
-    return _l2_recall_oracle(
-        "pq_adc",
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v "
-        "FROM embeddings)",
-        _pq_oracle(trained_iters=_TRAINED_ITERS),
-    )
-
-
-@query("pq_index_recall", oracle=_pq_recall_oracle())
-def pq_index_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the persisted PQ index against the EXACT squared-L2
-    top-10 — the quality gate the r8 verdict flagged as missing: the
-    PQ paths are the repo's most aggressive compression (4-bit codes,
-    32x), and an index whose compression is the point needs its
-    accuracy measured, not just its arithmetic replayed. Mirrors
-    filtered_ann_recall / jl_projection_recall: both sides scan the
-    same corpus, both result sets are k-sized, so the intersection is
-    a broadcast semi-join. The exact side uses L2, not cosine, because
-    ADC approximates the L2 distance (Jégou et al. 2011 §III) —
-    measuring against cosine would confound metric disagreement with
-    quantization error.
-
-    Reading the number on THIS fixture: the synthetic embeddings are
-    i.i.d. random (no cluster structure), and the codebooks are
-    deterministic lowest-id seeds (the replayability stand-in for
-    k-means training), so absolute recall is low by construction —
-    near-equidistant random vectors are the worst case for 4-bit
-    quantization. The gate's value is the MEASUREMENT machinery
-    (oracle-pinned end to end); on real clustered embeddings with
-    trained codebooks the same query reports the number that tunes
-    the index."""
-    from .storage import pq_index_probe, write_pq_index
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = _persisted_index(
-        "pq", sf_dir,
-        lambda p: write_pq_index(
-            load_table(spark, sf_dir, "embeddings"), p,
-            train_iterations=_TRAINED_ITERS,
-        ),
-    )
-    q = emb.filter(F.col("vec_id") == 0)
-    approx = pq_index_probe(
-        spark, path, q, k=10,
-        expect={"pq_m": S.PQ_M, "pq_sub": S.PQ_SUB,
-                "pq_k": S.PQ_K,
-                "pq_train_iters": _TRAINED_ITERS},
-    )
-    exact = S.topk_l2_bruteforce(emb, q, k=10)
-    return _recall_result(approx, exact, "pq_adc", k=10)
-
-
-def _ivfpq_recall_oracle() -> str:
-    """Recall@10 replay for the composed IVF-PQ probe: exact
-    squared-L2 top-10 over the ELIGIBLE set (the population the index
-    holds — isolating quantization + nprobe pruning error from the
-    metadata gate, the filtered_ann_recall rule) intersected with the
-    full IVF-PQ replay (_ivfpq_oracle)."""
-    return _l2_recall_oracle(
-        "ivfpq",
-        _FILTERED_E_SQL,
-        _ivfpq_oracle(trained_iters=_TRAINED_ITERS,
-                      coarse_iters=_CTR_ITERS),
-    )
-
-
-@query("ivfpq_recall", oracle=_ivfpq_recall_oracle())
-def ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the persisted IVF-PQ index against the exact
-    squared-L2 top-10 over the SAME eligible set — the quality gate
-    for the repo's most compressed serving path (r8 verdict): the two
-    approximations it composes (nprobe cell pruning × 4-bit ADC
-    scoring) multiply their errors exactly like their savings, and
-    this is the number that decides nprobe/n_cells before the index
-    ships. Both sides draw from the eligible population, so the
-    metric isolates index error from the metadata gate. (On this
-    fixture absolute recall is low by construction — see
-    pq_index_recall's fixture note: random vectors + untrained
-    deterministic codebooks are 4-bit quantization's worst case; the
-    oracle pins the measurement, not a quality bar.)"""
-    from .storage import ivfpq_probe, write_ivfpq_index
-
-    path = _persisted_index(
-        "ivfpq", sf_dir,
-        lambda p: write_ivfpq_index(
-            load_table(spark, sf_dir, "documents"),
-            load_table(spark, sf_dir, "embeddings"),
-            p, n_cells=8,
-            train_iterations=_TRAINED_ITERS,
-            coarse_train_iterations=_CTR_ITERS,
-        ),
-    )
-    e = _filtered_eligible(spark, sf_dir)
-    q = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
-    approx = ivfpq_probe(
-        spark, path, q, k=10, nprobe=2,
-        expect={"n_cells": 8, "min_chars": 200, "lang": "en",
-                "pq_m": S.PQ_M, "pq_sub": S.PQ_SUB, "pq_k": S.PQ_K,
-                "pq_train_iters": _TRAINED_ITERS,
-                "coarse_train_iters": _CTR_ITERS},
-    )
-    exact = S.topk_l2_bruteforce(e, q, k=10)
-    return _recall_result(approx, exact, "ivfpq", k=10)
-
-
-@query(
-    "ivfpq_residual_recall",
-    oracle=_l2_recall_oracle(
-        "ivfpq_residual", _FILTERED_E_SQL, _ivfpq_oracle(residual=True)
-    ),
-)
-def ivfpq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the RESIDUAL IVF-PQ probe against the exact
-    squared-L2 top-10 over the same eligible set — the number that
-    justifies (or refutes) residual encoding for a given corpus:
-    IVFADC's accuracy gain comes from centering the 4-bit budget on
-    within-cell residual distributions, and with deterministic
-    (untrained) codebooks the direction of the effect is an empirical
-    question this query answers next to ivfpq_recall's raw-layout
-    figure (measured: residual 0.3 vs raw 0.2 at sf0.01 on the
-    random-vector fixture — see pq_index_recall's fixture note on why
-    absolute recall is low by construction here). Same contract and
-    oracle skeleton as every recall gate."""
-    from .storage import ivfpq_probe
-
-    path = _ivfpq_residual_index(spark, sf_dir)
-    e = _filtered_eligible(spark, sf_dir)
-    q = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
-    approx = ivfpq_probe(
-        spark, path, q, k=10, nprobe=2,
-        expect={"n_cells": 8, "min_chars": 200, "lang": "en",
-                "pq_m": S.PQ_M, "pq_sub": S.PQ_SUB, "pq_k": S.PQ_K,
-                "residual": True},
-    )
-    exact = S.topk_l2_bruteforce(e, q, k=10)
-    return _recall_result(approx, exact, "ivfpq_residual", k=10)
-
-
 # ---------------------------------------------------------------------------
-# trained PQ codebooks + their recall gates (r10)
-# (_TRAINED_ITERS / _TRAINED_Q moved above _pq_oracle at r12 — the
-# trained-by-default serving probes need them at decoration time)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "pq_trained_recall",
-    oracle=_batch_l2_recall_oracle(
-        "pq_adc_trained",
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v "
-        "FROM embeddings)",
-        _pq_oracle(
-            batch_k=10,
-            q_sql=(
-                "SELECT vec_id AS qid, v AS qv FROM e "
-                f"WHERE vec_id < {_TRAINED_Q}"
-            ),
-            trained_iters=_TRAINED_ITERS,
-        ),
-        k=10,
-        n_queries=_TRAINED_Q,
-    ),
-)
-def pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mean recall@10 over a Q-query batch served from a Lloyd-TRAINED
-    PQ index (write_pq_index(train_iterations=2) →
-    operators/similarity.pq_codebook_trained) — the r9 verdict's
-    quality-ceiling item: untrained lowest-id codebooks cap serving
-    recall (Jégou et al. 2011 train theirs with k-means), and the r9
-    recall gates exist precisely to measure the difference. The gauge
-    is a BATCH mean (Q=8 queries through pq_index_batch_probe, exact
-    ground truth from topk_l2_bruteforce_batch) because single-query
-    recall moves in 1/k steps — too coarse to resolve a training
-    effect (measured at sf0.01: untrained 0.3875 vs trained 0.4125
-    mean recall@10; the i.i.d.-random fixture is quantization's worst
-    case, so the gap is small here by construction — the
-    planted-cluster fixture test pins the realistic ordering). The
-    oracle replays TRAINING itself (seeded per-block Lloyd, 6dp-
-    rounded means — _trained_cb_ctes), the batch encode, per-qid ADC
-    and both top-k sides."""
-    from .storage import pq_index_batch_probe, write_pq_index
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = _persisted_index(
-        "pq_tr", sf_dir,
-        lambda p: write_pq_index(
-            load_table(spark, sf_dir, "embeddings"), p,
-            train_iterations=_TRAINED_ITERS,
-        ),
-    )
-    qs = emb.filter(F.col("vec_id") < _TRAINED_Q).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    approx = pq_index_batch_probe(
-        spark, path, qs, k=10,
-        expect={"pq_m": S.PQ_M, "pq_sub": S.PQ_SUB, "pq_k": S.PQ_K,
-                "pq_train_iters": _TRAINED_ITERS},
-    )
-    exact = S.topk_l2_bruteforce_batch(emb, qs, k=10)
-    # pin the batch probe's tie_cache'd handle to the composed plan
-    # (the sq_batch_probe rule — dropping `approx` would unpersist the
-    # probe's query relation before the recall plan ever executes)
-    return D.pin(
-        _recall_result_batch(
-            approx, exact, "pq_adc_trained", total=10 * _TRAINED_Q
-        ),
-        approx,
-    )
-
-
-# ---------------------------------------------------------------------------
-# OPQ-permuted PQ (r13, the r12 verdict's #6 stretch): an orthogonal
+# OPQ-permuted PQ: an orthogonal
 # pre-transform before PQ, trained AND oracle-replayed. Ge et al.'s
 # non-parametric OPQ alternates Lloyd with an SVD step no SQL engine
 # replays exactly; the permutation member of the orthogonal family is
@@ -4683,8 +3812,7 @@ _OPQ_ANISO_CTE = f"""eaniso AS (
 
 def _opq_perm_ctes(src: str) -> str:
     """The trained variance-permutation replay (vstats/ranked/assign/
-    perml) over any vector CTE `src(vec_id, v)` — r14 factoring: the
-    rotation variant trains the same permutation over the ROTATED
+    perml) over any vector CTE `src(vec_id, v)` — the rotation variant trains the same permutation over the ROTATED
     relation."""
     return f"""vstats AS (
         SELECT gs.d,
@@ -4775,8 +3903,8 @@ def _opq_variant_recall_sql(method: str, permuted: bool) -> str:
 )
 def pq_opq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPQ-permuted vs plain PQ on an ANISOTROPIC planted fixture —
-    the orthogonal-pre-transform rung above the trained codebooks
-    (the r12 verdict's stretch item): scale dims 1-8 of the
+    the orthogonal-pre-transform rung above the trained codebooks:
+    scale dims 1-8 of the
     embeddings by exactly 4.0 (a power of two, so both engines scale
     bit-identically), which makes PQ's natural block 0 hoard the
     variance its 16 entries cannot cover; then train the
@@ -4796,10 +3924,9 @@ def pq_opq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     aniso = _aniso_embeddings(spark, sf_dir)
-    expect = {"pq_m": S.PQ_M, "pq_sub": S.PQ_SUB, "pq_k": S.PQ_K,
-              "pq_train_iters": _TRAINED_ITERS}
+    expect = _expect(_PQ)  # the trained regime; the layout pins PQ geometry
     # overlap the driver-blocking permutation training with the PLAIN
-    # leg's plan construction, which does not depend on it (r15, the
+    # leg's plan construction, which does not depend on it (the
     # pq_opq_rotation_recall shape; guide §2.6 — actions are only
     # sequential because the driver calls them sequentially)
     with ThreadPoolExecutor(max_workers=1) as pool:
@@ -4855,7 +3982,7 @@ def _aniso_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# OPQ rotation member (r14, the r13 verdict's #6 stretch): the
+# OPQ rotation member: the
 # correlated-dims fixture the permutation CANNOT fix, and the
 # trained-matching paired Hadamard that can.
 # ---------------------------------------------------------------------------
@@ -5024,8 +4151,7 @@ def _opq_rot_variant_sql(method: str, rotated: bool) -> str:
 )
 def pq_opq_rotation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPQ ROTATION member vs the permutation member on a
-    CROSS-BLOCK-CORRELATED fixture (r14, the r13 verdict's #6
-    stretch): dim d+32 is contaminated with a 4x-scaled copy of dim
+    CROSS-BLOCK-CORRELATED fixture: dim d+32 is contaminated with a 4x-scaled copy of dim
     d (_rot_embeddings), so pairs of dims in DIFFERENT PQ blocks
     carry ~0.97-correlated coordinates — redundancy a permutation
     can relocate but never remove (Ge et al., CVPR 2013: correlated
@@ -5052,17 +4178,16 @@ def pq_opq_rotation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     xr = _rot_embeddings(spark, sf_dir)
     # ONE aggregation job trains the pairing AND the un-rotated
-    # variance permutation (r15): opq_pair_rotation_stats' diagonal
+    # variance permutation: opq_pair_rotation_stats' diagonal
     # cells carry bit-identical ROUND(var, 6) doubles to a separate
     # opq_dim_permutation pass (asserted identical over every shipped
-    # fixture/sf), so the r14 two-job overlap collapses to one collect
+    # fixture/sf), so a two-job overlap collapses to one collect
     pairs, vs = S.opq_pair_rotation_stats(xr)
     permuted = S.apply_dim_permutation(
         xr, S._variance_ranked_permutation(vs, S.PQ_M, S.DIM)
     )
     rot = S.apply_pair_rotation(xr, pairs)
-    expect = {"pq_m": S.PQ_M, "pq_sub": S.PQ_SUB, "pq_k": S.PQ_K,
-              "pq_train_iters": _TRAINED_ITERS}
+    expect = _expect(_PQ)  # the trained regime; the layout pins PQ geometry
     # the ROTATED side's permutation is a genuinely separate training
     # (variances of the rotated relation; deriving them algebraically
     # would change the floating-point path the oracle replays) —
@@ -5108,52 +4233,8 @@ def pq_opq_rotation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.pin(out, [a_perm, a_rot])
 
 
-@query(
-    "ivfpq_trained_recall",
-    oracle=_l2_recall_oracle(
-        "ivfpq_trained",
-        _FILTERED_E_SQL,
-        _ivfpq_oracle(residual=True, trained_iters=_TRAINED_ITERS),
-    ),
-)
-def ivfpq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the TRAINED residual IVF-PQ index — IVFADC as the
-    paper actually ships it (Jégou et al. 2011 §V: residual encoding
-    AND k-means-trained codebooks; r9 built the residual half, this
-    completes the composition): the codebook Lloyd-trains on the
-    within-cell RESIDUAL distribution (write_ivfpq_index(residual=
-    True, train_iterations=2) — pq_codebook_trained over the full
-    residual encode relation), probes serve it unchanged, and the
-    recall gate sits next to ivfpq_recall (raw untrained) and
-    ivfpq_residual_recall (residual untrained) so the three layouts'
-    figures are directly comparable at the same geometry. The oracle
-    replays eligibility, coarse assignment, residuals, TRAINING over
-    the residuals, per-cell query LUTs and both top-k sides."""
-    from .storage import ivfpq_probe, write_ivfpq_index
-
-    path = _persisted_index(
-        "ivfpq_tr", sf_dir,
-        lambda p: write_ivfpq_index(
-            load_table(spark, sf_dir, "documents"),
-            load_table(spark, sf_dir, "embeddings"),
-            p, n_cells=8, residual=True,
-            train_iterations=_TRAINED_ITERS,
-        ),
-    )
-    e = _filtered_eligible(spark, sf_dir)
-    q = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
-    approx = ivfpq_probe(
-        spark, path, q, k=10, nprobe=2,
-        expect={"n_cells": 8, "min_chars": 200, "lang": "en",
-                "pq_m": S.PQ_M, "pq_sub": S.PQ_SUB, "pq_k": S.PQ_K,
-                "residual": True, "pq_train_iters": _TRAINED_ITERS},
-    )
-    exact = S.topk_l2_bruteforce(e, q, k=10)
-    return _recall_result(approx, exact, "ivfpq_trained", k=10)
-
-
 # ---------------------------------------------------------------------------
-# JL random-projection reduction + recall (r7)
+# JL random-projection reduction + recall
 # ---------------------------------------------------------------------------
 
 _JL_DIMS = (8, 16)
@@ -5261,7 +4342,7 @@ def jl_projection_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# scalar-quantized (SQ8) persisted index — the fifth layout (r10)
+# scalar-quantized (SQ8) and IVF-SQ8 persisted-index replays
 # ---------------------------------------------------------------------------
 
 def _sq_ctes() -> str:
@@ -5270,7 +4351,7 @@ def _sq_ctes() -> str:
     floor((x-lo)*256/(hi-lo)) sq_encode computes — every term a
     single IEEE expression in the same order, so codes match
     bit-for-bit with no rounding-tie exposure (incl. the explicit
-    NULL-element -> NULL-code arm, sq_encode's r10-review rule —
+    NULL-element -> NULL-code arm, sq_encode's rule —
     engines disagree on clamping NULL, so neither side may clamp)."""
     return f"""
     mm AS (
@@ -5308,142 +4389,94 @@ def _sq_probe_sql(k: int = 10) -> str:
     """
 
 
-@query(
-    "sq_index_probe",
-    bench=True,
-    oracle=f"""
+def _ivfsq_ctes(n_cells: int = 8, nprobe: int = 2, coarse_iters: int = 0) -> str:
+    """Coarse-quantizer replay over the full `e` relation: the shared
+    assignment CTEs plus the single query's top-nprobe cells. qcells
+    is self-contained (own scalar query subquery) so the same CTE
+    text drops into both the probe oracle and _l2_recall_oracle's
+    skeleton, whose `q` CTE is defined after the caller's CTEs."""
+    return f"""
+    {_coarse_ctes("e", n_cells, coarse_iters)},
+    qcells AS (
+        SELECT c.cid FROM cents c,
+             (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
+              WHERE vec_id = 0) q2
+        ORDER BY {_COS.format(a='q2.qv', b='c.cvec')} DESC, c.cid
+        LIMIT {nprobe})"""
+
+
+def _ivfsq_probe_sql(k: int = 10) -> str:
+    adist = _SQ_ADIST_SQL.format(dim=S.DIM)
+    return f"""
+    SELECT c.vec_id, ROUND({adist}, 6) AS adist
+    FROM c, assign, mm, q
+    WHERE c.vec_id = assign.vec_id
+      AND assign.cid IN (SELECT cid FROM qcells)
+    ORDER BY ROUND({adist}, 6), c.vec_id LIMIT {k}
+    """
+
+
+def _sq_oracle(
+    k: int,
+    q_where: str = "",
+    cells: bool = False,
+    n_cells: int = 8,
+    nprobe: int = 2,
+    coarse_iters: int = 0,
+) -> str:
+    """SQ8 serving replay: the quantizer and every code (_sq_ctes),
+    then the ADC top-`k` of the single query vec_id 0 or, with
+    `q_where`, the per-qid top-`k` of a (qid, qv) batch. `cells` adds
+    the IVF-SQ coarse assignment (trained per `coarse_iters`) and
+    scores only the `nprobe` cells each query ranks best."""
+    head = """
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                FROM embeddings),
+    """
+    q = "q AS (SELECT v AS qv FROM e WHERE vec_id = 0)"
+    if not q_where and cells:
+        return f"""{head}{q},
     {_sq_ctes()},
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-    {_sq_probe_sql(10)}
-    """,
-)
-def sq_index_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric top-k served from the persisted SQ8 index
-    (plans/storage.write_sq_index → sq_index_probe): 8 bits per
-    DIMENSION — the scalar-quantization tier between raw floats and
-    PQ (Faiss ScalarQuantizer QT_8bit): 4-8x less probe IO than the
-    embedding column at near-exact recall, where PQ4's 32x compression
-    costs real recall (sq_recall vs pq_index_recall put driver-checked
-    numbers on the trade at the same fixture). The probe reads ONLY
-    the packed codes parquet plus the 1-row quantizer through the
-    (path, version) meta-cache; scoring is the raw query against
-    dequantized bucket centers (operators/similarity.sq_adc_dist —
-    shared with the oracle's replay). At 100 TB: one column-pruned
-    code scan, two 1-row broadcasts, TakeOrdered — no shuffle."""
-    from .storage import sq_index_probe, write_sq_index
-
-    path = _persisted_index(
-        "sq", sf_dir,
-        lambda p: write_sq_index(
-            load_table(spark, sf_dir, "embeddings"), p
-        ),
-    )
-    q = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
-    return sq_index_probe(
-        spark, path, q, k=10,
-        expect={"sq_buckets": S.SQ_BUCKETS, "dim": S.DIM},
-    )
-
-
-@query(
-    "sq_recall",
-    oracle=_l2_recall_oracle(
-        "sq",
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v "
-        "FROM embeddings),"
-        + _sq_ctes(),
-        _sq_probe_sql(10),
-    ),
-)
-def sq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the SQ8 index against the exact squared-L2 top-10
-    — the gauge that justifies the layout's existence next to PQ:
-    measured 1.0 at sf0.01/sf0.1 on the i.i.d.-random fixture where
-    the PQ gates read 0.3-0.4 (quantization's worst case hurts 4-bit
-    block codes, not 8-bit per-dim codes — an 8-bit bucket's width is
-    1/256th of the per-dim range, so the reconstruction error is far
-    below inter-vector distances at any realistic dimension). Oracle
-    replays the quantizer, every code, the ADC sums, and both top-k
-    sides through the shared recall contract."""
-    from .storage import sq_index_probe, write_sq_index
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = _persisted_index(
-        "sq", sf_dir,
-        lambda p: write_sq_index(
-            load_table(spark, sf_dir, "embeddings"), p
-        ),
-    )
-    q = emb.filter(F.col("vec_id") == 0)
-    approx = sq_index_probe(
-        spark, path, q, k=10,
-        expect={"sq_buckets": S.SQ_BUCKETS, "dim": S.DIM},
-    )
-    exact = S.topk_l2_bruteforce(emb, q, k=10)
-    return _recall_result(approx, exact, "sq", k=10)
-
-
-_SQ_BATCH_Q = 3
-
-
-@query(
-    "sq_batch_probe",
-    bench=True,
-    oracle=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    {_sq_ctes()},
-    qs AS (SELECT vec_id AS qid, v AS qv FROM e
-           WHERE vec_id < {_SQ_BATCH_Q}),
+    {_ivfsq_ctes(n_cells, nprobe, coarse_iters)}
+    {_ivfsq_probe_sql(k)}
+    """
+    if not q_where:
+        return f"""{head}{_sq_ctes()},
+    {q}
+    {_sq_probe_sql(k)}
+    """
+    qs = f"""qs AS (SELECT vec_id AS qid, v AS qv FROM e
+           WHERE {q_where})"""
+    adist = f"ROUND({_SQ_ADIST_SQL.format(dim=S.DIM)}, 6) AS adist"
+    if cells:
+        scored = f"""
+    {_coarse_ctes("e", n_cells, coarse_iters)},
+    {qs},
+    {_qs_cells(nprobe)},
     scored AS (
         SELECT q.qid, c.vec_id,
-               ROUND({_SQ_ADIST_SQL.format(dim=S.DIM)}, 6) AS adist
+               {adist}
+        FROM c
+        JOIN assign ON c.vec_id = assign.vec_id
+        JOIN qcells ON assign.cid = qcells.cid
+        JOIN qs q ON q.qid = qcells.qid
+        CROSS JOIN mm
+    )"""
+    else:
+        scored = f"""{qs},
+    scored AS (
+        SELECT q.qid, c.vec_id,
+               {adist}
         FROM c, mm, qs q
-    )
-    SELECT qid, vec_id, adist, CAST(rank AS INT) AS rank FROM (
-        SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY qid ORDER BY adist, vec_id) AS rank
-        FROM scored) s
-    WHERE rank <= 5
-    ORDER BY qid, rank
-    """,
-)
-def sq_batch_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q-query batch served from the persisted SQ8 index
-    (plans/storage.sq_index_batch_probe): one code-only corpus pass
-    for the whole batch — each code row is dequantized in a named
-    projection and scored against the Q-row query broadcast, with the
-    per-query top-k planned as WindowGroupLimit (at most Q x k rows
-    per partition cross the shuffle, the pq_batch_probe scale
-    argument). The oracle replays the quantizer, every code, each
-    qid's ADC sums and every row's rank."""
-    from .storage import sq_index_batch_probe, write_sq_index
-
-    path = _persisted_index(
-        "sq", sf_dir,
-        lambda p: write_sq_index(
-            load_table(spark, sf_dir, "embeddings"), p
-        ),
-    )
-    qs = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < _SQ_BATCH_Q)
-        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
-    )
-    probe = sq_index_batch_probe(
-        spark, path, qs, k=5,
-        expect={"sq_buckets": S.SQ_BUCKETS, "dim": S.DIM},
-    )
-    # the probe's persisted query relation is finalizer-tied to the
-    # probe handle — pin it to the composed plan (the D.pin rule),
-    # else the cache releases before the orderBy ever executes
-    return D.pin(probe.orderBy("qid", "rank"), probe)
+    )"""
+    return f"""{head}{_sq_ctes()},
+    {scored}
+    {_ranked("adist", "adist", "scored", k)}
+    """
 
 
 # ---------------------------------------------------------------------------
-# graph centrality over the kNN graph (r10)
+# graph centrality over the kNN graph
 # ---------------------------------------------------------------------------
 
 def _pagerank_oracle(iters: int = 3, k_out: int = 20) -> str:
@@ -5531,7 +4564,7 @@ _DECODE_GIF_SCHEMA = (
     """,
 )
 def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Paletted-image decode through the r10 GIF codec — the one whose
+    """Paletted-image decode through the GIF codec — the one whose
     entropy coder (variable-width LZW: dictionary growth, KwKwK,
     12-bit reset) is implemented BY HAND from the public spec, not
     delegated to a library: per document, use the leading text bytes
@@ -5542,9 +4575,9 @@ def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     (palette[t] = (t, 3t mod 256, 7t mod 256)) — it matches only if
     the LZW round-trip returns the exact index stream. Same
     no-shuffle mapInPandas shape as the BMP/PNG/WAV twins."""
-    # spread the per-row pure-Python codec work — conditionally (r15):
-    # the fixture parquet is one split (the jpeg-leg query's rule,
-    # r14), but on a production-sized scan an unconditional
+    # spread the per-row pure-Python codec work — conditionally: the
+    # fixture parquet is one split (the jpeg-leg query's rule), but on
+    # a production-sized scan an unconditional
     # repartition would coalesce it onto #cores partitions
     d = _spread_small_scan(
         spark, sf_dir,
@@ -5597,7 +4630,7 @@ _DECODE_JPEG_SCHEMA = (
     """,
 )
 def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lossy-format decode through the r10 baseline JPEG codec
+    """Lossy-format decode through the baseline JPEG codec
     (operators/jpeg.py — hand-written canonical Huffman, zigzag RLE,
     byte stuffing, restart markers, numpy DCT pair): per document,
     build an image of doc_id-derived 8x8-block geometry where BLOCK j
@@ -5613,9 +4646,9 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     BMP/PNG/GIF/WAV twins."""
     from ..operators import jpeg as J
 
-    # spread the per-row pure-Python codec work — conditionally (r15):
-    # the fixture parquet is one split (the jpeg-leg query's rule,
-    # r14), but on a production-sized scan an unconditional
+    # spread the per-row pure-Python codec work — conditionally: the
+    # fixture parquet is one split (the jpeg-leg query's rule), but on
+    # a production-sized scan an unconditional
     # repartition would coalesce it onto #cores partitions
     d = _spread_small_scan(
         spark, sf_dir,
@@ -5671,8 +4704,7 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_decode_jpeg420(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """4:2:0 chroma-subsampled decode (r11 — the r10 verdict's #4: the
-    single most common wild-JPEG shape; operators/jpeg.py now encodes
+    """4:2:0 chroma-subsampled decode (the single most common wild-JPEG shape; operators/jpeg.py now encodes
     and decodes 16x16 MCUs of four Y blocks + one Cb + one Cr over
     2x2-mean-downsampled chroma). Per document, build a GRAY-valued
     RGB image of doc_id-derived 16x16-MCU geometry where each MCU's
@@ -5695,9 +4727,9 @@ def multimodal_decode_jpeg420(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~2 s (every codec path still executes every driver run)."""
     from ..operators import jpeg as J
 
-    # spread the per-row pure-Python codec work — conditionally (r15):
-    # the fixture parquet is one split (the jpeg-leg query's rule,
-    # r14), but on a production-sized scan an unconditional
+    # spread the per-row pure-Python codec work — conditionally: the
+    # fixture parquet is one split (the jpeg-leg query's rule), but on
+    # a production-sized scan an unconditional
     # repartition would coalesce it onto #cores partitions. Spread
     # AFTER the doc_id filter so parquet pushdown survives.
     d = _spread_small_scan(
@@ -5759,8 +4791,7 @@ def multimodal_decode_jpeg420(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_decode_jpeg422(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """4:2:2 chroma-subsampled decode (r12 — the r11 verdict's #6: the
-    second most common wild-JPEG shape; operators/jpeg.py now encodes
+    """4:2:2 chroma-subsampled decode (the second most common wild-JPEG shape; operators/jpeg.py now encodes
     and decodes 16x8 MCUs of two Y blocks + one Cb + one Cr over
     horizontally-pair-mean-downsampled chroma). Same gray-fixture
     contract as the 4:2:0 twin: each MCU's two 8x8 halves are
@@ -5776,9 +4807,9 @@ def multimodal_decode_jpeg422(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin (doc_id % 4 = 1), for the same pure-Python cost reason."""
     from ..operators import jpeg as J
 
-    # spread the per-row pure-Python codec work — conditionally (r15):
-    # the fixture parquet is one split (the jpeg-leg query's rule,
-    # r14), but on a production-sized scan an unconditional
+    # spread the per-row pure-Python codec work — conditionally: the
+    # fixture parquet is one split (the jpeg-leg query's rule), but on
+    # a production-sized scan an unconditional
     # repartition would coalesce it onto #cores partitions. Spread
     # AFTER the doc_id filter so parquet pushdown survives.
     d = _spread_small_scan(
@@ -5820,8 +4851,7 @@ def multimodal_decode_jpeg422(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# DCT perceptual-hash image near-dup (r13, the r12 verdict's #3: the
-# multimodal dedup bridge — the codec family composed with the dedup
+# DCT perceptual-hash image near-dup (the multimodal dedup bridge — the codec family composed with the dedup
 # family's never-all-pairs join shape)
 # ---------------------------------------------------------------------------
 
@@ -5832,7 +4862,7 @@ _PHASH_KT = ",".join(
     for u, row in enumerate(M.PHASH_DCT_Q14) for x, v in enumerate(row)
 )
 
-# the hash-and-pair tail shared by every pHash oracle (r14 factoring):
+# the hash-and-pair tail shared by every pHash oracle:
 # expects preceding CTEs `kt(u, x, kv)` (the Q14 table) and
 # `grid(id, gy, gx, gv)` (one row per 32x32 grid cell per image) and
 # replays the separable DCT as two join-aggregates, the division-free
@@ -5920,8 +4950,8 @@ _PHASH_ORACLE = _PHASH_HEAD + _PHASH_TAIL
 
 @query("multimodal_phash_neardup", bench=True, oracle=_PHASH_ORACLE)
 def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IMAGE near-dup via DCT perceptual hash (r13, the r12 verdict's
-    #3: the multimodal dedup bridge): per document, synthesize a
+    """IMAGE near-dup via DCT perceptual hash (the multimodal dedup
+    bridge): per document, synthesize a
     text-derived image, plant three near-dup twin classes — a
     BRIGHTNESS-SHIFTED copy (+8, id+1e6; found at hamming 0 BY
     CONSTRUCTION, the Q14 DCT rows sum to exactly 0), a RE-ENCODED
@@ -5949,10 +4979,10 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle: length == strlen — the same codepoints-equal-bytes test):
     the Spark leg samples UTF-8 BYTES while the oracle samples
     codepoints, and a multi-byte character would fork the two pixel
-    streams (r13 advice) — the filter closes that divergence by
+    streams — the filter closes that divergence by
     construction instead of leaning on the 255-clamp."""
     # spread the per-row codec work AFTER the source filter (pushdown
-    # survives) — conditionally (r15): the fixture parquet is one
+    # survives) — conditionally: the fixture parquet is one
     # split, but on a production-sized scan an unconditional
     # repartition would coalesce it onto #cores partitions
     d = _spread_small_scan(
@@ -5984,7 +5014,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # min(..., 255): the saturation both twins share with
                 # the oracle's LEAST — unreachable under the ASCII
                 # gate (bytes <= 127), kept so a future fixture can
-                # never crash the executor task (r13 review)
+                # never crash the executor task
                 emit(i, M.decode_png(M.encode_png(w, h, px, "L")))
                 if i % 10 == 0:
                     bright = bytes(min(v + 8, 255) for v in px)
@@ -6012,7 +5042,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# pHash through the LOSSY leg (r14, the r13 verdict's #2): the image
+# pHash through the LOSSY leg: the image
 # near-dup bridge pinned across the repo's own baseline JPEG — the
 # transform a wild near-dup corpus actually applies.
 # ---------------------------------------------------------------------------
@@ -6020,8 +5050,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Block-constant geometry shared by the Spark leg and the oracle:
 # wb x hb blocks of 8x8 (wb = 3 + (i//4)%2, hb = 3 + (i//8)%2 — the
 # geometry varies on i//4 because the corpus gate keeps doc_id % 4
-# == 0, under which i%2-driven variation would be constant; r14
-# review), block j (row-major) constant at text byte (j + doc_id) %
+# == 0, under which i%2-driven variation would be constant), block j (row-major) constant at text byte (j + doc_id) %
 # len — the +doc_id offset decorrelates documents that merely share
 # a prefix (the 31-word fixture vocabulary would otherwise clique).
 _PHASH_JPEG_ORACLE = """
@@ -6068,9 +5097,8 @@ grid AS (
 def multimodal_phash_jpeg_neardup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """IMAGE near-dup across the repo's own LOSSY codec (r14, the r13
-    verdict's #2: the bridge's r13 legs were all lossless re-encodes,
-    but a wild near-dup corpus's dominant transform is JPEG
+    """IMAGE near-dup across the repo's own LOSSY codec (the lossless
+    re-encode legs say nothing about lossy ones, and a wild near-dup corpus's dominant transform is JPEG
     re-encoding). Per even-id ASCII document, build a block-constant
     gray image (wb x hb blocks of 8x8, block j at text byte
     (j + doc_id) % len; a quarter of the corpus — the codec-family
@@ -6081,7 +5109,7 @@ def multimodal_phash_jpeg_neardup(
     operators/jpeg.py, restart_interval=2) and — every eighth doc —
     through 4:2:0 CHROMA-SUBSAMPLED COLOR JPEG on the gray-valued RGB
     expansion (id + 2e6; gray input keeps Cb = Cr = 128 exactly, the
-    r11 4:2:0 playbook). Hash every decoded plane with phash64 and
+    4:2:0 playbook). Hash every decoded plane with phash64 and
     join near pairs with phash_near_pairs.
 
     Why this is exact: constant 8x8 blocks quantize to a DC-only
@@ -6105,7 +5133,7 @@ def multimodal_phash_jpeg_neardup(
     # spread the per-row pure-Python codec work AFTER the source
     # filters (pushdown survives): the fixture parquet is one split,
     # and a coarse upstream partitioning would serialize
-    # encode+decode. Conditional (r15): on a production-sized scan an
+    # encode+decode. Conditional: on a production-sized scan an
     # unconditional repartition would coalesce it onto #cores
     # partitions; with enough splits the scan's own partitioning
     # already spreads the codec work.
@@ -6169,19 +5197,9 @@ def multimodal_phash_jpeg_neardup(
 
 
 # ---------------------------------------------------------------------------
-# Persisted pHash band index (r14, the r13 verdict's #3): crawl-loop
-# IMAGE dedup with the same index lifecycle text already has.
+# Persisted pHash band index: crawl-loop IMAGE dedup with the same
+# index lifecycle text already has (the phash scenario rows below)
 # ---------------------------------------------------------------------------
-
-# old side = the original images (id < 1e6), new side = the planted
-# twin classes — the SAME imgs/grid head as _PHASH_ORACLE, with the
-# pair predicate narrowed to the index probe's old x new split
-_PHASH_INC_ORACLE = _PHASH_HEAD + _phash_tail(
-    "a.id < 1000000 AND b.id >= 1000000"
-)
-_PHASH_INC_DEL_ORACLE = _PHASH_HEAD + _phash_tail(
-    "a.id < 1000000 AND a.id % 30 != 0 AND b.id >= 1000000"
-)
 
 
 def _phash_stream_sigs(
@@ -6236,790 +5254,320 @@ def _phash_stream_sigs(
     return d.mapInPandas(batches, "doc_id long, phash long")
 
 
-@query("incremental_image_dedup_indexed", oracle=_PHASH_INC_ORACLE,
-       bench=True)
-def incremental_image_dedup_indexed(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Incremental IMAGE dedup served from the PERSISTED pHash band
-    index (r14, the r13 verdict's #3: the crawl-loop composition —
-    text near-dup got its persisted index in r9, images get the same
-    lifecycle here). The already-ingested corpus is hashed ONCE at
-    index-build time (plans/storage.write_phash_index — and the build
-    itself exercises the append verb: even ids land in the base,
-    odd ids fold in via append_to_phash_index, so every probe reads
-    base + delta legs); the per-increment probe
-    (incremental_phash_pairs_indexed) joins the new batch's four
-    band keys against the index and verifies candidates against the
-    index's STORED hashes — the old corpus's blobs are never
-    re-decoded, re-hashed, or even read (tests/test_storage.py pins
-    the executed plan to index-only scans). Returns (id_a, id_b,
-    hamming): id_a from the index, id_b from today's batch of
-    planted brightness / re-encode / tweak twins.
-
-    The oracle replays the whole pipeline relationally — the SAME
-    imgs/grid/DCT head as multimodal_phash_neardup with the pair
-    predicate narrowed to the probe's old x new split (old-old pairs
-    are never generated — at 100 TB that asymmetry IS the point:
-    work scales with the batch, never the corpus)."""
-    from .storage import (
-        append_to_phash_index,
-        incremental_phash_pairs_indexed,
-        write_phash_index,
-    )
-
-    old = _phash_stream_sigs(spark, sf_dir, new_side=False)
-
-    def build(p: str) -> None:
-        write_phash_index(old.filter(F.col("doc_id") % 2 == 0), p)
-        append_to_phash_index(old.filter(F.col("doc_id") % 2 == 1), p)
-
-    path = _persisted_index("phash", sf_dir, build)
-    new = _phash_stream_sigs(spark, sf_dir, new_side=True)
-    return incremental_phash_pairs_indexed(new, path, max_hamming=3)
 
 
-@query("incremental_image_dedup_deleted", oracle=_PHASH_INC_DEL_ORACLE)
-def incremental_image_dedup_deleted(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """`incremental_image_dedup_indexed` after a TAKEDOWN hits the
-    image corpus — the pHash layout's driver-green deletion gate
-    (pairing incremental_dedup_deleted on the text side and
-    pq_deleted_probe on the vector side): every 30th original image
-    is tombstoned (plans/storage.delete_from_index — the shared verb,
-    no pHash-specific code), and the increment pairs against what
-    REMAINS: a twin whose only partner was deleted surfaces NO pair,
-    its candidates never generated (the tombstone anti-join hits the
-    band leg) and its verify partner gone (it hits the hashes leg
-    too). The oracle excludes the tombstoned ids from the old side of
-    the pair predicate — one parameter on the shared generator."""
-    from .storage import (
-        append_to_phash_index,
-        delete_from_index,
-        incremental_phash_pairs_indexed,
-        write_phash_index,
-    )
-
-    old = _phash_stream_sigs(spark, sf_dir, new_side=False)
-
-    def build(p: str) -> None:
-        write_phash_index(old.filter(F.col("doc_id") % 2 == 0), p)
-        append_to_phash_index(old.filter(F.col("doc_id") % 2 == 1), p)
-        delete_from_index(
-            old.filter(F.col("doc_id") % 30 == 0).select("doc_id"), p
-        )
-
-    path = _persisted_index("phash_del", sf_dir, build)
-    new = _phash_stream_sigs(spark, sf_dir, new_side=True)
-    return incremental_phash_pairs_indexed(new, path, max_hamming=3)
 
 
 # ---------------------------------------------------------------------------
-# IVF-SQ8 persisted index — the sixth layout (r10)
+# persisted-index scenarios: one table row per registered query
 # ---------------------------------------------------------------------------
 
-_IVFSQ_CELLS = 8
-_IVFSQ_NPROBE = 2
-
-
-# (_trained_cents_ctes moved next to _trained_cb_ctes at r12 — the
-# trained-by-default ivfpq serving oracles need it at decoration time)
-
-
-def _ivfsq_assign_ctes(
-    n_cells: int = _IVFSQ_CELLS, coarse_iters: int = 0
-) -> str:
-    """The query-independent half of the IVF-SQ replay over the full
-    `e` relation: the coarse centroids (lowest-id seeds, or the
-    Lloyd-trained chain when `coarse_iters` > 0 — r11) and cosine
-    argmax assignment (ties to the smaller cid — ivf_assign's rule).
-    Factored from _ivfsq_ctes (r11) so the batch probe's per-qid cell
-    ranking can compose with the IDENTICAL assignment text instead of
-    restating it."""
-    cents = (
-        _trained_cents_ctes(coarse_iters, n_cells)
-        if coarse_iters > 0
-        else f"""cents AS (SELECT vec_id AS cid, v AS cvec FROM e
-              ORDER BY vec_id LIMIT {n_cells})"""
-    )
-    return f"""
-    {cents},
-    cscored AS (
-        SELECT e.vec_id, c.cid,
-               {_COS.format(a='e.v', b='c.cvec')} AS score
-        FROM e CROSS JOIN cents c),
-    assign AS (
-        SELECT vec_id, cid FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                         ORDER BY score DESC, cid) AS rn
-            FROM cscored) t
-        WHERE rn = 1)"""
-
-
-def _ivfsq_ctes(n_cells: int = _IVFSQ_CELLS,
-                nprobe: int = _IVFSQ_NPROBE,
-                coarse_iters: int = 0) -> str:
-    """Coarse-quantizer replay over the full `e` relation: the shared
-    assignment CTEs plus the single query's top-nprobe cells. qcells
-    is self-contained (own scalar query subquery) so the same CTE
-    text drops into both the probe oracle and _l2_recall_oracle's
-    skeleton, whose `q` CTE is defined after the caller's CTEs.
-    `coarse_iters` (r12) swaps in the Lloyd-trained centroid chain —
-    the serving probes replay the trained-by-default fixture."""
-    return f"""{_ivfsq_assign_ctes(n_cells, coarse_iters)},
-    qcells AS (
-        SELECT c.cid FROM cents c,
-             (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
-              WHERE vec_id = 0) q2
-        ORDER BY {_COS.format(a='q2.qv', b='c.cvec')} DESC, c.cid
-        LIMIT {nprobe})"""
-
-
-def _ivfsq_probe_sql(k: int = 10) -> str:
-    adist = _SQ_ADIST_SQL.format(dim=S.DIM)
-    return f"""
-    SELECT c.vec_id, ROUND({adist}, 6) AS adist
-    FROM c, assign, mm, q
-    WHERE c.vec_id = assign.vec_id
-      AND assign.cid IN (SELECT cid FROM qcells)
-    ORDER BY ROUND({adist}, 6), c.vec_id LIMIT {k}
-    """
-
-
-def _ivfsq_index(spark: SparkSession, sf_dir: str) -> str:
-    from .storage import write_ivfsq_index
-
-    return _persisted_index(
-        "ivfsq", sf_dir,
-        lambda p: write_ivfsq_index(
-            load_table(spark, sf_dir, "embeddings"), p,
-            n_cells=_IVFSQ_CELLS,
-            coarse_train_iterations=_CTR_ITERS,
-        ),
-    )
-
-
-@query(
-    "ivfsq_probe",
-    bench=True,
-    oracle=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    {_sq_ctes()},
-    {_ivfsq_ctes(coarse_iters=_CTR_ITERS)}
-    {_ivfsq_probe_sql(10)}
-    """,
-)
-def ivfsq_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k served from the persisted IVF-SQ8 index
-    (plans/storage.write_ivfsq_index → ivfsq_probe) — Faiss's
-    IVFScalarQuantizer shape, the last cell of the quantization
-    matrix ({flat, SQ8, PQ4, residual-PQ4} x {exhaustive, IVF}): the
-    inverted file prunes WHICH vectors are scored (the probe
-    partition-prunes to nprobe `cell=` directories), the global
-    per-dim SQ8 quantizer compresses WHAT is read (~1 byte/dim at
-    near-exact recall, vs PQ4's 8-byte rows at real recall loss —
-    the strict-recall production pick). The oracle replays the
-    centroids, every assignment, the query's cell ranking, the
-    quantizer, every code and the ADC top-k."""
-    from .storage import ivfsq_probe
-
-    path = _ivfsq_index(spark, sf_dir)
-    q = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
-    return ivfsq_probe(
-        spark, path, q, k=10, nprobe=_IVFSQ_NPROBE,
-        expect={"n_cells": _IVFSQ_CELLS, "sq_buckets": S.SQ_BUCKETS,
-                "dim": S.DIM, "coarse_train_iters": _CTR_ITERS},
-    )
-
-
-@query(
-    "ivfsq_recall",
-    oracle=_l2_recall_oracle(
-        "ivfsq",
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v "
-        "FROM embeddings)," + _sq_ctes() + ","
-        + _ivfsq_ctes(coarse_iters=_CTR_ITERS),
-        _ivfsq_probe_sql(10),
-    ),
-)
-def ivfsq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the IVF-SQ8 index vs the exact squared-L2 top-10
-    — completes the per-layout recall gauge family (sq_recall = the
-    pruning-free SQ8 ceiling; this adds the nprobe/n_cells pruning
-    loss on top, isolating WHERE the error comes from: at nprobe=2/8
-    any recall drop below sq_recall's 1.0 is coarse-quantizer miss,
-    not code error). Oracle replays the full composition and both
-    top-k sides through the shared recall contract."""
-    from .storage import ivfsq_probe
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = _ivfsq_index(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") == 0)
-    approx = ivfsq_probe(
-        spark, path, q, k=10, nprobe=_IVFSQ_NPROBE,
-        expect={"n_cells": _IVFSQ_CELLS, "sq_buckets": S.SQ_BUCKETS,
-                "dim": S.DIM, "coarse_train_iters": _CTR_ITERS},
-    )
-    exact = S.topk_l2_bruteforce(emb, q, k=10)
-    return _recall_result(approx, exact, "ivfsq", k=10)
-
-
-def _ivfsq_batch_sql(
-    k: int,
-    q_where: str,
-    nprobe: int = _IVFSQ_NPROBE,
-    n_cells: int = _IVFSQ_CELLS,
-    coarse_iters: int = 0,
-) -> str:
-    """Full batch IVF-SQ8 serving replay (r11): the SQ8 code CTEs, the
-    coarse assignment (seed or Lloyd-trained per `coarse_iters`), each
-    qid's nprobe cell ranking via ROW_NUMBER, ADC scoring of the probed
-    cells' codes, and the per-qid top-`k`. ONE generator feeds the
-    batch-probe oracle and both recall replays (seed vs trained) so no
-    arithmetic is restated."""
-    return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    {_sq_ctes()},
-    {_ivfsq_assign_ctes(n_cells, coarse_iters)},
-    qs AS (SELECT vec_id AS qid, v AS qv FROM e
-           WHERE {q_where}),
-    qcells AS (
-        SELECT qid, cid FROM (
-            SELECT qs.qid, c.cid,
-                   ROW_NUMBER() OVER (PARTITION BY qs.qid
-                       ORDER BY {_COS.format(a='qs.qv', b='c.cvec')} DESC,
-                                c.cid) AS rn
-            FROM qs CROSS JOIN cents c) t
-        WHERE rn <= {nprobe}),
-    scored AS (
-        SELECT q.qid, c.vec_id,
-               ROUND({_SQ_ADIST_SQL.format(dim=S.DIM)}, 6) AS adist
-        FROM c
-        JOIN assign ON c.vec_id = assign.vec_id
-        JOIN qcells ON assign.cid = qcells.cid
-        JOIN qs q ON q.qid = qcells.qid
-        CROSS JOIN mm
-    )
-    SELECT qid, vec_id, adist, CAST(rank AS INT) AS rank FROM (
-        SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY qid ORDER BY adist, vec_id) AS rank
-        FROM scored) s
-    WHERE rank <= {k}
-    ORDER BY qid, rank
-    """
-
-
-@query(
-    "ivfsq_batch_probe",
-    bench=True,
-    oracle=_ivfsq_batch_sql(5, f"vec_id < {_SQ_BATCH_Q}",
-                            coarse_iters=_CTR_ITERS),
-)
-def ivfsq_batch_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q-query batch served from the persisted IVF-SQ8 index
-    (plans/storage.ivfsq_batch_probe, r11 — closing the r10 verdict's
-    last minor gap): per-query cell ranking is relational
-    (rank_probe_cells_batch — Q x nprobe WindowGroupLimit rows, no
-    per-query loop), ONE partition-pruned scan of the union of probed
-    cells serves the whole batch, each code row dequantizes once
-    below the Q x nprobe broadcast join, and the per-query top-k is
-    WindowGroupLimit-bounded at Q x k rows per partition. The oracle
-    replays the quantizer, the coarse assignment, each qid's cell
-    ranking and ADC sums, and every row's rank."""
-    from .storage import ivfsq_batch_probe
-
-    path = _ivfsq_index(spark, sf_dir)
-    qs = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < _SQ_BATCH_Q)
-        .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
-    )
-    probe = ivfsq_batch_probe(
-        spark, path, qs, k=5, nprobe=_IVFSQ_NPROBE,
-        expect={"n_cells": _IVFSQ_CELLS, "sq_buckets": S.SQ_BUCKETS,
-                "dim": S.DIM, "coarse_train_iters": _CTR_ITERS},
-    )
-    # the probe's persisted query relation is finalizer-tied to the
-    # probe handle — pin it to the composed plan (the D.pin rule),
-    # else the cache releases before the orderBy ever executes
-    return D.pin(probe.orderBy("qid", "rank"), probe)
-
-
-# (_CTR_ITERS / _CTR_Q / _CTR_Q_WHERE moved above the IVF-SQ section
-# at r12 — the trained-by-default serving probes need them at
-# decoration time)
-
-
-@query(
-    "ivfsq_trained_recall",
-    oracle=f"""
-    SELECT * FROM ({_batch_l2_recall_oracle(
-        "ivfsq_seed",
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v "
-        "FROM embeddings)",
-        _ivfsq_batch_sql(10, _CTR_Q_WHERE),
-        k=10, n_queries=_CTR_Q, q_where=_CTR_Q_WHERE,
-    )}) seed_side
-    UNION ALL
-    SELECT * FROM ({_batch_l2_recall_oracle(
-        "ivfsq_trained",
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v "
-        "FROM embeddings)",
-        _ivfsq_batch_sql(10, _CTR_Q_WHERE, coarse_iters=_CTR_ITERS),
-        k=10, n_queries=_CTR_Q, q_where=_CTR_Q_WHERE,
-    )}) trained_side
-    ORDER BY method
-    """,
-)
-def ivfsq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mean recall@10, seed-centroid vs Lloyd-TRAINED-centroid IVF-SQ8
-    at the SAME geometry, in one relation — the r10 verdict's #1
-    quality item: every IVF-family layout's coarse quantizer was the
-    k-lowest-id seed vectors, and the r10 recall pair (sq_recall = 1.0
-    vs ivfsq_recall below it) isolates the remaining serving error as
-    pure coarse-quantizer miss. `write_ivfsq_index(
-    coarse_train_iterations=2)` Lloyd-refines the seeds over the full
-    corpus (operators/similarity.ivf_centroids_trained — assignment by
-    ivf_assign itself, 6dp-rounded mean updates, empty cells keep
-    their centroid) and this gauge serves a Q=16-query batch
-    through BOTH indexes against the exact squared-L2 ground truth
-    (measured at sf0.01: seed 0.4375 vs trained 0.5000 mean
-    recall@10). Query ids are DISJOINT from the seed ids — a seed-id
-    query's own cell ranks first at cosine 1.0, which biased the
-    naive comparison toward the seeds. The oracle replays the SQ8
-    quantizer, coarse TRAINING itself (the _trained_cents_ctes Lloyd
-    chain), both assignments, each qid's cell ranking and ADC sums,
-    and both exact baselines."""
-    from .storage import ivfsq_batch_probe, write_ivfsq_index
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # r12 flipped the SHARED `ivfsq` fixture to the trained build
-    # (serving default); the gauge keeps its seed-vs-trained contrast
-    # by building the seed side as its own explicit comparison fixture
-    seed_path = _persisted_index(
-        "ivfsq_seed", sf_dir,
-        lambda p: write_ivfsq_index(
-            load_table(spark, sf_dir, "embeddings"), p,
-            n_cells=_IVFSQ_CELLS,
-        ),
-    )
-    trained_path = _ivfsq_index(spark, sf_dir)
-    qs = emb.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 100 + _CTR_Q)
-    ).select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
-    exact = S.topk_l2_bruteforce_batch(emb, qs, k=10)
-    seed_probe = ivfsq_batch_probe(
-        spark, seed_path, qs, k=10, nprobe=_IVFSQ_NPROBE,
-        expect={"n_cells": _IVFSQ_CELLS, "sq_buckets": S.SQ_BUCKETS,
-                "dim": S.DIM, "coarse_train_iters": 0},
-    )
-    trained_probe = ivfsq_batch_probe(
-        spark, trained_path, qs, k=10, nprobe=_IVFSQ_NPROBE,
-        expect={"n_cells": _IVFSQ_CELLS, "sq_buckets": S.SQ_BUCKETS,
-                "dim": S.DIM, "coarse_train_iters": _CTR_ITERS},
-    )
-    out = (
-        _recall_result_batch(
-            seed_probe, exact, "ivfsq_seed", total=10 * _CTR_Q
-        )
-        .unionByName(_recall_result_batch(
-            trained_probe, exact, "ivfsq_trained", total=10 * _CTR_Q
-        ))
-        .orderBy("method")
-    )
-    # both probes' persisted query relations are finalizer-tied to
-    # their handles — pin them to the composed plan (the D.pin rule)
-    return D.pin(D.pin(out, seed_probe), trained_probe)
-
-
-@query(
-    "ivfpq_fully_trained_recall",
-    oracle=_l2_recall_oracle(
-        "ivfpq_fully_trained",
-        _FILTERED_E_SQL,
-        _ivfpq_oracle(residual=True, trained_iters=_TRAINED_ITERS,
-                      coarse_iters=_CTR_ITERS),
-    ),
-)
-def ivfpq_fully_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the FULLY trained residual IVF-PQ index — IVFADC
-    with BOTH quantizers k-means-trained, which is how Jégou et al.
-    2011 (and Faiss) actually ship it: the coarse centroids Lloyd-
-    refine over the eligible corpus (r11 ivf_centroids_trained) and
-    the PQ codebook Lloyd-trains over the residuals AGAINST THOSE
-    TRAINED CENTROIDS (the residual distribution the codes quantize
-    shifts when the coarse quantizer moves — the two trainings
-    compose, not just coexist). Sits next to ivfpq_recall (nothing
-    trained), ivfpq_residual_recall (residual, untrained),
-    ivfpq_trained_recall (residual + trained codebook) so the four
-    figures decompose the quality ladder at one geometry (measured at
-    sf0.01: 0.2 / 0.3 / 0.1 / 0.3 — single-query recall@10 moves in
-    1/k steps and the i.i.d.-random fixture is quantization's worst
-    case, so these rungs are NOISE-dominated here; the training
-    orderings that hold where structure exists are pinned on
-    planted-cluster fixtures in tests/test_trained_recall.py, and the
-    de-noised batch gauge for coarse training is
-    ivfsq_trained_recall). What this entry pins every driver run is
-    the END-TO-END correctness of the fully-trained composition
-    against an oracle that replays both trainings. The oracle
-    replays eligibility, COARSE TRAINING (_trained_cents_ctes over
-    the eligible e0), assignment against the trained centroids,
-    residuals, CODEBOOK TRAINING over those residuals
-    (_trained_cb_ctes), per-cell query LUTs and both top-k sides —
-    the deepest replayed pipeline in the registry."""
-    from .storage import ivfpq_probe, write_ivfpq_index
-
-    path = _persisted_index(
-        "ivfpq_ftr", sf_dir,
-        lambda p: write_ivfpq_index(
-            load_table(spark, sf_dir, "documents"),
-            load_table(spark, sf_dir, "embeddings"),
-            p, n_cells=8, residual=True,
-            train_iterations=_TRAINED_ITERS,
-            coarse_train_iterations=_CTR_ITERS,
-        ),
-    )
-    e = _filtered_eligible(spark, sf_dir)
-    q = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
-    approx = ivfpq_probe(
-        spark, path, q, k=10, nprobe=2,
-        expect={"n_cells": 8, "min_chars": 200, "lang": "en",
-                "pq_m": S.PQ_M, "pq_sub": S.PQ_SUB, "pq_k": S.PQ_K,
-                "residual": True, "pq_train_iters": _TRAINED_ITERS,
-                "coarse_train_iters": _CTR_ITERS},
-    )
-    exact = S.topk_l2_bruteforce(e, q, k=10)
-    return _recall_result(approx, exact, "ivfpq_fully_trained", k=10)
-
-
-# IVFADC+R candidate depth (r12, the r11 verdict's #3): R/k = 4 — the
-# "small R" regime where the exact tier costs R extra vector reads per
-# query but recovers most of the 4-bit quantization loss (Jégou et al.
-# 2011 §V-D measure the same shape at R/k 2-10).
+# IVFADC+R candidate depth: R/k = 4 — the "small R" regime where the
+# exact tier costs R extra vector reads per query but recovers most of
+# the 4-bit quantization loss (Jégou et al. 2011 §V-D measure the same
+# shape at R/k 2-10).
 _RERANK_R = 40
-
-
-def _ftr_index(spark: SparkSession, sf_dir: str) -> str:
-    """The fully-trained residual IVF-PQ fixture (ivfpq_ftr) —
-    shared by ivfpq_fully_trained_recall and the rerank gates so the
-    rerank win is measured on EXACTLY the index the fully-trained
-    figure came from."""
-    from .storage import write_ivfpq_index
-
-    return _persisted_index(
-        "ivfpq_ftr", sf_dir,
-        lambda p: write_ivfpq_index(
-            load_table(spark, sf_dir, "documents"),
-            load_table(spark, sf_dir, "embeddings"),
-            p, n_cells=8, residual=True,
-            train_iterations=_TRAINED_ITERS,
-            coarse_train_iterations=_CTR_ITERS,
-        ),
-    )
-
-
-_FTR_EXPECT = {
-    "n_cells": 8, "min_chars": 200, "lang": "en",
-    "pq_m": S.PQ_M, "pq_sub": S.PQ_SUB, "pq_k": S.PQ_K,
-    "residual": True, "pq_train_iters": _TRAINED_ITERS,
-    "coarse_train_iters": _CTR_ITERS,
-}
-
-
-@query(
-    "ivfpq_rerank_probe",
-    oracle=_ivfpq_oracle(residual=True, trained_iters=_TRAINED_ITERS,
-                         coarse_iters=_CTR_ITERS, rerank=_RERANK_R),
-    bench=True,
+_EVEN = "WHERE vec_id % 2 = 0"  # the seed set of an appended index
+_FULL_E = (
+    "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"
 )
-def ivfpq_rerank_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFADC+R — the exact re-rank tier on the fully-trained residual
-    IVF-PQ index (plans/storage.ivfpq_probe(rerank=R), r12): the ADC
-    pass returns its top-R candidates instead of top-k, their RAW
-    vectors are fetched by pushed-down id predicate (R rows — never a
-    second corpus scan) and re-ordered by exact squared L2. This is
-    how production IVFADC ships (Jégou et al. 2011 §V-D; Faiss
-    IndexRefine): ADC decides WHAT is read cheaply, the refine tier
-    spends R·DIM floats per query to undo quantization error — the
-    remaining loss is pure nprobe cell pruning. The oracle replays
-    eligibility, both trainings, residual encode, the per-cell LUTs,
-    the top-R candidate CTE AND the exact re-rank."""
-    from .storage import ivfpq_probe
 
-    path = _ftr_index(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0)
-    return ivfpq_probe(
-        spark, path, q, k=10, nprobe=2, expect=_FTR_EXPECT,
-        rerank=_RERANK_R, rerank_source=emb,
+
+class _Build(NamedTuple):
+    """One persisted index build, mutations included. Scenarios whose
+    specs are equal share one build per process (_index)."""
+
+    layout: str  # a plans/storage._LAYOUTS key
+    n_cells: int = 0
+    train: int = 0  # PQ codebook Lloyd iterations
+    coarse: int = 0  # coarse-centroid Lloyd iterations
+    residual: bool = False  # IVF-PQ codes quantize v - centroid
+    append: bool = False  # build over the even ids, append the odd ids
+    keep: str = ""  # takedown: SQL over id `{d}`, true for the ids kept
+    compact: bool = False  # then fold the append delta into the base
+
+
+class _Scenario(NamedTuple):
+    """One registered query over a persisted index: the build, one
+    probe (the single query vec_id 0, or a batch of `q` ids from
+    `q_lo`), and optionally its recall@k against the exact squared-L2
+    top-k over the same population. The oracle is the layout's
+    replay generator fed from the same fields."""
+
+    name: str
+    build: _Build
+    bench: bool = False
+    q: int = 0
+    q_lo: int = 0
+    k: int = 10
+    nprobe: int = 2  # cell layouts only
+    rerank: int = 0  # exact re-rank depth R (PQ and IVF-PQ)
+    recall: str = ""  # the recall side's method name
+    vs: tuple = ()  # (method, build, rerank): a second side, listed first
+    sort: bool = False  # order the batch probe's rows by (qid, rank)
+
+
+def _sides(s: _Scenario) -> tuple:
+    own = ((s.recall, s.build, s.rerank),) if s.recall else ()
+    return ((s.vs,) if s.vs else ()) + own
+
+
+def _q_where(s: _Scenario) -> str:
+    if not s.q:
+        return ""
+    top = f"vec_id < {s.q_lo + s.q}"
+    return f"vec_id >= {s.q_lo} AND {top}" if s.q_lo else top
+
+
+def _index(spark: SparkSession, sf_dir: str, b: _Build) -> str:
+    """The committed index `b` describes, built on first use."""
+    return _persisted_index(b, sf_dir, lambda p: _write(spark, sf_dir, b, p))
+
+
+def _write(spark: SparkSession, sf_dir: str, b: _Build, path: str) -> None:
+    if b.layout == "band":
+        src, idc = _incremental_split(spark, sf_dir)[0], "doc_id"
+    elif b.layout == "phash":
+        src, idc = _phash_stream_sigs(spark, sf_dir, new_side=False), "doc_id"
+    else:
+        src, idc = load_table(spark, sf_dir, "embeddings"), "vec_id"
+    docs = (
+        (load_table(spark, sf_dir, "documents"),)
+        if ST._LAYOUTS[b.layout].gated else ()
     )
+    params = (("n_cells", b.n_cells), ("train_iterations", b.train),
+              ("coarse_train_iterations", b.coarse), ("residual", b.residual))
+    write = getattr(ST, "write_filtered_ivf_index" if b.layout == "ivf"
+                    else f"write_{b.layout}_index")
+    half = F.col(idc) % 2
+    write(*docs, src.filter(half == 0) if b.append else src, path,
+          **{k: v for k, v in params if v})
+    if b.append:
+        getattr(ST, f"append_to_{b.layout}_index")(
+            *docs, src.filter(half == 1), path
+        )
+    if b.keep:
+        taken = src.filter(~F.expr(b.keep.format(d=idc))).select(idc)
+        ST.delete_from_index(taken, path)
+    # an explicit raise, not an assert: `python -O` strips the assert
+    # statement call included, and the query would serve base + delta
+    if b.compact and ST.compact_index(spark, path) is not True:
+        raise RuntimeError(f"compact_index found nothing to fold at {path!r}")
 
 
-@query(
-    "ivfpq_rerank_recall",
-    oracle=_l2_recall_oracle(
-        "ivfpq_rerank",
-        _FILTERED_E_SQL,
-        _ivfpq_oracle(residual=True, trained_iters=_TRAINED_ITERS,
-                      coarse_iters=_CTR_ITERS, rerank=_RERANK_R),
-    ),
+def _expect(b: _Build) -> dict | None:
+    """What a probe of `b` pins beyond its layout's geometry pin (which
+    every probe checks): the build's own parameters and, for gated
+    layouts, the eligibility gate the oracle's `_OK_CTE` replays."""
+    lay = ST._LAYOUTS[b.layout]
+    pins: dict = {"n_cells": b.n_cells} if lay.cells else {}
+    if lay.gated:
+        pins.update(min_chars=200, lang="en")
+    if "pq" in b.layout:
+        pins["pq_train_iters"] = b.train
+    if b.layout == "ivfpq":
+        pins["residual"] = b.residual
+    if lay.cells:
+        pins["coarse_train_iters"] = b.coarse
+    return pins or None
+
+
+def _approx(s: _Scenario, b: _Build, rerank: int) -> str:
+    """The replay of one probe of `s` against build `b`."""
+    batch_k = s.k if s.q else None
+    seed = _EVEN if b.append else ""
+    if b.layout == "ivf":
+        return _filtered_ivf_oracle(
+            s.k, seed, b.coarse, batch_k, _q_where(s), s.nprobe
+        )
+    if b.layout == "ivfpq":
+        return _ivfpq_oracle(s.k, s.nprobe, seed, batch_k, b.residual,
+                             b.train, b.coarse, rerank, _q_where(s))
+    if b.layout == "pq":
+        return _pq_oracle(
+            where=f"WHERE {b.keep.format(d='enc.vec_id')}" if b.keep else "",
+            limit=s.k,
+            q_sql=(f"SELECT vec_id AS qid, v AS qv FROM e WHERE {_q_where(s)}"
+                   if s.q else "SELECT v AS qv FROM e WHERE vec_id = 0"),
+            cb_src=f"(SELECT * FROM e {seed})" if seed else "e",
+            batch_k=batch_k, trained_iters=b.train, rerank=rerank,
+        )
+    return _sq_oracle(s.k, _q_where(s), b.layout == "ivfsq", b.n_cells,
+                      s.nprobe, b.coarse)
+
+
+def _recall_oracle(s: _Scenario, method: str, b: _Build, rerank: int) -> str:
+    e = _FILTERED_E_SQL if ST._LAYOUTS[b.layout].gated else _FULL_E
+    if s.q:
+        return _batch_l2_recall_oracle(
+            method, e, _approx(s, b, rerank), k=s.k, n_queries=s.q,
+            q_where=_q_where(s),
+        )
+    if b.layout == "sq":  # the SQ replays score the skeleton's own `q`
+        return _l2_recall_oracle(
+            method, f"{e},{_sq_ctes()}", _sq_probe_sql(s.k), k=s.k
+        )
+    if b.layout == "ivfsq":
+        ctes = f"{e},{_sq_ctes()},{_ivfsq_ctes(b.n_cells, s.nprobe, b.coarse)}"
+        return _l2_recall_oracle(method, ctes, _ivfsq_probe_sql(s.k), k=s.k)
+    return _l2_recall_oracle(method, e, _approx(s, b, rerank), k=s.k)
+
+
+def _oracle(s: _Scenario) -> str:
+    b = s.build
+    if b.layout == "band":
+        old = "{d} < 1000000"
+        return _incremental_oracle(f"({old} AND {b.keep})" if b.keep else old)
+    if b.layout == "phash":
+        keep = f"{b.keep.format(d='a.id')} AND " if b.keep else ""
+        return _PHASH_HEAD + _phash_tail(
+            f"a.id < 1000000 AND {keep}b.id >= 1000000"
+        )
+    if not s.recall:
+        return _approx(s, b, s.rerank)
+    sides = [(m, _recall_oracle(s, m, sb, rr)) for m, sb, rr in _sides(s)]
+    if len(sides) == 1:
+        return sides[0][1]
+    union = "\n    UNION ALL\n    ".join(
+        f"SELECT * FROM ({sql}) {m.rsplit('_', 1)[1]}_side" for m, sql in sides
+    )
+    return f"\n    {union}\n    ORDER BY method\n    "
+
+
+def _serve(s: _Scenario, spark: SparkSession, sf_dir: str) -> DataFrame:
+    if s.build.layout == "band":
+        _, new = _incremental_split(spark, sf_dir)
+        path = _index(spark, sf_dir, s.build)
+        pairs = ST.incremental_neardup_pairs_indexed(new, path, threshold=0.5)
+        out = _incremental_status(ST.band_index_sha_set(spark, path), new, pairs)
+        return D.pin(out, pairs)
+    if s.build.layout == "phash":
+        path = _index(spark, sf_dir, s.build)
+        new = _phash_stream_sigs(spark, sf_dir, new_side=True)
+        return ST.incremental_phash_pairs_indexed(new, path, max_hamming=3)
+    lay = ST._LAYOUTS[s.build.layout]
+    emb = load_table(spark, sf_dir, "embeddings")
+    if s.q:
+        ids = F.col("vec_id") < s.q_lo + s.q
+        if s.q_lo:
+            ids = (F.col("vec_id") >= s.q_lo) & ids
+        q = emb.filter(ids).select(
+            F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+        )
+    else:
+        q = emb.filter(F.col("vec_id") == 0)
+    probe = getattr(ST, lay.batch if s.q else lay.probe)
+    probes = []
+    for _, b, rerank in _sides(s) or (("", s.build, s.rerank),):
+        kw: dict = {"nprobe": s.nprobe} if lay.cells else {}
+        if rerank:
+            kw.update(rerank=rerank, rerank_source=emb)
+        probes.append(probe(spark, _index(spark, sf_dir, b), q, k=s.k,
+                            expect=_expect(b), **kw))
+    if not s.recall and not s.sort:
+        return probes[0]
+    if not s.recall:
+        # a batch probe's query relation is finalizer-tied to its
+        # handle: a plan built on top must pin it (the D.pin rule)
+        return D.pin(probes[0].orderBy("qid", "rank"), probes[0])
+    e = _filtered_eligible(spark, sf_dir) if lay.gated else emb
+    if s.q:
+        exact = S.topk_l2_bruteforce_batch(e, q, k=s.k)
+        outs = [_recall_result_batch(p, exact, m, total=s.k * s.q)
+                for (m, _, _), p in zip(_sides(s), probes)]
+    else:
+        exact = S.topk_l2_bruteforce(e, q, k=s.k)
+        outs = [_recall_result(p, exact, m, k=s.k)
+                for (m, _, _), p in zip(_sides(s), probes)]
+    out = outs[0] if len(outs) == 1 else (
+        outs[0].unionByName(outs[1]).orderBy("method")
+    )
+    return D.pin(out, *probes)
+
+
+_FIVF = _Build("ivf", n_cells=8, coarse=_CTR_ITERS)
+_PQ = _Build("pq", train=_TRAINED_ITERS)
+_PQ_APPEND = _Build("pq", append=True)
+_IVFPQ = _Build("ivfpq", n_cells=8, train=_TRAINED_ITERS, coarse=_CTR_ITERS)
+_IVFPQ_RES = _Build("ivfpq", n_cells=8, residual=True)
+_FTR = _IVFPQ._replace(residual=True)  # both quantizers trained, residual
+_SQ = _Build("sq")
+_IVFSQ = _Build("ivfsq", n_cells=8, coarse=_CTR_ITERS)
+_BAND = _Build("band")  # the old corpus of _incremental_split
+_PHASH = _Build("phash", append=True)  # the original images' hashes
+
+# Serving builds are trained (production ships trained quantizers);
+# the seed-only builds stay as comparison fixtures. Appends and
+# takedowns commit through the same path as the base build, so a wrong
+# append (re-derived quantizer, missed gate, visible torn delta) or an
+# ignored tombstone hash-mismatches its oracle. Recall rows measure
+# against the exact squared-L2 top-k (the distance ADC approximates)
+# over the population the index holds. Single-query recall moves in
+# 1/k steps, so the batch gauges (Q = 8, or 16 ids from 100, disjoint
+# from the lowest-id centroid seeds) are the ones that resolve a
+# training or re-rank effect.
+_SCENARIOS = (
+    # text near-dup of a new batch against the persisted band index of
+    # the old corpus (never re-scanned); the takedown tombstones every
+    # 40th old doc, so a batch doc whose only partner went reads unique
+    _Scenario("incremental_dedup_indexed", _BAND, bench=True),
+    _Scenario("incremental_dedup_deleted", _BAND._replace(keep="{d} % 40 != 0")),
+    # filtered IVF: the gate and centroids are paid at build; a probe
+    # scans only nprobe `cell=` partitions of eligible vectors
+    _Scenario("ivf_index_probe", _FIVF, bench=True),
+    _Scenario("ivf_append_probe", _Build("ivf", n_cells=8, append=True),
+              bench=True),
+    _Scenario("ivf_batch_probe", _FIVF, bench=True, q=3, k=5, sort=True),
+    # PQ: probes scan only the 8-byte codes; the takedown drops id 0
+    # (the query vector itself, whose own code ranks first) and id 3
+    _Scenario("pq_index_probe", _PQ, bench=True),
+    _Scenario("pq_append_probe", _PQ_APPEND, bench=True),
+    _Scenario("pq_deleted_probe", _Build("pq", keep="{d} NOT IN (0, 3)")),
+    _Scenario("pq_batch_probe", _PQ, bench=True, q=3, k=5),
+    # IVF-PQ: cell pruning times code-only scans; residual = IVFADC
+    _Scenario("ivfpq_probe", _IVFPQ, bench=True),
+    _Scenario("ivfpq_append_probe", _Build("ivfpq", n_cells=8, append=True),
+              bench=True),
+    _Scenario("pq_compacted_probe", _PQ_APPEND._replace(compact=True)),
+    _Scenario("ivfpq_batch_probe", _IVFPQ, bench=True, q=3, k=5),
+    _Scenario("ivfpq_residual_probe", _IVFPQ_RES, bench=True),
+    _Scenario("pq_index_recall", _PQ, recall="pq_adc"),
+    _Scenario("ivfpq_recall", _IVFPQ, recall="ivfpq"),
+    _Scenario("ivfpq_residual_recall", _IVFPQ_RES, recall="ivfpq_residual"),
+    _Scenario("pq_trained_recall", _PQ, q=_TRAINED_Q, recall="pq_adc_trained"),
+    _Scenario("ivfpq_trained_recall", _IVFPQ_RES._replace(train=_TRAINED_ITERS),
+              recall="ivfpq_trained"),
+    # SQ8: 8 bits per dimension, near-exact recall at 4-8x less IO
+    _Scenario("sq_index_probe", _SQ, bench=True),
+    _Scenario("sq_recall", _SQ, recall="sq"),
+    _Scenario("sq_batch_probe", _SQ, bench=True, q=3, k=5, sort=True),
+    # image near-dup of the planted twins against the persisted pHash
+    # index (probes read base + delta); the takedown drops every 30th
+    _Scenario("incremental_image_dedup_indexed", _PHASH, bench=True),
+    _Scenario("incremental_image_dedup_deleted",
+              _PHASH._replace(keep="{d} % 30 != 0")),
+    # IVF-SQ8; the trained gauge serves one batch from seed and trained
+    # centroids at the same geometry
+    _Scenario("ivfsq_probe", _IVFSQ, bench=True),
+    _Scenario("ivfsq_recall", _IVFSQ, recall="ivfsq"),
+    _Scenario("ivfsq_batch_probe", _IVFSQ, bench=True, q=3, k=5, sort=True),
+    _Scenario("ivfsq_trained_recall", _IVFSQ, q=_CTR_Q, q_lo=100,
+              recall="ivfsq_trained",
+              vs=("ivfsq_seed", _IVFSQ._replace(coarse=0), 0)),
+    # IVFADC+R: the top-R ADC candidates re-ranked by exact L2 on raw
+    # vectors; what remains of the error is nprobe cell pruning
+    _Scenario("ivfpq_fully_trained_recall", _FTR, recall="ivfpq_fully_trained"),
+    _Scenario("ivfpq_rerank_probe", _FTR, bench=True, rerank=_RERANK_R),
+    _Scenario("ivfpq_rerank_recall", _FTR, rerank=_RERANK_R,
+              recall="ivfpq_rerank"),
+    _Scenario("pq_rerank_recall", _PQ, rerank=_RERANK_R, recall="pq_rerank"),
+    _Scenario("ivfpq_batch_rerank", _IVFPQ, q=3, k=5, rerank=20),
+    _Scenario("ivfpq_residual_batch_probe", _IVFPQ_RES, q=3, k=5),
+    _Scenario("ivfpq_residual_batch_rerank", _FTR, q=3, k=5, rerank=20),
+    _Scenario("ivfpq_rerank_batch_recall", _FTR, q=_CTR_Q, q_lo=100,
+              rerank=_RERANK_R, recall="ivfpq_ftr_rerank",
+              vs=("ivfpq_ftr_adc", _FTR, 0)),
 )
-def ivfpq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the IVFADC+R tier against the exact squared-L2
-    top-10 over the same eligible set — the number that shows what R
-    extra vector reads buy back: at the same geometry the ADC-only
-    fully-trained figure is the quality ceiling quantization allows,
-    and the re-ranked figure approaches the PROBED-CELL COVERAGE
-    ceiling (every exact-top-10 member that lives in a probed cell
-    ranks correctly once its true distance is used, provided it makes
-    the ADC top-R). The gap that remains is nprobe pruning, which no
-    refine tier can recover — so the pair (ivfpq_fully_trained_recall,
-    this) decomposes serving error into quantization vs pruning, the
-    decomposition that decides whether to spend bytes (bigger codes)
-    or reads (bigger nprobe/R). Measured at sf0.01: ADC-only 0.3 →
-    re-ranked 0.6 at R=40 — one small-R refine buys more than every
-    quantizer-training step to date (the four-point training grid
-    moved 0.1-0.3 on this fixture)."""
-    from .storage import ivfpq_probe
 
-    path = _ftr_index(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = _filtered_eligible(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") == 0)
-    approx = ivfpq_probe(
-        spark, path, q, k=10, nprobe=2, expect=_FTR_EXPECT,
-        rerank=_RERANK_R, rerank_source=emb,
-    )
-    exact = S.topk_l2_bruteforce(e, q, k=10)
-    return _recall_result(approx, exact, "ivfpq_rerank", k=10)
-
-
-@query(
-    "pq_rerank_recall",
-    oracle=_l2_recall_oracle(
-        "pq_rerank",
-        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v "
-        "FROM embeddings)",
-        _pq_oracle(rerank=_RERANK_R, trained_iters=_TRAINED_ITERS),
-    ),
-)
-def pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the re-ranked FLAT PQ index (no coarse quantizer)
-    — the uncapped demonstration of the refine tier: with no cell
-    pruning, R bounds the ONLY remaining error (an exact-top-10 member
-    is recovered iff it makes the ADC top-R), so recall rises
-    monotonically to exactly 1.0 as R grows. Measured at sf0.01
-    (N=500, i.i.d.-random — 4-bit ADC's worst case, so the ADC
-    ranking is weakly correlated with the exact one and the ladder is
-    gradual). On the TRAINED serving fixture (r12 default): ADC-only
-    0.3 (pq_index_recall) → R=40: 0.7 → R=80: 0.9 → R=160: 1.0; on
-    the seed codebook the same ladder read 0.5/0.7/1.0 — training
-    and the refine tier COMPOSE (a better ADC ranking pulls the true
-    neighbors into a smaller R). On clustered real embeddings the
-    same R recovers far more, which is why production IVFADC+R runs
-    at R/k of 2-10."""
-    from .storage import pq_index_probe, write_pq_index
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = _persisted_index(
-        "pq", sf_dir,
-        lambda p: write_pq_index(
-            load_table(spark, sf_dir, "embeddings"), p,
-            train_iterations=_TRAINED_ITERS,
-        ),
-    )
-    q = emb.filter(F.col("vec_id") == 0)
-    approx = pq_index_probe(
-        spark, path, q, k=10,
-        expect={"pq_m": S.PQ_M, "pq_sub": S.PQ_SUB,
-                "pq_k": S.PQ_K,
-                "pq_train_iters": _TRAINED_ITERS},
-        rerank=_RERANK_R, rerank_source=emb,
-    )
-    exact = S.topk_l2_bruteforce(emb, q, k=10)
-    return _recall_result(approx, exact, "pq_rerank", k=10)
-
-
-@query(
-    "ivfpq_batch_rerank",
-    oracle=_ivfpq_oracle(nprobe=2, batch_k=5,
-                         trained_iters=_TRAINED_ITERS,
-                         coarse_iters=_CTR_ITERS, rerank=20),
-)
-def ivfpq_batch_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The batch IVFADC+R tier (plans/storage.ivfpq_batch_probe
-    (rerank=R), r12) on the trained-by-default serving fixture: the
-    per-query top-R ADC candidates stay RELATIONAL (WindowGroupLimit,
-    Q x R rows — no per-query collect loop), their raw vectors come
-    from one broadcast join against the corpus, and the exact
-    squared-L2 re-rank runs per query. Completes the serving matrix's
-    quality axis: every PQ-family layout now has single + batch ADC
-    probes AND single + batch refine tiers. The oracle replays both
-    trainings, the per-qid cell ranking, the ADC candidate ranking
-    AND the per-qid exact re-rank. (The residual layout's batch
-    rerank is ivfpq_residual_batch_rerank.)"""
-    from .storage import ivfpq_batch_probe, write_ivfpq_index
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = _persisted_index(
-        "ivfpq", sf_dir,
-        lambda p: write_ivfpq_index(
-            load_table(spark, sf_dir, "documents"),
-            load_table(spark, sf_dir, "embeddings"),
-            p, n_cells=8,
-            train_iterations=_TRAINED_ITERS,
-            coarse_train_iterations=_CTR_ITERS,
-        ),
-    )
-    qs = (
-        emb.filter(F.col("vec_id") < 3)
-        .select(F.col("vec_id").alias("qid"),
-                F.col("embedding").alias("qvec"))
-    )
-    return ivfpq_batch_probe(
-        spark, path, qs, k=5, nprobe=2,
-        expect={"n_cells": 8, "min_chars": 200, "lang": "en",
-                "pq_m": S.PQ_M, "pq_sub": S.PQ_SUB, "pq_k": S.PQ_K,
-                "pq_train_iters": _TRAINED_ITERS,
-                "coarse_train_iters": _CTR_ITERS},
-        rerank=20, rerank_source=emb,
-    )
-
-
-@query(
-    "ivfpq_residual_batch_probe",
-    oracle=_ivfpq_oracle(nprobe=2, batch_k=5, residual=True),
-)
-def ivfpq_residual_batch_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q-query batch served from the RESIDUAL IVF-PQ (IVFADC) layout —
-    the composition the serving matrix was missing (r12): residual
-    batches need one LUT per (query, probed cell) pair because each
-    cell re-centers the query's residual, and the probe builds exactly
-    that — Q x nprobe keyed LUT rows riding one broadcast, ONE
-    partition-pruned scan of the probed-cell union for the whole
-    batch (plans/storage.ivfpq_batch_probe's existing residual path,
-    until now provable only against the single-query oracle). The new
-    oracle replays eligibility, assignment, residual encode, each
-    qid's cell ranking, the per-(qid, cell) LUTs and every rank —
-    the (qid, cell)-keyed batch form of the keyed replay."""
-    from .storage import ivfpq_batch_probe
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = _ivfpq_residual_index(spark, sf_dir)
-    qs = (
-        emb.filter(F.col("vec_id") < 3)
-        .select(F.col("vec_id").alias("qid"),
-                F.col("embedding").alias("qvec"))
-    )
-    return ivfpq_batch_probe(
-        spark, path, qs, k=5, nprobe=2,
-        expect={"n_cells": 8, "min_chars": 200, "lang": "en",
-                "pq_m": S.PQ_M, "pq_sub": S.PQ_SUB, "pq_k": S.PQ_K,
-                "residual": True},
-    )
-
-
-@query(
-    "ivfpq_residual_batch_rerank",
-    oracle=_ivfpq_oracle(nprobe=2, batch_k=5, residual=True,
-                         trained_iters=_TRAINED_ITERS,
-                         coarse_iters=_CTR_ITERS, rerank=20),
-)
-def ivfpq_residual_batch_rerank(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The DEEPEST composition in the registry (r12): fully-trained
-    residual IVF-PQ (both quantizers Lloyd-trained — the ivfpq_ftr
-    fixture), served as a Q-query batch, exact-re-ranked per query —
-    i.e. Faiss's production IndexIVFPQ + IndexRefine shape end to
-    end. The oracle replays COARSE TRAINING over the eligible set,
-    assignment, residuals, CODEBOOK TRAINING over those residuals,
-    per-(qid, cell) residual LUTs, the per-qid ADC candidate ranking,
-    AND the per-qid exact re-rank against raw vectors — every stage
-    of the pipeline a 100 TB vector-serving deployment actually
-    runs, hash-checked in one driver gate."""
-    from .storage import ivfpq_batch_probe
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = _ftr_index(spark, sf_dir)
-    qs = (
-        emb.filter(F.col("vec_id") < 3)
-        .select(F.col("vec_id").alias("qid"),
-                F.col("embedding").alias("qvec"))
-    )
-    return ivfpq_batch_probe(
-        spark, path, qs, k=5, nprobe=2, expect=_FTR_EXPECT,
-        rerank=20, rerank_source=emb,
-    )
-
-
-@query(
-    "ivfpq_rerank_batch_recall",
-    oracle=f"""
-    SELECT * FROM ({_batch_l2_recall_oracle(
-        "ivfpq_ftr_adc",
-        _FILTERED_E_SQL,
-        _ivfpq_oracle(nprobe=2, batch_k=10, residual=True,
-                      trained_iters=_TRAINED_ITERS,
-                      coarse_iters=_CTR_ITERS,
-                      batch_q_where=_CTR_Q_WHERE),
-        k=10, n_queries=_CTR_Q, q_where=_CTR_Q_WHERE,
-    )}) adc_side
-    UNION ALL
-    SELECT * FROM ({_batch_l2_recall_oracle(
-        "ivfpq_ftr_rerank",
-        _FILTERED_E_SQL,
-        _ivfpq_oracle(nprobe=2, batch_k=10, residual=True,
-                      trained_iters=_TRAINED_ITERS,
-                      coarse_iters=_CTR_ITERS, rerank=_RERANK_R,
-                      batch_q_where=_CTR_Q_WHERE),
-        k=10, n_queries=_CTR_Q, q_where=_CTR_Q_WHERE,
-    )}) rerank_side
-    ORDER BY method
-    """,
-)
-def ivfpq_rerank_batch_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mean recall@10 of the fully-trained IVFADC batch serving, ADC-
-    only vs exact-re-ranked, over Q=16 seed-disjoint queries in ONE
-    relation — the DENOISED gauge for what the refine tier buys
-    (single-query recall moves in 1/k steps; the r11 coarse-training
-    gauge established the Q-batch + disjoint-qid design): both probes
-    serve the same ivfpq_ftr index through the batch path, the ground
-    truth is the exact squared-L2 batch top-10 over the eligible set,
-    and the rerank side's remaining miss is pure nprobe pruning.
-    Measured at sf0.01: ADC-only 0.3875 vs re-ranked 0.55625 mean
-    recall@10 at R=40 — +0.17 absolute (~1.4x) from the refine tier
-    alone, directionally matching the single-query pair (0.3 -> 0.6)
-    with far tighter error bars (160 trials vs 10). The oracle
-    replays both trainings, residuals, per-(qid,
-    cell) LUTs, both candidate rankings, the exact re-rank AND both
-    exact baselines — the widest single differential in the
-    registry."""
-    from .storage import ivfpq_batch_probe
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = _ftr_index(spark, sf_dir)
-    e = _filtered_eligible(spark, sf_dir)
-    qs = emb.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 100 + _CTR_Q)
-    ).select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
-    exact = S.topk_l2_bruteforce_batch(e, qs, k=10)
-    adc = ivfpq_batch_probe(
-        spark, path, qs, k=10, nprobe=2, expect=_FTR_EXPECT,
-    )
-    rr = ivfpq_batch_probe(
-        spark, path, qs, k=10, nprobe=2, expect=_FTR_EXPECT,
-        rerank=_RERANK_R, rerank_source=emb,
-    )
-    out = (
-        _recall_result_batch(adc, exact, "ivfpq_ftr_adc",
-                             total=10 * _CTR_Q)
-        .unionByName(_recall_result_batch(rr, exact, "ivfpq_ftr_rerank",
-                                          total=10 * _CTR_Q))
-        .orderBy("method")
-    )
-    return D.pin(D.pin(out, adc), rr)
+for _s in _SCENARIOS:
+    query(_s.name, oracle=_oracle(_s), bench=_s.bench)(partial(_serve, _s))

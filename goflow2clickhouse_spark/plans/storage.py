@@ -85,32 +85,6 @@ def read_flows(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def write_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    n_cells: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    mode: str = "overwrite",
-    centroids_row: DataFrame | None = None,
-) -> DataFrame:
-    """Persist the IVF-assigned embeddings partitioned by cell; probes
-    then read only the probed cells' directories. Pass `centroids_row`
-    to build against precomputed (e.g. already-materialized) centroids;
-    returns the centroid row used, so callers can persist it
-    alongside."""
-    from ..operators.similarity import ivf_assign, ivf_centroids
-
-    cents = (
-        centroids_row
-        if centroids_row is not None
-        else ivf_centroids(embeddings, n_cells, vec_col, id_col)
-    )
-    assigned = ivf_assign(embeddings, cents, vec_col)
-    assigned.write.mode(mode).partitionBy("cell").parquet(path)
-    return cents
-
-
 def write_clustered(
     df: DataFrame,
     path: str,

@@ -465,7 +465,7 @@ def test_no_side_effecting_asserts_in_package():
     root = pathlib.Path(pkg.__file__).parent
     pat = re.compile(
         r"^\s*assert\b.*\b(compact_index|append_to_\w+|write_pq_index|"
-        r"write_ivfpq_index|write_band_index|write_ivf_index|"
+        r"write_ivfpq_index|write_band_index|"
         r"commit_version|recommit_meta)\s*\("
     )
     offenders = [
@@ -486,3 +486,35 @@ def test_phash_neardup_never_all_pairs(spark):
     p = plan_str(spark, SPECS["multimodal_phash_neardup"].spark(spark, SF))
     assert "CartesianProduct" not in p, p
     assert "BroadcastNestedLoopJoin" not in p, p
+
+
+def test_scenario_table_rows_and_index_keys(monkeypatch):
+    """The persisted-index scenario table (no Spark needed): every row
+    names a plans/storage._LAYOUTS key, no two rows register the same
+    name, and two rows share a cached index build exactly when their
+    build specs are equal — so pq_index_probe and pq_trained_recall,
+    which build the same trained PQ index, build it once."""
+    import itertools
+
+    from goflow2clickhouse_spark.plans import extension_queries as X
+    from goflow2clickhouse_spark.plans.storage import _LAYOUTS
+
+    rows = X._SCENARIOS
+    names = [s.name for s in rows]
+    assert len(names) == len(set(names)), names
+    assert set(names) <= set(SPECS)
+    assert all(
+        b.layout in _LAYOUTS
+        for s in rows for b in [s.build, *(b for _, b, _ in X._sides(s))]
+    )
+
+    made = itertools.count()
+    monkeypatch.setattr(X, "_PERSISTED_INDEX_DIRS", {})
+    monkeypatch.setattr(X, "_write", lambda *a: None)
+    monkeypatch.setattr("tempfile.mkdtemp", lambda prefix: f"/nx/{next(made)}")
+    for a, b in itertools.combinations(rows, 2):
+        same_dir = X._index(None, SF, a.build) == X._index(None, SF, b.build)
+        assert same_dir == (a.build == b.build), (a.name, b.name)
+    spec = {s.name: s.build for s in rows}
+    assert spec["pq_index_probe"] == spec["pq_trained_recall"]
+    assert len(X._PERSISTED_INDEX_DIRS) == len({s.build for s in rows})

@@ -11,9 +11,10 @@ from pyspark.sql import functions as F
 
 from goflow2clickhouse_spark.plans.flows_view import flows_df
 from goflow2clickhouse_spark.plans.storage import (
+    eligible_embeddings,
     read_flows,
+    write_filtered_ivf_index,
     write_flows_partitioned,
-    write_ivf_index,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -58,16 +59,22 @@ def test_flows_partition_layout_roundtrip(spark, flows_path):
 
 
 def test_ivf_index_partition_pruned_probe(spark, tmp_path):
+    """The versioned IVF layout's `cells` leg is hive-partitioned by
+    cell: a cell predicate becomes a PartitionFilter, and every
+    eligible vector landed in exactly one cell."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    write_ivf_index(emb, str(tmp_path / "ivf"), n_cells=8)
-    idx = spark.read.parquet(str(tmp_path / "ivf"))
+    path = str(tmp_path / "ivf")
+    write_filtered_ivf_index(docs, emb, path, n_cells=8)
+    idx = spark.read.parquet(f"{path}/v1/cells")
     probe = idx.filter(F.col("cell").isin(2, 5))
     plan = _plan(probe)
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "cell" in m.group(1), plan
-    # every embedding landed in exactly one cell
-    assert idx.count() == emb.count()
-    assert idx.select("vec_id").distinct().count() == emb.count()
+    n_eligible = eligible_embeddings(docs, emb).count()
+    assert n_eligible > 0
+    assert idx.count() == n_eligible
+    assert idx.select("vec_id").distinct().count() == n_eligible
 
 
 def test_streaming_into_partitioned_layout(spark, tmp_path):
