@@ -21,7 +21,7 @@ oracle its layout's replay generator derives from the same fields.
 from __future__ import annotations
 
 from functools import partial
-from typing import NamedTuple
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -2667,27 +2667,25 @@ _COS = (
     "list_dot_product({a}, {b}) / "
     "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
 )
+_N_CELLS = 8  # coarse cells of every persisted cell-layout index
+_NPROBE = 2  # cells each of its probes scans
 
 
-def _cents_cte(
-    src: str = "e", n_cells: int = 8, coarse_iters: int = 0, seed: str = ""
-) -> str:
-    """The coarse centroids as a `cents (cid, cvec)` CTE: the `n_cells`
+def _cents_cte(src: str = "e", coarse_iters: int = 0, seed: str = "") -> str:
+    """The coarse centroids as a `cents (cid, cvec)` CTE: the `_N_CELLS`
     lowest ids of `src` (narrowed by the `seed` SQL suffix), or the
     Lloyd-trained chain when `coarse_iters` > 0."""
     if coarse_iters > 0:
-        return _trained_cents_ctes(coarse_iters, n_cells, src)
+        return _trained_cents_ctes(coarse_iters, _N_CELLS, src)
     return f"""cents AS (SELECT vec_id AS cid, v AS cvec FROM {src}{seed}
-              ORDER BY vec_id LIMIT {n_cells})"""
+              ORDER BY vec_id LIMIT {_N_CELLS})"""
 
 
-def _coarse_ctes(
-    src: str = "e", n_cells: int = 8, coarse_iters: int = 0, seed: str = ""
-) -> str:
+def _coarse_ctes(src: str = "e", coarse_iters: int = 0, seed: str = "") -> str:
     """The coarse quantizer's replay over `src`: the centroids
     (_cents_cte) and each vector's argmax-cosine cell (ties to the
     smaller cid — ivf_assign's rule) as `assign (vec_id, cid)`."""
-    return f"""{_cents_cte(src, n_cells, coarse_iters, seed)},
+    return f"""{_cents_cte(src, coarse_iters, seed)},
     cscored AS (
         SELECT {src}.vec_id, c.cid,
                {_COS.format(a=f'{src}.v', b='c.cvec')} AS score
@@ -2700,14 +2698,14 @@ def _coarse_ctes(
         WHERE rn = 1)"""
 
 
-def _qcells(q: str, nprobe: int, batch: bool) -> str:
-    """The query CTE `q`'s `nprobe` best cells; per qid when `batch`."""
+def _qcells(q: str, batch: bool) -> str:
+    """The query CTE `q`'s `_NPROBE` best cells; per qid when `batch`."""
     rank = _COS.format(a=f"{q}.qv", b="c.cvec")
     if not batch:
         return f"""qcells AS (
         SELECT c.cid FROM cents c, {q}
         ORDER BY {rank} DESC, c.cid
-        LIMIT {nprobe})"""
+        LIMIT {_NPROBE})"""
     return f"""qcells AS (
         SELECT qid, cid FROM (
             SELECT {q}.qid, c.cid,
@@ -2716,11 +2714,11 @@ def _qcells(q: str, nprobe: int, batch: bool) -> str:
                        ORDER BY {rank} DESC,
                                 c.cid) AS rn
             FROM cents c, {q}) t
-        WHERE rn <= {nprobe})"""
+        WHERE rn <= {_NPROBE})"""
 
 
-def _qs_cells(nprobe: int) -> str:
-    """Each batch query's `nprobe` best cells, from a `qs (qid, qv)` CTE."""
+def _qs_cells() -> str:
+    """Each batch query's `_NPROBE` best cells, from a `qs (qid, qv)` CTE."""
     return f"""qcells AS (
         SELECT qid, cid FROM (
             SELECT qs.qid, c.cid,
@@ -2728,7 +2726,7 @@ def _qs_cells(nprobe: int) -> str:
                        ORDER BY {_COS.format(a='qs.qv', b='c.cvec')} DESC,
                                 c.cid) AS rn
             FROM qs CROSS JOIN cents c) t
-        WHERE rn <= {nprobe})"""
+        WHERE rn <= {_NPROBE})"""
 
 
 def _ranked(col: str, order: str, src: str, k: int) -> str:
@@ -2747,7 +2745,6 @@ def _filtered_ivf_oracle(
     coarse_iters: int = 0,
     batch_k: int | None = None,
     q_where: str = "",
-    nprobe: int = 2,
 ) -> str:
     """IVF replay over ONLY the eligible vectors: centroids are the 8
     lowest-id ELIGIBLE vectors (the index is built on the filtered
@@ -2757,7 +2754,7 @@ def _filtered_ivf_oracle(
     over everything — exactly what an appended index serves).
     `coarse_iters` swaps in the Lloyd-trained centroid chain.
     `batch_k` switches to the batch serving replay: `q_where` picks
-    the (qid, qv) query rows, each qid ranks its own `nprobe` cells,
+    the (qid, qv) query rows, each qid ranks its own `_NPROBE` cells,
     and the output is the per-qid cosine top-`batch_k` with ranks."""
     if coarse_iters and cents_where:
         raise ValueError(
@@ -2765,7 +2762,7 @@ def _filtered_ivf_oracle(
             "cents_where yet — the append replay would silently "
             "retrain on the appended corpus"
         )
-    cents_cte = _cents_cte("e", 8, coarse_iters, f" {cents_where}")
+    cents_cte = _cents_cte("e", coarse_iters, f" {cents_where}")
     if batch_k is not None:
         return f"""
     WITH {_FILTERED_E_SQL},
@@ -2782,7 +2779,7 @@ def _filtered_ivf_oracle(
         WHERE rn = 1),
     qs AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
            FROM embeddings WHERE {q_where}),
-    {_qs_cells(nprobe)},
+    {_qs_cells()},
     res AS (
         SELECT q.qid, a.vec_id,
                ROUND({_COS.format(a='a.v', b='q.qv')}, 6) AS cos_sim
@@ -2812,7 +2809,7 @@ def _filtered_ivf_oracle(
         ORDER BY list_dot_product(qv, c.cvec) /
                  (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.cvec, c.cvec)))
                  DESC, c.cid
-        LIMIT {nprobe})
+        LIMIT {_NPROBE})
     SELECT a.vec_id,
            ROUND(list_dot_product(a.v, qv) /
                  (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(qv, qv))),
@@ -3609,7 +3606,6 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivfpq_oracle(
     limit: int = 10,
-    nprobe: int = 2,
     seed_where: str = "",
     batch_k: int | None = None,
     residual: bool = False,
@@ -3659,8 +3655,8 @@ def _ivfpq_oracle(
             pre_ctes=_OK_CTE,
             e_sql=_ELIGIBLE_SQL,
             post_ctes=(
-                f",\n    {_coarse_ctes('e', 8, coarse_iters, f' {seed_where}')},"
-                f"\n    {_qcells('q', nprobe, batch)}"
+                f",\n    {_coarse_ctes('e', coarse_iters, f' {seed_where}')},"
+                f"\n    {_qcells('q', batch)}"
             ),
             from_extra=", assign, qcells" if batch else ", assign",
             where=f"WHERE assign.vec_id = enc.vec_id AND {bind}",
@@ -3696,9 +3692,9 @@ def _ivfpq_oracle(
         pre_ctes=f"""{_OK_CTE}e0 AS (
         {_ELIGIBLE_SQL}
     ),
-    {_coarse_ctes("e0", 8, coarse_iters)},
+    {_coarse_ctes("e0", coarse_iters)},
     {q0}
-    {_qcells("q0", nprobe, batch)},
+    {_qcells("q0", batch)},
     """,
         e_sql=f"""SELECT e0.vec_id,
                list_transform(generate_series(1, {dim}),
@@ -4389,20 +4385,20 @@ def _sq_probe_sql(k: int = 10) -> str:
     """
 
 
-def _ivfsq_ctes(n_cells: int = 8, nprobe: int = 2, coarse_iters: int = 0) -> str:
+def _ivfsq_ctes(coarse_iters: int = 0) -> str:
     """Coarse-quantizer replay over the full `e` relation: the shared
-    assignment CTEs plus the single query's top-nprobe cells. qcells
+    assignment CTEs plus the single query's top-`_NPROBE` cells. qcells
     is self-contained (own scalar query subquery) so the same CTE
     text drops into both the probe oracle and _l2_recall_oracle's
     skeleton, whose `q` CTE is defined after the caller's CTEs."""
     return f"""
-    {_coarse_ctes("e", n_cells, coarse_iters)},
+    {_coarse_ctes("e", coarse_iters)},
     qcells AS (
         SELECT c.cid FROM cents c,
              (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
               WHERE vec_id = 0) q2
         ORDER BY {_COS.format(a='q2.qv', b='c.cvec')} DESC, c.cid
-        LIMIT {nprobe})"""
+        LIMIT {_NPROBE})"""
 
 
 def _ivfsq_probe_sql(k: int = 10) -> str:
@@ -4420,15 +4416,13 @@ def _sq_oracle(
     k: int,
     q_where: str = "",
     cells: bool = False,
-    n_cells: int = 8,
-    nprobe: int = 2,
     coarse_iters: int = 0,
 ) -> str:
     """SQ8 serving replay: the quantizer and every code (_sq_ctes),
     then the ADC top-`k` of the single query vec_id 0 or, with
     `q_where`, the per-qid top-`k` of a (qid, qv) batch. `cells` adds
     the IVF-SQ coarse assignment (trained per `coarse_iters`) and
-    scores only the `nprobe` cells each query ranks best."""
+    scores only the `_NPROBE` cells each query ranks best."""
     head = """
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                FROM embeddings),
@@ -4437,7 +4431,7 @@ def _sq_oracle(
     if not q_where and cells:
         return f"""{head}{q},
     {_sq_ctes()},
-    {_ivfsq_ctes(n_cells, nprobe, coarse_iters)}
+    {_ivfsq_ctes(coarse_iters)}
     {_ivfsq_probe_sql(k)}
     """
     if not q_where:
@@ -4450,9 +4444,9 @@ def _sq_oracle(
     adist = f"ROUND({_SQ_ADIST_SQL.format(dim=S.DIM)}, 6) AS adist"
     if cells:
         scored = f"""
-    {_coarse_ctes("e", n_cells, coarse_iters)},
+    {_coarse_ctes("e", coarse_iters)},
     {qs},
-    {_qs_cells(nprobe)},
+    {_qs_cells()},
     scored AS (
         SELECT q.qid, c.vec_id,
                {adist}
@@ -5277,8 +5271,7 @@ class _Build(NamedTuple):
     """One persisted index build, mutations included. Scenarios whose
     specs are equal share one build per process (_index)."""
 
-    layout: str  # a plans/storage._LAYOUTS key
-    n_cells: int = 0
+    layout: str  # a plans/storage._LAYOUTS key (and a _KINDS key)
     train: int = 0  # PQ codebook Lloyd iterations
     coarse: int = 0  # coarse-centroid Lloyd iterations
     residual: bool = False  # IVF-PQ codes quantize v - centroid
@@ -5300,7 +5293,6 @@ class _Scenario(NamedTuple):
     q: int = 0
     q_lo: int = 0
     k: int = 10
-    nprobe: int = 2  # cell layouts only
     rerank: int = 0  # exact re-rank depth R (PQ and IVF-PQ)
     recall: str = ""  # the recall side's method name
     vs: tuple = ()  # (method, build, rerank): a second side, listed first
@@ -5325,27 +5317,17 @@ def _index(spark: SparkSession, sf_dir: str, b: _Build) -> str:
 
 
 def _write(spark: SparkSession, sf_dir: str, b: _Build, path: str) -> None:
-    if b.layout == "band":
-        src, idc = _incremental_split(spark, sf_dir)[0], "doc_id"
-    elif b.layout == "phash":
-        src, idc = _phash_stream_sigs(spark, sf_dir, new_side=False), "doc_id"
-    else:
-        src, idc = load_table(spark, sf_dir, "embeddings"), "vec_id"
-    docs = (
-        (load_table(spark, sf_dir, "documents"),)
-        if ST._LAYOUTS[b.layout].gated else ()
-    )
-    params = (("n_cells", b.n_cells), ("train_iterations", b.train),
+    kind, lay = _KINDS[b.layout], ST._LAYOUTS[b.layout]
+    src, idc = kind.source(spark, sf_dir), kind.idc
+    docs = (load_table(spark, sf_dir, "documents"),) if lay.gated else ()
+    params = (("n_cells", _N_CELLS if lay.cells else 0),
+              ("train_iterations", b.train),
               ("coarse_train_iterations", b.coarse), ("residual", b.residual))
-    write = getattr(ST, "write_filtered_ivf_index" if b.layout == "ivf"
-                    else f"write_{b.layout}_index")
     half = F.col(idc) % 2
-    write(*docs, src.filter(half == 0) if b.append else src, path,
-          **{k: v for k, v in params if v})
+    kind.write(*docs, src.filter(half == 0) if b.append else src, path,
+               **{k: v for k, v in params if v})
     if b.append:
-        getattr(ST, f"append_to_{b.layout}_index")(
-            *docs, src.filter(half == 1), path
-        )
+        kind.append(*docs, src.filter(half == 1), path)
     if b.keep:
         taken = src.filter(~F.expr(b.keep.format(d=idc))).select(idc)
         ST.delete_from_index(taken, path)
@@ -5360,71 +5342,91 @@ def _expect(b: _Build) -> dict | None:
     every probe checks): the build's own parameters and, for gated
     layouts, the eligibility gate the oracle's `_OK_CTE` replays."""
     lay = ST._LAYOUTS[b.layout]
-    pins: dict = {"n_cells": b.n_cells} if lay.cells else {}
+    pq = "codebook" in lay.quantizers
+    pins: dict = {"n_cells": _N_CELLS} if lay.cells else {}
     if lay.gated:
         pins.update(min_chars=200, lang="en")
-    if "pq" in b.layout:
+    if pq:
         pins["pq_train_iters"] = b.train
-    if b.layout == "ivfpq":
+    if pq and lay.cells:  # IVF-PQ: raw or residual codes
         pins["residual"] = b.residual
     if lay.cells:
         pins["coarse_train_iters"] = b.coarse
     return pins or None
 
 
-def _approx(s: _Scenario, b: _Build, rerank: int) -> str:
-    """The replay of one probe of `s` against build `b`."""
-    batch_k = s.k if s.q else None
-    seed = _EVEN if b.append else ""
-    if b.layout == "ivf":
-        return _filtered_ivf_oracle(
-            s.k, seed, b.coarse, batch_k, _q_where(s), s.nprobe
-        )
-    if b.layout == "ivfpq":
-        return _ivfpq_oracle(s.k, s.nprobe, seed, batch_k, b.residual,
-                             b.train, b.coarse, rerank, _q_where(s))
-    if b.layout == "pq":
-        return _pq_oracle(
-            where=f"WHERE {b.keep.format(d='enc.vec_id')}" if b.keep else "",
-            limit=s.k,
-            q_sql=(f"SELECT vec_id AS qid, v AS qv FROM e WHERE {_q_where(s)}"
-                   if s.q else "SELECT v AS qv FROM e WHERE vec_id = 0"),
-            cb_src=f"(SELECT * FROM e {seed})" if seed else "e",
-            batch_k=batch_k, trained_iters=b.train, rerank=rerank,
-        )
-    return _sq_oracle(s.k, _q_where(s), b.layout == "ivfsq", b.n_cells,
-                      s.nprobe, b.coarse)
+def _seed(b: _Build) -> str:
+    """The quantizer seed set's SQL suffix: an appended index keeps the
+    quantizers its even-id base build seeded."""
+    return _EVEN if b.append else ""
+
+
+# The replays of one probe of scenario `s` against build `b`, per layout.
+
+def _ivf_replay(s: _Scenario, b: _Build, rerank: int) -> str:
+    return _filtered_ivf_oracle(
+        s.k, _seed(b), b.coarse, s.k if s.q else None, _q_where(s)
+    )
+
+
+def _ivfpq_replay(s: _Scenario, b: _Build, rerank: int) -> str:
+    return _ivfpq_oracle(s.k, _seed(b), s.k if s.q else None, b.residual,
+                         b.train, b.coarse, rerank, _q_where(s))
+
+
+def _pq_replay(s: _Scenario, b: _Build, rerank: int) -> str:
+    seed = _seed(b)
+    return _pq_oracle(
+        where=f"WHERE {b.keep.format(d='enc.vec_id')}" if b.keep else "",
+        limit=s.k,
+        q_sql=(f"SELECT vec_id AS qid, v AS qv FROM e WHERE {_q_where(s)}"
+               if s.q else "SELECT v AS qv FROM e WHERE vec_id = 0"),
+        cb_src=f"(SELECT * FROM e {seed})" if seed else "e",
+        batch_k=s.k if s.q else None, trained_iters=b.train, rerank=rerank,
+    )
+
+
+def _sq_replay(s: _Scenario, b: _Build, rerank: int) -> str:
+    return _sq_oracle(s.k, _q_where(s), ST._LAYOUTS[b.layout].cells, b.coarse)
+
+
+def _sq_recall_q(s: _Scenario, b: _Build) -> tuple[str, str]:
+    """The SQ and IVF-SQ single-query recall pieces (CTEs, probe), which
+    score the recall skeleton's own `q` instead of a whole replay."""
+    if ST._LAYOUTS[b.layout].cells:
+        return f"{_sq_ctes()},{_ivfsq_ctes(b.coarse)}", _ivfsq_probe_sql(s.k)
+    return _sq_ctes(), _sq_probe_sql(s.k)
+
+
+def _band_replay(s: _Scenario, b: _Build, rerank: int) -> str:
+    old = "{d} < 1000000"
+    return _incremental_oracle(f"({old} AND {b.keep})" if b.keep else old)
+
+
+def _phash_replay(s: _Scenario, b: _Build, rerank: int) -> str:
+    keep = f"{b.keep.format(d='a.id')} AND " if b.keep else ""
+    return _PHASH_HEAD + _phash_tail(
+        f"a.id < 1000000 AND {keep}b.id >= 1000000"
+    )
 
 
 def _recall_oracle(s: _Scenario, method: str, b: _Build, rerank: int) -> str:
+    kind = _KINDS[b.layout]
     e = _FILTERED_E_SQL if ST._LAYOUTS[b.layout].gated else _FULL_E
     if s.q:
         return _batch_l2_recall_oracle(
-            method, e, _approx(s, b, rerank), k=s.k, n_queries=s.q,
+            method, e, kind.replay(s, b, rerank), k=s.k, n_queries=s.q,
             q_where=_q_where(s),
         )
-    if b.layout == "sq":  # the SQ replays score the skeleton's own `q`
-        return _l2_recall_oracle(
-            method, f"{e},{_sq_ctes()}", _sq_probe_sql(s.k), k=s.k
-        )
-    if b.layout == "ivfsq":
-        ctes = f"{e},{_sq_ctes()},{_ivfsq_ctes(b.n_cells, s.nprobe, b.coarse)}"
-        return _l2_recall_oracle(method, ctes, _ivfsq_probe_sql(s.k), k=s.k)
-    return _l2_recall_oracle(method, e, _approx(s, b, rerank), k=s.k)
+    if kind.recall_q:
+        ctes, probe = kind.recall_q(s, b)
+        return _l2_recall_oracle(method, f"{e},{ctes}", probe, k=s.k)
+    return _l2_recall_oracle(method, e, kind.replay(s, b, rerank), k=s.k)
 
 
 def _oracle(s: _Scenario) -> str:
-    b = s.build
-    if b.layout == "band":
-        old = "{d} < 1000000"
-        return _incremental_oracle(f"({old} AND {b.keep})" if b.keep else old)
-    if b.layout == "phash":
-        keep = f"{b.keep.format(d='a.id')} AND " if b.keep else ""
-        return _PHASH_HEAD + _phash_tail(
-            f"a.id < 1000000 AND {keep}b.id >= 1000000"
-        )
     if not s.recall:
-        return _approx(s, b, s.rerank)
+        return _KINDS[s.build.layout].replay(s, s.build, s.rerank)
     sides = [(m, _recall_oracle(s, m, sb, rr)) for m, sb, rr in _sides(s)]
     if len(sides) == 1:
         return sides[0][1]
@@ -5434,19 +5436,23 @@ def _oracle(s: _Scenario) -> str:
     return f"\n    {union}\n    ORDER BY method\n    "
 
 
-def _serve(s: _Scenario, spark: SparkSession, sf_dir: str) -> DataFrame:
-    if s.build.layout == "band":
-        _, new = _incremental_split(spark, sf_dir)
-        path = _index(spark, sf_dir, s.build)
-        pairs = ST.incremental_neardup_pairs_indexed(new, path, threshold=0.5)
-        out = _incremental_status(ST.band_index_sha_set(spark, path), new, pairs)
-        return D.pin(out, pairs)
-    if s.build.layout == "phash":
-        path = _index(spark, sf_dir, s.build)
-        new = _phash_stream_sigs(spark, sf_dir, new_side=True)
-        return ST.incremental_phash_pairs_indexed(new, path, max_hamming=3)
+def _band_serve(s: _Scenario, spark: SparkSession, sf_dir: str) -> DataFrame:
+    _, new = _incremental_split(spark, sf_dir)
+    path = _index(spark, sf_dir, s.build)
+    pairs = ST.incremental_neardup_pairs_indexed(new, path, threshold=0.5)
+    out = _incremental_status(ST.band_index_sha_set(spark, path), new, pairs)
+    return D.pin(out, pairs)
+
+
+def _phash_serve(s: _Scenario, spark: SparkSession, sf_dir: str) -> DataFrame:
+    path = _index(spark, sf_dir, s.build)
+    new = _phash_stream_sigs(spark, sf_dir, new_side=True)
+    return ST.incremental_phash_pairs_indexed(new, path, max_hamming=3)
+
+
+def _vector_serve(s: _Scenario, spark: SparkSession, sf_dir: str) -> DataFrame:
     lay = ST._LAYOUTS[s.build.layout]
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb = _embeddings(spark, sf_dir)
     if s.q:
         ids = F.col("vec_id") < s.q_lo + s.q
         if s.q_lo:
@@ -5459,7 +5465,7 @@ def _serve(s: _Scenario, spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = getattr(ST, lay.batch if s.q else lay.probe)
     probes = []
     for _, b, rerank in _sides(s) or (("", s.build, s.rerank),):
-        kw: dict = {"nprobe": s.nprobe} if lay.cells else {}
+        kw: dict = {"nprobe": _NPROBE} if lay.cells else {}
         if rerank:
             kw.update(rerank=rerank, rerank_source=emb)
         probes.append(probe(spark, _index(spark, sf_dir, b), q, k=s.k,
@@ -5485,14 +5491,53 @@ def _serve(s: _Scenario, spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.pin(out, *probes)
 
 
-_FIVF = _Build("ivf", n_cells=8, coarse=_CTR_ITERS)
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "embeddings")
+
+
+class _Kind(NamedTuple):
+    """How the scenarios over one layout build, replay and serve."""
+
+    write: Callable  # the plans/storage builder
+    append: Callable  # and its appender
+    replay: Callable  # (scenario, build, rerank) -> one probe's oracle SQL
+    source: Callable = _embeddings  # (spark, sf_dir) -> the build input
+    idc: str = "vec_id"  # the build input's id column
+    serve: Callable = _vector_serve  # (scenario, spark, sf_dir) -> DataFrame
+    recall_q: Callable | None = None  # _sq_recall_q, on the SQ layouts
+
+
+_KINDS = {
+    "band": _Kind(
+        ST.write_band_index, ST.append_to_band_index, _band_replay,
+        lambda spark, sf_dir: _incremental_split(spark, sf_dir)[0],
+        "doc_id", _band_serve,
+    ),
+    "phash": _Kind(
+        ST.write_phash_index, ST.append_to_phash_index, _phash_replay,
+        partial(_phash_stream_sigs, new_side=False), "doc_id", _phash_serve,
+    ),
+    "ivf": _Kind(
+        ST.write_filtered_ivf_index, ST.append_to_ivf_index, _ivf_replay
+    ),
+    "pq": _Kind(ST.write_pq_index, ST.append_to_pq_index, _pq_replay),
+    "sq": _Kind(ST.write_sq_index, ST.append_to_sq_index, _sq_replay,
+                recall_q=_sq_recall_q),
+    "ivfsq": _Kind(ST.write_ivfsq_index, ST.append_to_ivfsq_index,
+                   _sq_replay, recall_q=_sq_recall_q),
+    "ivfpq": _Kind(ST.write_ivfpq_index, ST.append_to_ivfpq_index,
+                   _ivfpq_replay),
+}
+
+
+_FIVF = _Build("ivf", coarse=_CTR_ITERS)
 _PQ = _Build("pq", train=_TRAINED_ITERS)
 _PQ_APPEND = _Build("pq", append=True)
-_IVFPQ = _Build("ivfpq", n_cells=8, train=_TRAINED_ITERS, coarse=_CTR_ITERS)
-_IVFPQ_RES = _Build("ivfpq", n_cells=8, residual=True)
+_IVFPQ = _Build("ivfpq", train=_TRAINED_ITERS, coarse=_CTR_ITERS)
+_IVFPQ_RES = _Build("ivfpq", residual=True)
 _FTR = _IVFPQ._replace(residual=True)  # both quantizers trained, residual
 _SQ = _Build("sq")
-_IVFSQ = _Build("ivfsq", n_cells=8, coarse=_CTR_ITERS)
+_IVFSQ = _Build("ivfsq", coarse=_CTR_ITERS)
 _BAND = _Build("band")  # the old corpus of _incremental_split
 _PHASH = _Build("phash", append=True)  # the original images' hashes
 
@@ -5515,8 +5560,7 @@ _SCENARIOS = (
     # filtered IVF: the gate and centroids are paid at build; a probe
     # scans only nprobe `cell=` partitions of eligible vectors
     _Scenario("ivf_index_probe", _FIVF, bench=True),
-    _Scenario("ivf_append_probe", _Build("ivf", n_cells=8, append=True),
-              bench=True),
+    _Scenario("ivf_append_probe", _Build("ivf", append=True), bench=True),
     _Scenario("ivf_batch_probe", _FIVF, bench=True, q=3, k=5, sort=True),
     # PQ: probes scan only the 8-byte codes; the takedown drops id 0
     # (the query vector itself, whose own code ranks first) and id 3
@@ -5526,8 +5570,7 @@ _SCENARIOS = (
     _Scenario("pq_batch_probe", _PQ, bench=True, q=3, k=5),
     # IVF-PQ: cell pruning times code-only scans; residual = IVFADC
     _Scenario("ivfpq_probe", _IVFPQ, bench=True),
-    _Scenario("ivfpq_append_probe", _Build("ivfpq", n_cells=8, append=True),
-              bench=True),
+    _Scenario("ivfpq_append_probe", _Build("ivfpq", append=True), bench=True),
     _Scenario("pq_compacted_probe", _PQ_APPEND._replace(compact=True)),
     _Scenario("ivfpq_batch_probe", _IVFPQ, bench=True, q=3, k=5),
     _Scenario("ivfpq_residual_probe", _IVFPQ_RES, bench=True),
@@ -5570,4 +5613,6 @@ _SCENARIOS = (
 )
 
 for _s in _SCENARIOS:
-    query(_s.name, oracle=_oracle(_s), bench=_s.bench)(partial(_serve, _s))
+    query(_s.name, oracle=_oracle(_s), bench=_s.bench)(
+        partial(_KINDS[_s.build.layout].serve, _s)
+    )

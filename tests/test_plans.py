@@ -503,6 +503,7 @@ def test_scenario_table_rows_and_index_keys(monkeypatch):
     names = [s.name for s in rows]
     assert len(names) == len(set(names)), names
     assert set(names) <= set(SPECS)
+    assert set(X._KINDS) == set(_LAYOUTS)
     assert all(
         b.layout in _LAYOUTS
         for s in rows for b in [s.build, *(b for _, b, _ in X._sides(s))]
@@ -512,9 +513,7 @@ def test_scenario_table_rows_and_index_keys(monkeypatch):
     monkeypatch.setattr(X, "_PERSISTED_INDEX_DIRS", {})
     monkeypatch.setattr(X, "_write", lambda *a: None)
     monkeypatch.setattr("tempfile.mkdtemp", lambda prefix: f"/nx/{next(made)}")
-    for a, b in itertools.combinations(rows, 2):
-        same_dir = X._index(None, SF, a.build) == X._index(None, SF, b.build)
-        assert same_dir == (a.build == b.build), (a.name, b.name)
-    spec = {s.name: s.build for s in rows}
-    assert spec["pq_index_probe"] == spec["pq_trained_recall"]
-    assert len(X._PERSISTED_INDEX_DIRS) == len({s.build for s in rows})
+    monkeypatch.setattr("atexit.register", lambda *a, **k: None)
+    dirs = {s.name: X._index(None, SF, s.build) for s in rows}
+    assert len(set(dirs.values())) == len({s.build for s in rows})
+    assert dirs["pq_index_probe"] == dirs["pq_trained_recall"]

@@ -95,6 +95,7 @@ def test_streaming_ivfpq_maintenance_equals_batch_appends(spark, tmp_path):
     equal the probe over a twin index maintained by plain
     append_to_ivfpq_index calls on the same batches."""
     import glob
+    import os
     import shutil
 
     from goflow2clickhouse_spark.plans.storage import (
@@ -117,10 +118,13 @@ def test_streaming_ivfpq_maintenance_equals_batch_appends(spark, tmp_path):
     ckpt = str(tmp_path / "ck")
 
     def drop(df, n):
-        chunk = str(indir / f"chunk{n}")
+        # staged outside the watched directory and moved in by one
+        # rename: the running stream lists `indir` and must never see
+        # a half-written chunk directory or file
+        chunk = str(tmp_path / f"chunk{n}")
         df.coalesce(1).write.mode("overwrite").parquet(chunk)
         for f in glob.glob(chunk + "/part-*.parquet"):
-            shutil.copy(f, str(indir / f"batch{n}.parquet"))
+            os.replace(f, str(indir / f"batch{n}.parquet"))
         shutil.rmtree(chunk)
 
     drop(b1.select("vec_id", "embedding"), 0)
@@ -274,6 +278,7 @@ def test_streaming_sq_maintenance_equals_batch_appends(spark, tmp_path):
     the streamed index equal a twin maintained by plain
     append_to_sq_index; a checkpoint restart re-folds nothing."""
     import glob
+    import os
     import shutil
 
     from goflow2clickhouse_spark.plans.storage import (
@@ -296,10 +301,13 @@ def test_streaming_sq_maintenance_equals_batch_appends(spark, tmp_path):
     ckpt = str(tmp_path / "ck")
 
     def drop(df, n):
-        chunk = str(indir / f"chunk{n}")
+        # staged outside the watched directory and moved in by one
+        # rename: the running stream lists `indir` and must never see
+        # a half-written chunk directory or file
+        chunk = str(tmp_path / f"chunk{n}")
         df.coalesce(1).write.mode("overwrite").parquet(chunk)
         for f in glob.glob(chunk + "/part-*.parquet"):
-            shutil.copy(f, str(indir / f"batch{n}.parquet"))
+            os.replace(f, str(indir / f"batch{n}.parquet"))
         shutil.rmtree(chunk)
 
     drop(b1.select("vec_id", "embedding"), 0)
